@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entrypoint.
   *
@@ -41,33 +40,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val trials = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIALS", "3").toInt.max(1)
-    val loadGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "2.5").toDouble
-    val loadWaitSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_WAIT_SEC", "120").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cores(32)
+    val trials = Sessions.envInt("SPARK_GRAFT_BENCH_TRIALS", 3).max(1)
+    val loadGate = Sessions.envDouble("SPARK_GRAFT_BENCH_LOAD_GATE", 2.5)
+    val loadWaitSec = Sessions.envInt("SPARK_GRAFT_BENCH_LOAD_WAIT_SEC", 120)
+    val spark = Sessions.querySuite(cpus, "WARN")
     // Warm the JVM before timing: codegen compiler, parquet footers,
     // shuffle machinery. JIT warmup is not query cost — the oracle
     // baseline is likewise timed on a warm connection.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    // full columnar reads, not count(): count() touches only parquet
-    // footers, so the first query per table would still pay the cold
-    // column decode + page-cache miss — steady-state is what a
-    // long-running cluster sees, and what the per-query numbers should
-    // reflect
-    Seq("lineitem", "orders", "customer", "part", "events",
-      "documents", "embeddings", "nation", "region")
-      .foreach(t => try spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () })
+    Sessions.warmTables(spark, sfDir)
     // noop sink, not count(): count() lets Catalyst prune every computed
     // column, which would "bench" map-heavy queries as bare row counts.
 

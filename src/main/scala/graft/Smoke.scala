@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Flagship smoke: runs [[SparkEntry.entry]] (driver checks rows > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.querySuite(4, "ERROR")
     val df = SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")
     df.show(5)

@@ -473,91 +473,17 @@ object SparkEntry {
   private def withStreamShufflePartitions[T](s: SparkSession)(body: => T): T = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "8")
-    // State-store backend is the second deployment parameter: the
-    // default HDFS-backed store keeps every store partition's map
-    // HEAP-resident — at 100× state volumes (millions of session keys,
-    // wide join horizons) memory-resident state is the scale-killer.
-    // SPARK_GRAFT_STREAM_STATESTORE=rocksdb runs the SAME queries on
-    // RocksDB (native memory + local SST files, bounded heap); the
-    // oracle surface q105–q110 is parity-checked under both (the
-    // driver gate runs default; RocksDbParitySpec + the round capture
-    // run rocksdb). The default was RE-DECIDED round 19 with the
-    // checkpoint-manager fork fix in place (the round-18 comparison
-    // predated it): interleaved bench A/B over all 10 streaming rows —
-    // hdfs 19.1 s vs rocksdb 24.7 s median totals (q108 4.0 vs 5.9) —
-    // and every streaming stress row agrees (proximity_join_stream
-    // 5.9 vs 22.2 s at r18 HEAD, both post-fix). RocksDB's value here
-    // is bounded heap at 100× state, not speed; it stays the
-    // conf-selected escape, not the default.
-    val prevProv =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    if (sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").contains("rocksdb"))
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        RocksDbProviderClass)
-    // Spark 4.1 wraps every checkpoint write (state-store deltas, offset
-    // and commit logs) in ChecksumCheckpointFileManager: each file close
-    // BLOCKS the task thread on an async checksum-companion write —
-    // thread-dump sampling attributed ~half the stream-stream join
-    // stages' non-CPU wall to exactly this awaitResult (round-18
-    // measurement, OPTIMIZATION_r18.md). On a local/HDFS filesystem the
-    // FS layer already CRCs every block, so the extra checksum file is
-    // redundant integrity; deployments on object stores without
-    // native checksums can turn it back on (deployment parameter, like
-    // the state-store backend above).
-    val cksumConf = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prevCk = s.conf.getOption(cksumConf)
-    s.conf.set(cksumConf,
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_CKSUM", "false"))
-    // Checkpoint FILE MANAGER is the third deployment parameter
-    // (round-18 in-process stack sampling, OPTIMIZATION_r18.md §4):
-    // on a POSIX local filesystem the default FileContext-based
-    // manager routes every temp-file create/rename through Hadoop
-    // RawLocalFs permission/stat calls that FORK A SUBPROCESS (no
-    // native hadoop lib here) — the dominant busy-thread frame of
-    // every stream-stream join batch was ProcessImpl.forkAndExec
-    // under renameTempFile. The FileSystem-based manager is Spark's
-    // own sanctioned fallback (it is what you get on s3a); its
-    // rename-based atomicity is exactly as good on a local/POSIX fs.
-    // The default is DERIVED from the filesystem the checkpoints land
-    // on (round-18 advice — env-only opt-back left non-local
-    // deployments on the weaker manager by default): the seam's temp
-    // checkpoint paths resolve against fs.defaultFS, so scheme
-    // file:/local → FileSystem manager (the fork fix); anything else
-    // (HDFS, where FileContext rename-with-overwrite is the stronger
-    // primitive) keeps Spark's default. SPARK_GRAFT_STREAM_CKPT_FM
-    // still overrides both ways.
-    val fmConf = "spark.sql.streaming.checkpointFileManagerClass"
-    val prevFm = s.conf.getOption(fmConf)
-    val localDefaultFs = org.apache.hadoop.fs.FileSystem.getDefaultUri(
-      s.sparkContext.hadoopConfiguration).getScheme == "file"
-    sys.env.get("SPARK_GRAFT_STREAM_CKPT_FM") match {
-      case Some(fm) => s.conf.set(fmConf, fm)
-      case None if localDefaultFs => s.conf.set(fmConf,
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      case None => () // non-local fs: keep Spark's FileContext default
-    }
-    try body finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProv match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevCk match {
-        case Some(p) => s.conf.set(cksumConf, p)
-        case None => s.conf.unset(cksumConf)
-      }
-      prevFm match {
-        case Some(p) => s.conf.set(fmConf, p)
-        case None => s.conf.unset(fmConf)
-      }
-    }
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Spark's bundled RocksDB state-store provider (spark-sql jar +
-    * rocksdbjni native lib — no extra dependency). */
+    * rocksdbjni native lib — no extra dependency), selected through
+    * `spark.sql.streaming.stateStore.providerClass`. Its value at 100×
+    * state volumes is bounded heap (native memory + local SST files),
+    * not speed: the round-19 interleaved A/B over all 10 streaming rows
+    * read hdfs 19.1 s vs rocksdb 24.7 s, so the heap-resident
+    * HDFS-backed store stays the default and q105–q111 are
+    * parity-checked under both (RocksDbParitySpec). */
   val RocksDbProviderClass: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -566,20 +492,6 @@ object SparkEntry {
     * re-emitted whole each batch and is the aggregate, not the stream;
     * the file sink cannot take Complete mode. Append-mode streams with
     * row-proportional output go through [[runStreamToParquet]]. */
-  /** SPARK_GRAFT_STREAM_PROGRESS=1: after a bounded stream terminates,
-    * print each micro-batch's durationMs map (addBatch / getBatch /
-    * walCommit / stateStore commit / queryPlanning ...) — the only
-    * attribution surface for the streaming family's fixed costs, which
-    * task metrics cannot see (they are driver-side). Dev aid; off in
-    * bench/verify runs. */
-  private def dumpStreamProgress(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    if (sys.env.get("SPARK_GRAFT_STREAM_PROGRESS").contains("1"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream] batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durationMs=${p.durationMs}")
-      }
-
   private def runStreamToTable(
       s: SparkSession,
       w: org.apache.spark.sql.streaming.DataStreamWriter[_]): DataFrame = {
@@ -587,7 +499,6 @@ object SparkEntry {
     withStreamShufflePartitions(s) {
       val q = w.format("memory").queryName(name).start()
       q.awaitTermination()
-      dumpStreamProgress(q)
     }
     // detach the result from the sink before returning: the memory
     // sink's temp view pins the full result buffer in the session
@@ -617,7 +528,6 @@ object SparkEntry {
         .option("checkpointLocation", ckpt.toString)
         .start()
       q.awaitTermination()
-      dumpStreamProgress(q)
     }
     s.read.parquet(out.toString)
   }

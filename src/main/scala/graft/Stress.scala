@@ -416,7 +416,8 @@ object Stress {
         // full reference envelope at scale 1: 1345 days ≈ 1.09e9 cells
         val days = math.max(2, (s(810810L * 1345) / cells).toInt)
         val g = raster(sp, cells, days, dup = 1, ens = 1, width = W)
-        (sink(WeightedMeanRef(g.drop("ens"), weights(sp, 2462, 12, W, H))),
+        (sink(graft.operators.WeightedMean(g.drop("ens"),
+          weights(sp, 2462, 12, W, H), Seq("tmmx", "tmmn", "pr"))),
           cells * days)
       }),
       Scenario("weighted_mean_precombine", sp => {
@@ -1490,14 +1491,9 @@ object Stress {
     try body finally sp.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** WeightedMean without preCombine (named so both forms read clearly
-    * in the scenario table). */
-  private def WeightedMeanRef(g: DataFrame, w: DataFrame): DataFrame =
-    graft.operators.WeightedMean(g, w, Seq("tmmx", "tmmn", "pr"))
-
   def main(args: Array[String]): Unit = {
-    val scale = sys.env.getOrElse("SPARK_GRAFT_STRESS_SCALE", "1.0").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val scale = Sessions.envDouble("SPARK_GRAFT_STRESS_SCALE", 1.0)
+    val cpus = Sessions.cores(32)
     val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Shuffle partitioning at stress scale follows the sizing rule the
@@ -1508,45 +1504,20 @@ object Stress {
     // AQE from coalescing right back to one partition per core, which
     // would rebuild the oversized reducer state this rule exists to
     // avoid; small exchanges still coalesce to the advisory target.
-    val shufflePartitions = sys.env.getOrElse(
-      "SPARK_GRAFT_STRESS_SHUFFLE", (cpus.toInt * 4).toString)
-    // Streaming state backend (SPARK_GRAFT_STRESS_STATESTORE):
-    // "hdfs" (default) = heap-resident store maps; "rocksdb" = Spark's
-    // bundled RocksDB provider (native memory + local SSTs, bounded
-    // heap) — the 100× deployment backend for the two streaming
-    // scenarios. Recorded per scenario line so stress_out.json rows
-    // are self-describing.
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STRESS_STATESTORE", "hdfs")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_STRESS_ADVISORY", "8m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // redundant on CRC filesystems; blocks task threads on async
-      // checksum writes (see SparkEntry.withStreamShufflePartitions)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_CKSUM", "false"))
-    // local-fs checkpoint manager: the FileContext default forks a
-    // subprocess per temp-file create/rename here; default derived
-    // from fs.defaultFS like the query seam (see
-    // SparkEntry.withStreamShufflePartitions)
-    val fmOverride = sys.env.get("SPARK_GRAFT_STREAM_CKPT_FM")
-      .orElse(if (org.apache.hadoop.fs.FileSystem.getDefaultUri(
-          new org.apache.hadoop.conf.Configuration()).getScheme == "file")
-        Some("org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      else None)
-    fmOverride.foreach(fm =>
-      builder.config("spark.sql.streaming.checkpointFileManagerClass", fm))
-    if (stateStore == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
-        SparkEntry.RocksDbProviderClass)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(s"local[$cpus]",
+      Sessions.envInt("SPARK_GRAFT_STRESS_SHUFFLE", cpus * 4), Some("WARN"),
+      Sessions.QuerySuite ++ Map(
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+          sys.env.getOrElse("SPARK_GRAFT_STRESS_ADVISORY", "8m")))
+    // recorded per scenario line so stress_out.json rows are
+    // self-describing
+    val stateStore =
+      spark.conf.get("spark.sql.streaming.stateStore.providerClass") match {
+        case SparkEntry.RocksDbProviderClass => "rocksdb"
+        case p if p.endsWith(".HDFSBackedStateStoreProvider") => "hdfs"
+        case p => p
+      }
     def loadavg1(): Double =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
         .split(" ")(0).toDouble catch { case _: Throwable => -1.0 }
@@ -1603,7 +1574,7 @@ object Stress {
         // so a warmed streaming row would record a no-op wall time as
         // a real measurement.
         val warmups = if (sc.streaming) 0
-          else sys.env.getOrElse("SPARK_GRAFT_STRESS_WARMUP", "0").toInt
+          else Sessions.envInt("SPARK_GRAFT_STRESS_WARMUP", 0)
         (0 until warmups).foreach { _ =>
           action()
           spark.sqlContext.clearCache()
@@ -1697,10 +1668,10 @@ object Stress {
             math.rint(listener.maxByteSkew() * 100) / 100},""" +
           s""""stages":${m.stageCount},"tasks":${m.taskCount}}"""
         println(line)
-        // SPARK_GRAFT_STRESS_STAGES=1: per-stage drill-down (the
-        // Scratch table) straight from the harness, so a spilling
-        // scenario can be attributed without reproducing its exact
-        // session/sequence in a separate tool
+        // SPARK_GRAFT_STRESS_STAGES=1: per-stage drill-down straight
+        // from the harness, so a spilling scenario can be attributed
+        // without reproducing its exact session/sequence in a separate
+        // tool
         if (sys.env.get("SPARK_GRAFT_STRESS_STAGES").contains("1")) {
           val cpu = listener.perStageCpu.map(t => t._1 -> t).toMap
           println(f"${"stage"}%6s ${"tasks"}%6s ${"writeMB"}%9s " +

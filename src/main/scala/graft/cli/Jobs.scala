@@ -150,13 +150,10 @@ object Jobs {
     s
   }
 
+  /** `local[*]` with 32 shuffle partitions unless spark-submit's
+    * `--master`/`--conf` say otherwise; log4j keeps its own level. */
   private def session(): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    graft.Sessions.create("local[*]", 32, logLevel = None)
 
   private def readFeatures(spark: SparkSession, path: String, fid: String): DataFrame = {
     // suffix dispatch mirrors the reference (`etl.py:563`, `etl.py:806`):
@@ -171,70 +168,74 @@ object Jobs {
   }
 
   def runGridmet(spark: SparkSession, a: Args): String = {
-    val start = validDate(a("start-date")); val end = validDate(a("end-date"))
-    val grid = spark.read.parquet(a("grid-path"))
-    val weights = Sources.weightsCsv(spark, a("weights-file"), a("fid"))
-    val features = readFeatures(spark, a("target-file"), a("fid"))
-    val filled = a.has("fill-missing")
-    // genmap protocol (`helper.py:13-14,43,77-79`): --genmap derives the
-    // NN mapping and persists it to --mapping-file (default name as the
-    // reference's mfile); without --genmap an existing --mapping-file is
-    // consumed instead of recomputing the mapping.
-    val mappingPath = s"${a("output-path")}/" +
-      a.get("mapping-file").getOrElse("fill_missing_nearest.csv")
-    val out =
-      if (filled && a.has("genmap")) {
-        // build the unfilled series ONCE, derive + persist the mapping,
-        // and fill that same series — no second aggregation DAG
-        val unfilled = GridmetPipeline.gridmet(grid, weights, features,
-          start = start, end = end, partial = a.has("partial"),
-          strategy = weightJoinArg(spark, a))
-        GridmetPipeline.fillMapping(unfilled, features) match {
-          case None => unfilled
-          case Some(m) =>
-            Sinks.writeMappingCsv(m, mappingPath)
-            // fill from the persisted CSV: truncates the NN-join lineage
-            // so the output job broadcasts a tiny file-backed table
-            // instead of re-running the mapping computation
-            GridmetPipeline.applyFill(unfilled,
-              Sources.fillMappingCsv(spark, mappingPath))
+    GridmetPipeline.releasingCaches {
+      val start = validDate(a("start-date")); val end = validDate(a("end-date"))
+      val grid = spark.read.parquet(a("grid-path"))
+      val weights = Sources.weightsCsv(spark, a("weights-file"), a("fid"))
+      val features = readFeatures(spark, a("target-file"), a("fid"))
+      val filled = a.has("fill-missing")
+      // genmap protocol (`helper.py:13-14,43,77-79`): --genmap derives the
+      // NN mapping and persists it to --mapping-file (default name as the
+      // reference's mfile); without --genmap an existing --mapping-file is
+      // consumed instead of recomputing the mapping.
+      val mappingPath = s"${a("output-path")}/" +
+        a.get("mapping-file").getOrElse("fill_missing_nearest.csv")
+      val out =
+        if (filled && a.has("genmap")) {
+          // build the unfilled series ONCE, derive + persist the mapping,
+          // and fill that same series — no second aggregation DAG
+          val unfilled = GridmetPipeline.gridmet(grid, weights, features,
+            start = start, end = end, partial = a.has("partial"),
+            strategy = weightJoinArg(spark, a))
+          GridmetPipeline.fillMapping(unfilled, features) match {
+            case None => unfilled
+            case Some(m) =>
+              Sinks.writeMappingCsv(m, mappingPath)
+              // fill from the persisted CSV: truncates the NN-join lineage
+              // so the output job broadcasts a tiny file-backed table
+              // instead of re-running the mapping computation
+              GridmetPipeline.applyFill(unfilled,
+                Sources.fillMappingCsv(spark, mappingPath))
+          }
+        } else {
+          val mapping =
+            if (filled && a.get("mapping-file").isDefined)
+              Some(Sources.fillMappingCsv(spark, mappingPath))
+            else None
+          GridmetPipeline.gridmet(grid, weights, features,
+            start = start, end = end,
+            partial = a.has("partial"), fillMissing = filled,
+            mapping = mapping, strategy = weightJoinArg(spark, a))
         }
-      } else {
-        val mapping =
-          if (filled && a.get("mapping-file").isDefined)
-            Some(Sources.fillMappingCsv(spark, mappingPath))
-          else None
-        GridmetPipeline.gridmet(grid, weights, features,
-          start = start, end = end,
-          partial = a.has("partial"), fillMissing = filled,
-          mapping = mapping, strategy = weightJoinArg(spark, a))
-      }
-    val name = a.get("file-prefix").getOrElse("") + Sinks.outputName(start, filled)
-    val path = s"${a("output-path")}/$name"
-    Sinks.writeContract(Sinks.ordered(out, "time", "nhru"), path)
-    path
+      val name = a.get("file-prefix").getOrElse("") + Sinks.outputName(start, filled)
+      val path = s"${a("output-path")}/$name"
+      Sinks.writeContract(Sinks.ordered(out, "time", "nhru"), path)
+      path
+    }
   }
 
   def runCfsv2(spark: SparkSession, a: Args): String = {
-    val grid = spark.read.parquet(a("grid-path"))
-    val weights = Sources.weightsCsv(spark, a("weights-file"), a("fid"))
-    val features = readFeatures(spark, a("target-file"), a("fid"))
-    val elev = Sources.prmsElevations(spark, a("model-param-file"))
-    // S9/A5 — date range probed from the grid's own time coordinate
-    val start = grid.agg(min(col("time"))).first().get(0).toString.take(10)
-    val method = a.get("method").getOrElse("1").toInt
-    val (out, parts, name) = method match {
-      case 1 =>
-        (GridmetPipeline.cfsv2Median(grid, weights, features, elev),
-          Nil, Sinks.outputName(start, filled = false, median = true))
-      case 2 =>
-        (GridmetPipeline.cfsv2Ensemble(grid, weights, features, elev),
-          Seq("ens"), Sinks.outputName(start, filled = false))
-      case other => sys.error(s"--method must be 1 or 2, got $other")
+    GridmetPipeline.releasingCaches {
+      val grid = spark.read.parquet(a("grid-path"))
+      val weights = Sources.weightsCsv(spark, a("weights-file"), a("fid"))
+      val features = readFeatures(spark, a("target-file"), a("fid"))
+      val elev = Sources.prmsElevations(spark, a("model-param-file"))
+      // S9/A5 — date range probed from the grid's own time coordinate
+      val start = grid.agg(min(col("time"))).first().get(0).toString.take(10)
+      val method = a.get("method").getOrElse("1").toInt
+      val (out, parts, name) = method match {
+        case 1 =>
+          (GridmetPipeline.cfsv2Median(grid, weights, features, elev),
+            Nil, Sinks.outputName(start, filled = false, median = true))
+        case 2 =>
+          (GridmetPipeline.cfsv2Ensemble(grid, weights, features, elev),
+            Seq("ens"), Sinks.outputName(start, filled = false))
+        case other => sys.error(s"--method must be 1 or 2, got $other")
+      }
+      val path = s"${a("output-path")}/${a.get("file-prefix").getOrElse("")}$name"
+      Sinks.writeContract(out, path, partitionBy = parts)
+      path
     }
-    val path = s"${a("output-path")}/${a.get("file-prefix").getOrElse("")}$name"
-    Sinks.writeContract(out, path, partitionBy = parts)
-    path
   }
 
   /** S1 staging: gridded NetCDF file → long-form staged parquet, with

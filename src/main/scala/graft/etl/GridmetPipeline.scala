@@ -2,6 +2,8 @@ package graft.etl
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 import graft.operators.{WeightedMean, FillMissing, EnsembleStats}
 import graft.functions.Physics
 
@@ -99,6 +101,18 @@ object GridmetPipeline {
     }
   }
 
+  private val owned =
+    new scala.util.DynamicVariable[Option[mutable.Buffer[DataFrame]]](None)
+
+  /** Run `body`, a pipeline together with the actions that consume its
+    * output, then release every aggregate the pipeline cached inside
+    * it. A plan the caller had cached before stays cached. */
+  def releasingCaches[T](body: => T): T = {
+    val cached = mutable.Buffer.empty[DataFrame]
+    try owned.withValue(Some(cached))(body)
+    finally cached.foreach(_.unpersist(blocking = false))
+  }
+
   /** Reindex the aggregated series to the FULL feature × time (× ens)
     * domain: the weighted mean's inner join drops features whose weight
     * cells fall outside the (subset) grid, but the reference's output
@@ -120,11 +134,14 @@ object GridmetPipeline {
     // CacheManager substitutes the InMemoryRelation under every
     // reference), but persist KEEPS LINEAGE — on a real cluster a lost
     // executor recomputes the partition instead of permanently failing
-    // the job (checkpoint blocks have no recompute path), and the
-    // ContextCleaner unpersists automatically once the DataFrame is
-    // unreachable. Post-aggregation size: |features| × |timesteps| ×
-    // |ens|, the small end of the DAG.
-    val aggOnce = agg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the job (checkpoint blocks have no recompute path). The
+    // CacheManager holds the entry until it is unpersisted, so it is
+    // registered with the enclosing [[releasingCaches]] scope, unless
+    // the caller had already cached this plan. Post-aggregation size:
+    // |features| × |timesteps| × |ens|, the small end of the DAG.
+    val fresh = agg.storageLevel == StorageLevel.NONE
+    val aggOnce = agg.persist(StorageLevel.MEMORY_AND_DISK)
+    if (fresh) owned.value.foreach(_ += aggOnce)
     val domain = (Seq("time") ++ extraKeys)
       .foldLeft(features.select(col("fid"))) { (d, k) =>
         d.crossJoin(aggOnce.select(col(k)).distinct())

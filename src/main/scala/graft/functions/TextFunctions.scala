@@ -53,21 +53,12 @@ object TextFunctions {
   /** LSH band key: fold one band (r consecutive signature slots) into a
     * single long. `sig` is the minhash signature array; band b covers
     * slots [b·r+1, b·r+r] (1-based slice). Runs as the codegen'd
-    * [[BandKeys]] expression — the HOF form ([[bandKeysRef]], kept as
-    * the equality-pinned reference) evaluates bands·r interpreted
-    * lambda frames per row, whose interpreted modulo was the top
-    * on-CPU frame of the incremental-neardup stack sample. */
+    * [[BandKeys]] expression — the HOF form (`bandKeysRef`, the
+    * equality-pinned reference in TextFunctionsSpec) evaluates bands·r
+    * interpreted lambda frames per row, whose interpreted modulo was
+    * the top on-CPU frame of the incremental-neardup stack sample. */
   def bandKeys(sig: Column, bands: Int, r: Int): Column =
     BandKeys.band_keys(sig, bands, r)
-
-  /** Column-API reference implementation of [[bandKeys]] (interpreted
-    * HOFs — slow; kept as the independently-derived verifier of the
-    * kernel, the winnowingFingerprintsRef convention). */
-  def bandKeysRef(sig: Column, bands: Int, r: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("band"),
-        aggregate(slice(sig, b * r + lit(1), lit(r)), lit(0L),
-          (acc, h) => (acc * 1000003L + h) % PortableHash.Mod).as("bkey")))
 
   /** Exact Jaccard similarity of two distinct-element arrays. */
   def jaccard(a: Column, b: Column): Column =
@@ -91,23 +82,9 @@ object TextFunctions {
     * sorted mins are the fingerprint set. Deterministic and
     * oracle-expressible. Returns array<long>. Runs as the one-pass
     * codegen kernel ([[TextKernels.winnowFingerprints]]); the HOF
-    * reference form below is equality-pinned in TextFunctionsSpec. */
+    * reference form is equality-pinned in TextFunctionsSpec. */
   def winnowingFingerprints(text: Column, k: Int, w: Int): Column =
     TextKernels.winnow_fingerprints(text, k, w)
-
-  /** Column-API reference implementation of [[winnowingFingerprints]]
-    * (interpreted HOFs — slow; kept as the independently-derived
-    * verifier of the kernel). */
-  def winnowingFingerprintsRef(text: Column, k: Int, w: Int): Column =
-    bindOnce(
-      when(length(text) < k, array().cast("array<long>")).otherwise(
-        transform(sequence(lit(1), length(text) - (k - 1)),
-          i => portable_hash(text.substr(i, lit(k)))))) { grams =>
-      val mins = when(size(grams) < w, grams).otherwise(
-        transform(sequence(lit(1), size(grams) - (w - 1)),
-          p => array_min(slice(grams, p, lit(w)))))
-      array_sort(array_distinct(mins))
-    }
 
   /** Small fixed stopword profiles for the language-ID heuristic. */
   val LangProfiles: Map[String, Seq[String]] = Map(

@@ -21,12 +21,7 @@ object Par {
     * constant (guide §2.5: partition count from the cluster, CPU
     * balance from the key spread). */
   def spreadBy(df: DataFrame, keys: Column*): DataFrame =
-    // SPARK_GRAFT_SPREAD=plain restores the keyed-only exchange (A/B
-    // measurement seam; the explicit width is the default)
-    if (sys.env.get("SPARK_GRAFT_SPREAD").contains("plain"))
-      df.repartition(keys: _*)
-    else df.repartition(
-      df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
 
   /** Run a DRIVER-SIDE TRAINING LOOP with AQE disabled, restoring the
     * previous setting after. Fixed-round trainers (logistic gradient

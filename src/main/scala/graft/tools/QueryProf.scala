@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run named SparkEntry queries bench-shaped (local[$CPUS],
   * shuffle = cpus, AQE on, noop sink, warm tables) with a
   * [[StressMetrics]] listener attached, and print per-stage wall/CPU/
@@ -15,26 +13,9 @@ import org.apache.spark.sql.SparkSession
 object QueryProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val trials = sys.env.getOrElse("SPARK_GRAFT_PROF_TRIALS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_PROF_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_PROF_CKSUM", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Seq("lineitem", "orders", "customer", "part", "events",
-      "documents", "embeddings", "nation", "region")
-      .foreach(t => try spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () })
+    val trials = graft.Sessions.envInt("SPARK_GRAFT_PROF_TRIALS", 2)
+    val spark = graft.Sessions.querySuite(graft.Sessions.cores(32), "WARN")
+    graft.Sessions.warmTables(spark, sfDir)
     val m = new StressMetrics
     spark.sparkContext.addSparkListener(m)
     // SPARK_GRAFT_PROF_SAMPLE_MS=N: in-process stack sampler over the

@@ -879,6 +879,44 @@ class JobsSpec extends SparkSpec {
     assert(new java.io.File(path).listFiles().exists(_.getName.startsWith("ens=")))
   }
 
+  test("gridmet-etl and cfsv2-etl release what they cached, and only that") {
+    val dir = Files.createTempDirectory("graft-job-cache").toString
+    val t1 = Timestamp.valueOf("2021-02-01 00:00:00")
+    (for { i <- 0 to 1; j <- 0 to 1 } yield
+      (t1, j, i, 40.0 + j, -100.0 + i, 285.0 + i, 275.0 + i, 1.0, 80.0, 40.0, 3.0))
+      .toDF("time", "j", "i", "lat", "lon", "tmmx", "tmmn", "pr", "rmax", "rmin", "vs")
+      .write.parquet(s"$dir/grid")
+    (for { e <- 0 to 1; i <- 0 to 1 } yield
+      (t1, e, 0, i, 40.0, -100.0 + i, 285.0 + e, 275.0 + e, 1.0, 0.008))
+      .toDF("time", "ens", "j", "i", "lat", "lon", "tmmx", "tmmn", "pr", "sph")
+      .write.parquet(s"$dir/ens_grid")
+    Seq((1L, 40.0, -99.5, -101.0, 39.0, -99.0, 41.0))
+      .toDF("nhru_v1_1", "lat", "lon", "minx", "miny", "maxx", "maxy")
+      .write.parquet(s"$dir/feats")
+    Files.writeString(java.nio.file.Paths.get(dir, "w.csv"),
+      "nhru_v1_1,i,j,wght\n1,0,0,1.0\n")
+    Files.writeString(java.nio.file.Paths.get(dir, "params"),
+      "hru_elev\nx\nnhru\n1\n2\n150.0\n####\n")
+    val common = Seq("--target-file", s"$dir/feats", "--weights-file", s"$dir/w.csv",
+      "--fid", "nhru_v1_1", "--output-path", s"$dir/out")
+    // a plan the caller cached before the jobs ran (the job reads the
+    // same grid) is the caller's, and stays cached
+    val callers = spark.read.parquet(s"$dir/grid").persist()
+    callers.count()
+    // a cached relation, once an action read it, is a persistent RDD
+    def cached = spark.sparkContext.getPersistentRDDs.keySet
+    val before = cached
+    Jobs.runGridmet(spark, Jobs.parseArgs(Seq("--start-date", "2021-02-01",
+      "--end-date", "2021-02-01", "--grid-path", s"$dir/grid") ++ common))
+    for (m <- Seq("1", "2"))
+      Jobs.runCfsv2(spark, Jobs.parseArgs(Seq("--grid-path", s"$dir/ens_grid",
+        "--model-param-file", s"$dir/params", "--method", m,
+        "--file-prefix", s"m${m}_") ++ common))
+    assert(cached == before)
+    assert(callers.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    callers.unpersist()
+  }
+
   test("daily-etl job: gated incremental cycles over a day-file drop-box (the Gridmet_current loop)") {
     import graft.operators.WeightedMean
     val dir = Files.createTempDirectory("graft-daily-job").toString

@@ -3,6 +3,7 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import TextFunctions._
+import TextFunctionsRef._
 
 class TextFunctionsSpec extends SparkSpec {
   import spark.implicits._
