@@ -1,19 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Column, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{WeightedMean, EnsembleStats, FillMissing, Dedup, Similarity}
-import graft.etl.GridmetPipeline
-import graft.functions.{Physics, TextFunctions}
-import graft.streaming.EventPipeline
+import graft.queries._
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2 (+ the training-data-pipeline extensions), each paired
-  * with equivalent DuckDB SQL in `oracleSql`.
+/** Driver contract — one query per implemented operator from SURVEY.md
+  * §2 (+ the training-data-pipeline extensions), each declared once in
+  * its family's module under `graft.queries` as a [[graft.queries.Query]]
+  * that pairs the Spark builder with equivalent DuckDB SQL.
+  * `queries` and `oracleSql` are both derived from [[declarations]].
   *
-  * Determinism policy (drives every query below):
+  * Determinism policy (drives every query):
   *  - integer outputs and single-pass column arithmetic are bit-exact in
   *    both engines — no rounding needed;
   *  - money sums go through DECIMAL(18,2) then cast back to double —
@@ -25,456 +22,23 @@ import graft.streaming.EventPipeline
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Every declared query, in family order (VerifySurfaceSpec pins the
+    * names distinct: the maps below would keep only one of two). */
+  val declarations: Seq[Query] = Seq(ClimateQueries, RelationalQueries,
+    StreamingQueries, DedupQueries, SimilarityQueries, CurationQueries,
+    TokenizerQueries, MixtureQueries, PackingQueries, MultimodalQueries)
+    .flatMap(_.all)
 
-  /** documents/embeddings arrive as ONE small parquet file → one input
-    * partition, which serializes the CPU-heavy per-row text/vector work
-    * (hashing, shingling, folds). Spread rows across the cluster first —
-    * the shuffle is tiny relative to the per-row compute it unlocks, and
-    * it is exactly what a 100 TB pipeline does between a coalesced scan
-    * and a compute-bound stage. */
-  // keyed-only, deliberately AQE-elastic: an explicit session width
-  // here was A/B-measured WORSE for the broad text family and re-
-  // confirmed by an interleaved quiet-box A/B this round (steady
-  // trials, 2 JVMs per mode): q75 1.22→1.59, q130 1.59→1.82, q156
-  // 0.83→0.99, q182 1.04→1.39 (32-way task overhead on ~1 MB
-  // exchanges), with q184/q161/q146 flat — the pair-verify machinery,
-  // the one family whose per-candidate CPU dominates (q129 2.8→1.0),
-  // gets its explicit-width spread at ITS OWN exchange
-  // (operators.Par.spreadBy at the hammingPairsBlocked probe leg), not
-  // here. OPTIMIZATION_r18.md §3 has the full table.
-  private def spread(df: DataFrame, key: String): DataFrame =
-    df.repartition(col(key))
+  /** Flagship: the area-weighted-mean pipeline (A1+J1) on sf0.001. */
+  def entry(spark: SparkSession): DataFrame =
+    ClimateQueries.weightedMean.build(spark, "/root/testdata/sf0.001")
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "documents"), "doc_id")
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declarations.map(q => q.name -> q.build).toMap
 
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    spread(t(s, dir, "embeddings"), "vec_id")
-
-  // ---- shared ANN index artifacts (q36/q50/q63) ----
-  // At 100 TB the quantizers are persisted INDEX ARTIFACTS trained once
-  // per corpus and served to every query — never a per-query step (the
-  // Faiss deployment model). Training is fully deterministic with the
-  // same parameters as before, so each query's oracle is unchanged; the
-  // cache only removes redundant re-training within a session. The
-  // centroids/codebooks are plain driver-side arrays (bounded plan
-  // parameters), so cache entries carry no SparkSession state.
-  // `annTrainings` counts actual training runs for the spec pinning
-  // "one training per corpus, not per query".
-  //
-  // IMMUTABLE-CORPUS-PER-PATH ASSUMPTION (applies to every cache in
-  // this section, including the dup-graph caches below): entries are
-  // keyed by directory path with NO data-version fingerprint, so
-  // overwriting a table at the same path within a live JVM would serve
-  // stale artifacts. That is the deployment contract of a persisted
-  // index: rebuilding the corpus means retraining/republishing its
-  // artifacts under a new version, not mutating data under a live
-  // server. Tests that rewrite tables copy them to a private dir first
-  // (ArtifactReuseSpec does exactly this).
-  val annTrainings = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap[String, Similarity.IvfIndex]()
-  private val bpeMergesCache =
-    scala.collection.concurrent.TrieMap[String, Seq[(String, String)]]()
-  private val pqCache =
-    scala.collection.concurrent.TrieMap[String, IndexedSeq[IndexedSeq[Array[Double]]]]()
-
-  /** The corpus's IVF coarse quantizer (16 lists, 3 Lloyd iterations,
-    * trained on the deterministic even-id half — the 100 TB lever).
-    * Synchronized: TrieMap.getOrElseUpdate only makes the STORE atomic,
-    * not the computation — two racing first callers would both train
-    * (breaking the one-training-per-corpus invariant and wasting the
-    * Lloyd jobs). Training is rare; a coarse lock is fine. */
-  private def ivfArtifact(s: SparkSession, dir: String): Similarity.IvfIndex =
-    ivfCache.synchronized {
-      ivfCache.getOrElseUpdate(dir, {
-        annTrainings.incrementAndGet()
-        // the BUILD-TIME-VALIDATED artifact: list-share stats measured
-        // once here, so index-overload searches carry no per-query
-        // stats aggregate (same centroid values as before — the stats
-        // pass does not perturb training)
-        Similarity.ivfIndex(embs(s, dir), nLists = 16, iters = 3,
-          trainSampleMod = 2)
-      })
-    }
-
-  private val unigramCache =
-    scala.collection.concurrent.TrieMap[String, Map[String, Double]]()
-
-  /** The corpus's trained UNIGRAM-LM piece table (q156's parameters) —
-    * the per-corpus artifact pattern: trained once, served to every
-    * consumer (q156 surfaces training; q159 segments through the same
-    * values). */
-  private def unigramArtifact(
-      s: SparkSession, dir: String): Map[String, Double] =
-    unigramCache.synchronized {
-      unigramCache.getOrElseUpdate(dir, {
-        graft.operators.UnigramLm.trainUnigram(docs(s, dir), "text",
-            maxPieceLen = 4, minCount = 2, maxVocab = 500, iters = 2)
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      })
-    }
-
-  /** The corpus's trained tokenizer (q130's 8 ranked merges) — like
-    * the ANN quantizers, a per-corpus artifact trained once and served
-    * to every consumer (q130 surfaces the training itself; q137
-    * evaluates fertility through the same values). */
-  private def bpeMergesArtifact(
-      s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergesCache.synchronized {
-      bpeMergesCache.getOrElseUpdate(dir, {
-        graft.operators.BpeTrain.trainMerges(docs(s, dir), "text", 8)
-          .orderBy(col("rank")).collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-      })
-    }
-
-  /** The corpus's PQ codebooks (m=8 × ksub=16, 2 Lloyd iterations,
-    * same deterministic even-id training sample). */
-  private def pqArtifact(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[Array[Double]]] =
-    pqCache.synchronized {
-      pqCache.getOrElseUpdate(dir, {
-        annTrainings.incrementAndGet()
-        Similarity.pqCodebooks(embs(s, dir), m = 8, ksub = 16, iters = 2,
-          trainSampleMod = 2)
-      })
-    }
-
-  private val pqResCache =
-    scala.collection.concurrent.TrieMap[String, IndexedSeq[IndexedSeq[Array[Double]]]]()
-
-  /** RESIDUAL PQ codebooks (q80 — Faiss IVFPQ proper): trained on
-    * v − centroid(list) under the SHARED coarse quantizer, same
-    * m/ksub/iters/sample as [[pqArtifact]]. A third one-time artifact
-    * per corpus. */
-  private def pqResidualArtifact(s: SparkSession, dir: String): IndexedSeq[IndexedSeq[Array[Double]]] =
-    pqResCache.synchronized {
-      pqResCache.getOrElseUpdate(dir, {
-        annTrainings.incrementAndGet()
-        Similarity.pqCodebooksResidual(embs(s, dir),
-          ivfArtifact(s, dir).cents,
-          m = 8, ksub = 16, iters = 2, trainSampleMod = 2)
-      })
-    }
-
-  // ---- shared near-dup graph artifacts (q14/q43/q46/q52/q61/q69) ----
-  // Same persisted-artifact reasoning as the ANN quantizers: a real
-  // pipeline computes the corpus's duplicate graph ONCE and serves the
-  // cluster assignments to every downstream curation query — it does
-  // not re-shingle 100 TB per query. `localCheckpoint(eager = false)`
-  // materializes on first use and later consumers read the checkpointed
-  // blocks; results are value-identical (the checkpoint is exact), so
-  // every oracle is unchanged. Keyed by (session, dir) because a
-  // checkpointed DataFrame is bound to its SparkContext.
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  /** Stale-entry guard: a checkpointed DataFrame dies with its
-    * SparkContext, so an entry cached for a since-stopped session must
-    * be recomputed, never served. (Entries themselves are few — one
-    * per (session, dir) pair — so the footprint is bounded by usage;
-    * the correctness risk is staleness, handled here.) */
-  private def cachedDf(
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
-      key: (SparkSession, String))(build: => DataFrame): DataFrame =
-    cache.synchronized {
-      // evict every dead-session entry while we hold the lock — stale
-      // DataFrames are unusable AND would otherwise pin their stopped
-      // SparkSession object graphs for the JVM lifetime
-      cache.filterInPlace((k, _) => !k._1.sparkContext.isStopped)
-      cache.getOrElseUpdate(key, build)
-    }
-
-  /** Near-dup candidate pairs (q14's parameters: word-trigram shingles,
-    * 64-slot minhash, 16 bands, verified Jaccard ≥ 0.8). */
-  private def dupPairs(s: SparkSession, dir: String): DataFrame =
-    cachedDf(pairsCache, (s, dir))(
-      Dedup.minhashLsh(docs(s, dir), "doc_id", "text",
-        n = 3, k = 64, bands = 16, threshold = 0.8)
-        .localCheckpoint(eager = false))
-
-  /** Connected-component dup clusters over [[dupPairs]] (min-label
-    * propagation + canonical election). */
-  private def dupClusters(s: SparkSession, dir: String): DataFrame =
-    cachedDf(clusterCache, (s, dir))(
-      Dedup.duplicateClusters(docs(s, dir), "doc_id", dupPairs(s, dir))
-        .localCheckpoint(eager = false))
-
-  private val spansCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  private val jaccardPairsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private val simhashPairsCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-
-  /** Exact-jaccard near-dup pairs (q17's parameters) — per-corpus
-    * artifact: q17 lists them, q91 consumes them as evaluation truth. */
-  private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    cachedDf(jaccardPairsCache, (s, dir))(
-      Dedup.ngramJaccardPairsAdaptive(docs(s, dir), "doc_id", "text",
-        blockCol = "lang", n = 2, threshold = 0.4)
-        .localCheckpoint(eager = false))
-
-  /** Blocked-simhash near-dup pairs (q16's parameters) — per-corpus
-    * artifact: q16 lists them, q91 evaluates them against [[jaccardPairs]]. */
-  private def simhashPairsArtifact(s: SparkSession, dir: String): DataFrame =
-    cachedDf(simhashPairsCache, (s, dir))(
-      Dedup.simhashPairsBlocked(docs(s, dir), "doc_id", "text", maxHamming = 3)
-        .localCheckpoint(eager = false))
-
-  /** Cross-document repeated-span cut list (q81's parameters) — a
-    * train-once corpus artifact like [[dupPairs]]: detection runs once
-    * per (session, corpus) and both the q81 listing and the q83
-    * removal consume the same checkpointed list (in a real curation
-    * run the cut list IS a persisted intermediate, not something
-    * recomputed by every consumer). */
-  private def repeatedSpansArtifact(s: SparkSession, dir: String): DataFrame =
-    cachedDf(spansCache, (s, dir))(
-      Dedup.repeatedSpans(docs(s, dir), "doc_id", "text", n = 8, minDocs = 2)
-        .localCheckpoint(eager = false))
-
-  /** Synthetic media table: documents as opaque binary payloads + typed
-    * metadata (the multimodal column model — payload bytes stay an
-    * uninterpreted BINARY column; dims/frame metadata ride beside). */
-  private def media(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(
-      col("doc_id").as("media_id"),
-      element_at(array(lit("image"), lit("audio"), lit("video")),
-        (col("doc_id") % 3 + 1).cast("int")).as("modality"),
-      col("text").cast("binary").as("bytes"),
-      ((col("doc_id") % 16 + 1) * 8).cast("int").as("width"),
-      ((col("doc_id") % 9 + 1) * 8).cast("int").as("height"),
-      (col("doc_id") % 7 + 1).cast("int").as("n_frames"))
-
-  /** The events table's `ts` has shipped under multiple physical
-    * encodings (int64 nanos in rounds 1–7, TIMESTAMP_MICROS NTZ from
-    * round 8); normalize to microsecond TimestampType at the loader —
-    * lossless under the UTC session zone, and identical to the
-    * oracle's naive CAST(ts AS TIMESTAMP). See
-    * [[graft.functions.EventTime.normalize]]. */
-  private def events(s: SparkSession, dir: String): DataFrame =
-    graft.functions.EventTime.normalize(t(s, dir, "events"), "ts")
-
-  /** Exact money sum: decimal-accumulate, surface as double. */
-  private def moneySum(c: Column): Column =
-    sum(c.cast("decimal(18,2)")).cast("double")
-
-  private val streamSeq = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private val streamSrcDirs =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** Events staged as `files` event-time-ordered slice files with
-    * ascending modification times — read with `maxFilesPerTrigger = 1`
-    * the stream delivers them over SEVERAL micro-batches in event-time
-    * order (monotone watermark progress, no late drops), so q108's
-    * stream-stream join pairs spanning a slice boundary must flow
-    * through join STATE retained across batches. Slices partition the
-    * table exactly (last slice takes the catch-all upper bound). */
-  private def eventsSlicedStreamDir(
-      s: SparkSession, dir: String, files: Int = 4): String =
-    streamSrcDirs.getOrElseUpdate(s"sliced$files:" + dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_sliced_")
-      val ev = events(s, dir)
-      // equal-COUNT slices on the (ts, event_id) rank, not equal-width
-      // time windows: the events table is bursty, so uniform-time cuts
-      // land in empty gaps and almost no q108 pair or q109 lookback
-      // would actually span a boundary — rank cuts fall between
-      // ADJACENT events, putting boundaries inside dense regions.
-      // Rank cuts CAN split equal-ts rows across slices, which would
-      // break q109's right-before-left tie rule across a batch
-      // boundary — asserted absent below, so a future testdata regen
-      // that introduces a same-user equal-ts pair fails HERE by name
-      // instead of as a silent oracle divergence.
-      require(ev.groupBy(col("user_id"), col("ts")).count()
-          .filter(col("count") > 1).isEmpty,
-        "events table carries same-user equal-ts rows: rank-cut " +
-          "slices could split such a tie across micro-batches and " +
-          "break the as-of right-before-left rule (q109)")
-      // ntile = equal-count buckets without a separate count() (and
-      // without the int-overflow a rank*files product would hit above
-      // ~2^31/files rows); ONE pass writes every slice via partitionBy
-      // (global-window output is a single partition, so one file per
-      // slice directory).
-      val w = Window.orderBy(col("ts"), col("event_id"))
-      val scratch =
-        java.nio.file.Files.createTempDirectory("graft_stream_sliced_w_")
-      ev.withColumn("__slice", ntile(files).over(w) - 1)
-        .write.mode("overwrite").partitionBy("__slice")
-        .parquet(scratch.toString)
-      val base = System.currentTimeMillis()
-      (0 until files).foreach { k =>
-        // a table with fewer rows than `files` leaves some ntile
-        // buckets empty — no __slice=k directory is written; skip
-        // rather than NPE (fewer staged files is still a valid stream)
-        Option(new java.io.File(scratch.toFile, s"__slice=$k").listFiles())
-          .foreach { entries =>
-            val parts = entries.filter(_.getName.endsWith(".parquet"))
-            // the global-window write produces ONE part per slice; if a
-            // plan change ever splits it, taking the head would silently
-            // drop rows from the staged stream — fail by name instead
-            require(parts.length == 1,
-              s"slice $k: expected exactly one parquet part file from " +
-                s"the single-partition write, found ${parts.length}")
-            val f = d.resolve(f"$k%02d_events.parquet")
-            java.nio.file.Files.move(parts.head.toPath, f)
-            f.toFile.setLastModified(base - (files - k).toLong * 60000L)
-          }
-      }
-      d.toFile.deleteOnExit()
-      d.toString
-    })
-
-  /** The staged-grid drop-box for q113: the synthetic grid with time
-    * truncated to YEAR, staged as one file per distinct time value
-    * with ascending modification times — the reference's daily staging
-    * cadence at a coarser calendar grain (7 "days" → 7 micro-batches
-    * at sf0.01), satisfying IncrementalEtl's day-atomicity contract
-    * (each time value's rows land whole in one file). */
-  private def gridDailyStreamDir(s: SparkSession, dir: String): String =
-    streamSrcDirs.getOrElseUpdate("griddaily:" + dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft_grid_daily_")
-      val g = gridFromLineitem(t(s, dir, "lineitem"), nullify = false)
-        .withColumn("time", date_trunc("year", col("time")).cast("date"))
-      val scratch =
-        java.nio.file.Files.createTempDirectory("graft_grid_daily_w_")
-      // repartition BY the year: each year's rows land in one task, so
-      // the partitioned write emits exactly one file per year directory
-      g.withColumn("__y", year(col("time")))
-        .repartition(col("__y"))
-        .write.mode("overwrite").partitionBy("__y").parquet(scratch.toString)
-      val base = System.currentTimeMillis()
-      val years = Option(scratch.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("__y=")).sortBy(_.getName)
-      years.zipWithIndex.foreach { case (yd, k) =>
-        val parts = yd.listFiles().filter(_.getName.endsWith(".parquet"))
-        require(parts.length == 1,
-          s"${yd.getName}: expected one parquet part from the one-task " +
-            s"write, found ${parts.length}")
-        val f = d.resolve(f"$k%02d_grid.parquet")
-        java.nio.file.Files.move(parts.head.toPath, f)
-        f.toFile.setLastModified(base - (years.length - k).toLong * 60000L)
-      }
-      d.toFile.deleteOnExit()
-      d.toString
-    })
-
-  /** The q118 late-data fixture: (file, user_id, ts, event_id, value) —
-    * value kept as the literal string so the Spark frame and the oracle
-    * VALUES render the identical number. Files stage in order (one
-    * micro-batch each, delay 1 h, gap 30 min), so the watermark during
-    * file k is max(ts over files < k) − 1 h; files 1–2 deliberately
-    * carry BEHIND-WATERMARK events exercising every late-data arm of
-    * [[graft.streaming.EventPipeline.sessionizeStatefulEventTime]]
-    * (LateDataSpec pins each in isolation):
-    *  - u10 11:40 @file1 (wm 14:00): 2 h 20 m late, folds into the open
-    *    [12:00–12:05] session (start regresses) and leaves its end
-    *    12:35 behind the watermark → expired on arrival, emitted once;
-    *    u10's 16:10 then continues the numbering via the tombstone;
-    *  - u20 10:00 @file1: beyond the gap BEFORE the open [13:00]
-    *    session — must NOT fold (round-12 advice): its own session 1,
-    *    the open session shifted to ordinal 2 and itself expired;
-    *  - u80 13:30 @file1: late singleton whose end 14:00 equals the
-    *    CURRENT watermark exactly — arms its timeout AT the watermark
-    *    (legal; strictly-behind only is rejected) and closes when the
-    *    file-2 watermark 15:00 strictly passes;
-    *  - u60 16:30 @file2: end 17:00 equals the FINAL watermark — held
-    *    open (the q114 strict-< rule, now pinned on the late surface);
-    *  - u30/u40/u50/u70: on-time fillers that drive the watermark.
-    * Every shape lands exactly on batch sessionization + the q114
-    * closure rule, so the oracle is the q114 SQL chain over these rows. */
-  private val lateEventRows: Seq[(Int, Long, String, Long, String)] = Seq(
-    (0, 10L, "2021-06-01 12:00:00", 1L, "1.0"),
-    (0, 10L, "2021-06-01 12:05:00", 2L, "2.0"),
-    (0, 20L, "2021-06-01 13:00:00", 3L, "1.5"),
-    (0, 40L, "2021-06-01 15:00:00", 4L, "4.0"),
-    (1, 10L, "2021-06-01 11:40:00", 5L, "8.0"),
-    (1, 20L, "2021-06-01 10:00:00", 6L, "2.5"),
-    (1, 30L, "2021-06-01 14:30:00", 7L, "0.5"),
-    (1, 80L, "2021-06-01 13:30:00", 8L, "1.25"),
-    (1, 50L, "2021-06-01 16:00:00", 9L, "3.0"),
-    (2, 10L, "2021-06-01 16:10:00", 10L, "16.0"),
-    (2, 60L, "2021-06-01 16:30:00", 11L, "5.0"),
-    (2, 70L, "2021-06-01 18:00:00", 12L, "32.0"))
-
-  /** Stage [[lateEventRows]] as one parquet file per fixture file with
-    * ascending mtimes (FileStreamSource delivers in mtime order). */
-  private def lateEventsStreamDir(s: SparkSession): String =
-    streamSrcDirs.getOrElseUpdate("late-events", {
-      import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_late_")
-      val base = System.currentTimeMillis()
-      lateEventRows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (k, rs) =>
-        val df = rs.map(r =>
-            (r._2, java.sql.Timestamp.valueOf(r._3), r._4, r._5.toDouble))
-          .toDF("user_id", "ts", "event_id", "value")
-        val scratch =
-          java.nio.file.Files.createTempDirectory("graft_stream_late_w_")
-        df.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-        val part = scratch.toFile.listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val f = d.resolve(f"$k%02d_late.parquet")
-        java.nio.file.Files.move(part.toPath, f)
-        f.toFile.setLastModified(base - (3 - k).toLong * 60000L)
-      }
-      d.toFile.deleteOnExit()
-      d.toString
-    })
-
-  /** Two-file documents stream for q107: the original table, then a
-    * second file carrying THE SAME TEXTS under shifted doc_ids, with
-    * modification times forcing that arrival order (FileStreamSource
-    * delivers in mtime order). Read with `maxFilesPerTrigger = 1` the
-    * copies arrive in a LATER micro-batch than the originals, so
-    * dropping them requires the dedup state to have crossed the batch
-    * boundary through the state store — a single-batch hash table
-    * cannot pass this query. */
-  private def docsDedupStreamDir(s: SparkSession, dir: String): String =
-    streamSrcDirs.getOrElseUpdate("dedup:" + dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_dedup_")
-      val f0 = d.resolve("0_documents.parquet")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/documents.parquet"), f0)
-      val scratch =
-        java.nio.file.Files.createTempDirectory("graft_stream_dedup_w_")
-      s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("doc_id", col("doc_id") + 100000)
-        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val part = scratch.toFile.listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val f1 = d.resolve("1_documents_copy.parquet")
-      java.nio.file.Files.move(part.toPath, f1)
-      // strict mtime order: originals strictly before copies
-      f0.toFile.setLastModified(f1.toFile.lastModified() - 60000L)
-      d.toFile.deleteOnExit()
-      d.toString
-    })
-
-  // runStreamToTable / runStreamToParquet are the seam that puts REAL
-  // Structured Streaming executions (stateful windowed aggregations,
-  // watermarks, the streaming source) on the driver's DuckDB oracle
-  // surface instead of leaving them spec-pinned only. Each call gets a
-  // fresh sink + checkpoint (bench trials re-execute the stream, never
-  // read a previous trial's output).
-
-  /** Run `body` (a bounded streaming execution) with streaming-sized
-    * shuffle partitions, restoring the session value after. Streaming
-    * state partitioning is a DEPLOYMENT parameter (fixed at the
-    * checkpoint's first batch): each store partition pays a
-    * commit+snapshot per micro-batch, so partitions are sized to the
-    * per-batch state volume — a few MB here — not to the batch
-    * session's scan parallelism. Fresh temp checkpoint per run, so the
-    * setting binds cleanly. */
-  private def withStreamShufflePartitions[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  /** Evaluated on first use only: some oracles read committed fixtures. */
+  lazy val oracleSql: Map[String, String] =
+    declarations.map(q => q.name -> q.oracle).toMap
 
   /** Spark's bundled RocksDB state-store provider (spark-sql jar +
     * rocksdbjni native lib — no extra dependency), selected through
@@ -486,7528 +50,4 @@ object SparkEntry {
     * parity-checked under both (RocksDbParitySpec). */
   val RocksDbProviderClass: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Bounded streaming execution through the MEMORY sink — for
-    * Complete-mode aggregates only (q105/q106), whose result is
-    * re-emitted whole each batch and is the aggregate, not the stream;
-    * the file sink cannot take Complete mode. Append-mode streams with
-    * row-proportional output go through [[runStreamToParquet]]. */
-  private def runStreamToTable(
-      s: SparkSession,
-      w: org.apache.spark.sql.streaming.DataStreamWriter[_]): DataFrame = {
-    val name = s"graft_stream_out_${streamSeq.incrementAndGet()}"
-    withStreamShufflePartitions(s) {
-      val q = w.format("memory").queryName(name).start()
-      q.awaitTermination()
-    }
-    // detach the result from the sink before returning: the memory
-    // sink's temp view pins the full result buffer in the session
-    // catalog forever — bench trials would accumulate one per
-    // execution. The checkpoint materializes the (aggregate-sized)
-    // result, then the view drops.
-    val out = s.table(name).localCheckpoint(eager = true)
-    s.catalog.dropTempView(name)
-    out
-  }
-
-  /** Bounded streaming execution through the FILE sink — the scale
-    * path for Append-mode output whose volume grows with the data
-    * (q107's surviving corpus, q108's pair set, q109's enriched
-    * clicks): rows stay distributed instead of collecting to the
-    * driver through the memory sink's buffer. Exactly-once via the
-    * file sink's commit manifest; the returned frame reads back
-    * through it. */
-  private def runStreamToParquet(
-      s: SparkSession,
-      w: org.apache.spark.sql.streaming.DataStreamWriter[_]): DataFrame = {
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_sink_")
-    d.toFile.deleteOnExit()
-    val (out, ckpt) = (d.resolve("out"), d.resolve("ckpt"))
-    withStreamShufflePartitions(s) {
-      val q = w.format("parquet").option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      q.awaitTermination()
-    }
-    s.read.parquet(out.toString)
-  }
-
-  // ---- derived gridmet-shaped inputs over the synthetic tables ----
-  // The synthetic star schema stands in for the staged grid + weight
-  // tables (same shapes as FIXTURES.md §1–2): lineitem rows are "cells",
-  // part rows define the cell→feature weight map.
-
-  private def gridFromLineitem(li: DataFrame, nullify: Boolean): DataFrame = {
-    val pr =
-      if (nullify) when(col("l_discount") > 0.07, lit(null)).otherwise(col("l_extendedprice"))
-      else col("l_extendedprice")
-    li.select(
-      date_trunc("month", col("l_shipdate")).cast("date").as("time"),
-      (col("l_partkey") % 25).as("i"),
-      (col("l_suppkey") % 10).as("j"),
-      pr.as("pr"))
-  }
-
-  private def weightsFromPart(part: DataFrame): DataFrame =
-    part.select(
-      (col("p_partkey") % 40).as("fid"),
-      (col("p_partkey") % 25).as("i"),
-      (col("p_size").cast("long") % 10).as("j"),
-      round(col("p_retailprice") / 1000, 6).as("wght"))
-
-  private val gridSql =
-    """SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS time,
-      |       l_partkey % 25 AS i, l_suppkey % 10 AS j,
-      |       @PR@ AS pr FROM lineitem""".stripMargin
-  private val gridSqlPlain = gridSql.replace("@PR@", "l_extendedprice")
-  private val gridSqlNull = gridSql.replace("@PR@",
-    "CASE WHEN l_discount > 0.07 THEN NULL ELSE l_extendedprice END")
-  private val weightsSql =
-    """SELECT p_partkey % 40 AS fid, p_partkey % 25 AS i,
-      |       CAST(p_size AS BIGINT) % 10 AS j,
-      |       round(p_retailprice/1000, 6) AS wght FROM part""".stripMargin
-
-  /** DuckDB rendering of [[graft.functions.PortableHash]] for ASCII
-    * strings: left fold (acc*31 + byte) mod 1e9+7. */
-  /** Shared CTE chain deriving the q81 `spans` table (doc_id, span,
-    * start_tok, end_tok, marked_grams) — used verbatim by the q81 and
-    * q83 oracles so the span definition can never drift between them
-    * (mirrors `Dedup.repeatedSpans` being the one engine-side source). */
-  private def repeatedSpanCtes: String =
-    """base AS (SELECT doc_id, string_split(text, ' ') AS arr
-      |              FROM documents),
-      |idx AS (SELECT doc_id, arr, unnest(range(0, len(arr) - 7)) AS pos
-      |        FROM base WHERE len(arr) >= 8),
-      |grams AS (SELECT doc_id, pos,
-      |          array_to_string(arr[pos+1 : pos+8], ' ') AS g FROM idx),
-      |hot AS (SELECT g FROM (SELECT g, count(DISTINCT doc_id) AS nd
-      |        FROM grams GROUP BY g) WHERE nd >= 2),
-      |marked AS (SELECT doc_id, pos FROM grams JOIN hot USING (g)),
-      |sp AS (SELECT doc_id, pos,
-      |       CASE WHEN pos - lag(pos) OVER w > 8 THEN 1 ELSE 0 END AS newspan
-      |       FROM marked WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-      |sp2 AS (SELECT doc_id, pos,
-      |        sum(newspan) OVER (PARTITION BY doc_id ORDER BY pos
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS span
-      |        FROM sp),
-      |spans AS (SELECT doc_id, min(pos) AS start_tok, max(pos) + 8 AS end_tok,
-      |  count(*) AS marked_grams
-      |FROM sp2 GROUP BY doc_id, span)""".stripMargin
-
-  /** q16's oracle body — simhash hamming ≤ 3 pairs; a def so q91's
-    * detector evaluation nests the same derivation as a CTE. */
-  private def simhashPairsSql: String =
-    s"""WITH h AS (SELECT doc_id,
-       |  list_transform(string_split(text, ' '), tok -> ${hashSql("tok")}) AS hashes
-       |  FROM documents),
-       |sig AS (SELECT doc_id, CAST(list_sum(list_transform(range(0, 30), j ->
-       |  CASE WHEN list_sum(list_transform(hashes,
-       |         h2 -> (CAST(floor(h2 / power(2, j)) AS BIGINT) % 2) * 2 - 1)) > 0
-       |       THEN CAST(power(2, j) AS BIGINT) ELSE 0 END)) AS BIGINT) AS simhash
-       |FROM h)
-       |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       |       bit_count(xor(a.simhash, b.simhash)) AS hamming
-       |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin
-
-  /** q17's oracle body — lang-blocked bigram jaccard ≥ 0.4 pairs;
-    * shared with q91. */
-  private def ngramJaccardPairsSql: String =
-    """WITH sh AS MATERIALIZED (
-      |  SELECT doc_id, lang, list_distinct(list_transform(range(1, len(t)),
-      |           sh_i -> t[sh_i] || '_' || t[sh_i+1])) AS s
-      |  FROM (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents)
-      |  WHERE len(t) >= 2)
-      |SELECT a_id, b_id, jaccard FROM (
-      |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-      |    round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-      |          / len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
-      |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id)
-      |WHERE jaccard >= 0.4""".stripMargin
-
-  /** Shared CTE chain deriving the corpus near-dup PAIR set (word-
-    * trigram shingles, exact Jaccard ≥ 0.8) — used verbatim by the
-    * q14/q43/q46/q52/q61/q69 oracles so the pair definition can never
-    * drift between them. Derivation: candidates from the shingle
-    * POSTING self-join + per-pair intersection COUNT, not the all-pairs
-    * O(n²) `list_intersect` join — EXACT for any positive threshold (a
-    * qualifying pair shares ≥ 1 shingle, so it appears in the posting
-    * join; on the `list_distinct`ed shingle lists the match count IS
-    * |a∩b| and |a∪b| = m_a + m_b − |a∩b|, so the jaccard value is
-    * bit-identical and rounds identically). Cost drops from n² list
-    * intersections to Σ_g count(g)² cheap row matches: the q69 oracle
-    * alone went 930 s → ~1 s at sf0.1 (round-11 verdict ask #5).
-    * Emits CTEs `sh(doc_id, s)` and `pairs(a_id, b_id, jaccard)`. */
-  private def dupPairsSqlCtes: String =
-    """sh AS MATERIALIZED (
-      |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
-      |           sh_i -> t[sh_i] || '_' || t[sh_i+1] || '_' || t[sh_i+2])) AS s
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-      |  WHERE len(t) >= 3),
-      |dp_post AS (SELECT doc_id, unnest(s) AS g FROM sh),
-      |dp_sz AS (SELECT doc_id, len(s) AS m FROM sh),
-      |dp_inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS c
-      |  FROM dp_post a JOIN dp_post b ON a.g = b.g AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |pairs AS MATERIALIZED (
-      |  SELECT a_id, b_id,
-      |    round(CAST(c AS DOUBLE) / (sa.m + sb.m - c), 6) AS jaccard
-      |  FROM dp_inter JOIN dp_sz sa ON sa.doc_id = a_id
-      |  JOIN dp_sz sb ON sb.doc_id = b_id
-      |  WHERE round(CAST(c AS DOUBLE) / (sa.m + sb.m - c), 6) >= 0.8)""".stripMargin
-
-  /** q75's oracle body — corpus-trained add-one bigram LM, per-doc avg
-    * −ln p. A def so q146's bucketing can nest the SAME derivation as
-    * a CTE subquery (the q85/q91 composition pattern). */
-
-  // ---- shared unigram-LM oracle machinery (q156 trains, q159 serves
-  // through the same trained map — the two nest identical SQL) ----
-  private val UnigramMaxLen = 4
-  private def unigramInnerBs: String =
-    s"""list_aggregate(list_transform(range(greatest(CAST(stx[1] AS INT) - $UnigramMaxLen, 0), CAST(stx[1] AS INT)),
-       |        j -> acc[CAST(2 * j + 1 AS INT)] + coalesce(sc[word[CAST(j + 1 AS INT):CAST(stx[1] AS INT)]][1], CAST(-1e9 AS DOUBLE))), 'max')""".stripMargin
-  private def unigramInnerBj: String =
-    s"""CAST(list_filter(range(greatest(CAST(stx[1] AS INT) - $UnigramMaxLen, 0), CAST(stx[1] AS INT)),
-       |        j -> acc[CAST(2 * j + 1 AS INT)] + coalesce(sc[word[CAST(j + 1 AS INT):CAST(stx[1] AS INT)]][1], CAST(-1e9 AS DOUBLE)) = ($unigramInnerBs))[1] AS DOUBLE)""".stripMargin
-
-  /** One oracle E-step under score-map CTE `m`: forward DP (fw) +
-    * recursive backtrack walk + per-piece usage — see the q156 oracle
-    * comment for the two DuckDB-1.0 lambda hazards this shape avoids. */
-  private def unigramEStepSql(m: String, fw: String, walk: String,
-      seg: String, u: String): String =
-    s"""$fw AS MATERIALIZED (SELECT word, n, length(word) AS L, sc,
-       |  list_reduce(
-       |    list_prepend([CAST(0.0 AS DOUBLE), CAST(0 AS DOUBLE)],
-       |      list_transform(range(1, length(word) + 1), i -> [CAST(i AS DOUBLE)])),
-       |    (acc, stx) -> list_append(list_append(acc, ($unigramInnerBs)), ($unigramInnerBj))) AS dp
-       |  FROM wc CROSS JOIN $m),
-       |$walk(word, n, pos, piece) AS (
-       |  SELECT word, n, CAST(L AS INT), CAST(NULL AS VARCHAR) FROM $fw
-       |  UNION ALL
-       |  SELECT f.word, f.n, CAST(f.dp[CAST(2 * w.pos + 2 AS INT)] AS INT),
-       |    f.word[CAST(f.dp[CAST(2 * w.pos + 2 AS INT)] AS INT) + 1:w.pos]
-       |  FROM $walk w JOIN $fw f ON f.word = w.word WHERE w.pos > 0),
-       |$seg AS (SELECT n, piece FROM $walk WHERE piece IS NOT NULL),
-       |$u AS (SELECT piece, sum(n) AS u FROM $seg GROUP BY piece)""".stripMargin
-
-  /** The full q156 training chain as CTE text (everything after `WITH
-    * RECURSIVE`), and the final pruned-piece SELECT. */
-  private def unigramOracleCtes: String = {
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    s"""wc AS MATERIALIZED (SELECT word, count(*) AS n FROM (
-       |    SELECT unnest(list_filter(
-       |      regexp_split_to_array(text, '[ \\t\\n\\r\\f\\x0B]+'),
-       |      x -> x <> '')) AS word
-       |    FROM documents) GROUP BY word),
-       |subs AS (SELECT piece, sum(n) AS c FROM (
-       |    SELECT n, unnest(flatten(list_transform(
-       |      range(1, length(word) + 1),
-       |      i -> list_transform(
-       |        range(1, least($UnigramMaxLen, length(word) - i + 1) + 1),
-       |        l -> word[CAST(i AS INT):CAST(i + l - 1 AS INT)])))) AS piece
-       |    FROM wc) GROUP BY piece),
-       |kept AS MATERIALIZED (
-       |  SELECT piece, c FROM subs WHERE length(piece) = 1
-       |  UNION ALL
-       |  SELECT piece, c FROM (
-       |    SELECT piece, c, row_number() OVER (
-       |        ORDER BY c DESC, piece ASC) AS rnk
-       |    FROM subs WHERE length(piece) > 1 AND c >= 2)
-       |  WHERE rnk <= 500),
-       |tv AS (SELECT sum(c) AS T, count(*) AS V FROM kept),
-       |m0 AS (SELECT map_from_entries(list(struct_pack(
-       |    k := piece,
-       |    v := ${r6("ln(CAST(c AS DOUBLE) / CAST(tv.T AS DOUBLE))")}))) AS sc
-       |  FROM kept CROSS JOIN tv),
-       |${unigramEStepSql("m0", "fw1", "walk1", "seg1", "u1")},
-       |ut1 AS (SELECT sum(u) AS U FROM u1),
-       |m1 AS (SELECT map_from_entries(list(struct_pack(
-       |    k := kept.piece,
-       |    v := ${r6("ln(CAST(coalesce(u1.u, 0) + 1 AS DOUBLE) / CAST(ut1.U + tv.V AS DOUBLE))")}))) AS sc
-       |  FROM kept LEFT JOIN u1 ON kept.piece = u1.piece
-       |  CROSS JOIN ut1 CROSS JOIN tv),
-       |${unigramEStepSql("m1", "fw2", "walk2", "seg2", "u2")},
-       |ut2 AS (SELECT sum(u) AS U FROM u2)""".stripMargin
-  }
-
-  private def unigramFinalSql: String = {
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    s"""SELECT kept.piece,
-       |  ${r6("ln(CAST(coalesce(u2.u, 0) + 1 AS DOUBLE) / CAST(ut2.U + tv.V AS DOUBLE))")} AS score,
-       |  CAST(coalesce(u2.u, 0) AS BIGINT) AS usage
-       |FROM kept LEFT JOIN u2 ON kept.piece = u2.piece
-       |CROSS JOIN ut2 CROSS JOIN tv
-       |WHERE coalesce(u2.u, 0) > 0 OR length(kept.piece) = 1""".stripMargin
-  }
-
-  /** q151's oracle body — the bigram Kneser–Ney derivation as a def
-    * (the lmScoreSql convention) so q162's bucket composition nests
-    * the SAME scoring chain as a CTE subquery. */
-  private def knScoreSql: String = {
-    val contrib = graft.functions.TextFunctions.round6Sql(
-      "-ln((greatest(CAST(c_ab AS DOUBLE) - 0.75, 0.0) + " +
-        "0.75 * CAST(n1a AS DOUBLE) * " +
-        "(CAST(n1b AS DOUBLE) / CAST(nb.n_bigrams AS DOUBLE))) / " +
-        "CAST(c_a AS DOUBLE))")
-    s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |pairs AS (SELECT doc_id, g['a'] AS a, g['b'] AS b FROM (
-       |    SELECT doc_id, unnest(list_transform(range(1, len(t)),
-       |      pi -> struct_pack(a := t[pi], b := t[pi+1]))) AS g
-       |    FROM tk WHERE len(t) >= 2)),
-       |bi AS MATERIALIZED (SELECT a, b, count(*) AS c_ab
-       |  FROM pairs GROUP BY 1, 2),
-       |ctx AS (SELECT a, sum(c_ab) AS c_a, count(*) AS n1a
-       |  FROM bi GROUP BY 1),
-       |rights AS (SELECT b, count(*) AS n1b FROM bi GROUP BY 1),
-       |nb AS (SELECT count(*) AS n_bigrams FROM bi)
-       |SELECT p.doc_id AS doc_id, count(*) AS n_pairs,
-       |  ${graft.functions.TextFunctions.round6Sql(
-           "CAST(sum(CAST(" + contrib + " AS DECIMAL(28,6))) AS DOUBLE)" +
-             " / CAST(count(*) AS DOUBLE)")} AS nll
-       |FROM pairs p JOIN bi USING (a, b) JOIN ctx USING (a)
-       |  JOIN rights USING (b) CROSS JOIN nb
-       |GROUP BY 1""".stripMargin
-  }
-
-  private def lmScoreSql: String = {
-    val contrib = graft.functions.TextFunctions.round6Sql(
-      "-ln(CAST(c_ab + 1 AS DOUBLE) / CAST(c_a + v.vocab AS DOUBLE))")
-    s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |pairs AS (SELECT doc_id, g['a'] AS a, g['b'] AS b FROM (
-       |    SELECT doc_id, unnest(list_transform(range(1, len(t)),
-       |      pi -> struct_pack(a := t[pi], b := t[pi+1]))) AS g
-       |    FROM tk WHERE len(t) >= 2)),
-       |uni AS (SELECT a, count(*) AS c_a FROM (
-       |    SELECT unnest(t) AS a FROM tk) GROUP BY 1),
-       |bi AS (SELECT a, b, count(*) AS c_ab FROM pairs GROUP BY 1, 2),
-       |v AS (SELECT count(*) AS vocab FROM uni)
-       |SELECT p.doc_id AS doc_id, count(*) AS n_pairs,
-       |  ${graft.functions.TextFunctions.round6Sql(
-           "CAST(sum(CAST(" + contrib + " AS DECIMAL(28,6))) AS DOUBLE)" +
-             " / CAST(count(*) AS DOUBLE)")} AS nll
-       |FROM pairs p JOIN bi USING (a, b) JOIN uni USING (a) CROSS JOIN v
-       |GROUP BY 1""".stripMargin
-  }
-
-  /** q19's oracle body — a def so q153's fused signal sheet nests the
-    * SAME derivation as a CTE subquery (the lmScoreSql convention). */
-  private def langIdSql: String = {
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    val en = r6("CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)/len(t)")
-    val de = r6("CAST(len(list_filter(t, x -> x IN ('der','die','das','und','ist','ein'))) AS DOUBLE)/len(t)")
-    val fr = r6("CAST(len(list_filter(t, x -> x IN ('le','la','les','et','est','un'))) AS DOUBLE)/len(t)")
-    s"""SELECT doc_id,
-       |  $en AS en_score, $de AS de_score, $fr AS fr_score,
-       |  CASE
-       |    WHEN $fr >= $en AND $fr >= $de THEN 'fr'
-       |    WHEN $en >= $de THEN 'en' ELSE 'de' END AS pred_lang
-       |FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)""".stripMargin
-  }
-
-  /** q20's oracle body (shared with q153). */
-  private def textQualitySql: String = {
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    val meanLen = r6("(length(text) - (CAST(len(t) AS DOUBLE) - 1))/len(t)")
-    val stopR = r6("CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)/len(t)")
-    s"""SELECT doc_id,
-       |  len(t) AS ws_tokens,
-       |  len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS re_tokens,
-       |  ${r6(s"""0.4 * least(CAST(len(t) AS DOUBLE)/200.0, 1.0)
-       |      + 0.3 * least($meanLen/8.0, 1.0)
-       |      + 0.3 * least($stopR*5.0, 1.0)""")} AS quality
-       |FROM (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents)""".stripMargin
-  }
-
-  /** q56's oracle body (shared with q153). */
-  private def repetitionSql: String = {
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    s"""WITH g AS (SELECT doc_id, t,
-       |  CASE WHEN len(t) < 3 THEN CAST([] AS VARCHAR[])
-       |       ELSE list_transform(range(1, len(t)-1),
-       |         rp_i -> t[rp_i] || '_' || t[rp_i+1] || '_' || t[rp_i+2]) END AS gs
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
-       |SELECT doc_id, len(t) AS n_tokens,
-       |  ${r6("""CASE WHEN len(gs) > 0
-       |    THEN 1.0 - CAST(len(list_distinct(gs)) AS DOUBLE) / CAST(len(gs) AS DOUBLE)
-       |    ELSE 0.0 END""")} AS dup_ngram_ratio,
-       |  ${r6("""CAST(list_max(list_transform(list_distinct(t),
-       |    x -> len(list_filter(t, y -> y = x)))) AS DOUBLE) / CAST(len(t) AS DOUBLE)""")}
-       |    AS top_token_ratio
-       |FROM g""".stripMargin
-  }
-
-  /** q131's oracle body (shared with q153). */
-  private def gopherGateSql: String = {
-    def r6(e: String): String =
-      s"(floor(($e)*1000000.0 + 0.5)/1000000.0)"
-    val stops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-      .map(w => s"(CASE WHEN list_contains(ws, '$w') THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    s"""WITH base AS (SELECT doc_id,
-       |    list_filter(regexp_split_to_array(text, '[ \\t\\n\\r\\f\\x0B]+'),
-       |      x -> x <> '') AS ws,
-       |    list_filter(list_transform(string_split(text, chr(10)),
-       |      l -> trim(l, ' ' || chr(9) || chr(13) || chr(12) || chr(11))),
-       |      x -> x <> '') AS ls
-       |  FROM documents),
-       |c AS (SELECT doc_id,
-       |    len(ws) AS n_words,
-       |    coalesce(list_sum(list_transform(ws, x -> length(x))), 0) AS sum_chars,
-       |    len(list_filter(ws, x -> contains(x, '#') OR contains(x, '...'))) AS n_sym,
-       |    len(ls) AS n_lines,
-       |    len(list_filter(ls, l -> l[1] = '-' OR l[1] = '*')) AS n_bullet,
-       |    len(list_filter(ls, l -> ends_with(l, '...'))) AS n_ell,
-       |    len(list_filter(ws, w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha,
-       |    ($stops) AS n_stop
-       |  FROM base),
-       |r AS (SELECT doc_id AS id,
-       |    CAST(n_words AS INT) AS n_words,
-       |    CASE WHEN n_words = 0 THEN 0.0
-       |         ELSE ${r6("CAST(sum_chars AS DOUBLE)/n_words")} END AS mean_word_len,
-       |    CASE WHEN n_words = 0 THEN 0.0
-       |         ELSE ${r6("CAST(n_sym AS DOUBLE)/n_words")} END AS symbol_ratio,
-       |    CASE WHEN n_lines = 0 THEN 0.0
-       |         ELSE ${r6("CAST(n_bullet AS DOUBLE)/n_lines")} END AS bullet_ratio,
-       |    CASE WHEN n_lines = 0 THEN 0.0
-       |         ELSE ${r6("CAST(n_ell AS DOUBLE)/n_lines")} END AS ellipsis_ratio,
-       |    CASE WHEN n_words = 0 THEN 0.0
-       |         ELSE ${r6("CAST(n_alpha AS DOUBLE)/n_words")} END AS alpha_ratio,
-       |    CAST(n_stop AS INT) AS n_stop_present
-       |  FROM c)
-       |SELECT *,
-       |  CAST((CASE WHEN n_words BETWEEN 50 AND 100000 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN mean_word_len BETWEEN 3.0 AND 10.0 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN symbol_ratio <= 0.1 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN bullet_ratio <= 0.9 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN ellipsis_ratio <= 0.3 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN alpha_ratio >= 0.8 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN n_stop_present >= 2 THEN 0 ELSE 1 END) AS INT)
-       |    AS n_rules_failed,
-       |  ((CASE WHEN n_words BETWEEN 50 AND 100000 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN mean_word_len BETWEEN 3.0 AND 10.0 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN symbol_ratio <= 0.1 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN bullet_ratio <= 0.9 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN ellipsis_ratio <= 0.3 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN alpha_ratio >= 0.8 THEN 0 ELSE 1 END)
-       |   + (CASE WHEN n_stop_present >= 2 THEN 0 ELSE 1 END)) = 0 AS pass
-       |FROM r""".stripMargin
-  }
-
-  /** q21's oracle body — exact brute-force cosine top-5 for queries
-    * vec_id < 8. A def (not inline) so q85's recall evaluation can
-    * nest the SAME derivation as a CTE subquery — engine and oracle
-    * compose identically. */
-  private def bruteCosineTopKSql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-      |c AS (SELECT vec_id AS n_id, embedding AS cv FROM embeddings),
-      |s AS (SELECT q_id, n_id,
-      |  round(
-      |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(qv)+1),
-      |      zi -> CAST(qv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x)
-      |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(qv)+1),
-      |         zi -> CAST(qv[zi] AS DOUBLE) * CAST(qv[zi] AS DOUBLE))), (a, x) -> a + x))
-      |     * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(cv)+1),
-      |         zi -> CAST(cv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x))), 6) AS sim
-      |  FROM q CROSS JOIN c WHERE q_id <> n_id)
-      |SELECT q_id, n_id, sim, rank FROM (
-      |  SELECT q_id, n_id, sim,
-      |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-      |  FROM s) WHERE rank <= 5""".stripMargin
-
-  /** [[bruteCosineTopKSql]] generalized to a PREFIX width: scores use
-    * only the first `dim` components of both vectors (full width when
-    * dim = 0) — q165's per-width truth/candidate chains share this one
-    * derivation. CTE names suffixed so widths coexist in one WITH. */
-  private def bruteCosinePrefixTopKSql(dim: Int, sfx: String): String = {
-    val lim = if (dim <= 0) "len(qv)" else dim.toString
-    val climT = if (dim <= 0) "len(cv)" else dim.toString
-    s"""q$sfx AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-       |c$sfx AS (SELECT vec_id AS n_id, embedding AS cv FROM embeddings),
-       |s$sfx AS (SELECT q_id, n_id,
-       |  round(
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, $lim+1),
-       |      zi -> CAST(qv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x)
-       |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, $lim+1),
-       |         zi -> CAST(qv[zi] AS DOUBLE) * CAST(qv[zi] AS DOUBLE))), (a, x) -> a + x))
-       |     * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, $climT+1),
-       |         zi -> CAST(cv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x))), 6) AS sim
-       |  FROM q$sfx CROSS JOIN c$sfx WHERE q_id <> n_id),
-       |t$sfx AS (SELECT q_id, n_id FROM (
-       |  SELECT q_id, n_id,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-       |  FROM s$sfx) WHERE rank <= 5)""".stripMargin
-  }
-
-  /** q36's oracle body — IVF-probed cosine top-5 (same query set,
-    * same 6dp cosine as [[bruteCosineTopKSql]]); shared with q85. */
-  private def ivfCosineTopKSql: String = ivfCosineTopKSql(5)
-
-  /** As above with a parametric fetch depth — q128's over-fetch
-    * candidate stage reuses the whole probe chain at rank ≤ `fetch`. */
-  private def ivfCosineTopKSql(fetch: Int): String =
-    s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-       |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-       |  FROM embeddings),
-       |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-       |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-       |${ivfIterSql(1, "c0")},
-       |${ivfIterSql(2, "c1")},
-       |${ivfIterSql(3, "c2")},
-       |s4 AS (SELECT ea.id, ea.v, c.cid,
-       |  ${dotSql("ea.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-       |  FROM ea CROSS JOIN c3 c),
-       |a4 AS (SELECT id, v, cid FROM (
-       |  SELECT id, v, cid,
-       |    row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-       |  FROM s4) WHERE rn = 1),
-       |q AS (SELECT id AS q_id, v AS qv FROM ea WHERE id < 8),
-       |ps AS (SELECT q.q_id, q.qv, c.cid,
-       |  ${dotSql("q.qv", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-       |  FROM q CROSS JOIN c3 c),
-       |pr AS (SELECT q_id, qv, cid FROM (
-       |  SELECT q_id, qv, cid,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn
-       |  FROM ps) WHERE rn <= 4),
-       |sc AS (SELECT pr.q_id, a4.id AS n_id,
-       |  round(${dotSql("pr.qv", "a4.v")}
-       |    / (sqrt(${dotSql("pr.qv", "pr.qv")}) * sqrt(${dotSql("a4.v", "a4.v")})), 6) AS sim
-       |  FROM pr JOIN a4 ON pr.cid = a4.cid AND pr.q_id <> a4.id)
-       |SELECT q_id, n_id, sim, rank FROM (
-       |  SELECT q_id, n_id, sim,
-       |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-       |  FROM sc) WHERE rank <= $fetch""".stripMargin
-
-  /** q89's oracle body — Gram + covariance over the 64-dim embedding
-    * corpus (round6 products, DECIMAL sums); a def so q92's power
-    * iteration starts from the same derivation as a CTE. */
-  private def gramCovSql: String = {
-    val r6 = graft.functions.TextFunctions.round6Sql _
-    s"""WITH e AS MATERIALIZED (SELECT list_transform(embedding, gx -> CAST(gx AS DOUBLE)) AS v
-       |  FROM embeddings WHERE len(embedding) = 64),
-       |idx AS (SELECT unnest(range(0, 64)) AS i),
-       |p AS (SELECT a.i AS i, b.i AS j,
-       |    ${r6("e.v[CAST(a.i AS INT)+1] * e.v[CAST(b.i AS INT)+1]")} AS p
-       |  FROM e CROSS JOIN idx a CROSS JOIN idx b WHERE a.i <= b.i),
-       |g AS (SELECT i, j,
-       |    CAST(sum(CAST(p AS DECIMAL(28,6))) AS DOUBLE) AS gram
-       |  FROM p GROUP BY i, j),
-       |d AS (SELECT a.i AS i,
-       |    CAST(sum(CAST(${r6("e.v[CAST(a.i AS INT)+1]")} AS DECIMAL(28,6))) AS DOUBLE) AS s,
-       |    CAST(count(*) AS BIGINT) AS n
-       |  FROM e CROSS JOIN idx a GROUP BY a.i)
-       |SELECT g.i, g.j, g.gram,
-       |  ${r6("g.gram/d1.n - (d1.s/d1.n)*(d2.s/d2.n)")} AS cov
-       |FROM g JOIN d d1 ON g.i = d1.i JOIN d d2 ON g.j = d2.i""".stripMargin
-  }
-
-  /** One unrolled power iteration for q92: u = C·w as ascending-j
-    * ordered folds (one per row dimension), the norm as an ascending-i
-    * ordered fold, then the re-rounded normalized iterate — the exact
-    * arithmetic sequence `EmbedStats.pcaProject` runs driver-side. */
-  private def pcaIterSql(k: Int, prev: String): String = {
-    val r6 = graft.functions.TextFunctions.round6Sql _
-    s"""u$k AS MATERIALIZED (SELECT cv.i,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |    list(cv.cov * w.x ORDER BY cv.j)), (a$k, b$k) -> a$k + b$k) AS u
-       |  FROM cv JOIN $prev w ON cv.j = w.i GROUP BY cv.i),
-       |n$k AS MATERIALIZED (SELECT sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |  list(u * u ORDER BY i)), (c$k, d$k) -> c$k + d$k)) AS n FROM u$k),
-       |w$k AS MATERIALIZED (SELECT i, ${r6("u / n")} AS x FROM u$k CROSS JOIN n$k)""".stripMargin
-  }
-
-  /** Shared q130/q137 oracle fragment: the 8-round BPE training loop
-    * unrolled as WITH-body CTEs — `wc` (word counts), `w0` (delimited
-    * words), then per round r: `p_r` (adjacency counts), `m_r` (the
-    * argmax merge) and `w_{r+1}` (the greedy replace). q130 reads
-    * m0..m7 as its result; q137 reuses them as the frozen artifact. */
-  private def bpeTrainChainSql: String = {
-    def round(r: Int): String =
-      s"""p$r AS (SELECT s[CAST(i AS INT)] AS lhs, s[CAST(i AS INT)+1] AS rhs,
-         |    CAST(sum(n) AS BIGINT) AS c
-         |  FROM (SELECT list_filter(string_split(w, chr(31)),
-         |          x -> x <> '') AS s, n FROM w$r) t,
-         |       unnest(range(1, len(t.s))) u(i)
-         |  GROUP BY 1, 2),
-         |m$r AS (SELECT lhs, rhs, c FROM p$r
-         |        ORDER BY c DESC, lhs, rhs LIMIT 1),
-         |w${r + 1} AS (SELECT
-         |  replace(w, chr(31)||lhs||chr(31)||chr(31)||rhs||chr(31),
-         |             chr(31)||lhs||rhs||chr(31)) AS w, n
-         |  FROM w$r CROSS JOIN m$r)""".stripMargin
-    val rounds = (0 until 8).map(round).mkString(",\n")
-    s"""wc AS MATERIALIZED (SELECT word, count(*) AS n FROM (
-       |    SELECT unnest(list_filter(
-       |             regexp_split_to_array(text, '[ \\t\\n\\r\\f\\x0B]+'),
-       |             x -> x <> '')) AS word FROM documents) GROUP BY word),
-       |w0 AS (SELECT chr(31) || chr(31) ||
-       |    regexp_replace(word, '(?s)(.)', '\\1' || chr(31) || chr(31),
-       |      'g') AS w, n
-       |  FROM wc),
-       |$rounds""".stripMargin
-  }
-
-  private def hashSql(expr: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(range(1, length($expr)+1), ch_i -> ascii($expr[ch_i]))), " +
-      s"(acc, c) -> (acc*31 + c) % 1000000007)"
-
-  /** DuckDB rendering of [[graft.functions.FoldDot]] over two DOUBLE
-    * lists: left fold Σ a[i]·b[i], 0.0 init, ascending i. */
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      s"list_transform(range(1, len($a)+1), zi -> $a[zi] * $b[zi])), " +
-      s"(a0, x0) -> a0 + x0)"
-
-  /** q147's oracle chain parameterized by the labeled-token CTE body
-    * (columns id, y, t) — a def so the standalone query and the q160
-    * end-to-end composition train the IDENTICAL model (the
-    * bruteCosineTopKSql convention: engine and oracle compose the
-    * same derivation). Emits the WITH-fragment ending in CTE `sc`
-    * with (id, y, score); dim 16, 8 GD steps, lr 0.5. */
-  private def classifierChainSql(tkBody: String): String = {
-    val dim = 16
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    val hash = hashSql("tok")
-    val dot = dotSql("f.x", "wp.w")
-    val z = r6(s"$dot + wp.w[${dim + 1}]")
-    val prob = r6(s"1.0/(1.0 + exp(-($z)))")
-    def iter(k: Int): String = {
-      val gTerms = (0 until dim).map(j =>
-        r6(s"CAST(sum(CAST(${r6(s"e * x[${j + 1}]")} AS DECIMAL(28,6))) AS DOUBLE) / nt.n")) :+
-        r6("CAST(sum(CAST(e AS DECIMAL(28,6))) AS DOUBLE) / nt.n")
-      s"""ce$k AS (SELECT f.id, f.y, f.x, ${r6(s"$prob - f.y")} AS e
-         |  FROM f CROSS JOIN cw${k - 1} wp),
-         |cg$k AS (SELECT [${gTerms.mkString(",\n    ")}] AS g
-         |  FROM ce$k CROSS JOIN nt GROUP BY nt.n),
-         |cw$k AS (SELECT list_transform(range(1, ${dim + 2}),
-         |    wi -> ${r6("wp.w[wi] - 0.5 * g.g[wi]")}) AS w
-         |  FROM cw${k - 1} wp CROSS JOIN cg$k g)""".stripMargin
-    }
-    s"""ctk AS ($tkBody),
-       |f AS MATERIALIZED (SELECT id, y, list_transform(range(0, $dim),
-       |    fj -> CAST(len(list_filter(t, tok -> ($hash) % $dim = fj))
-       |          AS DOUBLE) / len(t)) AS x
-       |  FROM ctk WHERE len(t) >= 1),
-       |nt AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM f),
-       |cw0 AS (SELECT [${Seq.fill(dim + 1)("0.0").mkString(", ")}] AS w),
-       |${(1 to 8).map(iter).mkString(",\n")},
-       |sc AS (SELECT f.id, f.y, $prob AS score
-       |  FROM f CROSS JOIN cw8 wp)""".stripMargin
-  }
-
-  /** q167's oracle chain — per-source mean nll over [[lmScoreSql]],
-    * then 8 DoReMi EG rounds — as a def (the classifierChainSql
-    * convention) so q172's mixture application composes the IDENTICAL
-    * trajectory. Emits the WITH-fragment ending in CTEs `a8`
-    * (domain, n_docs, loss, alpha) and `dc` (d = |domains|). Per-round
-    * CTEs are MATERIALIZED, mirroring the engine's per-round
-    * checkpoint — each round references the last three times, so
-    * DuckDB's CTE inlining would otherwise build a 3⁸-node plan. */
-  private def doremiChainSql: String = {
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    def iter(k: Int): String = {
-      val mixSum = r6("CAST(sum(CAST(" + r6("alpha*loss") +
-        " AS DECIMAL(28,6))) AS DOUBLE)")
-      val w = r6("alpha * exp(0.5 * " +
-        r6("greatest(0.0, " + r6("loss - mix") + ")") + ")")
-      s"""mx$k AS (SELECT $mixSum AS mix FROM a${k - 1}),
-         |u$k AS MATERIALIZED (SELECT domain, n_docs, loss, $w AS w
-         |  FROM a${k - 1} CROSS JOIN mx$k),
-         |z$k AS (SELECT ${r6(
-             "CAST(sum(CAST(w AS DECIMAL(28,6))) AS DOUBLE)")} AS z
-         |  FROM u$k),
-         |a$k AS MATERIALIZED (SELECT domain, n_docs, loss,
-         |    ${r6("w / z")} AS alpha
-         |  FROM u$k CROSS JOIN z$k)""".stripMargin
-    }
-    s"""scored AS ($lmScoreSql),
-       |sj AS (SELECT s.nll, d.source
-       |  FROM scored s JOIN documents d USING (doc_id)),
-       |dm AS MATERIALIZED (SELECT source AS domain,
-       |    count(*) AS n_docs,
-       |    ${r6("CAST(sum(CAST(nll AS DECIMAL(28,6))) AS DOUBLE)" +
-             " / CAST(count(*) AS DOUBLE)")} AS loss
-       |  FROM sj GROUP BY 1),
-       |dc AS (SELECT CAST(count(*) AS DOUBLE) AS d FROM dm),
-       |a0 AS (SELECT domain, n_docs, loss, ${r6("1.0 / d")} AS alpha
-       |  FROM dm CROSS JOIN dc),
-       |${(1 to 8).map(iter).mkString(",\n")}""".stripMargin
-  }
-
-  /** q176's oracle chain — the synthetic comparison stream and the
-    * 8-round MM fit — as a def so q177's calibration eval reads the
-    * IDENTICAL strengths. Emits the WITH-fragment ending in CTEs `g`
-    * (w, l), `orient` (i, j, n), `it` (item, wins), `gp`
-    * (item, games), `s8` (item, s). Per-round CTEs MATERIALIZED (the
-    * doremiChainSql inlining discipline). */
-  private def btChainSql: String = {
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    def iter(k: Int): String = {
-      val term = r6("CAST(o.n AS DOUBLE) / (si.s + sj.s)")
-      s"""dn$k AS (SELECT o.i AS item,
-         |    ${r6("CAST(sum(CAST(" + term +
-             " AS DECIMAL(28,6))) AS DOUBLE)")} AS den
-         |  FROM orient o
-         |  JOIN s${k - 1} si ON o.i = si.item
-         |  JOIN s${k - 1} sj ON o.j = sj.item GROUP BY 1),
-         |rw$k AS MATERIALIZED (SELECT it.item, it.wins,
-         |    CASE WHEN dn.den > 0.0
-         |         THEN ${r6("CAST(it.wins AS DOUBLE) / dn.den")}
-         |         ELSE 0.0 END AS raw
-         |  FROM it LEFT JOIN dn$k dn USING (item)),
-         |tt$k AS (SELECT ${r6(
-             "CAST(sum(CAST(raw AS DECIMAL(28,6))) AS DOUBLE)")} AS tot
-         |  FROM rw$k),
-         |s$k AS MATERIALIZED (SELECT item, ${r6("(raw * d) / tot")} AS s
-         |  FROM rw$k CROSS JOIN tt$k CROSS JOIN ic)""".stripMargin
-    }
-    s"""g AS (SELECT doc_id % 5 AS w, (doc_id // 3) % 5 AS l
-       |  FROM documents WHERE doc_id % 5 <> (doc_id // 3) % 5),
-       |wn AS (SELECT w AS item, count(*) AS wins FROM g GROUP BY 1),
-       |pr AS MATERIALIZED (SELECT least(w, l) AS a,
-       |    greatest(w, l) AS b, count(*) AS n FROM g GROUP BY 1, 2),
-       |orient AS MATERIALIZED (SELECT a AS i, b AS j, n FROM pr
-       |  UNION ALL SELECT b, a, n FROM pr),
-       |it AS MATERIALIZED (SELECT di.i AS item,
-       |    coalesce(wn.wins, 0) AS wins
-       |  FROM (SELECT DISTINCT i FROM orient) di
-       |  LEFT JOIN wn ON di.i = wn.item),
-       |gp AS (SELECT i AS item, CAST(sum(n) AS BIGINT) AS games
-       |  FROM orient GROUP BY 1),
-       |ic AS (SELECT CAST(count(*) AS DOUBLE) AS d FROM it),
-       |s0 AS (SELECT item, ${r6("1.0")} AS s FROM it),
-       |${(1 to 8).map(iter).mkString(",\n")}""".stripMargin
-  }
-
-  /** q148's oracle chain parameterized by the target-flagged token CTE
-    * body (columns id, tgt, t) plus (dim, k) — shared verbatim with
-    * the q160 composition's selection stage. Emits the WITH-fragment
-    * ending in CTE `dsel` with (id, logw, key, rank), rank NULL
-    * outside the top k. */
-  private def dsirChainSql(tkBody: String, dim: Int, k: Int): String = {
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    val hash = hashSql("tok")
-    val u = s"CAST(${hashSql("CAST(id AS VARCHAR)")} + 1 AS DOUBLE)" +
-      " / 1000000009.0"
-    val gk = r6(s"-ln(greatest(${r6(s"-ln($u)")}, 0.000001))")
-    s"""dtk AS ($tkBody),
-       |dd AS MATERIALIZED (SELECT id, tgt, ($hash) % $dim AS j,
-       |    CAST(count(*) AS BIGINT) AS c
-       |  FROM (SELECT id, tgt, unnest(t) AS tok FROM dtk)
-       |  GROUP BY id, tgt, j),
-       |db AS (SELECT j,
-       |    sum(CASE WHEN tgt THEN c ELSE 0 END) AS ct, sum(c) AS cr
-       |  FROM dd GROUP BY j),
-       |dtot AS (SELECT sum(ct) AS tt, sum(cr) AS tr FROM db),
-       |dlam AS (SELECT j,
-       |    ${r6(s"ln(CAST(ct + 1 AS DOUBLE) / CAST(tt + $dim AS DOUBLE))")}
-       |    - ${r6(s"ln(CAST(cr + 1 AS DOUBLE) / CAST(tr + $dim AS DOUBLE))")}
-       |      AS lam
-       |  FROM db CROSS JOIN dtot),
-       |dw AS MATERIALIZED (SELECT id, CAST(sum(CAST(CAST(c AS DOUBLE) * lam
-       |      AS DECIMAL(28,6))) AS DOUBLE) AS logw
-       |  FROM dd JOIN dlam USING (j) GROUP BY id),
-       |dwin AS (SELECT id, p,
-       |    row_number() OVER (ORDER BY p DESC, id ASC) AS rn
-       |  FROM (SELECT id, logw + $gk AS p FROM dw)),
-       |dsel AS (SELECT dw.id, dw.logw,
-       |  CASE WHEN dwin.rn <= $k THEN dwin.p END AS key,
-       |  CASE WHEN dwin.rn <= $k THEN CAST(dwin.rn AS INTEGER) END AS rank
-       |FROM dw JOIN dwin ON dw.id = dwin.id)""".stripMargin
-  }
-
-  /** One unrolled Lloyd iteration of the q36 IVF quantizer: assignment
-    * under centroids `prev` (argmin of the −2·v·c+‖c‖² partial, ties →
-    * lowest cid), then the per-(cid,dim) two-level deterministic fold
-    * mean (fold x by id within 1024-id blocks, fold block sums by blk)
-    * — the exact SQL mirror of Similarity.ivfCentroids' update.
-    *
-    * ORACLE-TRACTABILITY CONTRACT (the round-6 lesson, learned the
-    * hard way): every CTE that a later stage references more than
-    * once — directly or through a chain — is declared AS MATERIALIZED.
-    * DuckDB inlines plain CTEs, so an unrolled iteration chain without
-    * the hint re-evaluates its predecessors multiplicatively (q92's
-    * un-materialized power iteration ran >10 min vs 1.1 s materialized
-    * and zeroed the whole round's driver correctness artifact).
-    * MATERIALIZED is purely an evaluation hint — results are
-    * identical — so it is always safe to add. tools/check.py enforces
-    * the other half of the contract: a per-oracle wall budget. */
-  private def ivfIterSql(n: Int, prev: String): String =
-    s"""s$n AS (SELECT e.id, e.v, c.cid,
-       |  ${dotSql("e.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-       |  FROM e CROSS JOIN $prev c),
-       |a$n AS MATERIALIZED (SELECT id, v, cid FROM (
-       |  SELECT id, v, cid,
-       |    row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-       |  FROM s$n) WHERE rn = 1),
-       |u$n AS (SELECT cid, id, unnest(v) AS x,
-       |  unnest(range(0, len(v))) AS pos FROM a$n),
-       |b$n AS (SELECT cid, pos, id // 1024 AS blk,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE), list(x ORDER BY id)),
-       |    (a0, x0) -> a0 + x0) AS bsum,
-       |  count(*) AS bn FROM u$n GROUP BY cid, pos, blk),
-       |d$n AS (SELECT cid, pos,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE), list(bsum ORDER BY blk)),
-       |    (a0, x0) -> a0 + x0) / CAST(sum(bn) AS DOUBLE) AS x
-       |  FROM b$n GROUP BY cid, pos),
-       |c$n AS MATERIALIZED (SELECT cid, list(x ORDER BY pos) AS c FROM d$n GROUP BY cid)""".stripMargin
-
-  /** One unrolled Lloyd iteration of the q50 PQ trainer: identical
-    * two-level fold means as [[ivfIterSql]] but keyed by (sub, cid),
-    * with assignment per (id, sub) — plus the empty-cluster carry: a
-    * cid that attracted no members keeps its previous centroid (the
-    * Spark side keeps the codebook array fully indexed, so the mirror
-    * must too). */
-  private def pqIterSql(n: Int, prev: String): String =
-    s"""pqs$n AS (SELECT es.id, es.sub, es.vs, c.cid,
-       |  ${dotSql("es.vs", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-       |  FROM es JOIN $prev c ON es.sub = c.sub),
-       |pqa$n AS MATERIALIZED (SELECT id, sub, vs, cid FROM (
-       |  SELECT id, sub, vs, cid,
-       |    row_number() OVER (PARTITION BY id, sub ORDER BY d2, cid) AS rn
-       |  FROM pqs$n) WHERE rn = 1),
-       |pqu$n AS (SELECT sub, cid, id, unnest(vs) AS x,
-       |  unnest(range(0, len(vs))) AS pos FROM pqa$n),
-       |pqb$n AS (SELECT sub, cid, pos, id // 1024 AS blk,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE), list(x ORDER BY id)),
-       |    (a0, x0) -> a0 + x0) AS bsum, count(*) AS bn
-       |  FROM pqu$n GROUP BY sub, cid, pos, blk),
-       |pqd$n AS (SELECT sub, cid, pos,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE), list(bsum ORDER BY blk)),
-       |    (a0, x0) -> a0 + x0) / CAST(sum(bn) AS DOUBLE) AS x
-       |  FROM pqb$n GROUP BY sub, cid, pos),
-       |pqn$n AS (SELECT sub, cid, list(x ORDER BY pos) AS c
-       |  FROM pqd$n GROUP BY sub, cid),
-       |pc$n AS MATERIALIZED (SELECT p.sub, p.cid, coalesce(nn.c, p.c) AS c
-       |  FROM $prev p LEFT JOIN pqn$n nn
-       |  ON p.sub = nn.sub AND p.cid = nn.cid)""".stripMargin
-
-  // ======================================================================
-
-  /** Flagship: the area-weighted-mean pipeline (A1+J1) on sf0.001. */
-  def entry(spark: SparkSession): DataFrame =
-    queries("q01_weighted_mean")(spark, "/root/testdata/sf0.001")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- A1/J1: area-weighted mean (the reference's core operator) ----
-    "q01_weighted_mean" -> ((s, dir) => {
-      val g = gridFromLineitem(t(s, dir, "lineitem"), nullify = false)
-      val w = weightsFromPart(t(s, dir, "part"))
-      WeightedMean(g, w, Seq("pr"), preCombine = true)
-        .select(col("fid"), col("time"), round(col("pr"), 4).as("wmean_pr"))
-    }),
-
-    // ---- A1 under the SPATIAL-TILE sort-merge strategy: same
-    // aggregation as q01 through the SortMergeTiled join path (tile
-    // id derived on both sides, (tile,i,j) equi-join, plain two-phase
-    // aggregation — no group-key repartition). Same oracle as q01:
-    // the added tile equality is implied by (i,j) equality, so any
-    // divergence (a pair lost at a tile boundary, a partial-agg
-    // miscombine) fails the hash. Plan-shape properties (zero
-    // grid-side exchange over a staged table) are StagingSpec-pinned;
-    // this row proves the semantics on the oracle surface ----
-    "q116_weighted_mean_tiled" -> ((s, dir) => {
-      val g = gridFromLineitem(t(s, dir, "lineitem"), nullify = false)
-      val w = weightsFromPart(t(s, dir, "part"))
-      WeightedMean(g, w, Seq("pr"),
-          strategy = graft.operators.WeightJoin.SortMergeTiled(8, 4))
-        .select(col("fid"), col("time"), round(col("pr"), 4).as("wmean_pr"))
-    }),
-
-    // ---- A2: masked weighted mean (`--partial`) ----
-    "q02_masked_mean" -> ((s, dir) => {
-      val g = gridFromLineitem(t(s, dir, "lineitem"), nullify = true)
-      val w = weightsFromPart(t(s, dir, "part"))
-      WeightedMean(g, w, Seq("pr"), masked = true, preCombine = true)
-        .select(col("fid"), col("time"), round(col("pr"), 4).as("masked_pr"))
-    }),
-
-    // ---- A1 null-propagation: plain mean poisons on any missing cell ----
-    "q03_mean_null_propagation" -> ((s, dir) => {
-      val g = gridFromLineitem(t(s, dir, "lineitem"), nullify = true)
-      val w = weightsFromPart(t(s, dir, "part"))
-      WeightedMean(g, w, Seq("pr"), masked = false, preCombine = true)
-        .select(col("fid"), col("time"), round(col("pr"), 4).as("mean_pr"))
-    }),
-
-    // ---- A3: exact ensemble median per cell ----
-    "q04_ensemble_median" -> ((s, dir) => {
-      val g = events(s, dir).select(
-        col("ts").cast("date").as("time"),
-        (col("user_id") % 10).as("j"), (col("user_id") % 7).as("i"),
-        col("value"))
-      EnsembleStats.ensembleMedian(g, Seq("value"))
-        .select(col("time"), col("j"), col("i"), round(col("value"), 6).as("med_value"))
-    }),
-
-    // ---- J2: nearest-neighbor arg-min join ----
-    "q05_nn_argmin" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val miss = c.filter(col("c_acctbal") < 0)
-        .select(col("c_custkey").as("fid"), col("c_acctbal").as("lat"), lit(0.0).as("lon"))
-      val donors = c.filter(col("c_acctbal") >= 0)
-        .select(col("c_custkey").as("fid"), col("c_acctbal").as("lat"), lit(0.0).as("lon"))
-      FillMissing.nearestMapping(miss, donors)
-        .select(col("miss_fid"), col("fill_fid"), round(col("distance"), 6).as("distance"))
-    }),
-
-    // ---- J3: fill scatter-update (series overwrite by donor) ----
-    "q06_fill_series" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val ts = ev.groupBy((col("user_id") % 50).as("fid"), col("ts").cast("date").as("time"))
-        .agg(round(sum(col("value")), 4).as("v0"))
-        .withColumn("v", when(col("fid") % 7 === 0, lit(null)).otherwise(col("v0")))
-        .select("fid", "time", "v")
-      val fids = ts.select("fid").distinct()
-      val miss = fids.filter(col("fid") % 7 === 0)
-        .select(col("fid"), col("fid").cast("double").as("lat"), lit(0.0).as("lon"))
-      val pres = fids.filter(col("fid") % 7 =!= 0)
-        .select(col("fid"), col("fid").cast("double").as("lat"), lit(0.0).as("lon"))
-      val mapping = FillMissing.nearestMapping(miss, pres)
-      FillMissing.fillSeries(ts, mapping, Seq("v"))
-    }),
-
-    // ---- F1: catalog lookup (conjunctive equality + take-first) ----
-    "q07_catalog_lookup" -> ((s, dir) => {
-      t(s, dir, "part").filter(col("p_size") < 20)
-        .groupBy(col("p_type"))
-        .agg(min(struct(col("p_partkey"), col("p_name"))).as("f"))
-        .select(col("p_type"), col("f.p_partkey").as("first_key"),
-          col("f.p_name").as("first_name"))
-    }),
-
-    // ---- F2/F3: buffered bbox + time-range subset with pushdown ----
-    "q08_bbox_time_subset" -> ((s, dir) => {
-      val g = t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        col("l_shipdate").as("time"),
-        (lit(49.4) - (col("l_suppkey") % 40) * 0.04167).as("lat"),
-        (lit(-124.76667) + (col("l_partkey") % 60) * 0.04167).as("lon"),
-        col("l_extendedprice").as("pr"))
-      g.filter(
-          col("lon").between(-124.0 - 0.04167, -122.5 + 0.04167) &&
-            col("lat").between(48.3 - 0.04167, 49.0 + 0.04167) &&
-            col("time").between(lit("1994-01-01").cast("timestamp"),
-              lit("1996-12-31").cast("timestamp")))
-        .select(col("l_orderkey"), col("l_linenumber"), col("lat"), col("lon"), col("pr"))
-    }),
-
-    // ---- C1-C5: unit conversion + physics columns ----
-    "q09_physics" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val tmaxK = col("l_quantity") + 273.15
-      val tminK = col("l_quantity") + 262.85
-      val elev = (col("l_suppkey") % 3000).cast("double")
-      val sph = col("l_discount") / 10
-      li.select(
-        col("l_orderkey"), col("l_linenumber"),
-        round(Physics.kelvinToCelsius(tmaxK), 6).as("tmax_c"),
-        round(Physics.gridmetHumidity(col("l_discount") * 100, col("l_tax") * 100), 6).as("gm_humidity"),
-        round(Physics.pressureAtElevation(elev, (tmaxK + tminK) / 2), 4).as("pressure_mb"),
-        round(Physics.satVaporPressure(tmaxK), 4).as("e_s"),
-        round(Physics.relativeHumidity(sph, tmaxK, tminK, elev), 4).as("rh"))
-    }),
-
-    // ---- classic wide aggregation (TPC-H Q1 shape) ----
-    "q10_agg_lineitem" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(col("l_quantity")).as("sum_qty"),
-          moneySum(col("l_extendedprice")).as("sum_price"),
-          round(avg(col("l_discount")), 6).as("avg_disc"),
-          count(lit(1)).as("n"))
-    }),
-
-    // ---- multi-way broadcast join + agg ----
-    "q11_revenue_by_region" -> ((s, dir) => {
-      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation"); val r = t(s, dir, "region")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-        .groupBy(col("r_name"), date_trunc("month", col("o_orderdate")).cast("date").as("month"))
-        .agg(moneySum(col("o_totalprice")).as("revenue"), count(lit(1)).as("n_orders"))
-    }),
-
-    // ---- window top-k ----
-    "q12_topk_orders_per_customer" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, dir, "orders")
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rank"))
-    }),
-
-    // ---- dedup: exact ----
-    "q13_dedup_exact" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val doubled = d.unionAll(d.select(col("doc_id") + 100000, col("text")))
-      Dedup.exact(doubled, "doc_id", "text")
-    }),
-
-    // ---- dedup: minhash LSH + exact-jaccard verification ----
-    "q14_minhash_lsh" -> ((s, dir) => dupPairs(s, dir)),
-
-    // ---- dedup: simhash signatures ----
-    "q15_simhash" -> ((s, dir) =>
-      Dedup.simhashSignatures(docs(s, dir), "doc_id", "text")
-        .withColumnRenamed("id", "doc_id")),
-
-    // ---- dedup: simhash near-dup pairs (pigeonhole bit-blocking —
-    // exact, so the all-pairs oracle still matches; the all-pairs
-    // Spark form survives only as DedupSpec's small-n verifier).
-    // h=3 over 30 bits → 4 blocks of 7-8 bits; h=8 left 3-bit blocks
-    // with no pruning power (and pairs 87% of n² is not "near-dup") ----
-    "q16_simhash_pairs" -> ((s, dir) => simhashPairsArtifact(s, dir)),
-
-    // ---- dedup: n-gram jaccard via hash-keyed inverted index with the
-    // heavy-hitter salted join wired in (hot shingles spread over salted
-    // reducers; result set unchanged). The PPJoin prefix-filter variant
-    // (sparse-vocab scale path) and the measured dense variant are
-    // equality-pinned in DedupSpec. ----
-    // checked path = the adaptive entry: the dense-bitmap kernel when
-    // the vocabulary is bounded (here ~1k terms — measured 3× over the
-    // inverted index), falling back to the inverted index beyond
-    // maxVocab so the contract stays total; equality-pinned in
-    // DedupSpec
-    "q17_ngram_jaccard" -> ((s, dir) => jaccardPairs(s, dir)),
-
-    // ---- detector evaluation: precision/recall of the simhash pair
-    // finder (q16) against exact jaccard pairs (q17) as truth — the
-    // calibration measurement for distance/threshold choices ----
-    "q91_dedup_eval" -> ((s, dir) =>
-      Dedup.pairMetrics(jaccardPairs(s, dir), simhashPairsArtifact(s, dir))),
-
-    // ---- substring-level dedup: cross-document repeated n-gram spans
-    // (Lee et al. span-removal shape) — token ranges to cut; served
-    // from the per-corpus artifact cache (trial 1 pays detection) ----
-    "q81_repeated_spans" -> ((s, dir) => repeatedSpansArtifact(s, dir)),
-
-    // ---- apply the q81 cut list: substring-level dedup REMOVAL —
-    // rebuild each document minus its cross-document repeated spans
-    // (the cut list is the shared corpus artifact, not a recompute) ----
-    "q83_span_cut" -> ((s, dir) =>
-      Dedup.applySpanCuts(docs(s, dir), "doc_id", "text",
-        repeatedSpansArtifact(s, dir))),
-
-    // ---- source-mix rebalancing: deterministic downsampling to a
-    // target language mix (largest corpus achievable at exactly the
-    // asked proportions; es is the binding group on this data) ----
-    "q84_source_mix" -> ((s, dir) =>
-      graft.operators.Sampling.mixSample(docs(s, dir), col("doc_id"),
-          col("lang"), Map("en" -> 0.4, "zh" -> 0.2, "es" -> 0.2,
-            "de" -> 0.1, "fr" -> 0.1))
-        .select(col("doc_id"), col("lang"))),
-
-    // ---- incremental exact dedup: admit only docs new vs the
-    // accepted corpus AND first-by-id within the batch (the daily-
-    // ingestion form; corpus side travels as 12-byte fingerprints) ----
-    "q86_incremental_dedup" -> ((s, dir) => {
-      val d = docs(s, dir)
-      // deterministic split standing in for accepted-corpus vs new
-      // batch: even ids are the corpus, odd ids the increment
-      Dedup.incrementalExact(
-          d.filter(col("doc_id") % 2 === 0),
-          d.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text")
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    // ---- sliding-window chunking (RAG splitter): overlapping
-    // 64-token windows every 48 tokens, within each document ----
-    "q87_sliding_chunks" -> ((s, dir) =>
-      graft.operators.Packing.slidingChunks(docs(s, dir), col("doc_id"),
-        col("text"), chunkTokens = 64, stride = 48)),
-
-    // ---- winnowing fingerprints ----
-    "q18_fingerprints" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          explode(TextFunctions.winnowingFingerprints(col("text"), 8, 4)).as("fp"))),
-
-    // ---- language-ID heuristic (one-pass LangScores kernel;
-    // equality-pinned against the Column forms in TextFunctionsSpec) ----
-    "q19_langid" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          graft.functions.TextKernels.lang_scores(col("text"),
-            TextFunctions.LangProfiles.toSeq.sortBy(_._1)).as("ls"))
-        .select(col("doc_id"),
-          col("ls.en_score").as("en_score"), col("ls.de_score").as("de_score"),
-          col("ls.fr_score").as("fr_score"), col("ls.pred_lang").as("pred_lang"))),
-
-    // ---- quality scoring + token counting (one-pass TextStats kernel;
-    // equality-pinned against the Column-API forms in
-    // TextFunctionsSpec) ----
-    "q20_text_quality" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-          graft.functions.TextKernels.text_stats(col("text"),
-            TextFunctions.LangProfiles("en")).as("st"))
-        .select(col("doc_id"), col("st.ws_tokens").as("ws_tokens"),
-          col("st.re_tokens").as("re_tokens"), col("st.quality").as("quality"))),
-
-    // ---- ANN: brute-force cosine top-k ----
-    "q21_ann_cosine_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 8), k = 5)
-    }),
-
-    // ---- Matryoshka prefix-dim recall: exact top-5 under truncated
-    // vectors (d ∈ {8, 16, 32}) scored against the full-width exact
-    // top-5 — the truncatable-embeddings tuning curve ----
-    "q165_matryoshka_recall" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.matryoshkaRecall(e, e.filter(col("vec_id") < 8),
-        k = 5, dims = Seq(8, 16, 32))
-    }),
-
-    // ---- ANN: LSH-bucketed variant (scale path; rows-only check) ----
-    "q22_ann_lsh_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.lshTopK(e, e.filter(col("vec_id") < 8), k = 5, nPlanes = 6)
-    }),
-
-    // ---- streaming shape: tumbling-window counts (batch-equivalent) ----
-    "q23_tumbling_window" -> ((s, dir) =>
-      EventPipeline.tumblingCounts(events(s, dir))),
-
-    // ---- streaming shape: gap sessionization ----
-    "q24_sessionize" -> ((s, dir) =>
-      EventPipeline.sessionize(events(s, dir), gapMinutes = 30)),
-
-    // ---- multimodal: batch decode (mapInPandas-shaped seam) ----
-    "q25_media_decode" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val ds = media(s, dir).as[Multimodal.Media](
-        org.apache.spark.sql.Encoders.product[Multimodal.Media])
-      Multimodal.mapDecodeBatches(ds, batchSize = 64).toDF()
-        .select(col("media_id"), col("modality"), col("byte_len"),
-          col("checksum"), round(col("mean_byte"), 6).as("mean_byte"))
-    }),
-
-    // ---- multimodal: frame sampling over video payload byte ranges ----
-    "q26_frame_sample" -> ((s, dir) =>
-      graft.operators.Multimodal.sampleFrames(
-        media(s, dir).filter(length(col("bytes")) > lit(16) + col("n_frames")),
-        stride = 2)),
-
-    // ---- CLIP-score image-text alignment gate (LAION shape): cosine
-    // between the byte-histogram image embedding (batched encoder
-    // seam) and the hashed-BoW caption embedding (scan-side kernel) in
-    // the shared dim-16 stub space, keep flagged at 0.5 ----
-    "q171_clip_align_filter" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val imgs = media(s, dir).filter(col("modality") === "image")
-        .as[Multimodal.Media](
-          org.apache.spark.sql.Encoders.product[Multimodal.Media])
-      Multimodal.clipAlignFilter(imgs,
-        docs(s, dir).filter(col("doc_id") % 3 === 0),
-        col("doc_id"), col("text"))
-    }),
-
-    // ---- shot-boundary detection: adjacent-frame intensity deltas
-    // under a per-video keyed window, running boundary count = dense
-    // shot ids; signature extraction scan-local (payload never
-    // shuffles), stub luma at the q26 decode seam ----
-    "q170_shot_boundaries" -> ((s, dir) =>
-      graft.operators.Multimodal.shotBoundaries(
-        media(s, dir).filter(col("modality") === "video" &&
-          length(col("bytes")) > lit(16) + col("n_frames")))),
-
-    // ---- BPE tokenizer TRAINING (the learning side of the q102
-    // seam): 8 ranked merges from the corpus — one corpus pass for
-    // word counts, then vocabulary-sized rounds (weighted adjacency
-    // argmax + greedy left-to-right merge), every step deterministic
-    // so the oracle replays the whole sequential loop unrolled ----
-    "q130_bpe_train_merges" -> ((s, dir) =>
-      graft.operators.BpeTrain.trainMerges(docs(s, dir), "text",
-        nMerges = 8)),
-
-    // ---- Gopher rule-based quality gate: the published Rae et al.
-    // 2021 document filter heuristics — eight integer counts from ONE
-    // fused codegen scan per doc (GopherCounts), ratios round6'd
-    // before thresholding so every flag replays bit-for-bit ----
-    "q131_gopher_gate" -> ((s, dir) =>
-      graft.operators.Corpus.gopherQualityGate(
-        docs(s, dir), col("doc_id"), col("text"))),
-
-    // ---- markup text extraction (the WET pass): each doc wrapped in
-    // a deterministic HTML page (title/style/script/list chrome around
-    // the body text, entities in the footer), then the HtmlExtract
-    // kernel strips script+style with content, tags to spaces, decodes
-    // the safe entity set (amp LAST), collapses whitespace. The
-    // wrapper rides INSIDE the query so the oracle builds the same
-    // page and replays the same regex chain ----
-    "q132_html_extract" -> ((s, dir) => {
-      val id = col("doc_id").cast("string")
-      val html = concat(
-        lit("<html><head><title>Doc "), id,
-        lit("</title><style type=\"text/css\">p { color: #333; }</style>" +
-          "<script>if (1 < 2 && 2 > 1) { track(\"d"), id,
-        lit("\"); }</script></head><body><h1>Doc "), id,
-        lit("</h1><ul><li>alpha</li><li>beta</li></ul><p>"), col("text"),
-        lit("</p><br/><div>footer &amp; more &lt;raw&gt;</div></body></html>"))
-      graft.operators.Corpus.extractHtmlText(
-        docs(s, dir).withColumn("html", html), col("doc_id"), col("html"))
-    }),
-
-    // ---- C4 line-level filter: each doc becomes a multi-line page
-    // (raw text + crafted lines exercising every rule: short, no
-    // terminal punct, javascript, brace, lorem-ipsum per residue
-    // class), then the one-scan kernel keeps terminal-punct ≥5-word
-    // javascript-free lines and flags doc-level kill conditions ----
-    "q136_c4_line_filter" -> ((s, dir) => {
-      val page = concat_ws("\n",
-        col("text"),
-        lit("This line has five words."),
-        lit("Too short."),
-        lit("A line with JavaScript code embedded here."),
-        lit("No terminal punctuation here at all"),
-        when(col("doc_id") % 11 === 0, lit("code { block }"))
-          .otherwise(lit("Filler line number six right here.")),
-        when(col("doc_id") % 13 === 0, lit("Lorem Ipsum dolor sit amet."))
-          .otherwise(lit("Final sentence to close things out.")))
-      graft.operators.Corpus.c4LineFilter(
-        docs(s, dir).withColumn("page", page), col("doc_id"), col("page"))
-    }),
-
-    // ---- tokenizer fertility eval: the trained per-corpus merge
-    // artifact (q130's 8 merges, served from the artifact cache like
-    // the ANN quantizers) applied over per-source distinct-word tables
-    // via the trainer's own greedy replace — tokens-per-word /
-    // chars-per-token per source, the tokenizer-fit measurement ----
-    "q137_tokenizer_fertility" -> ((s, dir) =>
-      graft.operators.BpeTrain.tokenizerFertility(
-        docs(s, dir), "source", "text", bpeMergesArtifact(s, dir))),
-
-    // ---- URL-canonical crawl dedup: two messy variants per doc
-    // (uppercase host, default port, tracking params, fragment,
-    // shuffled param order) collapse to one canonical key; clusters
-    // aggregate per canonical URL. The whole fixture + normalization
-    // contract replays in the oracle ----
-    "q134_url_canonical_dedup" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val id7 = (col("doc_id") % 7).cast("string")
-      val id41 = (col("doc_id") % 41).cast("string")
-      val id13 = (col("doc_id") % 13).cast("string")
-      val u1 = concat(lit("HTTP://WWW.Site"), id7, lit(".COM:80/Articles/"),
-        id41, lit("?utm_source=feed&ref="), col("source"),
-        lit("&id="), id13, lit("#section-2"))
-      val u2 = concat(lit("http://www.site"), id7, lit(".com/Articles/"),
-        id41, lit("?id="), id13, lit("&ref="), col("source"),
-        lit("&gclid=XYZ"))
-      graft.operators.Corpus.urlDupClusters(
-        d.select(col("doc_id"), explode(array(u1, u2)).as("url")),
-        col("doc_id"), col("url"), countDocs = true)
-    }),
-
-    // ---- int8 embedding quantization: per-tensor absmax calibration
-    // (one scalar aggregate → plan parameter), then quantize +
-    // reconstruction error as a zero-shuffle projection ----
-    // ---- global paragraph-level dedup (CCNet first pass): pages get
-    // a shared subscribe banner (one global cluster), a %5 cluster
-    // line, a whitespace-only paragraph, an intra-doc banner repeat
-    // and a shared footer; only the globally-first copy of each
-    // paragraph survives, docs rebuilt in original order ----
-    "q141_paragraph_dedup" -> ((s, dir) => {
-      val page = concat_ws("\n",
-        col("text"),
-        lit("Subscribe to our newsletter today."),
-        lit("   "),
-        concat(lit("Cluster line number "),
-          (col("doc_id") % 5).cast("string"), lit(".")),
-        lit("Subscribe to our newsletter today."),
-        lit("All rights reserved."))
-      graft.operators.Corpus.paragraphDedup(
-        docs(s, dir).withColumn("page", page),
-        col("doc_id"), col("page"))
-    }),
-
-    // ---- domain-suffix blocklist filter: messy URLs canonicalize to
-    // hosts like a.b.site1.com; listing site1.com blocks the whole
-    // registrable domain, cdn.site2.com only that subdomain, and the
-    // LONGEST listed suffix wins the matched_domain credit ----
-    "q142_blocklist_filter" -> ((s, dir) => {
-      import s.implicits._
-      val sub = when(col("doc_id") % 3 === 0, lit("www"))
-        .when(col("doc_id") % 3 === 1, lit("a.b"))
-        .otherwise(lit("cdn"))
-      val url = concat(lit("HTTPS://"), sub, lit(".Site"),
-        (col("doc_id") % 7).cast("string"), lit(".COM:443/page/"),
-        col("doc_id").cast("string"))
-      val blocked = Seq("site1.com", "site4.com", "cdn.site2.com",
-        "a.b.site1.com", "evil.org").toDF("domain")
-      graft.operators.Corpus.blocklistFilter(
-        docs(s, dir).select(col("doc_id"), url.as("url")),
-        col("doc_id"), col("url"), blocked)
-    }),
-
-    // ---- Unicode normalization cleanup: every 4th doc gets a messy
-    // wrapper (decomposed accent, CRLF, zero-widths, C0 control, DEL,
-    // BOM); the kernel folds newlines, NFC-composes and strips, the
-    // rest pass through unchanged ----
-    "q143_normalize_text" -> ((s, dir) => {
-      val messy = concat(lit("Cafe\u0301 du parc\r\n"), col("text"),
-        lit("\u200Bzero\u200Cwidth\u200D\u0001\u007F\uFEFF tail"))
-      val t = when(col("doc_id") % 4 === 0, messy).otherwise(col("text"))
-      graft.operators.Corpus.normalizeText(
-        docs(s, dir).withColumn("t", t), col("doc_id"), col("t"))
-    }),
-
-    // ---- incremental NEAR-dup admission (the crawl-refresh gate):
-    // the batch carries verbatim corpus copies (rejected), one-word
-    // appends (near-dups, rejected wherever J >= 0.8) and word-
-    // reversed texts (trigram-disjoint from their originals, admitted
-    // unless near-dupping a LOWER-id reversed batch twin) ----
-    "q144_incremental_neardup" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val batch = d.select((col("doc_id") + 200000L).as("doc_id"),
-        when(col("doc_id") % 3 === 0, col("text"))
-          .when(col("doc_id") % 3 === 1,
-            concat(col("text"), lit(" extraword")))
-          .otherwise(array_join(reverse(split(col("text"), " ")), " "))
-          .as("text"))
-      graft.operators.Dedup.incrementalNear(d, batch, "doc_id", "text")
-    }),
-
-    // ---- learned quality classifier (fastText-style): logistic
-    // regression over 16 hashed bag-of-words buckets, 8 full-batch GD
-    // steps against the lang=='en' proxy label, every step on the 6dp
-    // grid — trained weights AND scores replay exactly in SQL ----
-    "q147_quality_classifier" -> ((s, dir) =>
-      graft.operators.Classifier.qualityClassifierScores(
-        docs(s, dir), "doc_id", "text", col("lang") === "en")),
-
-    // ---- DSIR importance resampling (Xie et al. 2023): hashed-
-    // unigram log importance ratio against the lang=='en' target
-    // subset, then Gumbel-max top-100 ∝ exp(logw) — the label-free
-    // "looks like the trusted corpus" selection step; weights AND
-    // the seeded draw replay exactly in SQL ----
-    "q148_dsir_resample" -> ((s, dir) =>
-      graft.operators.Dsir.resample(
-        docs(s, dir), "doc_id", "text", col("lang") === "en",
-        dim = 64, k = 100)),
-
-    // ---- unigram-LM tokenizer TRAINING (SentencePiece family, Kudo
-    // 2018): substring candidates, add-one M-steps, two Viterbi-EM
-    // rounds with the tie rule pinned — the OTHER production
-    // tokenizer next to q130's BPE; the full EM replays in SQL ----
-    "q156_unigram_train" -> ((s, dir) =>
-      graft.operators.UnigramLm.trainUnigram(
-        docs(s, dir), "text", maxPieceLen = 4, minCount = 2,
-        maxVocab = 500, iters = 2)),
-
-    // ---- unigram-LM SERVING: segment every document under the
-    // TRAINED q156 artifact (same Viterbi kernel as the E-step —
-    // train and serve cannot diverge); the doc's piece stream is
-    // pinned by a position-weighted portable-hash checksum ----
-    "q159_unigram_segment" -> ((s, dir) =>
-      graft.operators.UnigramLm.segmentDocs(
-          docs(s, dir), "doc_id", "text",
-          unigramArtifact(s, dir), maxPieceLen = 4)
-        .select(col("id").as("doc_id"), col("n_pieces"),
-          col("piece_checksum"))),
-
-    // ---- unigram vocab pruning + refit fertility (the SentencePiece
-    // shrink step): drop the 16 lowest-scoring multi-char pieces
-    // (single chars = coverage floor), re-segment through the SAME
-    // Viterbi kernel, per-doc fertility delta + pruned-plane checksum ----
-    "q179_unigram_prune_refit" -> ((s, dir) => {
-      val full = unigramArtifact(s, dir)
-      val pruned = graft.operators.UnigramLm.pruneScores(full,
-        dropMulti = 16)
-      val before = graft.operators.UnigramLm.segmentDocs(
-          docs(s, dir), "doc_id", "text", full, maxPieceLen = 4)
-        .select(col("id").as("doc_id"), col("n_pieces").as("n_before"))
-      val after = graft.operators.UnigramLm.segmentDocs(
-          docs(s, dir), "doc_id", "text", pruned, maxPieceLen = 4)
-        .select(col("id").as("doc_id"), col("n_pieces").as("n_after"),
-          col("piece_checksum").as("pruned_checksum"))
-      before.join(after, "doc_id")
-        .withColumn("fertility_delta", col("n_after") - col("n_before"))
-    }),
-
-    // ---- END-TO-END CURATION (the `curate` CLI's composition as ONE
-    // declarative plan, stage order pinned = the CLI's layering):
-    // URL-canonical dedup (q134, min-id per canon key) → C4 line
-    // rules (q136, doc kills + text rewrite) → global paragraph dedup
-    // (q141, text rewrite) → Gopher gate (q131) → classifier trained
-    // ON the survivors (q147, the DCLM layering: the filter model
-    // never sees what the rules killed) → DSIR top-50 selection
-    // toward lang=='en' (q148). Each doc carries a URL and a crafted
-    // multi-line page so every stage has real kills; the oracle
-    // replays the WHOLE chain (the q153 composition convention, one
-    // stage deeper). Output = the selected docs, scalar columns only
-    // (text pinned via its portable hash). ----
-    "q160_curate_e2e" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      import graft.operators.{Classifier, Corpus, Dsir}
-      val d = docs(s, dir)
-      val art = (col("doc_id") % 250).cast("string")
-      val url = concat(lit("HTTP://WWW.Site"),
-        (col("doc_id") % 250 % 7).cast("string"),
-        lit(".COM:80/Articles/"), art, lit("?utm_source=feed&id="), art)
-      val page = concat_ws("\n",
-        concat(col("text"), lit(" and that is the end.")),
-        lit("Subscribe to our newsletter today."),
-        lit("Too short."),
-        when(col("doc_id") % 11 === 0, lit("code { block }"))
-          .otherwise(lit("Filler line number six right here.")))
-      val base = d.select(col("doc_id"), col("lang"),
-        url.as("url"), page.as("page"))
-      val kept1 = base.join(
-        Corpus.urlDupClusters(base, col("doc_id"), col("url"))
-          .select(col("min_doc").as("doc_id")),
-        Seq("doc_id"), "left_semi")
-      val c4 = Corpus.c4LineFilter(kept1, col("doc_id"), col("page"))
-        .filter(col("keep_doc"))
-        .select(col("id").as("doc_id"), col("clean_text").as("t1"))
-      val kept2 = kept1.select(col("doc_id"), col("lang")).join(c4, "doc_id")
-      val para = Corpus.paragraphDedup(kept2, col("doc_id"), col("t1"))
-        .filter(col("n_kept") > 0)
-        .select(col("id").as("doc_id"), col("clean_text").as("t2"))
-      val kept3 = kept2.select(col("doc_id"), col("lang")).join(para, "doc_id")
-      val kept4 = kept3.join(
-        Corpus.gopherQualityGate(kept3, col("doc_id"), col("t2"))
-          .filter(col("pass")).select(col("id").as("doc_id")),
-        Seq("doc_id"), "left_semi")
-        .localCheckpoint() // feeds training AND scoring AND selection
-      val scored = Classifier.qualityClassifierScores(
-          kept4, "doc_id", "t2", col("lang") === "en")
-        .select(col("id").as("doc_id"), col("score").as("clf_score"))
-      Dsir.resample(kept4, "doc_id", "t2", col("lang") === "en",
-          dim = 64, k = 50)
-        .filter(col("rank").isNotNull)
-        .select(col("id").as("doc_id"), col("logw"), col("rank"))
-        .join(scored, "doc_id")
-        .join(kept4.select(col("doc_id"), col("lang"),
-          portable_hash(col("t2")).as("text_hash")), "doc_id")
-        .select(col("doc_id"), col("lang"), col("text_hash"),
-          col("clf_score"), col("logw"), col("rank"))
-    }),
-
-    // ---- RedPajama-V2-style quality-signals sheet: every cheap
-    // text-local signal (length/tokens, q20 quality, q19 lang-id,
-    // q56 repetition, the q131 Gopher panel) from ONE scan, zero
-    // shuffle — the signals parquet downstream selection reads
-    // instead of re-touching text; plan-pinned single-Project ----
-    "q153_quality_signals" -> ((s, dir) =>
-      graft.operators.Corpus.qualitySignals(docs(s, dir), "doc_id", "text")),
-
-    // ---- Kneser–Ney smoothed bigram LM scoring (the CCNet/KenLM
-    // smoothing family): absolute discount 0.75 + continuation-
-    // probability backoff — q75's add-one baseline upgraded to the
-    // smoothing production perplexity filters actually use ----
-    "q151_kneser_ney_score" -> ((s, dir) =>
-      graft.operators.Corpus.knScore(docs(s, dir), "doc_id", "text")),
-
-    // ---- trigram INTERPOLATED Kneser–Ney (q151 one order up — the
-    // KenLM direction): lower-order continuation counts over trigram
-    // types, unigram level from bigram types, discount 0.75 at both
-    // orders; model tables finished at aggregate size, probe salted ----
-    "q161_kn_trigram_score" -> ((s, dir) =>
-      graft.operators.Corpus.knTrigramScore(docs(s, dir), "doc_id", "text")),
-
-    // ---- trigram KN with KenLM-parity singleton pruning: trigram
-    // types with c(abc) < 2 are dropped from the model (the one
-    // trigram-type-sized table, now bounded by construction on
-    // low-reuse corpora); pruned occurrences back off to the
-    // interpolation's continuation term over unpruned lower orders ----
-    "q184_kn_trigram_pruned" -> ((s, dir) =>
-      graft.operators.Corpus.knTrigramScore(docs(s, dir), "doc_id",
-        "text", minCount = 2)),
-
-    // ---- q184 through the FORCED bounded build branch: the adaptive
-    // switch picks the materialized build at verify scale (small
-    // inputs), so without this pin the oracle never exercises the
-    // bounded plan — the branch the operator exists for at 100×.
-    // The conf is read at plan-construction time (the eager pruned-
-    // base checkpoints run inside knTrigramScore), so restoring it
-    // immediately after construction binds the branch cleanly ----
-    "q185_kn_trigram_pruned_bounded" -> ((s, dir) => {
-      val key = "spark.graft.kn.boundedBuild"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try graft.operators.Corpus.knTrigramScore(docs(s, dir), "doc_id",
-        "text", minCount = 2)
-      finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
-    }),
-
-    // ---- SFT loss-masked packing: conversations (prompt = first 8
-    // tokens, response = the rest) packed into context windows with
-    // the loss mask riding each token — prompt positions mask 0,
-    // response 1 (the −100-label collator, made layout-exact);
-    // chunk contents and mask positions pinned by the q99
-    // position-weighted checksums ----
-    "q163_sft_masked_pack" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val toks = docs(s, dir).select(col("doc_id").as("id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      val convs = toks.select(col("id"),
-        slice(col("ids"), 1, 8).as("p"),
-        slice(col("ids"), lit(9),
-          greatest(size(col("ids")) - 8, lit(0))).as("r"))
-      graft.operators.Packing.sftMaskedPack(convs, col("id"),
-          col("p"), col("r"), contextLen = 64, nShards = 4)
-        .select(col("shard"), col("chunk_id"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          aggregate(
-            zip_with(col("token_ids"),
-              sequence(lit(1), size(col("token_ids"))),
-              (t, i) => t.cast("long") * i.cast("long")),
-            lit(0L), (a, x) => a + x).as("ids_checksum"),
-          aggregate(
-            zip_with(col("loss_mask"),
-              sequence(lit(1), size(col("loss_mask"))),
-              (m, i) => m.cast("long") * i.cast("long")),
-            lit(0L), (a, x) => a + x).as("mask_checksum"),
-          aggregate(col("loss_mask"), lit(0L),
-            (a, m) => a + m.cast("long")).as("n_loss"))
-    }),
-
-    // ---- DPO preference-pair packing (Rafailov et al. 2023): each
-    // doc becomes a pair — prompt = first 6 tokens, the rest split
-    // into chosen/rejected halves — through the twin-plane collator
-    // (HF DPOTrainer truncation contract: prompt LEFT-truncates, then
-    // each plane RIGHT-truncates to L=24). Plane ids pinned by the
-    // q99 position-weighted checksum; mask layout by the same
-    // checksum over the mask array ----
-    "q166_dpo_pair_pack" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val cks: Column => Column = a => aggregate(
-        zip_with(a, sequence(lit(1), size(a)),
-          (t, i) => t.cast("long") * i.cast("long")),
-        lit(0L), (acc, x) => acc + x)
-      val toks = docs(s, dir).select(col("doc_id").as("id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      val pairs = toks
-        .withColumn("__n", size(col("ids")))
-        .withColumn("__np", least(lit(6), col("__n")))
-        .withColumn("__half", expr("CAST((__n - __np) DIV 2 AS INT)"))
-        .select(col("id"),
-          slice(col("ids"), lit(1), col("__np")).as("p"),
-          slice(col("ids"), col("__np") + 1, col("__half")).as("c"),
-          slice(col("ids"), col("__np") + col("__half") + 1,
-            col("__n") - col("__np") - col("__half")).as("r"))
-      graft.operators.Packing.dpoPairPack(pairs, col("id"),
-          col("p"), col("c"), col("r"), contextLen = 24, nShards = 4)
-        .select(col("pair_id"), col("shard"),
-          size(col("chosen_ids")).cast("long").as("c_len"),
-          size(col("rejected_ids")).cast("long").as("r_len"),
-          cks(col("chosen_ids")).as("c_ids_checksum"),
-          cks(col("chosen_mask").cast("array<int>"))
-            .as("c_mask_checksum"),
-          cks(col("rejected_ids")).as("r_ids_checksum"),
-          cks(col("rejected_mask").cast("array<int>"))
-            .as("r_mask_checksum"))
-    }),
-
-    // ---- vocabulary-size coverage sweep (the q158 calibration
-    // convention applied to vocab): one count pass, ranked table,
-    // every candidate V reads the OOV/coverage point off it ----
-    "q173_vocab_coverage_sweep" -> ((s, dir) =>
-      graft.operators.Corpus.vocabCoverageSweep(docs(s, dir),
-        "doc_id", "text")),
-
-    // ---- word-entropy / lexical-diversity signals: per-doc Shannon
-    // entropy over word counts + type-token ratio, computed doc-local
-    // (sorted-run HOF fold, zero shuffle) while the oracle takes the
-    // textbook explode + GROUP BY road to the same bits ----
-    "q168_entropy_signal" -> ((s, dir) =>
-      graft.operators.Corpus.entropySignals(docs(s, dir),
-        "doc_id", "text")),
-
-    // ---- DoReMi-shape domain reweighting (Xie et al. 2023): per-doc
-    // losses from the q75 unigram LM roll up to per-source means, then
-    // 8 Group-DRO exponentiated-gradient rounds against the α-weighted
-    // mixture loss, uniform-smoothed — every scalar step round6 so the
-    // oracle unrolls the identical trajectory ----
-    "q167_doremi_reweight" -> ((s, dir) => {
-      val scored = graft.operators.Corpus.lmScore(docs(s, dir),
-          "doc_id", "text")
-        .join(docs(s, dir).select(col("doc_id"), col("source")), "doc_id")
-      graft.operators.Sampling.doremiWeights(scored,
-          col("source"), col("nll"))
-        .select(col("domain").as("source"), col("n_docs"),
-          col("loss"), col("weight"))
-    }),
-
-    // ---- Bradley–Terry strength fitting (Hunter 2004 MM — the
-    // arena-leaderboard aggregate): synthetic model comparisons
-    // (winner = doc_id%5, loser = (doc_id DIV 3)%5, ties skipped),
-    // 8 fixed-point rounds, strengths normalized to mean 1 ----
-    "q176_bradley_terry" -> ((s, dir) =>
-      graft.operators.Classifier.bradleyTerry(
-          docs(s, dir)
-            .filter(expr("doc_id % 5 <> (doc_id DIV 3) % 5"))
-            .select(expr("doc_id % 5").as("w"),
-              expr("(doc_id DIV 3) % 5").as("l")),
-          col("w"), col("l"))
-        .select(col("item").as("model_id"), col("wins"), col("games"),
-          col("strength"))),
-
-    // ---- q176 through the FORCED join-form MM branch: the size gate
-    // (Classifier.btFoldSwitch) picks the one-row fold at verify scale
-    // (tiny pair tables), so without this pin the oracle never
-    // exercises the distributed per-round join iteration — the branch
-    // the operator falls back to at 100× pair tables, where the fold's
-    // single-task O(rounds·|I|·|pairs|) work breaks. The conf is read
-    // at plan-construction time (btFoldSwitch runs inside
-    // bradleyTerry, after the bounded item/orient counts), so
-    // restoring it immediately after construction binds the branch
-    // cleanly (the q185 convention) ----
-    "q186_bradley_terry_joined" -> ((s, dir) => {
-      val key = "spark.graft.bt.fold"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "false")
-      try graft.operators.Classifier.bradleyTerry(
-          docs(s, dir)
-            .filter(expr("doc_id % 5 <> (doc_id DIV 3) % 5"))
-            .select(expr("doc_id % 5").as("w"),
-              expr("(doc_id DIV 3) % 5").as("l")),
-          col("w"), col("l"))
-        .select(col("item").as("model_id"), col("wins"), col("games"),
-          col("strength"))
-      finally prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
-    }),
-
-    // ---- calibration bins (Guo et al. 2017 ECE shape): the q20
-    // quality score audited as a probability against the q131 Gopher
-    // gate — per-decile mean score vs positive rate ----
-    "q178_quality_calibration" -> ((s, dir) => {
-      val score = docs(s, dir).select(col("doc_id"),
-        graft.functions.TextKernels.text_stats(col("text"),
-          TextFunctions.LangProfiles("en")).getField("quality")
-          .as("score"))
-      val label = graft.operators.Corpus.gopherQualityGate(
-          docs(s, dir), col("doc_id"), col("text"))
-        .select(col("id").as("doc_id"), col("pass"))
-      graft.operators.Classifier.calibrationBins(
-        score.join(label, "doc_id"), col("score"), col("pass"))
-    }),
-
-    // ---- distinct-n diversity per source (Li et al. 2016): the
-    // degeneracy panel — distinct/total n-grams for n = 1..3 ----
-    "q182_distinct_n_diversity" -> ((s, dir) =>
-      graft.operators.Corpus.distinctNgramRatios(docs(s, dir),
-        "doc_id", "text", "source")),
-
-    // ---- distinct-n panel, KMV-sketched (the 100× escape for q182:
-    // O(k) aggregate state instead of a corpus-scale (source, gram)
-    // exchange; the deterministic estimator itself is oracle-checked,
-    // the q38 discipline) ----
-    "q183_distinct_n_sketch" -> ((s, dir) =>
-      graft.operators.Corpus.distinctNgramRatiosSketch(docs(s, dir),
-        "doc_id", "text", "source")),
-
-    // ---- inter-source duplication matrix: the q14 near-dup pairs
-    // rolled up to undirected source pairs with size-normalized
-    // rates — the provenance view a corpus report publishes ----
-    "q181_source_dup_matrix" -> ((s, dir) =>
-      Dedup.sourceDupMatrix(dupPairs(s, dir), docs(s, dir),
-        col("doc_id"), col("source"))),
-
-    // ---- rejection-sampling best-of-n (the RFT/Llama-2 recipe):
-    // per prompt-group of 4, keep the reward-argmax above 0.3 with
-    // its winner-margin; the q20 quality kernel as stub reward ----
-    "q180_best_of_n" -> ((s, dir) => {
-      val rewards = docs(s, dir).select(col("doc_id"),
-        graft.functions.TextKernels.text_stats(col("text"),
-          TextFunctions.LangProfiles("en")).getField("quality")
-          .as("reward"))
-      graft.operators.Sampling.bestOfN(rewards, col("doc_id"),
-        expr("doc_id DIV 4"), col("reward"), minReward = 0.3)
-    }),
-
-    // ---- BT calibration eval: the q176 strengths scored back per
-    // directed pair — predicted s_w/(s_w+s_l) vs empirical win rate ----
-    "q177_bt_calibration" -> ((s, dir) =>
-      graft.operators.Classifier.btCalibration(
-        docs(s, dir)
-          .filter(expr("doc_id % 5 <> (doc_id DIV 3) % 5"))
-          .select(expr("doc_id % 5").as("w"),
-            expr("(doc_id DIV 3) % 5").as("l")),
-        col("w"), col("l"))),
-
-    // ---- GRPO group-relative advantage (Shao et al. 2024): docs in
-    // prompt-groups of 4, the q20 quality kernel as the stub reward,
-    // within-group standardized reward as the advantage ----
-    "q175_grpo_advantage" -> ((s, dir) => {
-      val rewards = docs(s, dir).select(col("doc_id"),
-        graft.functions.TextKernels.text_stats(col("text"),
-          TextFunctions.LangProfiles("en")).getField("quality")
-          .as("reward"))
-      graft.operators.Sampling.groupRelativeAdvantage(rewards,
-          col("doc_id"), expr("doc_id DIV 4"), col("reward"))
-        .select(col("id").as("doc_id"), col("group_id"), col("reward"),
-          col("n"), col("advantage"))
-    }),
-
-    // ---- DoReMi weights APPLIED (the q160 composition convention at
-    // mixture scope): the q167 EG trajectory's smoothed weights,
-    // decimal-exact renormalized (round6 weights need not sum to 1),
-    // feed mixSample's largest-achievable-at-exact-proportions
-    // selection — weights learned in-engine, selection in-engine, the
-    // |D|-row weight table the only driver crossing (bounded plan
-    // parameter, the q167 convention) ----
-    "q172_doremi_mix_apply" -> ((s, dir) => {
-      val scored = graft.operators.Corpus.lmScore(docs(s, dir),
-          "doc_id", "text")
-        .join(docs(s, dir).select(col("doc_id"), col("source")), "doc_id")
-      val w = graft.operators.Sampling.doremiWeights(scored,
-          col("source"), col("nll"))
-        .select(col("domain"), col("weight")).collect()
-        .map(r => r.getString(0) -> r.getDouble(1))
-      // round6 weights sum EXACTLY in decimal (BigDecimal.valueOf via
-      // Double.toString recovers the 6-dp value — same as the oracle's
-      // DECIMAL(28,6) sum), then one correctly-rounded double division
-      // per share mirrors the SQL exactly
-      val sum = w.map { case (_, x) => BigDecimal(x) }.sum.toDouble
-      val shares = w.map { case (g, x) => g -> x / sum }.toMap
-      graft.operators.Sampling.mixSample(docs(s, dir), col("doc_id"),
-          col("source"), shares)
-        .select(col("doc_id"), col("source"))
-    }),
-
-    // ---- in-context-pretraining order (Shi et al. 2023): every
-    // vector assigned to its frozen-IVF list (the q135 artifact),
-    // then the cluster-grouped training layout — whole clusters per
-    // shard, peers pos-adjacent, seeded-hash order at both levels ----
-    "q164_incontext_order" -> ((s, dir) =>
-      graft.operators.Packing.inContextOrder(
-          Similarity.ivfAssign(embs(s, dir), ivfArtifact(s, dir))
-            .select(col("vec_id"), col("cid")),
-          col("vec_id"), col("cid"), seed = 20260815L, nShards = 4)
-        .select(col("shard"), col("pos"), col("id").as("vec_id"),
-          col("cluster"))),
-
-    // ---- CCNet perplexity buckets over the KN-smoothed LM (q146's
-    // bucket pass with the LM upgraded from add-one to Kneser–Ney —
-    // the shape CCNet actually ships: KenLM-family perplexity into
-    // per-lang head/middle/tail terciles) ----
-    "q162_kn_perplexity_buckets" -> ((s, dir) => {
-      val scored = graft.operators.Corpus.knScore(
-          docs(s, dir), "doc_id", "text")
-        .join(docs(s, dir).select(col("doc_id"), col("lang")), "doc_id")
-      graft.operators.Corpus.perplexityBuckets(
-          scored, Seq("lang"), col("nll"))
-        .select(col("doc_id"), col("lang"), col("n_pairs"), col("nll"),
-          col("bucket"))
-    }),
-
-    // ---- prototype-distance data pruning (Sorscher et al. 2022):
-    // keep the hardest half of each IVF cluster by distance to its
-    // prototype — the embedding-space selection step, through the
-    // SAME frozen coarse quantizer as q36/q135 ----
-    "q149_prototype_prune" -> ((s, dir) =>
-      Similarity.prototypePrune(
-        embs(s, dir), ivfArtifact(s, dir), keepFrac = 0.5)),
-
-    // ---- CCNet head/middle/tail perplexity buckets: q75's LM scores
-    // split per language at the 1/3 and 2/3 exact quantiles — the
-    // selection step the perplexity filter exists for ----
-    "q146_perplexity_buckets" -> ((s, dir) => {
-      val scored = graft.operators.Corpus.lmScore(
-          docs(s, dir), "doc_id", "text")
-        .join(docs(s, dir).select(col("doc_id"), col("lang")), "doc_id")
-      graft.operators.Corpus.perplexityBuckets(
-          scored, Seq("lang"), col("nll"))
-        .select(col("doc_id"), col("lang"), col("nll"), col("bucket"))
-    }),
-
-    // ---- quality-filter calibration sweep: the q20 quality score
-    // against the lang=='en' proxy label across nine thresholds, all
-    // from ONE scalar aggregate pass (2 conditional sums per
-    // threshold), exploded to the calibration-curve rows ----
-    "q145_threshold_sweep" -> ((s, dir) => {
-      val st = graft.functions.TextKernels.text_stats(col("text"),
-        TextFunctions.LangProfiles("en"))
-      graft.operators.Corpus.thresholdSweep(
-        docs(s, dir).select(col("lang"), st.getField("quality").as("q")),
-        col("q"), col("lang") === "en",
-        Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9))
-    }),
-
-    // ---- int8 quantization: the verify surface scalarizes qvec to
-    // the q99 position-weighted checksum (Σ q_i·i, 1-based) — the
-    // driver's canonicalization sorts on raw column values and cannot
-    // order an array column (round-14 q140 err), so NO query may
-    // expose a top-level array/map/struct (VerifySurfaceSpec pins
-    // this). The checksum is order- and value-exact: any flipped
-    // element at any position changes it. ----
-    "q140_int8_quantize" -> ((s, dir) =>
-      graft.operators.EmbedStats.int8Quantize(embs(s, dir))
-        .select(col("vec_id"),
-          size(col("qvec")).cast("long").as("qlen"),
-          aggregate(
-            zip_with(col("qvec"),
-              sequence(lit(1), size(col("qvec"))),
-              (q, i) => q.cast("long") * i.cast("long")),
-            lit(0L), (a, x) => a + x).as("qchecksum"),
-          col("mse"))),
-
-    // ---- corpus snapshot diff: the v1→v2 churn report (drop one
-    // residue class, edit another, add a third under new ids) via the
-    // fingerprint full-outer join — content never crosses the wire ----
-    "q139_snapshot_diff" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("text"))
-      val v2 = d.filter(col("doc_id") % 17 =!= 3)
-        .withColumn("text", when(col("doc_id") % 17 === 5,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-        .unionByName(d.filter(col("doc_id") % 17 === 7)
-          .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      graft.operators.Corpus.snapshotDiff(d, v2, "doc_id", "text")
-    }),
-
-    // ---- per-host document cap (domain balance): messy URLs bucket
-    // to their canonical host (case/port/params collapse), at most 3
-    // lowest-id docs kept per host ----
-    "q138_per_host_cap" -> ((s, dir) => {
-      val idS = col("doc_id").cast("string")
-      val url = concat(lit("HTTP://WWW.Site"),
-        (col("doc_id") % 7).cast("string"), lit(".COM:80/Articles/"), idS,
-        lit("?utm_source=feed&id="), idS)
-      graft.operators.Corpus.perHostCap(
-        docs(s, dir).select(col("doc_id"), url.as("url")),
-        col("doc_id"), col("url"), cap = 3)
-    }),
-
-    // ---- REAL audio codec round trip: each audio payload becomes a
-    // signed 16-bit PCM waveform (byte-delta DPCM synth), is wrapped
-    // in a spec-correct RIFF/WAVE container by the WavCodec WRITER,
-    // then flows through the batched decode seam where the strict
-    // chunk-walking PARSER recovers the samples and computes the
-    // curation features (peak/RMS/zero-crossings). The oracle computes
-    // the same features directly from the payload bytes — an
-    // independent path that never sees the container, so it checks the
-    // writer AND parser agree with the spec ----
-    "q133_wav_features" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val enc = org.apache.spark.sql.Encoders.product[Multimodal.Media]
-      val ds = media(s, dir).filter(col("modality") === "audio")
-        .as[Multimodal.Media](enc)
-        .map(m => m.copy(bytes = Multimodal.WavCodec.encode(
-          Multimodal.WavCodec.pcm16FromByteDeltas(m.bytes))))(enc)
-      Multimodal.mapDecodeWavBatches(ds).toDF()
-    }),
-
-    // ---- VAD-style energy-gated speech segments: the q133 clips
-    // framed at 32 samples, per-frame grid RMS, runs of frames with
-    // rms >= 12000 merged to segments — the silence-trimming step
-    // between audio decode and packing; replayed from the payload
-    // bytes by the oracle (container-independent, like q133) ----
-    "q150_audio_vad_segments" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val enc = org.apache.spark.sql.Encoders.product[Multimodal.Media]
-      val ds = media(s, dir).filter(col("modality") === "audio")
-        .as[Multimodal.Media](enc)
-        .map(m => m.copy(bytes = Multimodal.WavCodec.encode(
-          Multimodal.WavCodec.pcm16FromByteDeltas(m.bytes))))(enc)
-      Multimodal.mapVadBatches(ds, frameLen = 32, threshold = 12000.0)
-        .toDF()
-    }),
-
-    // ---- multimodal near-dup: perceptual-hash (aHash) image dedup —
-    // 60-bit byte-grid hash per payload (zero shuffle), pigeonhole-
-    // blocked Hamming pairs (lossless recall ≤ maxHamming). Threshold
-    // 10: the byte-level stand-in hash is noisier than a pixel aHash
-    // (near-dup TEXTS shift byte positions), and the oracle replays
-    // the chosen operating point exactly either way ----
-    "q129_media_neardup_phash" -> ((s, dir) =>
-      graft.operators.Multimodal.mediaNearDupPairs(
-        media(s, dir).filter(col("modality") === "image"),
-        maxHamming = 10)),
-
-    // ---- embedding-cosine near-duplicate pairs: LSH-bucketed scale
-    // path is the CHECKED path (deterministic hyperplanes → exact
-    // oracle incl. recall loss); the quadratic exact form verifies it
-    // in SimilaritySpec at small n ----
-    "q27_embedding_neardup" -> ((s, dir) =>
-      Similarity.nearDupPairsLsh(embs(s, dir), threshold = 0.35, nPlanes = 6)),
-
-    // ---- full gridmet pipeline (F2+F3+A1+reindex+F7+C1+C2) ----
-    "q28_gridmet_pipeline" -> ((s, dir) => {
-      val grid = t(s, dir, "lineitem").select(
-        date_trunc("month", col("l_shipdate")).as("time"),
-        (col("l_partkey") % 25).cast("int").as("i"),
-        (col("l_suppkey") % 10).cast("int").as("j"),
-        (lit(40.0) + (col("l_suppkey") % 10) * 0.1).as("lat"),
-        (lit(-100.0) + (col("l_partkey") % 25) * 0.1).as("lon"),
-        (lit(270.0) + col("l_quantity") % 40).as("tmmx"),
-        (lit(258.0) + col("l_quantity") % 40).as("tmmn"),
-        (col("l_discount") * 100).as("pr"),
-        (lit(50.0) + col("l_tax") * 100).as("rmax"),
-        (lit(20.0) + col("l_tax") * 50).as("rmin"),
-        (lit(1.0) + col("l_linenumber") % 5).as("vs"))
-      val w = weightsFromPart(t(s, dir, "part"))
-      val feats = t(s, dir, "customer")
-        .select((col("c_custkey") % 40).as("fid")).distinct()
-        .select(col("fid"),
-          (lit(40.0) + col("fid") % 10 * 0.1).as("lat"),
-          (lit(-100.0) + col("fid") % 25 * 0.1).as("lon"),
-          lit(-100.0).as("minx"), lit(40.0).as("miny"),
-          lit(-98.6).as("maxx"), lit(40.9).as("maxy"))
-      val out = GridmetPipeline.gridmet(grid, w, feats,
-        start = "1994-01-01", end = "1996-12-01", preCombine = true)
-      out.select(col("nhru"), col("time"),
-        round(col("tmax"), 4).as("tmax"), round(col("tmin"), 4).as("tmin"),
-        round(col("prcp"), 4).as("prcp"), round(col("rhmax"), 4).as("rhmax"),
-        round(col("rhmin"), 4).as("rhmin"), round(col("ws"), 4).as("ws"),
-        round(col("humidity"), 4).as("humidity"))
-    }),
-
-    // ---- A4/A5/S9: bounds + time-extent aggregates ----
-    "q29_extent" -> ((s, dir) => {
-      val g = t(s, dir, "lineitem").select(
-        col("l_shipdate").as("time"),
-        (lit(40.0) + (col("l_suppkey") % 10) * 0.1).as("lat"),
-        (lit(-100.0) + (col("l_partkey") % 25) * 0.1).as("lon"))
-      g.agg(
-        min(col("lon")).as("minx"), min(col("lat")).as("miny"),
-        max(col("lon")).as("maxx"), max(col("lat")).as("maxy"),
-        min(col("time")).as("time_first"), max(col("time")).as("time_last"))
-    }),
-
-    // ---- C7: int64 days-since-origin time encoding ----
-    "q30_time_encode" -> ((s, dir) => {
-      val df = t(s, dir, "orders").select(
-        col("o_orderkey"), col("o_orderdate").cast("date").as("time"))
-      graft.etl.Convert.encodeTimeDays(df, "1992-01-01")
-        .withColumn("decoded", date_add(to_date(lit("1992-01-01")), col("time").cast("int")))
-        .select(col("o_orderkey"), col("time").as("days"), col("decoded"))
-    }),
-
-    // ---- U2/F10: ensemble concat of member frames ----
-    "q31_ensemble_concat" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val members = Seq(
-        o.filter(col("o_orderkey") % 3 === 0),
-        o.filter(col("o_orderkey") % 3 === 1),
-        o.filter(col("o_orderkey") % 3 === 2))
-        .map(_.select(col("o_custkey"), col("o_totalprice")))
-      graft.operators.EnsembleStats.concatMembers(members)
-        .groupBy(col("ens"))
-        .agg(count(lit(1)).as("n"), moneySum(col("o_totalprice")).as("total"))
-    }),
-
-    // ---- hopping (sliding) window aggregate ----
-    "q32_hopping_window" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-        .select(col("window.start").as("win_start"), col("event_type"),
-          col("n"), col("sum_value"))),
-
-    // ---- distinct aggregation ----
-    "q33_distinct_daily_users" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(col("ts").cast("date").as("day"))
-        .agg(countDistinct(col("user_id")).as("users"),
-          count(lit(1)).as("events"))),
-
-    // ---- rollup (hierarchical grouping sets) ----
-    "q34_rollup_revenue" -> ((s, dir) => {
-      val o = t(s, dir, "orders"); val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .rollup(col("n_name"), year(col("o_orderdate")).as("yr"))
-        .agg(moneySum(col("o_totalprice")).as("revenue"), count(lit(1)).as("n"))
-    }),
-
-    // ---- ANN: IVF (inverted-file) variant. Fully deterministic
-    // (literal-centroid argmin + two-level ordered-fold Lloyd means),
-    // so the bucketed result has an EXACT oracle including its recall
-    // loss — same property as q22. ----
-    "q36_ann_ivf_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      // pre-trained coarse quantizer from the shared per-corpus
-      // artifact cache (even-id training half; list ASSIGNMENT still
-      // covers every vector) — same values as training in-query
-      Similarity.ivfTopK(e, e.filter(col("vec_id") < 8), k = 5,
-        ivfArtifact(s, dir), nProbe = 4,
-        idCol = "vec_id", vecCol = "embedding")
-    }),
-
-    // ---- incremental index maintenance: a "new daily batch" of
-    // vectors (id % 10 = 7) routed to the FROZEN per-corpus IVF
-    // artifact's lists with zero retraining (the Faiss add path) —
-    // one codegen projection over the increment, dist2 as the
-    // centroid-drift monitoring signal ----
-    "q135_ivf_incremental_assign" -> ((s, dir) =>
-      Similarity.ivfAssign(
-        embs(s, dir).filter(col("vec_id") % 10 === 7),
-        ivfArtifact(s, dir))),
-
-    // ---- incremental SemDeDup admission: the q144 crawl-refresh
-    // gate in embedding space — the id%10==7 "new batch" admitted
-    // against the rest of the corpus through the SHARED frozen IVF
-    // quantizer (same-list comparisons only, the q71 recall trade);
-    // rejected on cosine >= 0.35 vs any corpus vector or a lower-id
-    // batch vector (one-pass greedy election) ----
-    "q155_semdedup_admit" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.semDedupAdmit(
-        e.filter(col("vec_id") % 10 =!= 7),
-        e.filter(col("vec_id") % 10 === 7),
-        ivfArtifact(s, dir), threshold = 0.35)
-    }),
-
-    // ---- cluster-balanced (topic-balanced) selection: the q117
-    // power-law rebalance applied to EMBEDDING CLUSTERS instead of
-    // named sources — assign every vector to its frozen-IVF list,
-    // then temperature-sample per cluster (α=0.5, the mT5 default):
-    // over-represented topics are squashed, the long tail of small
-    // clusters survives — the DCLM/SSL topic-diversity pass ----
-    "q157_cluster_balanced_sample" -> ((s, dir) => {
-      val asg = Similarity.ivfAssign(embs(s, dir), ivfArtifact(s, dir))
-      graft.operators.Sampling.temperatureSample(
-          asg, "vec_id", "cid", alpha = 0.5, unitBudget = 2.0, seed = 11L)
-        .select(col("id").as("vec_id"), col("source").as("cid"),
-          col("pos"))
-    }),
-
-    // ---- embedding-space decontamination: kill training vectors
-    // within cosine 0.9 of ANY benchmark vector (the paraphrase-proof
-    // sibling of q54's n-gram overlap); benchmark broadcast, corpus
-    // collapses through a map-side max — never shuffles raw sims ----
-    "q154_embedding_decontaminate" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.embeddingDecontaminate(
-        e, e.filter(col("vec_id") < 8), threshold = 0.9)
-    }),
-
-    // ---- ANN index evaluation: recall@5 of the IVF-probed search
-    // against exact brute force under the same cosine metric — the
-    // accept/reject measurement for any index config ----
-    "q85_ann_recall" -> ((s, dir) => {
-      val e = embs(s, dir)
-      val q = e.filter(col("vec_id") < 8)
-      Similarity.recallAtK(
-        Similarity.bruteForceTopK(e, q, k = 5),
-        Similarity.ivfTopK(e, q, k = 5, ivfArtifact(s, dir), nProbe = 4,
-          idCol = "vec_id", vecCol = "embedding"),
-        k = 5)
-    }),
-
-    // ---- hard-negative mining (contrastive/retrieval training):
-    // per query the top-5 most-similar vectors with a DIFFERENT
-    // label, capped at sim <= 0.999 (the false-negative denoising
-    // rule). Exact form (the verifier); q128 is the IVF scale path ----
-    "q127_hard_negatives" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.hardNegatives(e, e.filter(col("vec_id") < 8), k = 5,
-        posCol = "label", maxSim = 0.999)
-    }),
-
-    // ---- the same mining through the shared IVF artifact with
-    // over-fetch 15 then post-filter — the production shape (FAISS
-    // top-(k+m), filter, re-rank); deterministic, so its recall loss
-    // vs q127 is itself oracle-replayed ----
-    "q128_hard_negatives_ivf" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.hardNegativesIvf(e, e.filter(col("vec_id") < 8), k = 5,
-        ivfArtifact(s, dir), nProbe = 4, overFetch = 15,
-        posCol = "label", maxSim = 0.999)
-    }),
-
-    // ---- semi / anti joins ----
-    "q37_semi_anti_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o95 = t(s, dir, "orders")
-        .filter(year(col("o_orderdate")) === 1995)
-      val active = c.join(o95, c("c_custkey") === o95("o_custkey"), "left_semi")
-        .select(col("c_custkey"), lit("active").as("status"))
-      val inactive = c.join(o95, c("c_custkey") === o95("o_custkey"), "left_anti")
-        .select(col("c_custkey"), lit("inactive").as("status"))
-      active.unionByName(inactive)
-    }),
-
-    // ---- KMV distinct-count sketch (custom TypedImperativeAggregate;
-    // deterministic, so even the ESTIMATE is oracle-checked) ----
-    "q38_kmv_distinct" -> ((s, dir) => {
-      import graft.functions.KmvDistinct.kmv_distinct
-      import graft.functions.PortableHash.portable_hash
-      t(s, dir, "lineitem")
-        .select(date_trunc("month", col("l_shipdate")).cast("date").as("month"),
-          portable_hash(col("l_orderkey").cast("string")).as("h"))
-        .groupBy(col("month"))
-        .agg(kmv_distinct(col("h"), 64).as("orders_est"),
-          count(lit(1)).as("rows"))
-    }),
-
-    // ---- running (cumulative) windowed sum ----
-    "q35_running_sum" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).over(w)
-          .cast("double").as("run_total"))
-    }),
-
-    // ---- multimodal feature extraction → ANN composition: media
-    // payloads through the batched encoder seam (integer byte-histogram
-    // stub — exact floats, so the downstream cosine top-k is
-    // oracle-exact), fed straight into the similarity operator ----
-    "q41_media_embed_topk" -> ((s, dir) => {
-      import graft.operators.Multimodal
-      val ds = media(s, dir).as[Multimodal.Media](
-        org.apache.spark.sql.Encoders.product[Multimodal.Media])
-      val embs = Multimodal.mapEmbedBatches(ds, dim = 16, batchSize = 64)
-        .toDF().select(col("media_id").as("vec_id"), col("embedding"))
-      Similarity.bruteForceTopK(embs, embs.filter(col("vec_id") < 4), k = 3)
-    }),
-
-    // ---- native session windows: Spark's built-in session_window
-    // operator. Its merge boundary is CLOSED (a gap of exactly 30min
-    // still merges — pinned by EventPipelineSpec's exact-gap fixture),
-    // i.e. the same split rule as q24's lag-based `> gap`; the output
-    // shape differs (start/end window instead of a session ordinal). ----
-    "q40_session_window" -> ((s, dir) =>
-      EventPipeline.sessionWindows(events(s, dir), gapMinutes = 30)),
-
-    // ---- S2 full: WKB geometry ingestion. An irregular CCW quad per
-    // customer is WKB-serialized in-engine (WkbPolygon) and parsed back
-    // (WkbEnvelopeCentroid) into the feature table; the oracle computes
-    // bbox + shoelace centroid DIRECTLY from the same coordinates, so
-    // the round-trip checks both the builder and the parser against an
-    // engine-independent formula. ----
-    "q39_wkb_features" -> ((s, dir) => {
-      import graft.functions.WkbGeom.wkbPolygon
-      import graft.functions.TextFunctions.round6
-      val x0 = (col("c_custkey") % 100).cast("double") * lit(0.1)
-      val y0 = (col("c_custkey") % 73).cast("double") * lit(0.1)
-      val w = lit(1.0) + (col("c_custkey") % 7).cast("double") * lit(0.1)
-      val h = lit(1.0) + (col("c_custkey") % 5).cast("double") * lit(0.1)
-      val geo = t(s, dir, "customer").select(
-        col("c_custkey").as("fid"),
-        wkbPolygon(
-          array(x0, x0 + w, x0 + lit(1.0), x0),
-          array(y0, y0, y0 + lit(1.0), y0 + h)).as("geometry"))
-      val f = graft.sources.Sources.featuresFromWkb(geo, "fid")
-      f.select(col("fid"),
-        round6(col("lat")).as("lat"), round6(col("lon")).as("lon"),
-        round6(col("minx")).as("minx"), round6(col("miny")).as("miny"),
-        round6(col("maxx")).as("maxx"), round6(col("maxy")).as("maxy"))
-    }),
-
-    // ---- as-of join: latest view at-or-before each click, per user —
-    // the keyed temporal-alignment operator (one shuffle, union+window,
-    // no range explosion; see AsofJoin) ----
-    "q42_asof_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"),
-          col("ts").as("view_ts"), col("value").as("view_value"))
-      graft.operators.AsofJoin.asofBackward(
-        clicks, views, keys = Seq("user_id"),
-        leftTime = "ts", rightTime = "view_ts", tieBreak = "view_id",
-        rightPrefix = "")
-    }),
-
-    // ---- near-dup clusters: connected components over the q14 LSH
-    // pairs + canonical-doc election (min-label propagation) ----
-    "q43_dup_clusters" -> ((s, dir) => dupClusters(s, dir)),
-
-    // ---- deterministic stratified sampling: per-event-type keep rates
-    // as a pure hash predicate (reproducible, shuffle-free) ----
-    "q44_stratified_sample" -> ((s, dir) =>
-      graft.operators.Sampling.stratifiedHashSample(
-        events(s, dir).select(col("event_id"), col("user_id"), col("ts"),
-          col("event_type"), col("value")),
-        idCol = col("event_id"), stratumCol = col("event_type"),
-        rates = Map("view" -> 10, "click" -> 50, "purchase" -> 100),
-        defaultPct = 25)),
-
-    // ---- the end-to-end training-corpus cleaning pipeline: near-dup
-    // clusters -> keep canonical docs only -> language gate -> quality
-    // gate -> per-doc token counts. The composition is ONE declarative
-    // plan: the cluster join prunes before the text kernels run, and
-    // every stage reuses an operator that is independently
-    // oracle-checked (q43, q19, q20). ----
-    "q46_clean_corpus" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val canon = dupClusters(s, dir)
-        .filter(col("is_canonical"))
-        .select(col("doc_id"), col("cluster_size"))
-      d.join(canon, "doc_id")
-        .select(col("doc_id"), col("cluster_size"),
-          graft.functions.TextKernels.lang_scores(col("text"),
-            TextFunctions.LangProfiles.toSeq.sortBy(_._1)).as("ls"),
-          graft.functions.TextKernels.text_stats(col("text"),
-            TextFunctions.LangProfiles("en")).as("st"))
-        .filter(col("ls.pred_lang") === "en" && col("st.quality") >= 0.35)
-        .select(col("doc_id"), col("cluster_size"),
-          col("st.ws_tokens").as("ws_tokens"), col("st.quality").as("quality"))
-    }),
-
-    // ---- proximity (interval) join: events within ±5 min of each
-    // error event, via the bucketed equi-join (no nested loop) ----
-    "q47_proximity_join" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val errors = ev.filter(col("event_type") === "error")
-        .select(col("event_id"), col("ts"))
-      val all = ev.select(col("ts"), col("value"))
-      graft.operators.RangeJoin.proximityJoin(
-          errors, all, "ts", "ts", radiusUs = 5L * 60 * 1000000)
-        .groupBy(col("event_id"))
-        .agg(count(lit(1)).as("n_nearby"),
-          sum(col("r_value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-    }),
-
-    // ---- deterministic per-group cap: ≤3 events per user, survivors
-    // chosen by smallest id-hash (uniform priority sample, stable
-    // across runs/engines; one hash agg, no window sort) ----
-    "q48_per_group_cap" -> ((s, dir) =>
-      graft.operators.Sampling.perGroupCap(
-          events(s, dir), groupCols = Seq("user_id"),
-          idCol = col("event_id"), k = 3)
-        .withColumnRenamed("id", "event_id")),
-
-    // ---- bloom-pruned semi-join: lineitems of high-value orders; the
-    // bloom prunes the fact side before the exchange, the semi join
-    // removes false positives — exactly LEFT SEMI, cheaper shuffle ----
-    "q49_bloom_semi_join" -> ((s, dir) => {
-      val hi = t(s, dir, "orders").filter(col("o_totalprice") > 400000.0)
-        .select(col("o_orderkey"))
-      graft.operators.BloomJoin.bloomSemiJoin(
-          t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"),
-            col("l_quantity")),
-          hi, col("l_orderkey"), col("o_orderkey"),
-          expectedItems = 100000L)
-    }),
-
-    // ---- PQ (product quantization) ANN: corpus stored as m codes per
-    // vector, queries score via ADC table lookups — no per-pair dots,
-    // zero corpus shuffle; deterministic training → exact oracle ----
-    "q50_ann_pq_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      // pre-trained codebooks from the shared per-corpus artifact cache
-      // (deterministic even-id training half — the 100 TB lever;
-      // ENCODING still covers every vector); the oracle mirrors the
-      // same id-filter
-      Similarity.pqTopK(e, e.filter(col("vec_id") < 8), k = 5,
-        pqArtifact(s, dir), idCol = "vec_id", vecCol = "embedding")
-    }),
-
-    // ---- canonical election by QUALITY: per dup cluster keep the
-    // highest-quality member (the keep-best curation policy, vs q46's
-    // keep-min-id) — clusters ⋈ quality + one argmax window ----
-    "q52_best_of_cluster" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val clusters = dupClusters(s, dir)
-      val scored = d.select(col("doc_id"),
-        graft.functions.TextKernels.text_stats(col("text"),
-          TextFunctions.LangProfiles("en")).getField("quality").as("quality"))
-      val w = Window.partitionBy(col("canon_id"))
-        .orderBy(col("quality").desc, col("doc_id").asc)
-      clusters.join(scored, "doc_id")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("canon_id").as("cluster_id"), col("doc_id").as("best_id"),
-          graft.functions.TextFunctions.round6(col("quality")).as("quality"),
-          col("cluster_size"))
-    }),
-
-    // ---- exact interpolated percentiles per group (Spark `percentile`
-    // and DuckDB `quantile_cont` share the (n−1)·p linear-interpolation
-    // definition, so the values are cross-engine exact) ----
-    "q53_percentiles" -> ((s, dir) =>
-      events(s, dir).groupBy(col("event_type"))
-        .agg(percentile(col("value"), lit(0.5)).as("p50"),
-          percentile(col("value"), lit(0.95)).as("p95"),
-          count(lit(1)).as("n"))),
-
-    // ---- winsorized clipping: per-key percentile capping (zscore's
-    // companion outlier treatment; exact interpolated bounds) ----
-    "q82_winsorize" -> ((s, dir) =>
-      graft.operators.Normalize.winsorize(
-          events(s, dir).select(col("event_id"), col("event_type"), col("value")),
-          keys = Seq("event_type"), valueCol = col("value"))
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("v_clipped"))),
-
-    // ---- IR relevance: top BM25 terms per document (corpus-curation
-    // scoring — keyword filters, weak topic labels) ----
-    "q51_bm25_terms" -> ((s, dir) =>
-      graft.operators.Relevance.bm25TopTerms(
-        docs(s, dir), "doc_id", "text", k1 = 1.2, b = 0.75, topK = 3)),
-
-    // ---- top-k per group via the bounded-heap aggregate — same result
-    // set as q12's window form, but O(k) state per group and map-side
-    // partial aggregation instead of a full per-group sort ----
-    "q45_topk_heap" -> ((s, dir) => {
-      import graft.functions.TopKBy.top_k_by
-      t(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(top_k_by(col("o_totalprice"), col("o_orderkey"), 3).as("tk"))
-        .select(col("o_custkey"), posexplode(col("tk")).as(Seq("pos", "p")))
-        .select(col("o_custkey"), col("p.id").as("o_orderkey"),
-          col("p.v").as("o_totalprice"),
-          (col("pos") + 1).cast("int").as("rank"))
-    }),
-
-    // ---- benchmark DECONTAMINATION: distinct trigrams shared with the
-    // held-out benchmark slice (doc_id ≡ 0 mod 37) — the train/test
-    // overlap filter; bench n-gram set is distinct-aggregated then
-    // broadcast, corpus text never shuffles (64-bit hashes do) ----
-    "q54_decontaminate" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.operators.Corpus.decontaminate(
-        d.filter(col("doc_id") % 37 =!= 0),
-        d.filter(col("doc_id") % 37 === 0),
-        "doc_id", "text", n = 3)
-    }),
-
-    // ---- BOILERPLATE ratio: share of each doc's distinct trigrams
-    // that are corpus-frequent (df ≥ 5) — C4/RefinedWeb-style
-    // stock-phrase signal; one shingle pass feeds df + per-doc counts ----
-    "q55_boilerplate" -> ((s, dir) =>
-      graft.operators.Corpus.boilerplateRatio(
-        docs(s, dir), "doc_id", "text", n = 3, minDf = 5)),
-
-    // ---- intra-document REPETITION (Gopher rules shape): duplicate
-    // trigram ratio + top-token share; pure per-row column math ----
-    "q56_repetition" -> ((s, dir) =>
-      graft.operators.Corpus.repetitionStats(docs(s, dir), "doc_id", "text", n = 3)),
-
-    // ---- COUNT-MIN heavy hitters: d=4×w=64 sketch as a relational
-    // plan (map-side-combining to d·w counters), estimates = min over
-    // rows via a broadcast probe; exact count rides along to expose
-    // the over-estimate. Threshold = 1% of the stream (driver scalar,
-    // bounded plan parameter) ----
-    "q57_heavy_hitters" -> ((s, dir) => {
-      val ev = events(s, dir)
-      val thr = ev.count() / 100
-      graft.operators.Sketches.cmsHeavyHitters(
-        ev, col("user_id"), depth = 4, width = 64, minCount = thr)
-    }),
-
-    // ---- daily RESAMPLE + forward fill: latest purchase value per
-    // (user, day) on a complete per-user day spine, gaps carrying the
-    // previous observation (the reference's fill-forward convention as
-    // a keyed relational operator) ----
-    "q58_gap_fill" -> ((s, dir) =>
-      graft.operators.Resample.dailyForwardFill(
-          events(s, dir).filter(col("event_type") === "purchase"),
-          col("user_id"), col("ts"), col("value"), col("event_id"))
-        .withColumnRenamed("key", "user_id")),
-
-    // ---- FUNNEL: first-touch view → click → purchase per user, each
-    // stage strictly after the previous; aggregate ⋈ aggregate on the
-    // user key, no raw-stream window ----
-    "q59_funnel" -> ((s, dir) =>
-      graft.operators.EventAnalytics.funnel(
-        events(s, dir), Seq("view", "click", "purchase"))),
-
-    // ---- CUBE over (event_type, day): all four grouping sets in one
-    // pass (partial-aggregated expand), decimal-exact value sums ----
-    "q60_cube" -> ((s, dir) =>
-      events(s, dir)
-        .cube(col("event_type"), col("ts").cast("date").as("day"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))),
-
-    // ---- EDIT-DISTANCE verify: LSH near-dup candidates confirmed by
-    // character-exact Levenshtein ≤ 100 — the O(len²) DP runs on
-    // candidate pairs only, never all pairs ----
-    "q61_edit_distance" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.editDistanceVerify(d, "doc_id", "text", dupPairs(s, dir),
-        maxDist = 100)
-    }),
-
-    // ---- PMI collocations: adjacent-pair mutual information over the
-    // corpus (phrase mining); two vocabulary-sized hash aggregates,
-    // totals as driver scalars ----
-    "q62_bigram_pmi" -> ((s, dir) =>
-      graft.operators.Corpus.pmiCollocations(docs(s, dir), "text", minCount = 25)),
-
-    // ---- IVF+PQ composed (FAISS-IVFPQ shape, no residual): coarse
-    // lists prune to nProbe/nLists of the corpus, PQ codes score the
-    // survivors via ADC lookups; zero corpus shuffle, both quantizers
-    // train on the even-id sample ----
-    "q63_ann_ivfpq_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      // BOTH quantizers from the shared artifact cache — q63 pays zero
-      // training when q36/q50 ran first (one IVF + one PQ per corpus)
-      Similarity.ivfPqTopK(e, e.filter(col("vec_id") < 8), k = 5,
-        ivfArtifact(s, dir), pqArtifact(s, dir), nProbe = 4,
-        idCol = "vec_id", vecCol = "embedding")
-    }),
-
-    // ---- IVF+PQ with RESIDUAL encoding (Faiss IVFPQ proper): PQ codes
-    // quantize v − centroid(list), ADC tables are per-(query, probed
-    // list); the coarse quantizer is the SAME shared artifact as
-    // q36/q63, plus one residual-codebook training per corpus ----
-    "q80_ann_ivfpq_residual_topk" -> ((s, dir) => {
-      val e = embs(s, dir)
-      Similarity.ivfPqResidualTopK(e, e.filter(col("vec_id") < 8), k = 5,
-        ivfArtifact(s, dir), pqResidualArtifact(s, dir), nProbe = 4,
-        idCol = "vec_id", vecCol = "embedding")
-    }),
-
-    // ---- HLL distinct sketch (64 registers, element-wise-max merge —
-    // order-independent, so even the ESTIMATE is oracle-checked;
-    // count_distinct rides along to expose the approximation error) ----
-    "q64_hll_distinct" -> ((s, dir) => {
-      import graft.functions.HllDistinct.hll_distinct
-      import graft.functions.PortableHash.portable_hash
-      // distinct FIRST, then sketch + count over the distinct set:
-      // mixing countDistinct with the HLL in one agg makes Spark group
-      // by (month, l_orderkey) in phase 1 — allocating and SHUFFLING an
-      // HLL buffer per orderkey group (600k buffers at sf0.1, 2.3 s).
-      // HLL registers are max-based, so duplicates never move them:
-      // sketching the distinct set yields the identical estimate, and
-      // count over the distinct rows IS countDistinct. The big exchange
-      // now carries bare (month, key) rows; the 64-register buffers
-      // exist only for the |months| final groups.
-      t(s, dir, "lineitem")
-        .select(date_trunc("month", col("l_shipdate")).cast("date").as("month"),
-          col("l_orderkey"))
-        .distinct()
-        .select(col("month"), col("l_orderkey"),
-          portable_hash(col("l_orderkey").cast("string")).as("h"))
-        .groupBy(col("month"))
-        .agg(hll_distinct(col("h")).as("orders_est"),
-          count(col("l_orderkey")).as("orders_exact"))
-    }),
-
-    // ---- histogram-sketch quantiles: mergeable fixed-bin counts +
-    // in-bin interpolation (the order-independent alternative to
-    // t-digest — exactly oracle-reproducible); q53 is the exact
-    // spot-check of the same probabilities ----
-    "q65_histogram_quantiles" -> ((s, dir) =>
-      graft.operators.Quantiles.histogramQuantiles(
-        events(s, dir), col("event_type"), col("value"),
-        bins = 64, ps = Seq(0.5, 0.95))),
-
-    // ---- OHLC bars per (event_type, day): first/last via dual
-    // row_number (tie-deterministic), high/low order-free ----
-    "q66_ohlc_bars" -> ((s, dir) =>
-      graft.operators.EventAnalytics.ohlcBars(events(s, dir))),
-
-    // ---- salted two-stage aggregation parity: the hot-key guard must
-    // be result-neutral — DECIMAL partials make the merge exact, so
-    // the plain GROUP BY is its oracle ----
-    "q67_salted_agg" -> ((s, dir) =>
-      graft.operators.Skew.saltedAggregate(
-        t(s, dir, "lineitem").select(col("l_returnflag"), col("l_quantity")),
-        keys = Seq("l_returnflag"), buckets = 16,
-        partial = Seq(sum(col("l_quantity").cast("decimal(18,2)")).as("s"),
-          count(lit(1)).as("c")),
-        merge = Seq(sum(col("s")).cast("double").as("sum_qty"),
-          sum(col("c")).as("n")))),
-
-    // ---- token-distribution drift between corpus slices (4-char
-    // sources vs the rest): per-token smoothed KL contributions —
-    // no cross-row FP sum, every cell exactly checkable ----
-    "q68_token_drift" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.operators.Corpus.tokenDrift(
-        d.filter(length(col("source")) === 4),
-        d.filter(length(col("source")) =!= 4),
-        "text", minCount = 20)
-    }),
-
-    // ---- PageRank over the near-dup graph, 3 fixed rounds in integer
-    // micro-units (floor-div contributions → per-node sums are exact
-    // integer arithmetic, immune to FP order → exact oracle) ----
-    "q69_pagerank" -> ((s, dir) => {
-      val d = docs(s, dir)
-      graft.operators.Graph.pageRank(d, "doc_id", dupPairs(s, dir), iters = 3)
-    }),
-
-    // ---- SemDeDup: semantic dedup over the SHARED IVF clusters
-    // (Abbas et al. 2023 shape) — drop any vector with a lower-id
-    // cluster-mate at cosine ≥ 0.35; third consumer of the per-corpus
-    // coarse-quantizer artifact (zero additional training) ----
-    "q71_semdedup" -> ((s, dir) =>
-      Similarity.semDedup(embs(s, dir), ivfArtifact(s, dir).cents,
-        threshold = 0.35)),
-
-    // ---- containment (point-in-interval) lookup join: events matched
-    // into OVERLAPPING value bands via the binned equi-join — the
-    // IP-range/SCD-2 lookup shape; never a nested-loop plan ----
-    "q72_interval_lookup" -> ((s, dir) => {
-      val bands = t(s, dir, "nation").select(col("n_name"),
-        (col("n_nationkey") * 20.0).as("lo"),
-        (col("n_nationkey") * 20.0 + 30.0).as("hi"))
-      graft.operators.RangeJoin.containmentJoin(
-          events(s, dir).select(col("event_id"), col("value")),
-          bands, "value", "lo", "hi", binWidth = 20.0)
-        .groupBy(col("i_n_name").as("band"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-    }),
-
-    // ---- deterministic train/val/test split: hash-bucket membership
-    // as a computed column (no shuffle, stable as the corpus grows) ----
-    "q73_hash_split" -> ((s, dir) =>
-      graft.operators.Sampling.hashSplit(docs(s, dir), col("doc_id"),
-          Seq(("train", 80), ("val", 10), ("test", 10)))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(length(col("text")).cast("long")).as("chars"))),
-
-    // ---- sequence packing (concat-and-chunk pretraining layout):
-    // per-shard token streams cut into 512-token windows; stream
-    // offsets and chunk spans are integer window arithmetic ----
-    "q74_concat_chunks" -> ((s, dir) =>
-      graft.operators.Packing.concatChunks(docs(s, dir), col("doc_id"),
-        size(TextFunctions.tokens(col("text"))), contextLen = 512,
-        nShards = 8)),
-
-    // ---- LM quality score (CCNet perplexity-filter shape): per-doc
-    // average −ln p(b|a) under a corpus-trained add-one bigram model;
-    // rounded contribs decimal-summed → order-free exact ----
-    "q75_lm_score" -> ((s, dir) =>
-      graft.operators.Corpus.lmScore(docs(s, dir), "doc_id", "text")),
-
-    // ---- one-pass table profile (corpus-QA): per-column nulls, KMV
-    // distinct estimates, native min/max — one aggregate job ----
-    "q79_profile" -> ((s, dir) =>
-      graft.operators.Profile.profile(
-        events(s, dir).select(col("event_id"), col("user_id"),
-          col("event_type"), col("value")))),
-
-    // ---- weighted sampling w/o replacement (A-ES, hash uniforms):
-    // 500 events, probability ∝ value; bounded-heap selection ----
-    "q78_weighted_sample" -> ((s, dir) =>
-      graft.operators.Sampling.weightedSample(
-        events(s, dir), col("event_id"), col("value"), k = 500)),
-
-    // ---- Gram/covariance statistics over the embedding corpus
-    // (whitening / PCA prep): d(d+1)/2 order-free decimal sums via one
-    // narrow expansion + map-side-combined agg ----
-    "q89_gram_cov" -> ((s, dir) =>
-      graft.operators.EmbedStats.gramCov(embs(s, dir),
-        col("embedding"), dim = 64)),
-
-    // ---- top-principal-component projection: power iteration on
-    // q89's covariance (driver-side, bounded d² artifact), then one
-    // narrow fold_dot scan against the weight-vector literal ----
-    "q92_pca_project" -> ((s, dir) =>
-      graft.operators.EmbedStats.pcaProject(embs(s, dir),
-        col("vec_id"), col("embedding"), dim = 64)),
-
-    // ---- robust scaling: (v − median)/IQR per key — the outlier-
-    // immune normalization (exact interpolated percentiles) ----
-    "q90_robust_scale" -> ((s, dir) =>
-      graft.operators.Normalize.robustScale(
-          events(s, dir).select(col("event_id"), col("event_type"),
-            col("value")),
-          keys = Seq("event_type"), valueCol = col("value"))
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("v_scaled"))),
-
-    // ---- per-group weighted sampling: k best-weighted events from
-    // EACH event type (A-ES priorities, bounded heap per group) ----
-    "q88_weighted_sample_per_group" -> ((s, dir) =>
-      graft.operators.Sampling.weightedSamplePerGroup(
-        events(s, dir), Seq("event_type"), col("event_id"),
-        col("value"), k = 100)),
-
-    // ---- grouped z-score with EXACT decimal moments: normalization
-    // whose μ/σ are identical under any partitioning ----
-    "q76_zscore" -> ((s, dir) =>
-      graft.operators.Normalize.zscore(
-          events(s, dir).select(col("event_id"), col("event_type"), col("value")),
-          keys = Seq("event_type"), valueCol = col("value"))
-        .select(col("event_id"), col("event_type"), col("value"), col("z"))),
-
-    // ---- hybrid retrieval: BM25 lexical ranking + brute-force cosine
-    // ranking for the SAME query document (doc 0 / vec 0 — the
-    // embeddings table carries the documents' vectors), fused by
-    // reciprocal rank fusion. Composes three oracle-checked operators
-    // into the standard lexical+semantic retrieval stack ----
-    "q77_hybrid_rrf" -> ((s, dir) => {
-      val d = docs(s, dir)
-      // bounded plan parameter: the query doc's distinct non-empty terms
-      val qTerms = d.filter(col("doc_id") === 0)
-        .select(explode(split(col("text"), " ")).as("t"))
-        .filter(col("t") =!= "").distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-      val lex = graft.operators.Relevance
-        .bm25QueryRank(d.filter(col("doc_id") =!= 0), "doc_id", "text", qTerms,
-          topK = 50)
-        .select(col("doc_id").as("id"), col("rank"))
-      val e = embs(s, dir)
-      val vec = Similarity.bruteForceTopK(e, e.filter(col("vec_id") === 0), k = 50)
-        .select(col("n_id").as("id"), col("rank"))
-      graft.operators.Relevance.rrfFuse(Seq(lex, vec), kRrf = 60, topK = 20)
-    }),
-
-    // ---- inter-event deltas: lag over (ts, id) per user — the
-    // standard inter-arrival analysis; all-integer output ----
-    "q70_event_deltas" -> ((s, dir) => {
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts").asc, col("event_id").asc)
-      events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts"))
-        .withColumn("us", unix_micros(col("ts")))
-        .select(col("user_id"), col("event_id"),
-          lag(col("event_id"), 1).over(w).as("prev_event_id"),
-          (col("us") - lag(col("us"), 1).over(w)).as("delta_us"))
-    }),
-
-    // ---- S3 on the oracle surface: the q01 weighted mean with its
-    // weights read through Sources.weightsCsv from the COMMITTED
-    // pandas-layout fixture (leading unnamed index column, fid column
-    // named by the --fid CLI arg) — the reader's full lineage, not
-    // just a spec ----
-    "q93_weights_csv_mean" -> ((s, dir) => {
-      val g = gridFromLineitem(t(s, dir, "lineitem"), nullify = false)
-      val w = graft.sources.Sources.weightsCsv(
-        s, fixturePath("gm_nhru01_weights.csv"), "nhru_v1_1")
-      // Same A1 shape as q01 (broadcast weight join + hash agg) but
-      // with EXACT decimal sums: the fixture weights land some means
-      // on a 4dp rounding boundary, where a plain double Σw·x is
-      // summation-order-sensitive (q01's part-derived weights happen
-      // to sit clear of boundaries). wght has 6dp and pr 2dp, so the
-      // decimal products and sums are exact and order-free — both
-      // engines divide and round the identical values.
-      // floor(x·1e4 + 0.5)/1e4, not round(x, 4): the quotient can land
-      // EXACTLY on a .xxxx5 boundary (it does here), where Spark's
-      // BigDecimal-HALF-UP and DuckDB's scaled-double rounding
-      // disagree — the round6 formula at 4dp is the engine's standard
-      // cross-engine-stable rounding
-      g.join(broadcast(w), Seq("i", "j"))
-        .groupBy(col("fid"), col("time"))
-        .agg((floor(
-          (sum(col("wght").cast("decimal(18,6)") * col("pr").cast("decimal(18,6)"))
-            .cast("double") /
-           sum(col("wght").cast("decimal(18,6)")).cast("double"))
-            * lit(10000.0) + lit(0.5)) / lit(10000.0))
-          .as("wmean_pr"))
-        .select(col("fid"), col("time"), col("wmean_pr"))
-    }),
-
-    // ---- S5+F1 on the oracle surface: catalog JSON scan + take-first
-    // lookup (min over (varname, URL) struct — the reference's
-    // deterministic first record per variable) ----
-    "q94_catalog_json_lookup" -> ((s, _) => {
-      val cat = graft.sources.Sources.catalogJson(s, fixturePath("catalog.json"))
-      graft.sources.Sources.catalogLookup(
-        cat, "gridmet", Seq("pr", "tmmx", "tmmn"))
-    }),
-
-    // ---- S6 on the oracle surface: PRMS parameter-file scan (marker /
-    // skip-4 / #### protocol) joined to the q09-style elevation physics
-    // so the parsed values feed a real computation ----
-    "q95_prms_elevation" -> ((s, _) => {
-      import graft.functions.Physics
-      graft.sources.Sources.prmsElevations(s, fixturePath("synthetic.param"))
-        .select(col("nhru"), col("elev"),
-          round(Physics.pressureAtElevation(col("elev"), lit(288.15)), 6)
-            .as("pres"))
-    }),
-
-    // ---- S7 on the oracle surface: NN-mapping CSV scan joined to the
-    // donor table (the --mapping-file reuse path: mapping rows name
-    // which donor fills each missing feature) ----
-    "q96_fill_mapping_join" -> ((s, dir) => {
-      val m = graft.sources.Sources.fillMappingCsv(
-        s, fixturePath("fill_mapping.csv"))
-      val donors = t(s, dir, "customer")
-        .select(col("c_custkey").as("fill_fid"), col("c_acctbal"))
-      m.join(donors, Seq("fill_fid"))
-        .select(col("miss_fid"), col("fill_fid"), col("distance"),
-          col("c_acctbal").as("fill_val"))
-    }),
-
-    // ---- incremental dedup, FULL LIFECYCLE (two batches): batch 1
-    // admits against an empty fingerprint table, batch 2 admits
-    // against the table GROWN by batch 1's survivors — the
-    // persist-and-append loop expressed functionally (the stateful
-    // parquet form is Dedup.admitIncrement + the dedup-admit job;
-    // an oracle query must be re-runnable, so no side effects here) ----
-    "q97_incremental_lifecycle" -> ((s, dir) => {
-      import graft.operators.Dedup
-      val d = docs(s, dir)
-      val b1 = d.filter(col("doc_id") % 2 === 0)
-      val b2 = d.filter(col("doc_id") % 2 === 1)
-      val emptyFp = s.emptyDataset(
-          org.apache.spark.sql.Encoders.product[(Long, Int)])
-        .toDF("__h", "__l")
-      val a1 = Dedup.incrementalExactFp(emptyFp, b1, "doc_id", "text")
-      val a2 = Dedup.incrementalExactFp(
-        Dedup.fingerprints(a1, "text"), b2, "doc_id", "text")
-      a1.select(lit(1).as("batch"), col("doc_id"))
-        .unionAll(a2.select(lit(2).as("batch"), col("doc_id")))
-    }),
-
-    // ---- S2's native .shp path + CRS REPROJECTION on the oracle
-    // surface: the committed fixture is a PROJECTED (UTM 13N)
-    // shapefile whose geographic twin ships as a CSV vertex list —
-    // the engine must parse the .shp, invert the Transverse Mercator
-    // from the .prj, and recover the twin's bbox + shoelace centroid
-    // to the 6dp grid (the reprojection round-trip error is ~1e-9°,
-    // three orders below the rounding quantum) ----
-    "q98_shapefile_reproject" -> ((s, _) =>
-      shapefileBboxCentroid(s, fixturePath("features_utm.shp"))),
-
-    // ---- same contract, Albers Equal Area fixture: the USA_Contiguous
-    // parameter shape (Snyder eq. 14) inverted from the .prj — the
-    // reference catalog's dominant CONUS projected CRS (`+proj=aea`,
-    // `etl.py:649-655`), recovering the SAME geographic twin ----
-    "q101_shapefile_albers" -> ((s, _) =>
-      shapefileBboxCentroid(s, fixturePath("features_aea.shp"))),
-
-    // ---- CFSv2 method-1 pipeline END-TO-END on the oracle surface:
-    // bbox subset (F2) → exact 48-member ensemble median (A3) →
-    // area-weighted mean (A1) → rename/K→°C finalize (F7/C1) → RH from
-    // specific humidity (C3/C4/C5 + the J4 elevation broadcast join) —
-    // the `etl.py:210-303` composition as ONE Spark DAG, previously
-    // only spec-covered via JobsSpec ----
-    "q100_cfsv2_pipeline" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val grid = li.select(
-        date_trunc("month", col("l_shipdate")).cast("date").as("time"),
-        (col("l_partkey") % 25).as("i"),
-        (col("l_suppkey") % 10).as("j"),
-        ((col("l_partkey") % 25) * 0.5).as("lon"),
-        ((col("l_suppkey") % 10) * 0.5).as("lat"),
-        (col("l_quantity") + 273.15).as("tmmx"),
-        (col("l_quantity") + 262.85).as("tmmn"),
-        (col("l_extendedprice") / 1000).as("pr"),
-        (col("l_discount") / 10).as("sph"))
-      val features = t(s, dir, "part")
-        .select((col("p_partkey") % 40).as("fid")).distinct()
-        .withColumn("minx", lit(2.0)).withColumn("miny", lit(1.0))
-        .withColumn("maxx", lit(10.0)).withColumn("maxy", lit(4.0))
-      val weights = weightsFromPart(t(s, dir, "part"))
-      val elev = features.select(col("fid").as("nhru"),
-        (col("fid") * 75.0).as("elev"))
-      graft.etl.GridmetPipeline
-        .cfsv2Median(grid, weights, features, elev)
-        .select(col("nhru"), col("time"),
-          round(col("tmax"), 4).as("tmax"), round(col("tmin"), 4).as("tmin"),
-          round(col("prcp"), 4).as("prcp"), round(col("sph"), 6).as("sph"),
-          round(col("humidity"), 4).as("humidity"))
-    }),
-
-    // ---- CFSv2 method-2 pipeline END-TO-END on the oracle surface:
-    // the reference's per-member loop + concat (`etl.py:361-383`,
-    // `etl.py:532-539`) dissolved into ONE DAG — `ens` rides as a
-    // grouping key through bbox subset (F2) → per-member area-weighted
-    // mean (A1/U2, no median stage) → rename/K→°C finalize (F7/C1) →
-    // RH from specific humidity (C5 + the J4 elevation broadcast
-    // join). Closes the e2e asymmetry with method 1 (q100). ----
-    "q103_cfsv2_ensemble" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val grid = li.select(
-        date_trunc("month", col("l_shipdate")).cast("date").as("time"),
-        (col("l_orderkey") % 4).as("ens"),
-        (col("l_partkey") % 25).as("i"),
-        (col("l_suppkey") % 10).as("j"),
-        ((col("l_partkey") % 25) * 0.5).as("lon"),
-        ((col("l_suppkey") % 10) * 0.5).as("lat"),
-        (col("l_quantity") + 273.15).as("tmmx"),
-        (col("l_quantity") + 262.85).as("tmmn"),
-        (col("l_extendedprice") / 1000).as("pr"),
-        (col("l_discount") / 10).as("sph"))
-      val features = t(s, dir, "part")
-        .select((col("p_partkey") % 40).as("fid")).distinct()
-        .withColumn("minx", lit(2.0)).withColumn("miny", lit(1.0))
-        .withColumn("maxx", lit(10.0)).withColumn("maxy", lit(4.0))
-      val weights = weightsFromPart(t(s, dir, "part"))
-      val elev = features.select(col("fid").as("nhru"),
-        (col("fid") * 75.0).as("elev"))
-      graft.etl.GridmetPipeline
-        // preCombine: the synthetic grid has ~7 lineitem rows per
-        // (time, ens, i, j) cell — collapsing before the ~80-weights-
-        // per-cell broadcast join shrinks its output ~7×
-        .cfsv2Ensemble(grid, weights, features, elev, preCombine = true)
-        .select(col("nhru"), col("ens"), col("time"),
-          round(col("tmax"), 4).as("tmax"), round(col("tmin"), 4).as("tmin"),
-          round(col("prcp"), 4).as("prcp"), round(col("sph"), 6).as("sph"),
-          round(col("humidity"), 4).as("humidity"))
-    }),
-
-    // ---- J2 scale path on the oracle surface: grid-binned NN argmin —
-    // donors replicate to their 3×3 cell ring, candidates come from one
-    // equi-join on the miss point's cell, sub-cellSize winners accept
-    // in-ring (provably global), the sparse tail falls back to the
-    // exact broadcast scan. Result-identical to q05's form
-    // (FillMissingSpec pins equality); the oracle is the plain exact
-    // argmin — the binning must be invisible in the values. ----
-    "q104_nn_argmin_binned" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val pts = c.select(col("c_custkey").as("fid"),
-        ((col("c_custkey") % 100) * 0.37).as("lat"),
-        ((col("c_custkey") % 73) * 0.53).as("lon"),
-        col("c_acctbal"))
-      val miss = pts.filter(col("c_acctbal") < 0).drop("c_acctbal")
-      val donors = pts.filter(col("c_acctbal") >= 0).drop("c_acctbal")
-      FillMissing.nearestMappingBinned(miss, donors, cellSize = 2.0)
-        .select(col("miss_fid"), col("fill_fid"),
-          round(col("distance"), 6).as("distance"))
-    }),
-
-    // ---- STREAMING tumbling window ON THE ORACLE SURFACE: the real
-    // Structured Streaming execution (streaming parquet source →
-    // watermark → windowed agg → memory sink, AvailableNow) run to
-    // completion and compared against the plain batch SQL — the
-    // streaming engine itself becomes oracle-checked, not merely
-    // batch-parity spec-pinned. Like q107–q109, the source arrives as
-    // four time-sliced files in four micro-batches, so groups/sessions
-    // accumulate and MERGE across batch boundaries through state ----
-    "q105_tumbling_stream" -> ((s, dir) =>
-      runStreamToTable(s,
-        EventPipeline.tumblingCountsStream(s, eventsSlicedStreamDir(s, dir),
-          maxFilesPerTrigger = Some(1)))),
-
-    // ---- STREAMING session_window on the oracle surface: native
-    // session-window state merging under the streaming engine, checked
-    // against the batch gap-sessionization SQL (q40's oracle) ----
-    "q106_session_window_stream" -> ((s, dir) =>
-      runStreamToTable(s,
-        EventPipeline.sessionWindowsStream(s, eventsSlicedStreamDir(s, dir),
-          gapMinutes = 30, maxFilesPerTrigger = Some(1)))),
-
-    // ---- STREAMING exact dedup on the oracle surface: the original
-    // documents arrive in micro-batch 0 and a full duplicate copy
-    // (same texts, shifted ids) in micro-batch 1 (two files,
-    // maxFilesPerTrigger=1, mtime-ordered), so every copy must be
-    // dropped against STATE-STORE state from the previous batch. The
-    // surviving set projects to the distinct texts; which duplicate
-    // doc_id survives is arrival-order-defined, so the oracle checks
-    // the well-defined column ----
-    "q107_dedup_stream" -> ((s, dir) =>
-      runStreamToParquet(s,
-        EventPipeline.dedupDocStream(s, docsDedupStreamDir(s, dir),
-          maxFilesPerTrigger = Some(1)))
-        .select(col("text"))),
-
-    // ---- STREAMING unkeyed proximity join on the oracle surface: the
-    // q47 semantics (every error event ⋈ every event within ±5 min)
-    // under the stream-stream bin-equality join, with the events table
-    // arriving as four event-time-ordered slices in four micro-batches
-    // — pairs spanning a slice boundary only exist if the join state
-    // survived the boundary. The pair set is then aggregated exactly
-    // like q47, so the streaming engine must reproduce the batch
-    // oracle's numbers ----
-    "q108_proximity_stream" -> ((s, dir) =>
-      runStreamToParquet(s,
-        EventPipeline.proximityJoinStream(s,
-          eventsSlicedStreamDir(s, dir), leftType = "error",
-          radiusUs = 5L * 60 * 1000000, maxFilesPerTrigger = Some(1)))
-        .groupBy(col("l_id").as("event_id"))
-        .agg(count(lit(1)).as("n_nearby"),
-          sum(col("r_value").cast("decimal(18,6)")).cast("double")
-            .as("sum_value"))),
-
-    // ---- STREAMING stateful as-of enrichment on the oracle surface:
-    // the custom flatMapGroupsWithState engine (per-user latest-view
-    // state, O(keys)) over the four time-sliced micro-batches — a
-    // click whose matching view arrived in an EARLIER batch can only
-    // be enriched from the state store. Same tie semantics as the q42
-    // batch operator, so the oracle is q42's ASOF JOIN with the
-    // AsofOut column names ----
-    "q109_asof_stream" -> ((s, dir) =>
-      runStreamToParquet(s,
-        EventPipeline.asofStream(s, eventsSlicedStreamDir(s, dir),
-          maxFilesPerTrigger = Some(1)))),
-
-    // ---- STREAMING tumbling windows in APPEND mode — the 100×
-    // deployment shape (q105 is the Complete-mode oracle harness):
-    // each window emits exactly once when the watermark passes its
-    // end, through the FILE sink, and is evicted from state. On this
-    // bounded stream the emitted set is the windows closed by the
-    // final watermark (floor(max_ts ms) − 1 h); the oracle filters the
-    // batch aggregate with that exact arithmetic, so both the window
-    // values AND the emit-once eviction boundary are hash-checked ----
-    "q110_tumbling_append_stream" -> ((s, dir) =>
-      runStreamToParquet(s,
-        EventPipeline.tumblingCountsStreamAppend(s,
-          eventsSlicedStreamDir(s, dir), maxFilesPerTrigger = Some(1)))),
-
-    // ---- STREAMING session windows in APPEND mode: merging session
-    // state + emit-once eviction together — a session emits when the
-    // watermark passes its end (last event + gap) and leaves state.
-    // Oracle = q106's gap-sessionization restricted to sessions closed
-    // by the final watermark (same ms-floor arithmetic as q110; the
-    // <= eviction boundary is spec-pinned for session windows too) ----
-    "q111_session_append_stream" -> ((s, dir) =>
-      runStreamToParquet(s,
-        EventPipeline.sessionWindowsStreamAppend(s,
-          eventsSlicedStreamDir(s, dir), gapMinutes = 30,
-          maxFilesPerTrigger = Some(1)))),
-
-    // ---- SEEDED GLOBAL SHUFFLE + SOURCE-MIX SHARDING: the training
-    // ORDER of the packing surface made deterministic policy — each
-    // source subsampled to its target proportion (largest
-    // mix-respecting total), round-robin sharded so the mix holds PER
-    // SHARD, interleaved through each shard by the seeded permutation
-    // key. Pure integer/hash arithmetic end-to-end → the oracle
-    // replays the whole construction including the quota math ----
-    "q115_shuffle_shards" -> ((s, dir) =>
-      graft.operators.Packing.shuffleShards(docs(s, dir), "doc_id",
-          "source", seed = 20260814L, nShards = 8,
-          mix = Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.25))
-        .select(col("shard"), col("pos"), col("id").as("doc_id"),
-          col("source"))),
-
-    // ---- The actual TRAINING-DATA BYTE STREAM, end to end (round-12
-    // verdict ask #5): q115 proves the seeded shard/position
-    // assignment and TokenSinkSpec proves byte-stable shard files, but
-    // this query oracle-checks their COMPOSITION — shuffleShards →
-    // packTokenChunksAssigned — by reporting each chunk's
-    // position-weighted checksum (Σ id_i·i, 1-based; the q99 pattern)
-    // under the seeded training order. Any drift in the permutation,
-    // the quota math, the per-shard interleave, or the chunk
-    // slice/reassembly changes a checksum and fails the hash. ----
-    "q119_pack_assigned_chunks" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val d = docs(s, dir)
-      val assigned = graft.operators.Packing.shuffleShards(d, "doc_id",
-        "source", seed = 20260814L, nShards = 8,
-        mix = Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.25))
-      val tok = d.select(col("doc_id").as("id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      graft.operators.Packing.packTokenChunksAssigned(assigned, tok,
-          col("id"), col("ids"), contextLen = 64)
-        .select(col("shard"), col("chunk_id"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          when(size(col("token_ids")) === 0, lit(0L)).otherwise(
-            aggregate(
-              zip_with(col("token_ids"),
-                sequence(lit(1), size(col("token_ids"))),
-                (t, i) => t.cast("long") * i.cast("long")),
-              lit(0L), (a, x) => a + x)).as("checksum"))
-    }),
-
-    // ---- MULTI-EPOCH training order (the data-constrained recipe:
-    // repeat the same quota-selected corpus, reshuffled each epoch
-    // from a derived seed; positions continue per shard because
-    // round-robin per-shard counts are permutation-invariant) ----
-    "q122_epoch_order" -> ((s, dir) =>
-      graft.operators.Packing.epochOrder(docs(s, dir), "doc_id",
-          "source", seed = 20260814L, nShards = 8,
-          mix = Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.25),
-          epochs = 2)
-        .select(col("shard"), col("pos"), col("id").as("doc_id"),
-          col("source"), col("epoch"))),
-
-    // ---- DOCUMENT-BOUNDARY INDEX of the packed layout — the
-    // per-chunk sample index (Megatron sample_idx shape) a loader
-    // needs to reset attention at doc starts inside packed windows:
-    // one row per doc locating (shard, chunk, offset) of its first
-    // token under the SAME seeded assignment as q119, from the same
-    // cumulative-offset derivation the chunk contents slice by ----
-    "q121_chunk_doc_boundaries" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val d = docs(s, dir)
-      val assigned = graft.operators.Packing.shuffleShards(d, "doc_id",
-        "source", seed = 20260814L, nShards = 8,
-        mix = Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.25))
-      val tok = d.select(col("doc_id").as("id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      graft.operators.Packing.chunkDocBoundaries(assigned, tok,
-          col("id"), col("ids"), contextLen = 64)
-        .select(col("shard"), col("chunk_id"), col("boundary"),
-          col("id").as("doc_id"))
-    }),
-
-    // ---- TWO-PHASE CURRICULUM (anneal) training order: phase 0 =
-    // the seeded mix-enforced bulk (q115 semantics over the docs the
-    // quality gate does NOT select), phase 1 = the quality-selected
-    // anneal tail appended per shard in its own seeded order (hash
-    // shard assignment — no global window at any scale). The anneal
-    // predicate is the q20 quality formula (identical rounded value
-    // in both engines) against a representable threshold, so the
-    // oracle replays the gate, both permutations, the quota math and
-    // the per-shard position offsets exactly ----
-    "q120_curriculum_order" -> ((s, dir) => {
-      val quality = graft.functions.TextKernels.text_stats(col("text"),
-        TextFunctions.LangProfiles("en")).getField("quality")
-      graft.operators.Packing.curriculumOrder(docs(s, dir), "doc_id",
-          "source", seed = 20260814L, nShards = 8,
-          mix = Map("src0" -> 0.5, "src1" -> 0.25, "src2" -> 0.25),
-          annealWhen = quality >= lit(0.42))
-        .select(col("shard"), col("pos"), col("id").as("doc_id"),
-          col("source"), col("phase"))
-    }),
-
-    // ---- SPAN CORRUPTION (the T5/UL2 denoising-objective assembly
-    // step) made block-deterministic: blocks of 16 tokens corrupt with
-    // probability 1/2, each hiding one 5-token span at a seeded offset
-    // (expected noise 15.6% — T5's operating point). One row per span
-    // pins the pattern (start_pos), the target side (span_checksum)
-    // and the input side (kept_checksum, the q99 position-weighted
-    // convention over all surviving tokens) — the oracle replays the
-    // per-block hash gate, the offset arithmetic and both checksums
-    // exactly. Pure narrow map: zero shuffle at any corpus size ----
-    "q123_span_corruption" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val tok = docs(s, dir).select(col("doc_id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      graft.operators.Packing.spanCorruption(tok, col("doc_id"),
-          col("ids"), seed = 20260814L)
-        .select(col("id").as("doc_id"), col("span_idx"),
-          col("start_pos"), col("span_checksum"), col("kept_checksum"))
-    }),
-
-    // ---- needle-in-a-haystack eval builder (the NIAH grid): the
-    // needle inserts at each depth-percent cell, the rearranged
-    // stream pinned by the closed-form position checksum ----
-    "q174_needle_insert" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val tok = docs(s, dir).select(col("doc_id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      graft.operators.Packing.needleInsert(tok, col("doc_id"),
-          col("ids"), needleIds = Seq(65001, 65002, 65003),
-          depths = Seq(0, 25, 50, 75, 100))
-        .select(col("id").as("doc_id"), col("depth_pct"),
-          col("insert_pos"), col("out_len"), col("out_checksum"))
-    }),
-
-    // ---- UL2 mixture-of-denoisers (Tay et al. 2022): seeded mode
-    // draw (R-heavy: 2/4 R, 1/4 X, 1/4 S), R/X through the q123
-    // closed-form block corruption at their own operating points
-    // (10/3/2 = 15%, 12/12/2 = 50%), S the prefix-LM suffix cut —
-    // every span pinned by the q99 checksums, zero shuffle ----
-    "q169_ul2_mix" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val tok = docs(s, dir).select(col("doc_id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      graft.operators.Packing.ul2Mix(tok, col("doc_id"), col("ids"),
-          seed = 20260816L)
-        .select(col("id").as("doc_id"), col("mode"), col("span_idx"),
-          col("start_pos"), col("span_len"), col("span_checksum"),
-          col("kept_checksum"))
-    }),
-
-    // ---- fill-in-the-middle transform (Bavarian et al. 2022): a
-    // seeded half of the docs rearranged PSM ([PRE]prefix[SUF]suffix
-    // [MID]middle) with hash-drawn cut points; the reordered stream
-    // pinned by the q99 position-weighted checksum over NEW positions
-    // + sentinel contributions. Pure narrow map, zero shuffle ----
-    "q152_fim_transform" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val tok = docs(s, dir).select(col("doc_id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      graft.operators.Packing.fimTransform(tok, col("doc_id"),
-          col("ids"), seed = 20260815L)
-        .select(col("id").as("doc_id"), col("fim"), col("cut1"),
-          col("cut2"), col("out_len"), col("out_checksum"))
-    }),
-
-    // ---- context-length calibration sweep: the q124 layout's cost
-    // curve per candidate context length, ALL from one length-
-    // histogram aggregate (bins/padding/truncation closed-form per
-    // length class) — the tuning read before committing a context ----
-    "q158_context_length_sweep" -> ((s, dir) =>
-      graft.operators.Packing.contextLengthSweep(
-        docs(s, dir).select(
-          size(filter(split(col("text"), " "), w => w =!= "")).as("n")),
-        col("n"), candidates = Seq(16, 32, 64, 128))),
-
-    // ---- length-homogeneous bin packing — the padding-minimizing
-    // whole-document layout SFT pipelines need (examples must not be
-    // split across windows, unlike the q99 pretraining concat):
-    // docs of truncated length L pack floor(64/L) per bin, seeded
-    // rank orders them, bins number densely per shard ----
-    "q124_binpack_by_length" -> ((s, dir) => {
-      val tok = docs(s, dir).select(col("doc_id").as("id"),
-        size(filter(split(col("text"), " "), w => w =!= ""))
-          .cast("long").as("n_tokens"))
-      graft.operators.Packing.binPackByLength(tok, col("id"),
-          col("n_tokens"), contextLen = 64, nShards = 4,
-          seed = 20260814L)
-        .select(col("id").as("doc_id"), col("shard"), col("len"),
-          col("truncated"), col("bin"), col("slot"), col("bin_off"))
-    }),
-
-    // ---- leakage-safe split: q73's hash split keyed on the q43
-    // dup-cluster canonical id, so near-duplicates of a training doc
-    // can never land in val/test (the contamination mode a per-doc
-    // split invites) — the split-after-dedup step corpus pipelines
-    // run; the aggregate proves whole clusters move together ----
-    "q125_leakage_safe_split" -> ((s, dir) =>
-      graft.operators.Sampling.leakageSafeSplit(docs(s, dir),
-          col("doc_id"), dupClusters(s, dir),
-          Seq(("train", 80), ("val", 10), ("test", 10)))
-        .groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("canon_id")).as("n_clusters"),
-          sum(length(col("text")).cast("long")).as("chars"))),
-
-    // ---- TOKEN-BUDGET data selection: keep the highest-quality docs
-    // (q20's rounded score, strict (quality desc, doc_id) order) while
-    // the cumulative token count stays within the budget — "the best B
-    // tokens", computed two-level (quantized-score block sums +
-    // broadcast prefix), never one all-rows window ----
-    "q126_token_budget_select" -> ((s, dir) => {
-      val st = graft.functions.TextKernels.text_stats(col("text"),
-        TextFunctions.LangProfiles("en"))
-      graft.operators.Sampling.selectByTokenBudget(
-          docs(s, dir).select(col("doc_id"),
-            st.getField("ws_tokens").as("n"), st.getField("quality").as("q")),
-          col("doc_id"), col("q"), col("n"), budget = 12000L)
-        .select(col("id").as("doc_id"), col("score").as("quality"),
-          col("n_tokens"), col("cum_tokens"))
-    }),
-
-    // ---- TEMPERATURE (power-law) source sampling — the mT5/XLM-R
-    // reweighting: each source contributes floor(k · C_s^0.5) docs in
-    // the seeded permutation order, flattening source imbalance (the
-    // skewed big/mid/small classes derived from doc_id make the
-    // flattening visible: the small class's selected SHARE rises).
-    // α = 0.5 ⇒ sqrt, correctly rounded IEEE in both engines, so the
-    // oracle replays the quota arithmetic bit-for-bit ----
-    "q117_temperature_sample" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 16 < 12, lit("big"))
-          .when(col("doc_id") % 16 < 15, lit("mid"))
-          .otherwise(lit("small")).as("src"))
-      graft.operators.Sampling.temperatureSample(d, "doc_id", "src",
-          alpha = 0.5, unitBudget = 3.0, seed = 7L)
-        .select(col("id").as("doc_id"), col("source"), col("pos"))
-    }),
-
-    // ---- PII scrub (C4/Dolma-style pre-training redaction): emails /
-    // phones / IPv4s replaced with typed tags + per-doc counts, one
-    // codegen map pass, zero shuffle. The synthetic corpus carries no
-    // PII, so the query first injects deterministic doc_id-derived
-    // emails/phones/IPs into a subset of docs (same arithmetic in the
-    // oracle) — the oracle then checks the scrub kernel match-for-match
-    // on text that actually exercises all three patterns, including
-    // docs with none ----
-    "q112_pii_scrub" -> ((s, dir) => {
-      val injected = docs(s, dir).select(col("doc_id"), concat(
-        col("text"),
-        when(col("doc_id") % 3 === 0,
-          concat(lit(" contact u"), col("doc_id").cast("string"),
-            lit("@ex-ample.org now"))).otherwise(lit("")),
-        when(col("doc_id") % 4 === 1,
-          concat(lit(" call +1-555-"),
-            lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-            lit(" today"))).otherwise(lit("")),
-        when(col("doc_id") % 5 === 2,
-          concat(lit(" from 10."), (col("doc_id") % 256).cast("string"),
-            lit(".0."), (col("doc_id") % 100).cast("string"),
-            lit(" logged"))).otherwise(lit(""))).as("text"))
-      graft.operators.Corpus.piiScrub(injected, "doc_id", "text")
-    }),
-
-    // ---- EVENT-TIME-timeout sessionization: the deterministic close
-    // signal — a session emits when a later same-user event exceeds
-    // the gap (any batch) OR when the WATERMARK passes last-event +
-    // gap via GroupStateTimeout.EventTimeTimeout; bounded runs
-    // self-terminate with no drain helper (unlike the processing-time
-    // form, whose close depends on a wall clock). The oracle encodes
-    // the exact closure rule: every non-final session, plus final
-    // sessions whose ms-floored end is STRICTLY before the final
-    // watermark (the `<` edge is spec-pinned, EventTimeSessionSpec) ----
-    "q114_session_eventtime_stream" -> ((s, dir) =>
-      runStreamToParquet(s,
-        EventPipeline.sessionizeEventTimeStream(s,
-          eventsSlicedStreamDir(s, dir), gapMinutes = 30,
-          maxFilesPerTrigger = Some(1)))),
-
-    // ---- q114 under DELIBERATE late data: the fixture's later files
-    // carry behind-watermark events (FMGWS does not filter them)
-    // hitting every late arm — fold-with-start-regression, expired on
-    // arrival, no-fold-beyond-gap insert-before, the arm-AT-watermark
-    // edge, and the strict-< final boundary on the late path (see
-    // lateEventRows). Each shape equals batch sessionization + the
-    // q114 closure rule, so CORRECTNESS owns the late-data guard, not
-    // just specs ----
-    "q118_session_late_data_stream" -> ((s, dir) =>
-      runStreamToParquet(s,
-        EventPipeline.sessionizeEventTimeStream(s,
-          lateEventsStreamDir(s), gapMinutes = 30,
-          maxFilesPerTrigger = Some(1)))),
-
-    // ---- INCREMENTAL DAILY-ETL CADENCE — the reference's operational
-    // shape (`Gridmet_current.py:24-48` gating `etl.py:570-810`) run
-    // natively: staged day-files arrive as a drop-box stream, each
-    // micro-batch consults the REAL AvailabilityGate decision rule
-    // (injected probe: the staged day is published) and weighted-means
-    // exactly the new day into the accumulating contract table via
-    // idempotent day-partition overwrite. Oracle = the BATCH pipeline
-    // over the full range: any day double-ETL'd, lost, or aggregated
-    // from a partial plane changes rows and fails the hash.
-    // Restart/no-dup/no-loss is additionally spec-pinned
-    // (IncrementalEtlSpec) ----
-    "q113_daily_etl_stream" -> ((s, dir) => {
-      val w = weightsFromPart(t(s, dir, "part"))
-      // once-per-corpus artifact (the q14/q17 bench convention,
-      // round-12 verdict ask #6): the accumulated contract table +
-      // checkpoint PERSIST across executions. Bench trial 1 therefore
-      // pays the full COLD cadence — seven gated micro-batches from an
-      // empty checkpoint — and surfaces in "queries_cold"; later
-      // trials re-run the stream against the same checkpoint with no
-      // new day staged, which is the STEADY deployment tick (the cron
-      // re-invocation: restart, gate, no-op, read-back). The two costs
-      // are then separately attributable across rounds instead of
-      // blended into one number. The accumulated result is identical
-      // either way (replay writes nothing; the read-back is the same
-      // table), so Verify and the sf0.1 spot see the same rows.
-      val tmp = java.nio.file.Paths.get(
-        streamSrcDirs.getOrElseUpdate("dailyetl-state:" + dir, {
-          val p = java.nio.file.Files.createTempDirectory("graft_daily_etl_")
-          p.toFile.deleteOnExit()
-          p.toString
-        }))
-      val (out, ckpt) = (tmp.resolve("out"), tmp.resolve("ckpt"))
-      val gate: String => Boolean = dayStr => {
-        val day = java.time.LocalDate.parse(dayStr)
-        graft.cli.AvailabilityGate.isCurrent(
-          java.time.ZonedDateTime.of(day.plusDays(1),
-            java.time.LocalTime.NOON, java.time.ZoneOffset.UTC))(_ => day)
-      }
-      withStreamShufflePartitions(s) {
-        graft.etl.IncrementalEtl.dailyWeightedMeanStream(s,
-            gridDailyStreamDir(s, dir), w, Seq("pr"), out.toString,
-            gate = gate)
-          .option("checkpointLocation", ckpt.toString)
-          .start().awaitTermination()
-      }
-      graft.etl.IncrementalEtl.readAccumulated(s, out.toString)
-        .select(col("fid"), col("time").cast("date").as("time"),
-          round(col("pr"), 4).as("wmean_pr"))
-    }),
-
-    // ---- REAL BPE tokenization on the oracle surface: documents →
-    // GPT-2-format vocab/merges fixture → per-doc token count and a
-    // position-weighted checksum (Σ id_i·i, 1-based) proving token
-    // VALUES and ORDER — the tokenizer the pack-tokens pipeline ships
-    // to .bin shards. The oracle replays the merge loop itself with a
-    // recursive CTE over the same fixture (no Spark-side trust). ----
-    "q102_bpe_tokenize" -> ((s, dir) => {
-      val ids = graft.functions.Bpe.bpe_tokenize(col("text"), bpeFixtureModel)
-      docs(s, dir).select(col("doc_id"), ids.as("ids"))
-        .select(col("doc_id"),
-          size(col("ids")).cast("long").as("n_tokens"),
-          when(size(col("ids")) === 0, lit(0L)).otherwise(
-            aggregate(
-              zip_with(col("ids"),
-                sequence(lit(1), size(col("ids"))),
-                (t, i) => t.cast("long") * i.cast("long")),
-              lit(0L), (a, x) => a + x)).as("checksum"))
-    }),
-
-    // ---- MATERIALIZED packing on the oracle surface: documents →
-    // portable-hash token ids → packTokenChunks; each chunk reports a
-    // POSITION-WEIGHTED checksum (Σ id_i·i over the chunk, 1-based),
-    // so the oracle proves content AND intra-chunk order, not just
-    // counts — the layout TokenSink then persists verbatim ----
-    "q99_pack_chunks" -> ((s, dir) => {
-      import graft.functions.PortableHash.portable_hash
-      val tok = docs(s, dir).select(col("doc_id").as("id"),
-        transform(
-          filter(split(col("text"), " "), w => w =!= ""),
-          w => pmod(portable_hash(w), lit(65536L)).cast("int")).as("ids"))
-      graft.operators.Packing
-        .packTokenChunks(tok, col("id"), col("ids"),
-          contextLen = 64, nShards = 4)
-        .select(col("shard"), col("chunk_id"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          aggregate(
-            zip_with(col("token_ids"),
-              sequence(lit(1), size(col("token_ids"))),
-              (t, i) => t.cast("long") * i.cast("long")),
-            lit(0L), (a, x) => a + x).as("checksum"))
-    })
-  )
-
-  /** The committed source-reader fixtures (`data/` in this repo). An
-    * absolute path: the engine's Verify pass and the driver's DuckDB
-    * oracle pass run with different working directories, and both
-    * sides must read the identical file. */
-  private def fixturePath(name: String): String = s"/root/repo/data/$name"
-
-  /** The committed GPT-2-format BPE fixture (tools/make_bpe_fixture.py
-    * trains it deterministically over the sf0.001 corpus), loaded once
-    * per JVM — the model is a bounded plan parameter (85 tokens / 60
-    * merges here; a production 50k-token vocab is still ~1 MB of
-    * reference object, never plan text). */
-  private lazy val bpeFixtureModel: graft.functions.BpeModel =
-    graft.functions.Bpe.load(
-      fixturePath("bpe_vocab.json"), fixturePath("bpe_merges.txt"))
-
-  /** The q102 oracle's literal MAP fragments, read from the same
-    * committed fixture the engine loads (the oracle replays the merge
-    * loop itself — see q102 in [[oracleSql]]). */
-  private lazy val (bpeMergesMapSql, bpeVocabMapSql) = {
-    def esc(s: String) = s.replace("'", "''")
-    val merges = scala.io.Source.fromFile(fixturePath("bpe_merges.txt"))
-      .getLines().map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-      .toIndexedSeq
-    val vocab = graft.functions.Bpe.parseVocab(fixturePath("bpe_vocab.json"))
-    (merges.zipWithIndex
-       .map { case (p, r) => s"'${esc(p)}': $r" }.mkString("MAP {", ", ", "}"),
-     vocab.map { case (t, i) => s"'${esc(t)}': $i" }
-       .mkString("MAP {", ", ", "}"))
-  }
-
-  /** Shared oracle of the q98/q101 reprojection contract: bbox +
-    * shoelace centroid straight from the geographic twin's vertex list
-    * (closed rings, seq-ordered folds — the engine's
-    * cross/Σ(x_i+x_{i+1})·cross accumulation mirrored term for term;
-    * cx = sx/(3·a2) is sign-invariant so no winding flip needed). Both
-    * projected fixtures (UTM 13N, USA_Contiguous_Albers) encode the
-    * SAME features, so one twin oracle serves both. */
-  private lazy val shapefileTwinOracle: String = {
-    val r6 = graft.functions.TextFunctions.round6Sql _
-    s"""WITH v AS (SELECT CAST(fid AS BIGINT) AS fid, seq,
-       |    CAST(x AS DOUBLE) AS x, CAST(y AS DOUBLE) AS y
-       |  FROM read_csv('/root/repo/data/features_lonlat.csv', header = true)),
-       |p AS (SELECT fid, list(x ORDER BY seq) AS xs,
-       |             list(y ORDER BY seq) AS ys FROM v GROUP BY fid),
-       |m AS (SELECT fid,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |    list_transform(range(1, len(xs)),
-       |      ci -> xs[ci]*ys[ci+1] - xs[ci+1]*ys[ci])),
-       |    (ca, cb) -> ca + cb) AS a2,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |    list_transform(range(1, len(xs)),
-       |      si -> (xs[si]+xs[si+1]) * (xs[si]*ys[si+1] - xs[si+1]*ys[si]))),
-       |    (sa, sb) -> sa + sb) AS sx,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |    list_transform(range(1, len(xs)),
-       |      ti -> (ys[ti]+ys[ti+1]) * (xs[ti]*ys[ti+1] - xs[ti+1]*ys[ti]))),
-       |    (ta, tb) -> ta + tb) AS sy
-       |  FROM p)
-       |SELECT b.fid,
-       |  ${r6("b.minx")} AS minx, ${r6("b.miny")} AS miny,
-       |  ${r6("b.maxx")} AS maxx, ${r6("b.maxy")} AS maxy,
-       |  ${r6("m.sx / (3.0 * m.a2)")} AS cx,
-       |  ${r6("m.sy / (3.0 * m.a2)")} AS cy
-       |FROM (SELECT fid, min(x) AS minx, min(y) AS miny,
-       |        max(x) AS maxx, max(y) AS maxy FROM v GROUP BY fid) b
-       |JOIN m USING (fid)""".stripMargin
-  }
-
-  /** Shared body of the q98/q101 reprojection contract: parse the
-    * projected .shp, invert the .prj's PROJCS, recover the geographic
-    * twin's bbox + shoelace centroid on the 6dp grid. */
-  private def shapefileBboxCentroid(
-      s: SparkSession, shp: String): DataFrame = {
-    import graft.functions.WkbGeom
-    import graft.functions.TextFunctions.round6
-    graft.sources.Shapefile.read(s, shp)
-      .select(col("nhru_v1_1").as("fid"),
-        WkbGeom.wkbEnvelopeCentroid(col("geometry")).as("e"))
-      .select(col("fid"),
-        round6(col("e.minx")).as("minx"), round6(col("e.miny")).as("miny"),
-        round6(col("e.maxx")).as("maxx"), round6(col("e.maxy")).as("maxy"),
-        round6(col("e.cx")).as("cx"), round6(col("e.cy")).as("cy"))
-  }
-
-  // ======================================================================
-
-  /** The Bradley–Terry MM oracle, shared VERBATIM by q176 (size-gated
-    * fold branch at verify scale) and q186 (conf-forced join-form
-    * branch): the fold/join switch is a plan decision only — same
-    * round6 steps over the same order-free decimal-exact sums — so one
-    * oracle checking both queries IS the branch-identity proof the
-    * verify surface needs (Classifier.btFoldSwitch,
-    * `spark.graft.bt.fold`; the KnTrigramPrunedOracle convention). */
-  private lazy val BradleyTerryOracle: String =
-    s"""WITH $btChainSql
-       |SELECT it.item AS model_id, CAST(it.wins AS BIGINT) AS wins,
-       |  gp.games, s8.s AS strength
-       |FROM it JOIN gp USING (item) JOIN s8 USING (item)""".stripMargin
-
-  /** The pruned trigram-KN oracle, shared VERBATIM by q184 (adaptive
-    * build — materialized branch at verify scale) and q185 (conf-
-    * forced bounded branch): the bounded build is a plan decision
-    * only — same model tables, same per-pair operand trees — so one
-    * oracle checking both queries IS the branch-identity proof the
-    * verify surface needs (Corpus.knTrigramScore's switch at
-    * Corpus.scala, `spark.graft.kn.boundedBuild`). */
-  private lazy val KnTrigramPrunedOracle: String = {
-    val p2 = "((greatest(CAST(cont AS DOUBLE) - 0.75, 0.0) + " +
-      "0.75 * CAST(nfw2 AS DOUBLE) * " +
-      "(CAST(n1 AS DOUBLE) / CAST(nbt.nb AS DOUBLE))) / " +
-      "CAST(nmid AS DOUBLE))"
-    def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-    val hit = r6(
-      "-ln((greatest(CAST(c3 AS DOUBLE) - 0.75, 0.0) + " +
-        s"0.75 * CAST(n3fw AS DOUBLE) * $p2) / CAST(c2 AS DOUBLE))")
-    val miss = r6(
-      "-ln(0.75 * CAST(n3fw AS DOUBLE) / CAST(c2 AS DOUBLE) * " +
-        s"$p2)")
-    val contrib = s"CASE WHEN c3 IS NOT NULL THEN $hit ELSE $miss END"
-    s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |tr AS MATERIALIZED (SELECT doc_id,
-       |    g['a'] AS a, g['b'] AS b, g['c'] AS c FROM (
-       |    SELECT doc_id, unnest(list_transform(range(1, len(t) - 1),
-       |      ti -> struct_pack(a := t[ti], b := t[ti+1], c := t[ti+2]))) AS g
-       |    FROM tk WHERE len(t) >= 3)),
-       |tri AS MATERIALIZED (SELECT a, b, c, count(*) AS c3
-       |  FROM tr GROUP BY 1, 2, 3),
-       |trip AS MATERIALIZED (SELECT * FROM tri WHERE c3 >= 2),
-       |g1 AS (SELECT a, b, sum(c3) AS c2, count(*) AS n3fw
-       |  FROM tri GROUP BY 1, 2),
-       |g2 AS MATERIALIZED (SELECT b, c, count(*) AS cont
-       |  FROM tri GROUP BY 1, 2),
-       |g3 AS (SELECT b, sum(cont) AS nmid, count(*) AS nfw2
-       |  FROM g2 GROUP BY 1),
-       |prs AS (SELECT g['a'] AS a, g['b'] AS b FROM (
-       |    SELECT unnest(list_transform(range(1, len(t)),
-       |      pi -> struct_pack(a := t[pi], b := t[pi+1]))) AS g
-       |    FROM tk WHERE len(t) >= 2)),
-       |bt AS MATERIALIZED (SELECT DISTINCT a, b FROM prs),
-       |nbt AS (SELECT count(*) AS nb FROM bt),
-       |n1c AS (SELECT b AS c, count(*) AS n1 FROM bt GROUP BY 1)
-       |SELECT tr.doc_id AS doc_id, count(*) AS n_tris,
-       |  ${r6("CAST(sum(CAST(" + contrib + " AS DECIMAL(28,6))) AS DOUBLE)" +
-             " / CAST(count(*) AS DOUBLE)")} AS nll
-       |FROM tr LEFT JOIN trip USING (a, b, c) JOIN g1 USING (a, b)
-       |  JOIN g2 USING (b, c) JOIN g3 USING (b) JOIN n1c USING (c)
-       |  CROSS JOIN nbt
-       |GROUP BY 1""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_weighted_mean" ->
-      s"""WITH g AS ($gridSqlPlain), w AS ($weightsSql)
-         |SELECT w.fid AS fid, g.time AS time,
-         |       round(sum(w.wght*g.pr)/sum(w.wght), 4) AS wmean_pr
-         |FROM g JOIN w ON g.i = w.i AND g.j = w.j
-         |GROUP BY 1, 2""".stripMargin,
-
-    // q116: q01's oracle verbatim — the tiled strategy must be
-    // result-invisible (the tile join key is implied by (i,j)).
-    "q116_weighted_mean_tiled" ->
-      s"""WITH g AS ($gridSqlPlain), w AS ($weightsSql)
-         |SELECT w.fid AS fid, g.time AS time,
-         |       round(sum(w.wght*g.pr)/sum(w.wght), 4) AS wmean_pr
-         |FROM g JOIN w ON g.i = w.i AND g.j = w.j
-         |GROUP BY 1, 2""".stripMargin,
-
-    "q02_masked_mean" ->
-      s"""WITH g AS ($gridSqlNull), w AS ($weightsSql)
-         |SELECT w.fid AS fid, g.time AS time,
-         |       round(sum(CASE WHEN g.pr IS NOT NULL THEN w.wght*g.pr END)
-         |             / sum(CASE WHEN g.pr IS NOT NULL THEN w.wght END), 4) AS masked_pr
-         |FROM g JOIN w ON g.i = w.i AND g.j = w.j
-         |GROUP BY 1, 2""".stripMargin,
-
-    "q03_mean_null_propagation" ->
-      s"""WITH g AS ($gridSqlNull), w AS ($weightsSql)
-         |SELECT w.fid AS fid, g.time AS time,
-         |       CASE WHEN count(CASE WHEN g.pr IS NULL THEN 1 END) > 0 THEN NULL
-         |            ELSE round(sum(w.wght*g.pr)/sum(w.wght), 4) END AS mean_pr
-         |FROM g JOIN w ON g.i = w.i AND g.j = w.j
-         |GROUP BY 1, 2""".stripMargin,
-
-    "q04_ensemble_median" ->
-      """SELECT CAST(ts AS DATE) AS time, user_id % 10 AS j, user_id % 7 AS i,
-        |       round(median(value), 6) AS med_value
-        |FROM events GROUP BY 1, 2, 3""".stripMargin,
-
-    "q05_nn_argmin" ->
-      """WITH m AS (SELECT c_custkey AS miss_fid, c_acctbal AS v FROM customer WHERE c_acctbal < 0),
-        |     d AS (SELECT c_custkey AS fill_fid, c_acctbal AS v FROM customer WHERE c_acctbal >= 0),
-        |     p AS (SELECT m.miss_fid, d.fill_fid,
-        |             sqrt((m.v-d.v)*(m.v-d.v) + 0.0*0.0) AS dist,
-        |             row_number() OVER (PARTITION BY m.miss_fid
-        |               ORDER BY sqrt((m.v-d.v)*(m.v-d.v) + 0.0*0.0), d.fill_fid) AS rn
-        |           FROM m CROSS JOIN d)
-        |SELECT miss_fid, fill_fid, round(dist, 6) AS distance FROM p WHERE rn = 1""".stripMargin,
-
-    "q06_fill_series" ->
-      """WITH ts AS (
-        |  SELECT user_id % 50 AS fid, CAST(ts AS DATE) AS time,
-        |         CASE WHEN (user_id % 50) % 7 = 0 THEN NULL ELSE round(sum(value), 4) END AS v
-        |  FROM events GROUP BY 1, 2),
-        | miss AS (SELECT DISTINCT fid FROM ts WHERE fid % 7 = 0),
-        | pres AS (SELECT DISTINCT fid FROM ts WHERE fid % 7 <> 0),
-        | map AS (SELECT miss_fid, fill_fid FROM (
-        |   SELECT m.fid AS miss_fid, p.fid AS fill_fid,
-        |     row_number() OVER (PARTITION BY m.fid
-        |       ORDER BY sqrt(CAST((m.fid-p.fid)*(m.fid-p.fid) AS DOUBLE) + 0.0*0.0), p.fid) AS rn
-        |   FROM miss m CROSS JOIN pres p) WHERE rn = 1)
-        |SELECT t.fid AS fid, t.time AS time, coalesce(d.v, t.v) AS v
-        |FROM ts t LEFT JOIN map ON t.fid = map.miss_fid
-        |LEFT JOIN ts d ON map.fill_fid = d.fid AND t.time = d.time""".stripMargin,
-
-    "q07_catalog_lookup" ->
-      """SELECT p_type, p_partkey AS first_key, p_name AS first_name FROM (
-        |  SELECT p_type, p_partkey, p_name,
-        |         row_number() OVER (PARTITION BY p_type ORDER BY p_partkey, p_name) AS rn
-        |  FROM part WHERE p_size < 20) WHERE rn = 1""".stripMargin,
-
-    "q08_bbox_time_subset" ->
-      """SELECT l_orderkey, l_linenumber, lat, lon, pr FROM (
-        |  SELECT l_orderkey, l_linenumber, l_shipdate AS time,
-        |         CAST(49.4 AS DOUBLE) - (l_suppkey % 40) * CAST(0.04167 AS DOUBLE) AS lat,
-        |         CAST(-124.76667 AS DOUBLE) + (l_partkey % 60) * CAST(0.04167 AS DOUBLE) AS lon,
-        |         l_extendedprice AS pr
-        |  FROM lineitem)
-        |WHERE lon BETWEEN CAST(-124.0 AS DOUBLE) - CAST(0.04167 AS DOUBLE)
-        |              AND CAST(-122.5 AS DOUBLE) + CAST(0.04167 AS DOUBLE)
-        |  AND lat BETWEEN CAST(48.3 AS DOUBLE) - CAST(0.04167 AS DOUBLE)
-        |              AND CAST(49.0 AS DOUBLE) + CAST(0.04167 AS DOUBLE)
-        |  AND time BETWEEN TIMESTAMP '1994-01-01' AND TIMESTAMP '1996-12-31'""".stripMargin,
-
-    "q09_physics" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  round((l_quantity + 273.15) - 273.15, 6) AS tmax_c,
-        |  round(l_discount*100 + (l_tax*100)/2.0, 6) AS gm_humidity,
-        |  round(1013.25 * exp(-9.80665 * CAST(l_suppkey % 3000 AS DOUBLE)
-        |        / (287.05 * (((l_quantity+273.15)+(l_quantity+262.85))/2.0))), 4) AS pressure_mb,
-        |  round(6.1094 * exp(17.625 * ((l_quantity+273.15)-273.15)
-        |        / (((l_quantity+273.15)-273.15)+243.04)), 4) AS e_s,
-        |  round((l_discount/10) * (1013.25 * exp(-9.80665 * CAST(l_suppkey % 3000 AS DOUBLE)
-        |          / (287.05 * (((l_quantity+273.15)+(l_quantity+262.85))/2.0)))) / 0.622
-        |        / (6.1094 * exp(17.625 * ((((l_quantity+273.15)+(l_quantity+262.85))/2.0)-273.15)
-        |           / (((((l_quantity+273.15)+(l_quantity+262.85))/2.0)-273.15)+243.04)))
-        |        * 100.0, 4) AS rh
-        |FROM lineitem""".stripMargin,
-
-    "q10_agg_lineitem" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
-        |  round(avg(l_discount), 6) AS avg_disc,
-        |  count(*) AS n
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q11_revenue_by_region" ->
-      """SELECT r_name, CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q12_topk_orders_per_customer" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rank FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-        |  FROM orders) WHERE rank <= 3""".stripMargin,
-
-    "q13_dedup_exact" ->
-      """WITH doubled AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 100000, text FROM documents)
-        |SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM doubled GROUP BY text""".stripMargin,
-
-    "q14_minhash_lsh" ->
-      s"""WITH $dupPairsSqlCtes
-         |SELECT a_id, b_id, jaccard FROM pairs""".stripMargin,
-
-    "q15_simhash" ->
-      s"""WITH h AS (SELECT doc_id,
-         |  list_transform(string_split(text, ' '), tok -> ${hashSql("tok")}) AS hashes
-         |  FROM documents)
-         |SELECT doc_id, CAST(list_sum(list_transform(range(0, 30), j ->
-         |  CASE WHEN list_sum(list_transform(hashes,
-         |         h2 -> (CAST(floor(h2 / power(2, j)) AS BIGINT) % 2) * 2 - 1)) > 0
-         |       THEN CAST(power(2, j) AS BIGINT) ELSE 0 END)) AS BIGINT) AS simhash
-         |FROM h""".stripMargin,
-
-    "q16_simhash_pairs" -> simhashPairsSql,
-
-    "q17_ngram_jaccard" -> ngramJaccardPairsSql,
-
-    // q91: q17's jaccard pairs as truth, q16's simhash pairs as the
-    // prediction — the same derivations nested as CTE subqueries (the
-    // q85 composition pattern); 0/0 ratios are NULL.
-    "q91_dedup_eval" -> {
-      def ratio(num: String, den: String) =
-        s"CASE WHEN $den = 0 THEN NULL ELSE " +
-          graft.functions.TextFunctions.round6Sql(
-            s"CAST($num AS DOUBLE) / CAST($den AS DOUBLE)") + " END"
-      s"""WITH truth AS ($ngramJaccardPairsSql),
-         |pred AS ($simhashPairsSql),
-         |ct AS (SELECT CAST(count(*) AS BIGINT) AS n_truth FROM truth),
-         |cp AS (SELECT CAST(count(*) AS BIGINT) AS n_pred FROM pred),
-         |ch AS (SELECT CAST(count(*) AS BIGINT) AS n_hit
-         |  FROM truth t JOIN pred p
-         |    ON t.a_id = p.a_id AND t.b_id = p.b_id)
-         |SELECT n_truth, n_pred, n_hit,
-         |  ${ratio("n_hit", "n_pred")} AS precision,
-         |  ${ratio("n_hit", "n_truth")} AS recall
-         |FROM ct CROSS JOIN cp CROSS JOIN ch""".stripMargin
-    },
-
-    "q18_fingerprints" ->
-      s"""WITH g AS (SELECT doc_id,
-         |  CASE WHEN length(text) < 8 THEN [] ELSE
-         |    list_transform(range(1, length(text) - 6),
-         |      g_i -> ${hashSql("substring(text, g_i, 8)")}) END AS grams
-         |  FROM documents),
-         |m AS (SELECT doc_id,
-         |  CASE WHEN len(grams) < 4 THEN grams ELSE
-         |    list_transform(range(1, len(grams) - 2),
-         |      p -> list_min(grams[p:p+3])) END AS mins
-         |  FROM g)
-         |SELECT doc_id, unnest(list_sort(list_distinct(mins))) AS fp FROM m""".stripMargin,
-
-    "q19_langid" -> langIdSql,
-
-    "q20_text_quality" -> textQualitySql,
-
-    "q21_ann_cosine_topk" -> bruteCosineTopKSql,
-
-    // q127: the q21 brute-force scan with the two mining filters
-    // below the ranking window — different label, sim capped at the
-    // denoising bound.
-    "q127_hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS qv, label AS ql
-        |           FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS n_id, embedding AS cv, label AS nl
-        |      FROM embeddings),
-        |s AS (SELECT q_id, n_id,
-        |  round(
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(qv)+1),
-        |      zi -> CAST(qv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(qv)+1),
-        |         zi -> CAST(qv[zi] AS DOUBLE) * CAST(qv[zi] AS DOUBLE))), (a, x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(cv)+1),
-        |         zi -> CAST(cv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x))), 6) AS sim
-        |  FROM q CROSS JOIN c WHERE q_id <> n_id AND ql <> nl)
-        |SELECT q_id, n_id, sim, rank FROM (
-        |  SELECT q_id, n_id, sim,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-        |  FROM s WHERE sim <= 0.999) WHERE rank <= 5""".stripMargin,
-
-    // q128: the q36 probe chain over-fetched to 20, labels joined
-    // back, positives and the sim band dropped, survivors re-ranked
-    // to 5 — the production miner replayed end to end, recall loss
-    // included.
-    "q128_hard_negatives_ivf" ->
-      s"""WITH approx AS (${ivfCosineTopKSql(20)}),
-        |lab AS (SELECT vec_id, label FROM embeddings)
-        |SELECT q_id, n_id, sim, rank FROM (
-        |  SELECT a.q_id, a.n_id, a.sim,
-        |    row_number() OVER (PARTITION BY a.q_id
-        |                       ORDER BY a.sim DESC, a.n_id ASC) AS rank
-        |  FROM approx a
-        |  JOIN lab ql ON ql.vec_id = a.q_id
-        |  JOIN lab nl ON nl.vec_id = a.n_id
-        |  WHERE ql.label <> nl.label AND a.sim <= 0.999)
-        |WHERE rank <= 5""".stripMargin,
-
-    // q22: the sign-bit LSH is fully deterministic (integer hyperplane
-    // formula + left-fold dots), so the bucketed result has an EXACT
-    // oracle — including its recall loss. plane(p,d) =
-    // (((p·2654435761 + d·40503) mod 1009 + 1009) mod 1009 − 504)/1009.
-    "q22_ann_lsh_topk" ->
-      """WITH e AS (SELECT vec_id, embedding FROM embeddings),
-        |b AS (SELECT vec_id, embedding,
-        |  CAST(list_sum(list_transform(range(0, 6), p ->
-        |    CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(0, len(embedding)), d ->
-        |        CAST(embedding[CAST(d AS INT)+1] AS DOUBLE) *
-        |        (CAST((((p*2654435761 + d*40503) % 1009) + 1009) % 1009 - 504 AS DOUBLE) / 1009.0))),
-        |      (acc, x) -> acc + x) > 0
-        |    THEN CAST(power(2, p) AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM e),
-        |q AS (SELECT vec_id AS q_id, embedding AS qv, bucket FROM b WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS n_id, embedding AS cv, bucket FROM b),
-        |s AS (SELECT q_id, n_id,
-        |  round(
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(qv)+1),
-        |      zi -> CAST(qv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(qv)+1),
-        |         zi -> CAST(qv[zi] AS DOUBLE) * CAST(qv[zi] AS DOUBLE))), (a, x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(cv)+1),
-        |         zi -> CAST(cv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x))), 6) AS sim
-        |  FROM q JOIN c ON q.bucket = c.bucket AND q_id <> n_id)
-        |SELECT q_id, n_id, sim, rank FROM (
-        |  SELECT q_id, n_id, sim,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-        |  FROM s) WHERE rank <= 5""".stripMargin,
-
-    "q23_tumbling_window" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q25_media_decode" ->
-      s"""SELECT doc_id AS media_id,
-         |  (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS modality,
-         |  CAST(length(text) AS INT) AS byte_len,
-         |  ${hashSql("text")} AS checksum,
-         |  round(CAST(list_sum(list_transform(range(1, length(text)+1),
-         |          mb_i -> ascii(text[mb_i]))) AS DOUBLE) / length(text), 6) AS mean_byte
-         |FROM documents""".stripMargin,
-
-    // q130: the training loop unrolled — per round, adjacency counts
-    // over the delimited-symbol words, the (count desc, lhs, rhs)
-    // argmax, and the greedy non-overlapping merge via plain string
-    // replace (left-to-right scan in both engines).
-    "q130_bpe_train_merges" -> {
-      val out = (0 until 8).map(r =>
-        s"SELECT CAST($r AS BIGINT) AS rank, lhs, rhs, c AS pair_count FROM m$r")
-        .mkString("\nUNION ALL ")
-      s"WITH $bpeTrainChainSql\n$out"
-    },
-
-    // q137: the SAME training chain (m0..m7 = the served artifact's
-    // values), then the apply side unrolled — per-(source, word)
-    // counts delimited and folded through the 8 replaces in rank
-    // order, token counts weighted back, ratios round6'd.
-    "q137_tokenizer_fertility" -> {
-      val applies = (0 until 8).map(r =>
-        s"""a${r + 1} AS (SELECT grp, word, n,
-           |  replace(w, chr(31)||m$r.lhs||chr(31)||chr(31)||m$r.rhs||chr(31),
-           |             chr(31)||m$r.lhs||m$r.rhs||chr(31)) AS w
-           |  FROM a$r CROSS JOIN m$r)""".stripMargin).mkString(",\n")
-      s"""WITH $bpeTrainChainSql,
-         |swc AS (SELECT source AS grp, word, count(*) AS n FROM (
-         |    SELECT source, unnest(list_filter(
-         |             regexp_split_to_array(text, '[ \\t\\n\\r\\f\\x0B]+'),
-         |             x -> x <> '')) AS word FROM documents) GROUP BY 1, 2),
-         |a0 AS (SELECT grp, word, n, chr(31) || chr(31) ||
-         |    regexp_replace(word, '(?s)(.)', '\\1' || chr(31) || chr(31),
-         |      'g') AS w
-         |  FROM swc),
-         |$applies,
-         |f AS (SELECT grp, n, length(word) AS chars,
-         |    len(list_filter(string_split(w, chr(31)), x -> x <> '')) AS toks
-         |  FROM a8)
-         |SELECT grp AS source,
-         |  CAST(sum(n) AS BIGINT) AS n_words,
-         |  CAST(sum(toks * n) AS BIGINT) AS n_tokens,
-         |  CAST(sum(chars * n) AS BIGINT) AS n_chars,
-         |  floor(CAST(sum(toks * n) AS DOUBLE) / sum(n)
-         |    * 1000000.0 + 0.5) / 1000000.0 AS tokens_per_word,
-         |  floor(CAST(sum(chars * n) AS DOUBLE) / sum(toks * n)
-         |    * 1000000.0 + 0.5) / 1000000.0 AS chars_per_token
-         |FROM f GROUP BY grp""".stripMargin
-    },
-
-    // q131: the Gopher gate replayed — same whitespace word split,
-    // same line trim, integer counts, round6'd ratios, identical
-    // threshold comparisons on the identical rounded doubles.
-    "q131_gopher_gate" -> gopherGateSql,
-
-    // q136: fixture + the line rules replayed — same trim class, same
-    // terminal-punct set, same word split, ASCII-case-insensitive
-    // javascript/lorem probes, kept lines re-joined with \n.
-    "q136_c4_line_filter" ->
-      """WITH p AS (SELECT doc_id AS id,
-        |    concat_ws(chr(10), text,
-        |      'This line has five words.',
-        |      'Too short.',
-        |      'A line with JavaScript code embedded here.',
-        |      'No terminal punctuation here at all',
-        |      CASE WHEN doc_id % 11 = 0 THEN 'code { block }'
-        |           ELSE 'Filler line number six right here.' END,
-        |      CASE WHEN doc_id % 13 = 0 THEN 'Lorem Ipsum dolor sit amet.'
-        |           ELSE 'Final sentence to close things out.' END) AS page
-        |  FROM documents),
-        |l AS (SELECT id, page,
-        |    list_transform(string_split(page, chr(10)),
-        |      li -> trim(li, ' ' || chr(9) || chr(13) || chr(12) || chr(11)))
-        |      AS ls
-        |  FROM p),
-        |k AS (SELECT id, page, len(ls) AS n_total,
-        |    list_filter(ls, li -> li <> ''
-        |      AND (ends_with(li, '.') OR ends_with(li, '!') OR
-        |           ends_with(li, '?') OR ends_with(li, '"'))
-        |      AND len(list_filter(
-        |            regexp_split_to_array(li, '[ \t\n\r\f\x0B]+'),
-        |            w -> w <> '')) >= 5
-        |      AND NOT contains(lower(li), 'javascript')) AS kept
-        |  FROM l)
-        |SELECT id,
-        |  array_to_string(kept, chr(10)) AS clean_text,
-        |  CAST(len(kept) AS INT) AS n_lines_kept,
-        |  CAST(n_total - len(kept) AS INT) AS n_lines_dropped,
-        |  contains(lower(page), 'lorem ipsum') AS has_lorem,
-        |  contains(page, '{') AS has_brace,
-        |  (NOT contains(lower(page), 'lorem ipsum')
-        |   AND NOT contains(page, '{') AND len(kept) >= 3) AS keep_doc
-        |FROM k""".stripMargin,
-
-    // q134: fixture + canonicalization contract replayed — fragment
-    // strip, scheme/authority lowercase, default-port strip,
-    // tracking-param filter, binary param sort — then the same
-    // per-canonical-key aggregate.
-    "q134_url_canonical_dedup" ->
-      """WITH u AS (SELECT doc_id, unnest([
-        |    'HTTP://WWW.Site' || CAST(doc_id % 7 AS VARCHAR) ||
-        |      '.COM:80/Articles/' || CAST(doc_id % 41 AS VARCHAR) ||
-        |      '?utm_source=feed&ref=' || source ||
-        |      '&id=' || CAST(doc_id % 13 AS VARCHAR) || '#section-2',
-        |    'http://www.site' || CAST(doc_id % 7 AS VARCHAR) ||
-        |      '.com/Articles/' || CAST(doc_id % 41 AS VARCHAR) ||
-        |      '?id=' || CAST(doc_id % 13 AS VARCHAR) ||
-        |      '&ref=' || source || '&gclid=XYZ']) AS url
-        |  FROM documents),
-        |p AS (SELECT doc_id, string_split(url, '#')[1] AS s0 FROM u),
-        |q AS (SELECT doc_id,
-        |    lower(regexp_extract(s0, '^([^:/?#]+)://', 1)) AS scheme,
-        |    regexp_replace(s0, '^[^:/?#]+://', '') AS rest
-        |  FROM p),
-        |r AS (SELECT doc_id, scheme,
-        |    lower(regexp_extract(rest, '^([^/?]*)', 1)) AS auth0,
-        |    substring(rest, length(regexp_extract(rest, '^([^/?]*)', 1)) + 1)
-        |      AS tail
-        |  FROM q),
-        |t AS (SELECT doc_id, scheme,
-        |    CASE WHEN scheme = 'http' AND ends_with(auth0, ':80')
-        |           THEN left(auth0, length(auth0) - 3)
-        |         WHEN scheme = 'https' AND ends_with(auth0, ':443')
-        |           THEN left(auth0, length(auth0) - 4)
-        |         ELSE auth0 END AS auth,
-        |    CASE WHEN contains(tail, '?')
-        |         THEN left(tail, strpos(tail, '?') - 1) ELSE tail END AS path,
-        |    CASE WHEN contains(tail, '?')
-        |         THEN substring(tail, strpos(tail, '?') + 1) ELSE '' END AS qs
-        |  FROM r),
-        |c AS (SELECT doc_id,
-        |    scheme || '://' || auth || path ||
-        |    CASE WHEN len(kept) = 0 THEN ''
-        |         ELSE '?' || array_to_string(kept, '&') END AS canon_url
-        |  FROM (SELECT *,
-        |      list_sort(list_filter(string_split(qs, '&'),
-        |        pp -> pp <> '' AND NOT (
-        |          starts_with(string_split(pp, '=')[1], 'utm_') OR
-        |          string_split(pp, '=')[1] IN ('gclid', 'fbclid', 'msclkid'))))
-        |        AS kept
-        |    FROM t))
-        |SELECT canon_url,
-        |  regexp_extract(canon_url, '^[^:/?#]+://([^/?]*)', 1) AS host,
-        |  count(*) AS n_urls,
-        |  count(DISTINCT doc_id) AS n_docs,
-        |  min(doc_id) AS min_doc
-        |FROM c GROUP BY canon_url""".stripMargin,
-
-    // q141: the same page built in SQL; first-occurrence election by
-    // RAW trimmed-paragraph equality (fingerprint-equal ⇔ text-equal
-    // on collision-free data, the q139 convention), docs rebuilt via
-    // ordered string_agg; whitespace-only paragraphs never counted.
-    "q141_paragraph_dedup" ->
-      """WITH d AS (SELECT doc_id AS id,
-        |    text || chr(10) || 'Subscribe to our newsletter today.' ||
-        |    chr(10) || '   ' || chr(10) ||
-        |    'Cluster line number ' || CAST(doc_id % 5 AS VARCHAR) || '.' ||
-        |    chr(10) || 'Subscribe to our newsletter today.' ||
-        |    chr(10) || 'All rights reserved.' AS page
-        |  FROM documents),
-        |x AS (SELECT id, unnest(string_split(page, chr(10))) AS p0,
-        |    unnest(range(0, len(string_split(page, chr(10))))) AS pos
-        |  FROM d),
-        |ne AS (SELECT id, pos, trim(p0) AS p FROM x
-        |       WHERE length(trim(p0)) > 0),
-        |kept AS (SELECT id, pos, p FROM (
-        |    SELECT id, pos, p, row_number() OVER
-        |      (PARTITION BY p ORDER BY id, pos) AS rk FROM ne)
-        |  WHERE rk = 1),
-        |agg AS (SELECT id, string_agg(p, chr(10) ORDER BY pos) AS ct,
-        |    COUNT(*) AS n_kept FROM kept GROUP BY id),
-        |np AS (SELECT id, COUNT(*) AS n_paras FROM ne GROUP BY id)
-        |SELECT d.id, coalesce(agg.ct, '') AS clean_text,
-        |  CAST(coalesce(np.n_paras, 0) AS BIGINT) AS n_paras,
-        |  CAST(coalesce(agg.n_kept, 0) AS BIGINT) AS n_kept
-        |FROM d LEFT JOIN np ON d.id = np.id
-        |LEFT JOIN agg ON d.id = agg.id""".stripMargin,
-
-    // q142: canonical host replayed (lowercase, https:443 stripped),
-    // dot-suffix explode, blocklist VALUES join, longest match wins.
-    "q142_blocklist_filter" ->
-      """WITH u AS (SELECT doc_id AS id,
-        |    lower(CASE WHEN doc_id % 3 = 0 THEN 'www'
-        |               WHEN doc_id % 3 = 1 THEN 'a.b'
-        |               ELSE 'cdn' END ||
-        |      '.Site' || CAST(doc_id % 7 AS VARCHAR) || '.COM') AS host
-        |  FROM documents),
-        |b(domain) AS (VALUES ('site1.com'), ('site4.com'),
-        |  ('cdn.site2.com'), ('a.b.site1.com'), ('evil.org')),
-        |sfx AS (SELECT id, host,
-        |    unnest(list_transform(
-        |      range(1, len(string_split(host, '.')) + 1),
-        |      si -> array_to_string(
-        |        string_split(host, '.')[CAST(si AS INT):], '.'))) AS suffix
-        |  FROM u),
-        |m AS (SELECT id, max_by(sfx.suffix, length(sfx.suffix)) AS md
-        |  FROM sfx JOIN b ON sfx.suffix = b.domain GROUP BY id)
-        |SELECT u.id, u.host, m.md IS NOT NULL AS blocked,
-        |  m.md AS matched_domain
-        |FROM u LEFT JOIN m ON u.id = m.id""".stripMargin,
-
-    // q143: the identical step chain — CRLF/CR fold, nfc_normalize,
-    // RE2 strip class ≡ the kernel's drop predicate — with n_stripped
-    // as the codepoint-length delta and changed vs the ORIGINAL text.
-    "q143_normalize_text" ->
-      """WITH d AS (SELECT doc_id AS id,
-        |    CASE WHEN doc_id % 4 = 0 THEN
-        |      'Cafe' || chr(769) || ' du parc' || chr(13) || chr(10) ||
-        |      text || chr(8203) || 'zero' || chr(8204) || 'width' ||
-        |      chr(8205) || chr(1) || chr(127) || chr(65279) || ' tail'
-        |    ELSE text END AS t FROM documents),
-        |s1 AS (SELECT id, t,
-        |    replace(replace(t, chr(13) || chr(10), chr(10)),
-        |      chr(13), chr(10)) AS lf FROM d),
-        |s2 AS (SELECT id, t, nfc_normalize(lf) AS nfc FROM s1),
-        |s3 AS (SELECT id, t, nfc, regexp_replace(nfc,
-        |    '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F\x{200B}-\x{200D}\x{FEFF}]',
-        |    '', 'g') AS clean FROM s2)
-        |SELECT id, clean AS clean_text,
-        |  CAST(length(nfc) - length(clean) AS BIGINT) AS n_stripped,
-        |  clean <> t AS changed FROM s3""".stripMargin,
-
-    // q147: the full 8-step GD training unrolled — hashed features,
-    // round6'd sigmoid, per-term-rounded DECIMAL gradient sums, the
-    // exact lr=0.5 update — then the final weights score every doc.
-    "q147_quality_classifier" ->
-      s"""WITH ${classifierChainSql(
-        """SELECT doc_id AS id,
-          |    CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-          |    string_split(text, ' ') AS t FROM documents""".stripMargin)}
-         |SELECT id, y, score, score >= 0.5 AS pred FROM sc""".stripMargin,
-
-    // q148: the DSIR chain replayed — per-doc hashed bucket counts,
-    // add-one-smoothed target/raw log-probs (each ln round6'd on an
-    // exact integer-ratio input), λ differences on the 6dp grid,
-    // DECIMAL-summed per-doc log-weights, then the hash-seeded
-    // Gumbel-max draw (u over Mod+2, the round6+clamp between the
-    // nested lns) ranked (key desc, id asc).
-    "q148_dsir_resample" ->
-      s"""WITH ${dsirChainSql(
-        """SELECT doc_id AS id, lang = 'en' AS tgt,
-          |    string_split(text, ' ') AS t FROM documents""".stripMargin,
-        dim = 64, k = 100)}
-         |SELECT id, logw, key, rank FROM dsel""".stripMargin,
-
-    // q146: q75's whole LM derivation nested as a subquery, joined to
-    // lang, quantile_cont bounds (≡ Spark percentile interpolation)
-    // and the same <=-chain bucket labels.
-    "q146_perplexity_buckets" ->
-      s"""WITH scored AS ($lmScoreSql),
-         |sl AS (SELECT s.doc_id, d.lang, s.nll
-         |  FROM scored s JOIN documents d ON s.doc_id = d.doc_id),
-         |b AS (SELECT lang,
-         |    quantile_cont(nll, 1.0/3) AS lo,
-         |    quantile_cont(nll, 2.0/3) AS hi
-         |  FROM sl GROUP BY lang)
-         |SELECT sl.doc_id, sl.lang, sl.nll,
-         |  CASE WHEN sl.nll <= b.lo THEN 'head'
-         |       WHEN sl.nll <= b.hi THEN 'middle'
-         |       ELSE 'tail' END AS bucket
-         |FROM sl JOIN b ON sl.lang = b.lang""".stripMargin,
-
-    // q145: the q20 quality formula feeding per-threshold conditional
-    // sums (one cross join against the 9-value threshold list), ratios
-    // round6'd with 0/0 -> NULL.
-    "q145_threshold_sweep" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val meanLen = r6("(length(text) - (CAST(len(t) AS DOUBLE) - 1))/len(t)")
-      val stopR = r6("CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)/len(t)")
-      def ratio(num: String, den: String) =
-        s"CASE WHEN $den = 0 THEN NULL ELSE " +
-          r6(s"CAST($num AS DOUBLE) / CAST($den AS DOUBLE)") + " END"
-      s"""WITH s AS (SELECT lang,
-         |    ${r6(s"""0.4 * least(CAST(len(t) AS DOUBLE)/200.0, 1.0)
-         |        + 0.3 * least($meanLen/8.0, 1.0)
-         |        + 0.3 * least($stopR*5.0, 1.0)""")} AS q
-         |  FROM (SELECT lang, text, string_split(text, ' ') AS t
-         |        FROM documents)),
-         |th(threshold) AS (VALUES (0.1), (0.2), (0.3), (0.4), (0.5),
-         |  (0.6), (0.7), (0.8), (0.9)),
-         |agg AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_pos FROM s),
-         |per AS (SELECT th.threshold,
-         |    CAST(sum(CASE WHEN s.q >= th.threshold THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_kept,
-         |    CAST(sum(CASE WHEN s.q >= th.threshold AND s.lang = 'en'
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_pos_kept
-         |  FROM th CROSS JOIN s GROUP BY th.threshold)
-         |SELECT per.threshold, per.n_kept, per.n_pos_kept,
-         |  agg.n_docs, agg.n_pos,
-         |  ${ratio("per.n_pos_kept", "per.n_kept")} AS precision,
-         |  ${ratio("per.n_pos_kept", "agg.n_pos")} AS recall,
-         |  ${ratio("per.n_kept", "agg.n_docs")} AS frac_kept
-         |FROM per CROSS JOIN agg""".stripMargin
-    },
-
-    // q144: the corpus∪batch near-pair set from the q14 posting-join
-    // derivation (raw trigram strings — collision-free ⇔ the engine's
-    // 64-bit hash sets), then the side-aware rejection rule: a batch
-    // doc dies on any corpus match or a lower-id batch match.
-    "q144_incremental_neardup" ->
-      """WITH alldocs AS (
-        |  SELECT doc_id, 0 AS side, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 200000, 1,
-        |    CASE WHEN doc_id % 3 = 0 THEN text
-        |         WHEN doc_id % 3 = 1 THEN text || ' extraword'
-        |         ELSE array_to_string(
-        |           list_reverse(string_split(text, ' ')), ' ') END
-        |  FROM documents),
-        |sh AS MATERIALIZED (
-        |  SELECT doc_id, side, list_distinct(list_transform(range(1, len(t)-1),
-        |           sh_i -> t[sh_i] || '_' || t[sh_i+1] || '_' || t[sh_i+2])) AS s
-        |  FROM (SELECT doc_id, side, string_split(text, ' ') AS t FROM alldocs)
-        |  WHERE len(t) >= 3),
-        |post AS (SELECT doc_id, side, unnest(s) AS g FROM sh),
-        |sz AS (SELECT doc_id, len(s) AS m FROM sh),
-        |inter AS (SELECT a.doc_id AS a_id, a.side AS a_side,
-        |    b.doc_id AS b_id, b.side AS b_side, count(*) AS c
-        |  FROM post a JOIN post b
-        |    ON a.g = b.g AND a.doc_id < b.doc_id
-        |   AND (a.side = 1 OR b.side = 1)
-        |  GROUP BY 1, 2, 3, 4),
-        |pairs AS (SELECT a_id, a_side, b_id, b_side
-        |  FROM inter JOIN sz sa ON sa.doc_id = a_id
-        |  JOIN sz sb ON sb.doc_id = b_id
-        |  WHERE round(CAST(c AS DOUBLE) / (sa.m + sb.m - c), 6) >= 0.8),
-        |rejected AS (SELECT DISTINCT
-        |    CASE WHEN a_side = 1 AND b_side = 0 THEN a_id
-        |         ELSE b_id END AS doc_id
-        |  FROM pairs)
-        |SELECT doc_id, text FROM alldocs
-        |WHERE side = 1
-        |  AND doc_id NOT IN (SELECT doc_id FROM rejected)""".stripMargin,
-
-    // q140: scale from the same max-abs aggregate, half-up-toward-+∞
-    // rounding, clamp, the ascending-index error fold replayed, and
-    // qvec scalarized to the q99 position-weighted checksum (the
-    // verify surface bans array-typed output columns).
-    "q140_int8_quantize" ->
-      """WITH e AS (SELECT vec_id,
-        |    list_transform(embedding, qx -> CAST(qx AS DOUBLE)) AS v
-        |  FROM embeddings),
-        |s AS (SELECT max(list_max(list_transform(v, qx -> abs(qx)))) / 127.0
-        |    AS scale FROM e),
-        |q AS (SELECT vec_id, v, scale,
-        |    list_transform(v, qx -> CAST(greatest(-127.0, least(127.0,
-        |      floor(qx / scale + 0.5))) AS INT)) AS qvec
-        |  FROM e CROSS JOIN s)
-        |SELECT vec_id,
-        |  CAST(len(qvec) AS BIGINT) AS qlen,
-        |  CAST(list_sum(list_transform(range(1, len(qvec) + 1),
-        |      qi -> CAST(qvec[qi] AS BIGINT) * qi)) AS BIGINT)
-        |    AS qchecksum,
-        |  floor(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(1, len(v) + 1),
-        |        qi -> (v[qi] - qvec[qi] * scale) * (v[qi] - qvec[qi] * scale))),
-        |      (acc, x) -> acc + x) / len(v)
-        |    * 1000000.0 + 0.5) / 1000000.0 AS mse
-        |FROM q""".stripMargin,
-
-    // q139: the same v2 construction, status from RAW text equality
-    // (fingerprint-equal ⇔ text-equal on collision-free data — the
-    // exact-dedup surface's standing assumption).
-    "q139_snapshot_diff" ->
-      """WITH o AS (SELECT doc_id AS id, text FROM documents),
-        |n AS (SELECT doc_id AS id,
-        |    CASE WHEN doc_id % 17 = 5 THEN text || ' v2' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 17 <> 3
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS id, text FROM documents
-        |  WHERE doc_id % 17 = 7)
-        |SELECT coalesce(o.id, n.id) AS id,
-        |  CASE WHEN o.id IS NULL THEN 'added'
-        |       WHEN n.id IS NULL THEN 'removed'
-        |       WHEN o.text = n.text THEN 'unchanged'
-        |       ELSE 'changed' END AS status,
-        |  CAST(length(o.text) AS INT) AS old_len,
-        |  CAST(length(n.text) AS INT) AS new_len
-        |FROM o FULL OUTER JOIN n ON o.id = n.id""".stripMargin,
-
-    // q138: the canonical-host derivation replayed (fragment, scheme,
-    // authority lowercase, default-port strip), then the same
-    // per-host (id asc) rank and cap.
-    "q138_per_host_cap" ->
-      """WITH u AS (SELECT doc_id,
-        |    'HTTP://WWW.Site' || CAST(doc_id % 7 AS VARCHAR) ||
-        |    '.COM:80/Articles/' || CAST(doc_id AS VARCHAR) ||
-        |    '?utm_source=feed&id=' || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents),
-        |p AS (SELECT doc_id, string_split(url, '#')[1] AS s0 FROM u),
-        |q AS (SELECT doc_id,
-        |    lower(regexp_extract(s0, '^([^:/?#]+)://', 1)) AS scheme,
-        |    regexp_replace(s0, '^[^:/?#]+://', '') AS rest
-        |  FROM p),
-        |r AS (SELECT doc_id,
-        |    lower(regexp_extract(rest, '^([^/?]*)', 1)) AS auth0, scheme
-        |  FROM q),
-        |h AS (SELECT doc_id AS id,
-        |    CASE WHEN scheme = 'http' AND ends_with(auth0, ':80')
-        |           THEN left(auth0, length(auth0) - 3)
-        |         WHEN scheme = 'https' AND ends_with(auth0, ':443')
-        |           THEN left(auth0, length(auth0) - 4)
-        |         ELSE auth0 END AS host
-        |  FROM r)
-        |SELECT id, host, CAST(rn AS INT) AS host_rank
-        |FROM (SELECT id, host,
-        |    row_number() OVER (PARTITION BY host ORDER BY id) AS rn
-        |  FROM h) WHERE rn <= 3""".stripMargin,
-
-    // q133: the waveform replayed WITHOUT the container — samples are
-    // the byte deltas << 8, features recomputed from first principles
-    // (peak, floor-rounded RMS over exact long Σs², sign-flip
-    // crossings, floor-div duration) — so a header-layout bug in the
-    // writer or a chunk-walk bug in the parser breaks the match.
-    "q133_wav_features" ->
-      """WITH a AS (SELECT doc_id AS media_id, text FROM documents
-        |           WHERE doc_id % 3 = 1),
-        |d AS (SELECT media_id, list_transform(range(1, length(text)),
-        |        wi -> (ascii(text[CAST(wi AS INT) + 1]) -
-        |               ascii(text[CAST(wi AS INT)])) * 256) AS s
-        |      FROM a)
-        |SELECT media_id,
-        |  8000 AS sample_rate,
-        |  CAST(len(s) AS INT) AS n_samples,
-        |  CAST(len(s) AS BIGINT) * 1000 // 8000 AS duration_ms,
-        |  CAST(CASE WHEN len(s) = 0 THEN 0
-        |       ELSE list_max(list_transform(s, x -> abs(x))) END AS INT) AS peak,
-        |  CASE WHEN len(s) = 0 THEN 0.0
-        |       ELSE floor(sqrt(CAST(list_sum(list_transform(s,
-        |              x -> CAST(x AS BIGINT) * x)) AS DOUBLE) / len(s))
-        |            * 1000000.0 + 0.5) / 1000000.0 END AS rms,
-        |  CAST(len(list_filter(range(2, len(s) + 1),
-        |    zi -> (s[CAST(zi AS INT) - 1] < 0) <> (s[CAST(zi AS INT)] < 0)))
-        |    AS INT) AS zero_crossings
-        |FROM d""".stripMargin,
-
-    // q150: the q133 waveform replayed without the container, framed
-    // at 32 samples (full frames only), per-frame floor-rounded RMS
-    // over exact long Σs², the >= 12000 gate, and gaps-and-islands
-    // run merging (k − row_number) with floor-div ms bounds.
-    "q150_audio_vad_segments" ->
-      """WITH a AS (SELECT doc_id AS media_id, text FROM documents
-        |           WHERE doc_id % 3 = 1),
-        |d AS (SELECT media_id, list_transform(range(1, length(text)),
-        |        wi -> (ascii(text[CAST(wi AS INT) + 1]) -
-        |               ascii(text[CAST(wi AS INT)])) * 256) AS s
-        |      FROM a),
-        |f AS (SELECT media_id, s,
-        |        CAST(unnest(range(0, len(s) // 32)) AS INT) AS k
-        |      FROM d),
-        |e AS (SELECT media_id, k,
-        |    floor(sqrt(CAST(list_sum(list_transform(
-        |        range(k * 32 + 1, k * 32 + 33),
-        |        si -> CAST(s[CAST(si AS INT)] AS BIGINT) *
-        |              s[CAST(si AS INT)])) AS DOUBLE) / 32.0)
-        |      * 1000000.0 + 0.5) / 1000000.0 AS rms
-        |  FROM f),
-        |act AS (SELECT media_id, k, rms FROM e WHERE rms >= 12000.0),
-        |isl AS (SELECT media_id, k, rms,
-        |    k - row_number() OVER (PARTITION BY media_id ORDER BY k) AS g
-        |  FROM act),
-        |sg AS (SELECT media_id, min(k) AS start_frame,
-        |    CAST(count(*) AS INT) AS n_frames, max(rms) AS max_rms
-        |  FROM isl GROUP BY media_id, g)
-        |SELECT media_id,
-        |  CAST(row_number() OVER (PARTITION BY media_id
-        |    ORDER BY start_frame) AS INT) AS seg,
-        |  CAST(start_frame AS INT) AS start_frame, n_frames,
-        |  CAST(start_frame AS BIGINT) * 32 * 1000 // 8000 AS start_ms,
-        |  CAST(start_frame + n_frames AS BIGINT) * 32 * 1000 // 8000
-        |    AS end_ms,
-        |  max_rms
-        |FROM sg""".stripMargin,
-
-    // q132: the same wrapper page built in SQL, the same five-step
-    // chain replayed with RE2 — script/style blocks with content,
-    // tags to one space, safe entities (amp last), collapse + trim.
-    "q132_html_extract" ->
-      s"""WITH h AS (SELECT doc_id,
-         |  '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
-         |  '</title><style type="text/css">p { color: #333; }</style>' ||
-         |  '<script>if (1 < 2 && 2 > 1) { track("d' || CAST(doc_id AS VARCHAR) ||
-         |  '"); }</script></head><body><h1>Doc ' || CAST(doc_id AS VARCHAR) ||
-         |  '</h1><ul><li>alpha</li><li>beta</li></ul><p>' || text ||
-         |  '</p><br/><div>footer &amp; more &lt;raw&gt;</div></body></html>'
-         |    AS html
-         |  FROM documents),
-         |x AS (SELECT doc_id AS id,
-         |  trim(regexp_replace(
-         |    replace(replace(replace(replace(replace(replace(
-         |      regexp_replace(
-         |        regexp_replace(
-         |          regexp_replace(html,
-         |            '(?is)<script[^>]*>.*?</script>', '', 'g'),
-         |          '(?is)<style[^>]*>.*?</style>', '', 'g'),
-         |        '(?s)<[^>]*>', ' ', 'g'),
-         |      '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
-         |      '&#39;', chr(39)), '&nbsp;', ' '), '&amp;', '&'),
-         |    '[ \\t\\n\\r\\f\\x0B]+', ' ', 'g'), ' ') AS clean_text
-         |  FROM h)
-         |SELECT id, clean_text, CAST(length(clean_text) AS INT) AS n_chars
-         |FROM x""".stripMargin,
-
-    // q129: the 60-bit average-hash replayed — evenly-spaced byte
-    // samples, integer mean threshold (60·b > Σb), brute-force pair
-    // join at hamming <= 10 (the blocked join is lossless by
-    // pigeonhole, so the quadratic form IS its result).
-    "q129_media_neardup_phash" ->
-      """WITH m AS (SELECT doc_id AS media_id, text FROM documents
-        |           WHERE doc_id % 3 = 0 AND length(text) >= 1),
-        |b AS (SELECT media_id, list_transform(range(0, 60),
-        |        i -> ascii(text[CAST(i * length(text) // 60 AS INT) + 1])) AS sb
-        |      FROM m),
-        |h AS (SELECT media_id, CAST(list_sum(list_transform(range(0, 60),
-        |        i -> CASE WHEN 60 * sb[CAST(i AS INT) + 1] > list_sum(sb)
-        |             THEN CAST(power(2, i) AS BIGINT) ELSE 0 END)) AS BIGINT) AS ph
-        |      FROM b)
-        |SELECT a.media_id AS a_id, b.media_id AS b_id,
-        |       bit_count(xor(a.ph, b.ph)) AS hamming
-        |FROM h a JOIN h b ON a.media_id < b.media_id
-        |WHERE bit_count(xor(a.ph, b.ph)) <= 10""".stripMargin,
-
-    "q26_frame_sample" ->
-      s"""WITH m AS (
-         |  SELECT doc_id AS media_id, text, doc_id % 7 + 1 AS n_frames,
-         |         CAST(floor((length(text) - 16) / (doc_id % 7 + 1)) AS INT) AS frame_len
-         |  FROM documents WHERE length(text) > 16 + (doc_id % 7 + 1)),
-         |f AS (SELECT media_id, text, frame_len,
-         |        CAST(unnest(range(0, n_frames, 2)) AS INT) AS frame_idx FROM m)
-         |SELECT media_id, frame_idx,
-         |  16 + frame_idx * frame_len AS frame_offset, frame_len,
-         |  ${hashSql("substring(text, 16 + frame_idx * frame_len + 1, frame_len)")} AS frame_checksum
-         |FROM f""".stripMargin,
-
-    // q171: both stub towers replayed dense — the q41 byte histogram
-    // and the q147 hashed-BoW ratios — cosine round6 in ascending-j
-    // fold order (the engine's sparse fold skips exact zeros, which
-    // is IEEE-identical), keep at 0.5, zero-image pairs dropped.
-    "q171_clip_align_filter" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val hash = hashSql("tok")
-      s"""WITH m AS (SELECT doc_id AS media_id, text FROM documents
-         |  WHERE doc_id % 3 = 0 AND length(text) >= 1),
-         |iv AS (SELECT media_id, list_transform(range(0, 16), j ->
-         |    CAST(list_sum(list_transform(range(1, length(text)+1),
-         |      ci -> CASE WHEN ascii(text[ci]) % 16 = j
-         |            THEN ascii(text[ci]) + 1 ELSE 0 END)) AS DOUBLE))
-         |    AS v
-         |  FROM m),
-         |tv AS (SELECT media_id, list_transform(range(0, 16), fj ->
-         |    CAST(len(list_filter(t, tok -> ($hash) % 16 = fj))
-         |      AS DOUBLE) / len(t)) AS f
-         |  FROM (SELECT media_id, string_split(text, ' ') AS t FROM m)),
-         |s AS (SELECT media_id,
-         |  ${r6(
-            "list_reduce(list_prepend(CAST(0 AS DOUBLE)," +
-              " list_transform(range(1, 17), zi -> f[zi] * v[zi]))," +
-              " (a, x) -> a + x)" +
-            " / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE)," +
-              " list_transform(range(1, 17), zi -> v[zi] * v[zi]))," +
-              " (a, x) -> a + x))" +
-            " * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE)," +
-              " list_transform(range(1, 17), zi -> f[zi] * f[zi]))," +
-              " (a, x) -> a + x)))")} AS sim
-         |  FROM iv JOIN tv USING (media_id))
-         |SELECT media_id, sim, sim >= 0.5 AS keep FROM s""".stripMargin
-    },
-
-    // q170: the q26 frame-checksum replay folded to intensity, then
-    // plain SQL windows — lag delta, threshold, running boundary sum.
-    "q170_shot_boundaries" ->
-      s"""WITH m AS (
-         |  SELECT doc_id AS media_id, text, doc_id % 7 + 1 AS n_frames,
-         |    CAST(floor((length(text) - 16) / (doc_id % 7 + 1)) AS INT)
-         |      AS frame_len
-         |  FROM documents
-         |  WHERE doc_id % 3 = 2
-         |    AND length(text) > 16 + (doc_id % 7 + 1)),
-         |f AS (SELECT media_id, text, frame_len,
-         |    CAST(unnest(range(0, n_frames)) AS INT) AS frame_idx
-         |  FROM m),
-         |sig AS (SELECT media_id, frame_idx,
-         |    (${hashSql("substring(text, 16 + frame_idx * frame_len" +
-               " + 1, frame_len)")}) % 256 AS intensity
-         |  FROM f),
-         |d AS (SELECT media_id, frame_idx,
-         |    CAST(intensity AS BIGINT) AS intensity,
-         |    abs(intensity - lag(intensity) OVER
-         |      (PARTITION BY media_id ORDER BY frame_idx)) AS delta
-         |  FROM sig)
-         |SELECT media_id, frame_idx, intensity,
-         |  CAST(delta AS BIGINT) AS delta,
-         |  coalesce(delta > 128, false) AS is_boundary,
-         |  CAST(sum(CASE WHEN coalesce(delta > 128, false)
-         |             THEN 1 ELSE 0 END)
-         |    OVER (PARTITION BY media_id ORDER BY frame_idx)
-         |    AS BIGINT) AS shot_id
-         |FROM d""".stripMargin,
-
-    // q27: LSH-bucketed near-dup — same deterministic 6-plane sign-bit
-    // bucket as q22, so the bucketed result (recall loss included) has
-    // an exact oracle.
-    "q27_embedding_neardup" ->
-      """WITH e AS (SELECT vec_id, embedding,
-        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(embedding)+1),
-        |    ni -> CAST(embedding[ni] AS DOUBLE) * CAST(embedding[ni] AS DOUBLE))), (a, x) -> a + x)) AS nrm,
-        |  CAST(list_sum(list_transform(range(0, 6), p ->
-        |    CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE),
-        |      list_transform(range(0, len(embedding)), d ->
-        |        CAST(embedding[CAST(d AS INT)+1] AS DOUBLE) *
-        |        (CAST((((p*2654435761 + d*40503) % 1009) + 1009) % 1009 - 504 AS DOUBLE) / 1009.0))),
-        |      (acc, x) -> acc + x) > 0
-        |    THEN CAST(power(2, p) AS BIGINT) ELSE 0 END)) AS BIGINT) AS bucket
-        |  FROM embeddings)
-        |SELECT a_id, b_id, sim FROM (
-        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    round(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(a.embedding)+1),
-        |      zi -> CAST(a.embedding[zi] AS DOUBLE) * CAST(b.embedding[zi] AS DOUBLE))), (p, x) -> p + x)
-        |      / (a.nrm * b.nrm), 6) AS sim
-        |  FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-        |WHERE sim >= 0.35""".stripMargin,
-
-    "q28_gridmet_pipeline" ->
-      """WITH grid AS (
-        |  SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS time,
-        |         CAST(l_partkey % 25 AS INT) AS i, CAST(l_suppkey % 10 AS INT) AS j,
-        |         40.0 + (l_suppkey % 10) * 0.1 AS lat,
-        |         -100.0 + (l_partkey % 25) * 0.1 AS lon,
-        |         270.0 + (l_quantity % 40) AS tmmx, 258.0 + (l_quantity % 40) AS tmmn,
-        |         l_discount * 100 AS pr, 50.0 + l_tax * 100 AS rmax,
-        |         20.0 + l_tax * 50 AS rmin, 1.0 + (l_linenumber % 5) AS vs
-        |  FROM lineitem),
-        |w AS (SELECT p_partkey % 40 AS fid, p_partkey % 25 AS i,
-        |             CAST(p_size AS BIGINT) % 10 AS j,
-        |             round(p_retailprice/1000, 6) AS wght FROM part),
-        |feats AS (SELECT DISTINCT c_custkey % 40 AS fid FROM customer),
-        |sub AS (SELECT * FROM grid
-        |        WHERE lon BETWEEN -100.0 - 0.04167 AND -98.6 + 0.04167
-        |          AND lat BETWEEN 40.0 - 0.04167 AND 40.9 + 0.04167
-        |          AND time BETWEEN TIMESTAMP '1994-01-01' AND TIMESTAMP '1996-12-01'),
-        |agg AS (
-        |  SELECT w.fid, g.time,
-        |         sum(w.wght*g.tmmx)/sum(w.wght) AS tmmx,
-        |         sum(w.wght*g.tmmn)/sum(w.wght) AS tmmn,
-        |         sum(w.wght*g.pr)/sum(w.wght) AS pr,
-        |         sum(w.wght*g.rmax)/sum(w.wght) AS rmax,
-        |         sum(w.wght*g.rmin)/sum(w.wght) AS rmin,
-        |         sum(w.wght*g.vs)/sum(w.wght) AS vs
-        |  FROM sub g JOIN w ON g.i = w.i AND g.j = w.j
-        |  GROUP BY 1, 2),
-        |domain AS (SELECT f.fid, t.time FROM feats f
-        |           CROSS JOIN (SELECT DISTINCT time FROM agg) t)
-        |SELECT d.fid AS nhru, d.time AS time,
-        |  round(a.tmmx - 273.15, 4) AS tmax, round(a.tmmn - 273.15, 4) AS tmin,
-        |  round(a.pr, 4) AS prcp, round(a.rmax, 4) AS rhmax,
-        |  round(a.rmin, 4) AS rhmin, round(a.vs, 4) AS ws,
-        |  round(a.rmin + a.rmax / 2.0, 4) AS humidity
-        |FROM domain d LEFT JOIN agg a ON d.fid = a.fid AND d.time = a.time""".stripMargin,
-
-    "q29_extent" ->
-      """SELECT min(-100.0 + (l_partkey % 25) * 0.1) AS minx,
-        |       min(40.0 + (l_suppkey % 10) * 0.1) AS miny,
-        |       max(-100.0 + (l_partkey % 25) * 0.1) AS maxx,
-        |       max(40.0 + (l_suppkey % 10) * 0.1) AS maxy,
-        |       min(l_shipdate) AS time_first, max(l_shipdate) AS time_last
-        |FROM lineitem""".stripMargin,
-
-    "q30_time_encode" ->
-      """SELECT o_orderkey,
-        |  CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS days,
-        |  CAST(DATE '1992-01-01' + INTERVAL (date_diff('day', DATE '1992-01-01',
-        |       CAST(o_orderdate AS DATE))) DAY AS DATE) AS decoded
-        |FROM orders""".stripMargin,
-
-    "q31_ensemble_concat" ->
-      """SELECT ens, count(*) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM (
-        |  SELECT 0 AS ens, o_custkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 0
-        |  UNION ALL
-        |  SELECT 1, o_custkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 1
-        |  UNION ALL
-        |  SELECT 2, o_custkey, o_totalprice FROM orders WHERE o_orderkey % 3 = 2)
-        |GROUP BY ens""".stripMargin,
-
-    "q32_hopping_window" ->
-      """WITH f AS (
-        |  SELECT value, event_type,
-        |    date_trunc('hour', ts) + to_minutes(CASE WHEN minute(ts) >= 30
-        |        THEN 30 ELSE 0 END) AS floor30
-        |  FROM events),
-        |w AS (SELECT value, event_type,
-        |        CAST(unnest([floor30, floor30 - to_minutes(30)]) AS TIMESTAMP) AS win_start
-        |      FROM f)
-        |SELECT win_start, event_type, count(*) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM w GROUP BY 1, 2""".stripMargin,
-
-    "q33_distinct_daily_users" ->
-      """SELECT CAST(ts AS DATE) AS day,
-        |       count(DISTINCT user_id) AS users, count(*) AS events
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q34_rollup_revenue" ->
-      """SELECT n_name, yr,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        |  count(*) AS n
-        |FROM (SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr, o_totalprice
-        |      FROM orders JOIN customer ON o_custkey = c_custkey
-        |      JOIN nation ON c_nationkey = n_nationkey)
-        |GROUP BY ROLLUP (n_name, yr)""".stripMargin,
-
-    "q35_running_sum" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-        |    OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-        |          ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS run_total
-        |FROM orders""".stripMargin,
-
-    // q36: the whole IVF chain is deterministic — seeds are the first
-    // 16 vectors by id (cid = id), assignment argmin uses the same
-    // −2·v·c+‖c‖² partial and the same fold order as the Spark plan,
-    // Lloyd means are two-level ordered folds (by id within 1024-id
-    // blocks, then by blk) — so three unrolled iterations reproduce the
-    // engine's centroids bit-for-bit, and the final probe/rank stages
-    // are exact.
-    "q36_ann_ivf_topk" -> ivfCosineTopKSql,
-
-    // q135: the same unrolled 3-iteration training chain (c3 = the
-    // frozen artifact's centroids), then the increment's argmin with
-    // the (d2, cid) tie rule and the full squared distance round6'd
-    // in the same addition order ((−2·v·c + c·c) + v·v).
-    "q135_ivf_incremental_assign" ->
-      s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-         |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-         |${ivfIterSql(1, "c0")},
-         |${ivfIterSql(2, "c1")},
-         |${ivfIterSql(3, "c2")},
-         |nv AS (SELECT id, v FROM ea WHERE id % 10 = 7),
-         |s AS (SELECT nv.id, c.cid,
-         |  ${dotSql("nv.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2,
-         |  ${dotSql("nv.v", "nv.v")} AS vv
-         |  FROM nv CROSS JOIN c3 c)
-         |SELECT id AS vec_id, cid,
-         |  floor((d2 + vv) * 1000000.0 + 0.5) / 1000000.0 AS dist2
-         |FROM (SELECT id, cid, d2, vv,
-         |    row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-         |  FROM s) WHERE rn = 1""".stripMargin,
-
-    // q149: the q135 training chain (c3 = the frozen artifact), ALL
-    // vectors assigned with the same (d2, cid) argmin + round6'd full
-    // distance, then per-cluster quantile_cont(0.5) thresholds (≡
-    // Spark percentile interpolation, the q146 precedent) and the
-    // >=-cut.
-    "q149_prototype_prune" ->
-      s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-         |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-         |${ivfIterSql(1, "c0")},
-         |${ivfIterSql(2, "c1")},
-         |${ivfIterSql(3, "c2")},
-         |s AS (SELECT nv.id, c.cid,
-         |  ${dotSql("nv.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2,
-         |  ${dotSql("nv.v", "nv.v")} AS vv
-         |  FROM ea nv CROSS JOIN c3 c),
-         |a AS (SELECT id AS vec_id, cid,
-         |  floor((d2 + vv) * 1000000.0 + 0.5) / 1000000.0 AS dist2
-         |  FROM (SELECT id, cid, d2, vv,
-         |      row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-         |    FROM s) WHERE rn = 1),
-         |b AS (SELECT cid, quantile_cont(dist2, 0.5) AS thr
-         |  FROM a GROUP BY cid)
-         |SELECT a.vec_id, a.cid, a.dist2, b.thr, a.dist2 >= b.thr AS kept
-         |FROM a JOIN b USING (cid)""".stripMargin,
-
-    // q155: the q135 training chain + all-vector assignment, then the
-    // admission rule — same-list batch×corpus and batch×lower-id-batch
-    // cosines on the round6 grid against the 0.35 bound.
-    "q155_semdedup_admit" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      def cosSql(a: String, bb: String) = r6(
-        s"""${dotSql(a, bb)}
-           |    / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(bb, bb)}))""".stripMargin)
-      s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-         |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-         |${ivfIterSql(1, "c0")},
-         |${ivfIterSql(2, "c1")},
-         |${ivfIterSql(3, "c2")},
-         |s AS (SELECT nv.id, c.cid,
-         |  ${dotSql("nv.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM ea nv CROSS JOIN c3 c),
-         |asg AS MATERIALIZED (SELECT ea.id, cid, ea.v
-         |  FROM (SELECT id, cid,
-         |      row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-         |    FROM s) a JOIN ea ON a.id = ea.id WHERE rn = 1),
-         |cor AS (SELECT * FROM asg WHERE id % 10 <> 7),
-         |bat AS (SELECT * FROM asg WHERE id % 10 = 7),
-         |vc AS (SELECT DISTINCT b.id FROM bat b JOIN cor c USING (cid)
-         |  WHERE ${cosSql("b.v", "c.v")} >= 0.35),
-         |vb AS (SELECT DISTINCT b.id FROM bat b JOIN bat l USING (cid)
-         |  WHERE l.id < b.id AND ${cosSql("b.v", "l.v")} >= 0.35)
-         |SELECT b.id AS vec_id, b.cid,
-         |  (vc.id IS NULL AND vb.id IS NULL) AS admitted
-         |FROM bat b LEFT JOIN vc ON vc.id = b.id
-         |  LEFT JOIN vb ON vb.id = b.id""".stripMargin
-    },
-
-    // q157: the q135 assignment chain feeding the q117 quota
-    // construction — per-list counts, floor(2·√c) quotas, the seeded
-    // per-list hash rank, rank < quota.
-    "q157_cluster_balanced_sample" -> {
-      val h = hashSql("(repeat('11:' || CAST(vec_id AS VARCHAR) || ';', 3))")
-      s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-         |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-         |${ivfIterSql(1, "c0")},
-         |${ivfIterSql(2, "c1")},
-         |${ivfIterSql(3, "c2")},
-         |s AS (SELECT nv.id, c.cid,
-         |  ${dotSql("nv.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM ea nv CROSS JOIN c3 c),
-         |asg AS MATERIALIZED (SELECT id AS vec_id,
-         |    CAST(cid AS VARCHAR) AS cid
-         |  FROM (SELECT id, cid,
-         |      row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-         |    FROM s) WHERE rn = 1),
-         |cnt AS (SELECT cid, count(*) AS c FROM asg GROUP BY 1),
-         |qt AS (SELECT cid, CAST(floor(2.0 * sqrt(c)) AS BIGINT)
-         |         AS quota FROM cnt),
-         |hs AS MATERIALIZED (SELECT vec_id, cid, $h AS h FROM asg),
-         |rk AS (SELECT vec_id, cid,
-         |    row_number() OVER (PARTITION BY cid ORDER BY h, vec_id)
-         |      - 1 AS r
-         |  FROM hs)
-         |SELECT vec_id, cid, CAST(r AS BIGINT) AS pos
-         |FROM rk JOIN qt USING (cid) WHERE r < quota""".stripMargin
-    },
-
-    // q154: every (corpus, benchmark) cosine on the 6dp FLOOR grid
-    // (round6, the engine's form — NOT SQL round(): they differ on
-    // negative midpoints), max per corpus vector, >= 0.9 flag.
-    "q154_embedding_decontaminate" -> {
-      val sim = graft.functions.TextFunctions.round6Sql(
-        """list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(cv)+1),
-          |      zi -> CAST(cv[zi] AS DOUBLE) * CAST(bv[zi] AS DOUBLE))), (a, x) -> a + x)
-          |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(cv)+1),
-          |         zi -> CAST(cv[zi] AS DOUBLE) * CAST(cv[zi] AS DOUBLE))), (a, x) -> a + x))
-          |     * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(bv)+1),
-          |         zi -> CAST(bv[zi] AS DOUBLE) * CAST(bv[zi] AS DOUBLE))), (a, x) -> a + x)))""".stripMargin)
-      s"""WITH c AS (SELECT vec_id, embedding AS cv FROM embeddings),
-         |b AS (SELECT embedding AS bv FROM embeddings WHERE vec_id < 8),
-         |s AS (SELECT c.vec_id, $sim AS sim FROM c CROSS JOIN b)
-         |SELECT vec_id, max(sim) AS max_sim,
-         |  max(sim) >= 0.9 AS contaminated
-         |FROM s GROUP BY vec_id""".stripMargin
-    },
-
-    // q85: recall@5 of the IVF-pruned search (q36) against exact
-    // brute force (q21) — SAME cosine metric, so the measured loss is
-    // purely probe pruning. The two operand queries' full oracle
-    // bodies nest as CTE subqueries; the compare is a plain
-    // hits-count left join (zero-overlap queries report 0).
-    "q85_ann_recall" ->
-      s"""WITH exact AS ($bruteCosineTopKSql),
-         |approx AS ($ivfCosineTopKSql),
-         |hits AS (SELECT e.q_id, CAST(count(*) AS BIGINT) AS hits
-         |  FROM exact e JOIN approx a
-         |    ON e.q_id = a.q_id AND e.n_id = a.n_id
-         |  GROUP BY e.q_id),
-         |qs AS (SELECT DISTINCT q_id FROM exact)
-         |SELECT q_id, CAST(coalesce(hits, 0) AS BIGINT) AS hits,
-         |  round(CAST(coalesce(hits, 0) AS DOUBLE) / 5.0, 6) AS recall
-         |FROM qs LEFT JOIN hits USING (q_id)""".stripMargin,
-
-    // q41: the embedding stub is an integer byte histogram (bucket j
-    // sums ascii+1 over chars with ascii % 16 == j) — order-independent
-    // exact sums, exact as floats — so the cosine top-k over media
-    // embeddings reproduces bit-for-bit.
-    "q41_media_embed_topk" ->
-      """WITH e AS (
-        |  SELECT doc_id AS id,
-        |    list_transform(range(0, 16), j ->
-        |      CAST(list_sum(list_transform(range(1, length(text)+1),
-        |        ci -> CASE WHEN ascii(text[ci]) % 16 = j
-        |              THEN ascii(text[ci]) + 1 ELSE 0 END)) AS DOUBLE)) AS v
-        |  FROM documents),
-        |q AS (SELECT id AS q_id, v AS qv FROM e WHERE id < 4),
-        |c AS (SELECT id AS n_id, v AS cv FROM e),
-        |s AS (SELECT q_id, n_id,
-        |  round(
-        |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(qv)+1),
-        |      zi -> qv[zi] * cv[zi])), (a, x) -> a + x)
-        |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(qv)+1),
-        |         zi -> qv[zi] * qv[zi])), (a, x) -> a + x))
-        |     * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(cv)+1),
-        |         zi -> cv[zi] * cv[zi])), (a, x) -> a + x))), 6) AS sim
-        |  FROM q CROSS JOIN c WHERE q_id <> n_id)
-        |SELECT q_id, n_id, sim, rank FROM (
-        |  SELECT q_id, n_id, sim,
-        |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rank
-        |  FROM s) WHERE rank <= 3""".stripMargin,
-
-    // q40: session_window merges on gap <= gapDuration (closed
-    // boundary — verified by EventPipelineSpec's exact-30m fixture), so
-    // the session split rule is the same `>` as q24; session_end =
-    // max(ts) + gap.
-    "q40_session_window" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts, value,
-        |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged)
-        |SELECT user_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
-        |  CAST(max(ts) AS TIMESTAMP) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM sess GROUP BY user_id, sid""".stripMargin,
-
-    // q105/q106: the STREAMING executions against the BATCH oracles —
-    // the memory-sink tables must carry exactly what the plain SQL
-    // computes, or the streaming engine (watermark handling, state
-    // merging, the streaming source's row delivery) diverged.
-    "q105_tumbling_stream" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q106_session_window_stream" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts, value,
-        |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged)
-        |SELECT user_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
-        |  CAST(max(ts) AS TIMESTAMP) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM sess GROUP BY user_id, sid""".stripMargin,
-
-    // q110: q105's aggregate restricted to watermark-CLOSED windows.
-    // Spark tracks event time for watermarks in whole milliseconds
-    // (EventTimeStats truncates micros → ms), so the final watermark is
-    // floor(max_us/1000)·1000 µs − 1 h, and append mode emits exactly
-    // the windows with end ≤ watermark. A window emitted early (no
-    // eviction gate) or late-dropped data both change the row set.
-    "q110_tumbling_append_stream" ->
-      """WITH m AS (SELECT (epoch_us(MAX(CAST(ts AS TIMESTAMP))) // 1000) * 1000
-        |                  - 3600000000 AS wm_us FROM events)
-        |SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour_start, event_type,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events, m
-        |GROUP BY 1, 2, m.wm_us
-        |HAVING epoch_us(CAST(date_trunc('hour', MIN(ts)) AS TIMESTAMP))
-        |       + 3600000000 <= m.wm_us""".stripMargin,
-
-    // q111: q106's session oracle restricted to sessions CLOSED by the
-    // final watermark (end = last event + gap; same ms-floor watermark
-    // arithmetic and <= eviction boundary as q110).
-    "q111_session_append_stream" ->
-      """WITH m AS (SELECT (epoch_us(MAX(CAST(ts AS TIMESTAMP))) // 1000) * 1000
-        |                  - 3600000000 AS wm_us FROM events),
-        |flagged AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts, value,
-        |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged)
-        |SELECT user_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
-        |  CAST(max(ts) AS TIMESTAMP) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM sess, m GROUP BY user_id, sid, m.wm_us
-        |HAVING epoch_us(CAST(max(ts) AS TIMESTAMP) + INTERVAL 30 MINUTE)
-        |       <= m.wm_us""".stripMargin,
-
-    // q112: the same injection arithmetic, then the same three
-    // regexes (ASCII character classes only — the Java/RE2 common
-    // subset, so Spark codegen and DuckDB agree match-for-match) with
-    // 'g' replacement; counts on the pre-scrub text.
-    "q112_pii_scrub" -> {
-      val (em, ph, ip) = (graft.operators.Corpus.EmailPattern,
-        graft.operators.Corpus.PhonePattern,
-        graft.operators.Corpus.Ipv4Pattern)
-      s"""WITH injected AS (
-         |  SELECT doc_id, text ||
-         |    CASE WHEN doc_id % 3 = 0 THEN ' contact u' ||
-         |      CAST(doc_id AS VARCHAR) || '@ex-ample.org now' ELSE '' END ||
-         |    CASE WHEN doc_id % 4 = 1 THEN ' call +1-555-' ||
-         |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' today' ELSE '' END ||
-         |    CASE WHEN doc_id % 5 = 2 THEN ' from 10.' ||
-         |      CAST(doc_id % 256 AS VARCHAR) || '.0.' ||
-         |      CAST(doc_id % 100 AS VARCHAR) || ' logged' ELSE '' END AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |  regexp_replace(regexp_replace(regexp_replace(text,
-         |    '$em', '<EMAIL>', 'g'),
-         |    '$ph', '<PHONE>', 'g'),
-         |    '$ip', '<IP>', 'g') AS clean_text,
-         |  len(regexp_extract_all(text, '$em')) AS n_emails,
-         |  len(regexp_extract_all(text, '$ph')) AS n_phones,
-         |  len(regexp_extract_all(text, '$ip')) AS n_ips
-         |FROM injected""".stripMargin
-    },
-
-    // q113: the incremental cadence must accumulate EXACTLY the batch
-    // pipeline's table — q01's weighted-mean oracle at the staging's
-    // year grain. Per-day aggregation is exact because each (fid, time)
-    // group's rows arrive whole in one micro-batch (day-atomic files);
-    // the 4 dp round absorbs FP summation order, as in q01.
-    "q113_daily_etl_stream" ->
-      s"""WITH g AS (SELECT CAST(date_trunc('year', l_shipdate) AS DATE) AS time,
-         |            l_partkey % 25 AS i, l_suppkey % 10 AS j,
-         |            l_extendedprice AS pr FROM lineitem),
-         | w AS ($weightsSql)
-         |SELECT w.fid AS fid, g.time AS time,
-         |       round(sum(w.wght*g.pr)/sum(w.wght), 4) AS wmean_pr
-         |FROM g JOIN w ON g.i = w.i AND g.j = w.j
-         |GROUP BY 1, 2""".stripMargin,
-
-    // q115: the seeded-shuffle construction replayed end-to-end — the
-    // portable-hash permutation key, per-source ranks, the
-    // N = min_s floor(C_s/p_s) quota arithmetic (identical IEEE
-    // double ops in both engines), round-robin shard assignment, and
-    // the per-shard interleave order.
-    "q115_shuffle_shards" -> {
-      val h = hashSql(
-        "(repeat('20260814:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      s"""WITH hsh AS MATERIALIZED (SELECT doc_id, source, $h AS h
-         |  FROM documents WHERE source IN ('src0', 'src1', 'src2')),
-         |p AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.25),
-         |                            ('src2', 0.25)) t(source, w)),
-         |cnt AS (SELECT source, count(*) AS c FROM hsh GROUP BY 1),
-         |tot AS (SELECT CAST(min(floor(c / w)) AS BIGINT) AS total
-         |        FROM cnt JOIN p USING (source)),
-         |qt AS (SELECT p.source, CAST(floor(tot.total * p.w) AS BIGINT)
-         |         AS quota FROM p, tot),
-         |rk AS (SELECT doc_id, source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id)
-         |      - 1 AS r
-         |  FROM hsh),
-         |sel AS (SELECT rk.doc_id, rk.source, rk.h, rk.r % 8 AS shard
-         |        FROM rk JOIN qt USING (source) WHERE rk.r < qt.quota)
-         |SELECT CAST(shard AS BIGINT) AS shard,
-         |  CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-         |       - 1 AS BIGINT) AS pos,
-         |  doc_id, source
-         |FROM sel""".stripMargin
-    },
-
-    // q119: q115's CTE chain (permutation → quotas → shard/pos) feeding
-    // q99's cumulative-offset/unnest arithmetic, with the offsets
-    // ordered by the ASSIGNED training position instead of id — the
-    // composed pipeline re-derived from first principles.
-    "q119_pack_assigned_chunks" -> {
-      val h = hashSql(
-        "(repeat('20260814:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      s"""WITH hsh AS MATERIALIZED (SELECT doc_id, source, $h AS h
-         |  FROM documents WHERE source IN ('src0', 'src1', 'src2')),
-         |p AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.25),
-         |                            ('src2', 0.25)) t(source, w)),
-         |cnt AS (SELECT source, count(*) AS c FROM hsh GROUP BY 1),
-         |tot AS (SELECT CAST(min(floor(c / w)) AS BIGINT) AS total
-         |        FROM cnt JOIN p USING (source)),
-         |qt AS (SELECT p.source, CAST(floor(tot.total * p.w) AS BIGINT)
-         |         AS quota FROM p, tot),
-         |rk AS (SELECT doc_id, source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id)
-         |      - 1 AS r
-         |  FROM hsh),
-         |sel AS (SELECT rk.doc_id, rk.h, rk.r % 8 AS shard
-         |        FROM rk JOIN qt USING (source) WHERE rk.r < qt.quota),
-         |ord AS (SELECT doc_id, shard,
-         |    row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-         |      - 1 AS pos
-         |  FROM sel),
-         |tok AS MATERIALIZED (SELECT doc_id,
-         |    list_transform(list_filter(string_split(text, ' '),
-         |                               w -> w <> ''),
-         |      w -> CAST(${hashSql("w")} % 65536 AS INT)) AS ids
-         |  FROM documents),
-         |off AS MATERIALIZED (SELECT shard, ids,
-         |    sum(len(ids)) OVER (PARTITION BY shard ORDER BY pos)
-         |      - len(ids) AS start_off
-         |  FROM ord JOIN tok USING (doc_id)),
-         |toks AS (SELECT shard,
-         |    unnest(list_transform(range(1, len(ids)+1),
-         |      qi -> struct_pack(pos := start_off + qi - 1,
-         |                        t := ids[qi]))) AS u
-         |  FROM off WHERE len(ids) > 0)
-         |SELECT CAST(shard AS BIGINT) AS shard,
-         |  CAST(u.pos // 64 AS BIGINT) AS chunk_id,
-         |  CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CAST(u.t AS BIGINT)
-         |           * (u.pos - (u.pos // 64) * 64 + 1)) AS BIGINT)
-         |    AS checksum
-         |FROM toks
-         |GROUP BY 1, 2""".stripMargin
-    },
-
-    // q122: q115's chain as epoch 0, then the selected set re-ranked
-    // under the '~epoch1' derived key — shard by rank round-robin,
-    // per-shard positions offset by the (permutation-invariant)
-    // epoch-0 shard counts.
-    "q122_epoch_order" -> {
-      val h0 = hashSql(
-        "(repeat('20260814:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      val h1 = hashSql(
-        "(repeat('20260814~epoch1:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      s"""WITH hsh AS MATERIALIZED (SELECT doc_id, source, $h0 AS h
-         |  FROM documents WHERE source IN ('src0', 'src1', 'src2')),
-         |p AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.25),
-         |                            ('src2', 0.25)) t(source, w)),
-         |cnt AS (SELECT source, count(*) AS c FROM hsh GROUP BY 1),
-         |tot AS (SELECT CAST(min(floor(c / w)) AS BIGINT) AS total
-         |        FROM cnt JOIN p USING (source)),
-         |qt AS (SELECT p.source, CAST(floor(tot.total * p.w) AS BIGINT)
-         |         AS quota FROM p, tot),
-         |rk AS (SELECT doc_id, source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id)
-         |      - 1 AS r
-         |  FROM hsh),
-         |sel AS MATERIALIZED (SELECT rk.doc_id, rk.source, rk.h,
-         |        rk.r % 8 AS shard
-         |        FROM rk JOIN qt USING (source) WHERE rk.r < qt.quota),
-         |e0 AS MATERIALIZED (SELECT shard,
-         |    row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-         |      - 1 AS pos,
-         |    doc_id, source
-         |  FROM sel),
-         |n0 AS (SELECT shard, count(*) AS n0 FROM e0 GROUP BY 1),
-         |r1 AS (SELECT doc_id, source, $h1 AS h FROM sel),
-         |k1 AS (SELECT doc_id, source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id)
-         |      - 1 AS r
-         |  FROM r1),
-         |s1 AS (SELECT doc_id, source, h, r % 8 AS shard FROM k1),
-         |e1 AS (SELECT s1.shard,
-         |    n0.n0 + row_number() OVER (PARTITION BY s1.shard
-         |                               ORDER BY s1.h, s1.doc_id) - 1 AS pos,
-         |    s1.doc_id, s1.source
-         |  FROM s1 JOIN n0 USING (shard))
-         |SELECT CAST(shard AS BIGINT) AS shard, CAST(pos AS BIGINT) AS pos,
-         |  doc_id, source, CAST(0 AS BIGINT) AS epoch FROM e0
-         |UNION ALL
-         |SELECT CAST(shard AS BIGINT), CAST(pos AS BIGINT), doc_id, source,
-         |  CAST(1 AS BIGINT) FROM e1""".stripMargin
-    },
-
-    // q121: q119's offset chain with doc_id kept — each doc's first
-    // token located in the chunk grid by integer div/mod over the
-    // same cumulative offsets.
-    "q121_chunk_doc_boundaries" -> {
-      val h = hashSql(
-        "(repeat('20260814:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      s"""WITH hsh AS MATERIALIZED (SELECT doc_id, source, $h AS h
-         |  FROM documents WHERE source IN ('src0', 'src1', 'src2')),
-         |p AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.25),
-         |                            ('src2', 0.25)) t(source, w)),
-         |cnt AS (SELECT source, count(*) AS c FROM hsh GROUP BY 1),
-         |tot AS (SELECT CAST(min(floor(c / w)) AS BIGINT) AS total
-         |        FROM cnt JOIN p USING (source)),
-         |qt AS (SELECT p.source, CAST(floor(tot.total * p.w) AS BIGINT)
-         |         AS quota FROM p, tot),
-         |rk AS (SELECT doc_id, source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id)
-         |      - 1 AS r
-         |  FROM hsh),
-         |sel AS (SELECT rk.doc_id, rk.h, rk.r % 8 AS shard
-         |        FROM rk JOIN qt USING (source) WHERE rk.r < qt.quota),
-         |ord AS (SELECT doc_id, shard,
-         |    row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-         |      - 1 AS pos
-         |  FROM sel),
-         |tok AS MATERIALIZED (SELECT doc_id,
-         |    len(list_filter(string_split(text, ' '), w -> w <> ''))
-         |      AS n_tok
-         |  FROM documents),
-         |off AS (SELECT shard, doc_id, n_tok,
-         |    sum(n_tok) OVER (PARTITION BY shard ORDER BY pos)
-         |      - n_tok AS start_off
-         |  FROM ord JOIN tok USING (doc_id))
-         |SELECT CAST(shard AS BIGINT) AS shard,
-         |  CAST(start_off // 64 AS BIGINT) AS chunk_id,
-         |  CAST(start_off % 64 AS INT) AS boundary,
-         |  doc_id
-         |FROM off WHERE n_tok > 0""".stripMargin
-    },
-
-    // q120: the two-phase curriculum replayed — q20's quality formula
-    // gates the anneal set, the bulk phase is q115's CTE chain over
-    // the NOT-annealed pool, the tail draws its own permutation from
-    // the '~anneal' derived seed with hash-mod shard assignment and
-    // per-shard positions offset by the bulk counts.
-    "q120_curriculum_order" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val meanLen = r6("(length(text) - (CAST(len(t) AS DOUBLE) - 1))/len(t)")
-      val stopR = r6("CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)/len(t)")
-      val qual = r6(s"""0.4 * least(CAST(len(t) AS DOUBLE)/200.0, 1.0)
-        |      + 0.3 * least($meanLen/8.0, 1.0)
-        |      + 0.3 * least($stopR*5.0, 1.0)""".stripMargin)
-      val h0 = hashSql(
-        "(repeat('20260814:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      val h1 = hashSql(
-        "(repeat('20260814~anneal:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      s"""WITH q AS MATERIALIZED (SELECT doc_id, source, $qual AS q
-         |  FROM (SELECT doc_id, source, text, string_split(text, ' ') AS t
-         |        FROM documents
-         |        WHERE source IN ('src0', 'src1', 'src2'))),
-         |blk AS MATERIALIZED (SELECT doc_id, source, $h0 AS h
-         |  FROM q WHERE NOT (q >= 0.42)),
-         |p AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.25),
-         |                            ('src2', 0.25)) t(source, w)),
-         |cnt AS (SELECT source, count(*) AS c FROM blk GROUP BY 1),
-         |tot AS (SELECT CAST(min(floor(c / w)) AS BIGINT) AS total
-         |        FROM cnt JOIN p USING (source)),
-         |qt AS (SELECT p.source, CAST(floor(tot.total * p.w) AS BIGINT)
-         |         AS quota FROM p, tot),
-         |rk AS (SELECT doc_id, source, h,
-         |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id)
-         |      - 1 AS r
-         |  FROM blk),
-         |sel AS (SELECT rk.doc_id, rk.source, rk.h, rk.r % 8 AS shard
-         |        FROM rk JOIN qt USING (source) WHERE rk.r < qt.quota),
-         |ord AS MATERIALIZED (SELECT shard,
-         |    row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-         |      - 1 AS pos,
-         |    doc_id, source
-         |  FROM sel),
-         |n0 AS (SELECT shard, count(*) AS n0 FROM ord GROUP BY 1),
-         |ah AS (SELECT doc_id, source, $h1 AS h
-         |  FROM q WHERE q >= 0.42),
-         |ar AS (SELECT doc_id, source, h, h % 8 AS shard FROM ah),
-         |tail AS (SELECT ar.shard,
-         |    COALESCE(n0.n0, 0)
-         |      + row_number() OVER (PARTITION BY ar.shard
-         |                           ORDER BY ar.h, ar.doc_id) - 1 AS pos,
-         |    ar.doc_id, ar.source
-         |  FROM ar LEFT JOIN n0 USING (shard))
-         |SELECT CAST(shard AS BIGINT) AS shard, CAST(pos AS BIGINT) AS pos,
-         |  doc_id, source, CAST(0 AS BIGINT) AS phase FROM ord
-         |UNION ALL
-         |SELECT CAST(shard AS BIGINT), CAST(pos AS BIGINT), doc_id, source,
-         |  CAST(1 AS BIGINT) FROM tail""".stripMargin
-    },
-
-    // q123: the block-deterministic span-corruption construction
-    // replayed — per-block hash gate (h % 2 = 0), seeded in-block
-    // offset ((h // 2) % 12), span/target checksum over ids[start+j]·j
-    // and the kept-token checksum as total − Σ absolute-position span
-    // sums. Token ids derive exactly as q119's (word-hash mod 65536).
-    "q123_span_corruption" -> {
-      val hb = hashSql(
-        "(repeat('20260814~sc:' || CAST(doc_id AS VARCHAR) || ':' " +
-          "|| CAST(b AS VARCHAR) || ';', 3))")
-      s"""WITH tok AS MATERIALIZED (SELECT doc_id,
-         |    list_transform(list_filter(string_split(text, ' '),
-         |                               w -> w <> ''),
-         |      w -> ${hashSql("w")} % 65536) AS ids
-         |  FROM documents),
-         |base AS MATERIALIZED (SELECT doc_id, ids, len(ids) AS n,
-         |    len(ids) // 16 AS nb
-         |  FROM tok WHERE len(ids) // 16 > 0),
-         |blocks AS MATERIALIZED (SELECT doc_id, ids, b, $hb AS h
-         |  FROM base, unnest(range(0, nb)) AS t(b)),
-         |spans AS MATERIALIZED (SELECT doc_id, ids, b,
-         |    b * 16 + ((h // 2) % 12) AS start
-         |  FROM blocks WHERE h % 2 = 0),
-         |tot AS MATERIALIZED (SELECT doc_id,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, len(ids) + 1),
-         |        ti -> ids[ti] * ti)), (a, x) -> a + x) AS total
-         |  FROM base),
-         |sp AS MATERIALIZED (SELECT doc_id, b, start,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, 6),
-         |        sj -> ids[start + sj] * sj)), (a, x) -> a + x)
-         |      AS span_checksum,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, 6),
-         |        sj -> ids[start + sj] * (start + sj))), (a, x) -> a + x)
-         |      AS abs_ck
-         |  FROM spans)
-         |SELECT sp.doc_id,
-         |  row_number() OVER (PARTITION BY sp.doc_id ORDER BY sp.b)
-         |    - 1 AS span_idx,
-         |  CAST(sp.start AS BIGINT) AS start_pos,
-         |  CAST(sp.span_checksum AS BIGINT) AS span_checksum,
-         |  CAST(tot.total - sum(sp.abs_ck)
-         |         OVER (PARTITION BY sp.doc_id) AS BIGINT)
-         |    AS kept_checksum
-         |FROM sp JOIN tot USING (doc_id)""".stripMargin
-    },
-
-    // q158: the closed-form packing-cost arithmetic replayed over the
-    // length histogram — truncate, per-bin capacity L // len, ceil
-    // bin counts, padding/truncation sums, round6 utilization.
-    "q158_context_length_sweep" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH t AS (SELECT len(list_filter(string_split(text, ' '),
-         |    w -> w <> '')) AS n FROM documents),
-         |hist AS (SELECT n, count(*) AS cnt FROM t WHERE n >= 1
-         |  GROUP BY n),
-         |cand(context_len) AS (VALUES (16), (32), (64), (128)),
-         |per AS (SELECT context_len, cnt, n,
-         |    least(n, context_len) AS len,
-         |    CAST(ceil(CAST(cnt AS DOUBLE) /
-         |      CAST(context_len // least(n, context_len) AS DOUBLE))
-         |      AS BIGINT) AS bins
-         |  FROM hist CROSS JOIN cand)
-         |SELECT context_len, CAST(sum(cnt) AS BIGINT) AS n_docs,
-         |  CAST(sum(bins) AS BIGINT) AS n_bins,
-         |  CAST(sum(cnt * len) AS BIGINT) AS kept_tokens,
-         |  CAST(sum(bins * context_len - cnt * len) AS BIGINT) AS pad_tokens,
-         |  CAST(sum(cnt * (n - len)) AS BIGINT) AS trunc_tokens,
-         |  ${r6("CAST(sum(cnt * len) AS DOUBLE) / " +
-              "CAST(sum(bins) * context_len AS DOUBLE)")} AS utilization
-         |FROM per GROUP BY context_len""".stripMargin
-    },
-
-    // q174: the closed-form checksum replayed — total + |needle|·
-    // (suffix sum) + needle constants (Σnⱼ·j = 390014, Σnⱼ = 195006
-    // for needle [65001, 65002, 65003]) + pos·Σnⱼ.
-    "q174_needle_insert" ->
-      s"""WITH tok AS MATERIALIZED (SELECT doc_id,
-         |    list_transform(list_filter(string_split(text, ' '),
-         |                               w -> w <> ''),
-         |      w -> ${hashSql("w")} % 65536) AS ids
-         |  FROM documents),
-         |base AS (SELECT doc_id, ids, len(ids) AS n,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, len(ids) + 1),
-         |        ti -> ids[ti] * ti)), (a, x) -> a + x) AS total
-         |  FROM tok WHERE len(ids) >= 1),
-         |d AS (SELECT doc_id, ids, n, total,
-         |    unnest([0, 25, 50, 75, 100]) AS depth_pct FROM base),
-         |p AS (SELECT doc_id, ids, n, total, depth_pct,
-         |    (n * depth_pct) // 100 AS pos FROM d)
-         |SELECT doc_id, CAST(depth_pct AS BIGINT) AS depth_pct,
-         |  CAST(pos AS BIGINT) AS insert_pos,
-         |  CAST(n + 3 AS BIGINT) AS out_len,
-         |  CAST(total
-         |    + 3 * list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |        list_transform(range(pos + 1, n + 1), si -> ids[si])),
-         |        (a, x) -> a + x)
-         |    + 390014 + pos * 195006 AS BIGINT) AS out_checksum
-         |FROM p""".stripMargin,
-
-    // q169: q123's block-corruption SQL parameterized per denoiser
-    // (R 10/3, X 12/12) over the seeded mode split, plus the S leg's
-    // suffix cut — three legs UNION ALL, each replaying its hash
-    // gates and checksums exactly.
-    "q169_ul2_mix" -> {
-      val seed = 20260816L
-      val hUl2 = hashSql(
-        s"(repeat('$seed~ul2:' || CAST(id AS VARCHAR) || ';', 3))")
-      val hUl2s = hashSql(
-        s"(repeat('$seed~ul2s:' || CAST(id AS VARCHAR) || ';', 3))")
-      val hb = hashSql(
-        s"(repeat('$seed~sc:' || CAST(id AS VARCHAR) || ':' " +
-          "|| CAST(b AS VARCHAR) || ';', 3))")
-      def leg(t: String, cond: String, bl: Int, sl: Int): String = {
-        val offs = bl - sl + 1
-        s"""base$t AS MATERIALIZED (SELECT id, ids,
-           |    len(ids) // $bl AS nb
-           |  FROM md WHERE $cond AND len(ids) // $bl > 0),
-           |blocks$t AS MATERIALIZED (SELECT id, ids, b, $hb AS h
-           |  FROM base$t, unnest(range(0, nb)) AS tt(b)),
-           |spans$t AS MATERIALIZED (SELECT id, ids, b,
-           |    b * $bl + ((h // 2) % $offs) AS start
-           |  FROM blocks$t WHERE h % 2 = 0),
-           |tot$t AS MATERIALIZED (SELECT id,
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(range(1, len(ids) + 1),
-           |        ti -> ids[ti] * ti)), (a, z) -> a + z) AS total
-           |  FROM base$t),
-           |sp$t AS MATERIALIZED (SELECT id, b, start,
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(range(1, ${sl + 1}),
-           |        sj -> ids[start + sj] * sj)), (a, z) -> a + z)
-           |      AS span_checksum,
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(range(1, ${sl + 1}),
-           |        sj -> ids[start + sj] * (start + sj))), (a, z) -> a + z)
-           |      AS abs_ck
-           |  FROM spans$t),
-           |leg$t AS (SELECT sp.id, '$t' AS mode,
-           |    row_number() OVER (PARTITION BY sp.id ORDER BY sp.b)
-           |      - 1 AS span_idx,
-           |    CAST(sp.start AS BIGINT) AS start_pos,
-           |    CAST($sl AS BIGINT) AS span_len,
-           |    CAST(sp.span_checksum AS BIGINT) AS span_checksum,
-           |    CAST(tot.total - sum(sp.abs_ck)
-           |           OVER (PARTITION BY sp.id) AS BIGINT)
-           |      AS kept_checksum
-           |  FROM sp$t sp JOIN tot$t tot USING (id))""".stripMargin
-      }
-      s"""WITH tok AS MATERIALIZED (SELECT doc_id AS id,
-         |    list_transform(list_filter(string_split(text, ' '),
-         |                               w -> w <> ''),
-         |      w -> ${hashSql("w")} % 65536) AS ids
-         |  FROM documents),
-         |md AS MATERIALIZED (SELECT id, ids, ($hUl2) % 4 AS mode
-         |  FROM tok),
-         |${leg("R", "mode <= 1", 10, 3)},
-         |${leg("X", "mode = 2", 12, 12)},
-         |sS AS (SELECT id, ids, len(ids) AS n,
-         |    ($hUl2s) % (len(ids) - 1) + 1 AS split
-         |  FROM md WHERE mode = 3 AND len(ids) >= 2),
-         |legS AS (SELECT id, 'S' AS mode, CAST(0 AS BIGINT) AS span_idx,
-         |    CAST(split AS BIGINT) AS start_pos,
-         |    CAST(n - split AS BIGINT) AS span_len,
-         |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, n - split + 1),
-         |        sj -> ids[split + sj] * sj)), (a, z) -> a + z)
-         |      AS BIGINT) AS span_checksum,
-         |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, split + 1),
-         |        ki -> ids[ki] * ki)), (a, z) -> a + z)
-         |      AS BIGINT) AS kept_checksum
-         |  FROM sS)
-         |SELECT id AS doc_id, mode, span_idx, start_pos, span_len,
-         |  span_checksum, kept_checksum FROM legR
-         |UNION ALL SELECT id, mode, span_idx, start_pos, span_len,
-         |  span_checksum, kept_checksum FROM legX
-         |UNION ALL SELECT id, mode, span_idx, start_pos, span_len,
-         |  span_checksum, kept_checksum FROM legS""".stripMargin
-    },
-
-    // q152: the FIM construction replayed — q123's token derivation,
-    // the repeat-3 hash gate (% 100 < 50), two ~f1/~f2 cut draws mod
-    // n+1 ordered lo/hi, and the position-weighted checksum over the
-    // REORDERED positions + the three sentinel contributions.
-    "q152_fim_transform" -> {
-      def key(tag: String) = hashSql(
-        s"(repeat('20260815~$tag:' || CAST(id AS VARCHAR) || ';', 3))")
-      s"""WITH tok AS MATERIALIZED (SELECT doc_id AS id,
-         |    list_transform(list_filter(string_split(text, ' '),
-         |                               w -> w <> ''),
-         |      w -> ${hashSql("w")} % 65536) AS ids
-         |  FROM documents),
-         |base AS MATERIALIZED (SELECT id, ids, len(ids) AS n
-         |  FROM tok WHERE len(ids) > 0),
-         |g AS (SELECT id, ids, n,
-         |    (${key("fim")}) % 100 < 50 AS fim,
-         |    (${key("f1")}) % (n + 1) AS h1,
-         |    (${key("f2")}) % (n + 1) AS h2
-         |  FROM base),
-         |c AS (SELECT id, ids, n, fim,
-         |    CASE WHEN fim THEN least(h1, h2) END AS cut1,
-         |    CASE WHEN fim THEN greatest(h1, h2) END AS cut2
-         |  FROM g)
-         |SELECT id AS doc_id, fim, cut1, cut2,
-         |  CASE WHEN fim THEN n + 3 ELSE n END AS out_len,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(range(1, n + 1),
-         |      p -> ids[p] * (CASE WHEN NOT fim THEN p
-         |                     WHEN p <= cut1 THEN p + 1
-         |                     WHEN p > cut2 THEN p - cut2 + cut1 + 2
-         |                     ELSE p + 3 + (n - cut2) END))),
-         |    (a, x) -> a + x)
-         |  + CASE WHEN fim THEN 65536 + 65537 * (cut1 + 2)
-         |         + 65538 * (cut1 + 3 + (n - cut2)) ELSE 0 END
-         |    AS out_checksum
-         |FROM c""".stripMargin
-    },
-
-    // q124: the length-homogeneous bin packing replayed — whitespace
-    // token count truncated to the context, hash shard, seeded rank
-    // within (shard, len), floor(64/len) docs per bin, dense
-    // per-shard bin numbering by ascending length via a prefix sum
-    // over the (shard, len) bin counts.
-    "q124_binpack_by_length" -> {
-      val h = hashSql(
-        "(repeat('20260814:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      s"""WITH t AS MATERIALIZED (SELECT doc_id,
-         |    len(list_filter(string_split(text, ' '),
-         |                    w -> w <> '')) AS n
-         |  FROM documents),
-         |hsh AS MATERIALIZED (SELECT doc_id, LEAST(n, 64) AS len,
-         |    n > 64 AS truncated,
-         |    ${hashSql("CAST(doc_id AS VARCHAR)")} % 4 AS shard,
-         |    $h AS h
-         |  FROM t WHERE n > 0),
-         |rk AS MATERIALIZED (SELECT doc_id, len, truncated, shard,
-         |    row_number() OVER (PARTITION BY shard, len
-         |                       ORDER BY h, doc_id) - 1 AS r,
-         |    64 // len AS cap
-         |  FROM hsh),
-         |offs AS (SELECT shard, len,
-         |    COALESCE(sum(mr // cap + 1) OVER (PARTITION BY shard
-         |        ORDER BY len
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |      0) AS boff
-         |  FROM (SELECT shard, len, max(r) AS mr, 64 // len AS cap
-         |        FROM rk GROUP BY 1, 2))
-         |SELECT rk.doc_id, CAST(rk.shard AS BIGINT) AS shard,
-         |  CAST(rk.len AS BIGINT) AS len, rk.truncated,
-         |  CAST(offs.boff + rk.r // rk.cap AS BIGINT) AS bin,
-         |  CAST(rk.r % rk.cap AS BIGINT) AS slot,
-         |  CAST((rk.r % rk.cap) * rk.len AS BIGINT) AS bin_off
-         |FROM rk JOIN offs USING (shard, len)""".stripMargin
-    },
-
-    // q125: the q43 transitive closure labels every doc with its
-    // cluster's canonical id; the q73 bucket rule then cuts on
-    // hash(canon_id) — whole clusters share a bucket by construction.
-    "q125_leakage_safe_split" ->
-      s"""WITH RECURSIVE $dupPairsSqlCtes,
-        |edges AS (SELECT a_id AS x, b_id AS y FROM pairs
-        |          UNION SELECT b_id, a_id FROM pairs),
-        |reach(x, y) AS (
-        |  SELECT x, y FROM edges
-        |  UNION
-        |  SELECT r.x, e.y FROM reach r JOIN edges e ON r.y = e.x
-        |  WHERE e.y <> r.x),
-        |lab AS (SELECT x AS doc_id, least(min(y), x) AS canon_id
-        |        FROM reach GROUP BY x),
-        |lab2 AS (SELECT d.doc_id, length(d.text) AS chars,
-        |         coalesce(l.canon_id, d.doc_id) AS canon_id
-        |         FROM documents d LEFT JOIN lab l USING (doc_id)),
-        |b AS (SELECT doc_id, chars, canon_id,
-        |    ${hashSql("CAST(canon_id AS VARCHAR)")} % 100 AS bk
-        |  FROM lab2)
-        |SELECT CASE WHEN bk < 80 THEN 'train'
-        |            WHEN bk < 90 THEN 'val' ELSE 'test' END AS split,
-        |  count(*) AS n_docs, count(DISTINCT canon_id) AS n_clusters,
-        |  CAST(sum(chars) AS BIGINT) AS chars
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // q126: the q20 quality formula feeds a plain global cumulative
-    // window (the oracle-side form of the engine's two-level sum —
-    // identical because the quantization is lossless and ties break
-    // by doc_id in both).
-    "q126_token_budget_select" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val meanLen = r6("(length(text) - (CAST(len(t) AS DOUBLE) - 1))/len(t)")
-      val stopR = r6("CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)/len(t)")
-      s"""WITH q AS (SELECT doc_id,
-         |    CAST(len(t) AS BIGINT) AS n_tokens,
-         |    ${r6(s"""0.4 * least(CAST(len(t) AS DOUBLE)/200.0, 1.0)
-         |        + 0.3 * least($meanLen/8.0, 1.0)
-         |        + 0.3 * least($stopR*5.0, 1.0)""")} AS quality
-         |  FROM (SELECT doc_id, text, string_split(text, ' ') AS t
-         |        FROM documents)),
-         |c AS (SELECT doc_id, quality, n_tokens,
-         |    CAST(sum(n_tokens) OVER (ORDER BY quality DESC, doc_id
-         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |      AS BIGINT) AS cum_tokens
-         |  FROM q)
-         |SELECT doc_id, quality, n_tokens, cum_tokens
-         |FROM c WHERE cum_tokens <= 12000""".stripMargin
-    },
-
-    // q117: the temperature-sampling construction replayed — the
-    // seeded permutation key, per-source sqrt quotas (no cross-source
-    // FP sum anywhere, so floor(k·sqrt(C)) is bit-identical), rank
-    // selection.
-    "q117_temperature_sample" -> {
-      val h = hashSql("(repeat('7:' || CAST(doc_id AS VARCHAR) || ';', 3))")
-      s"""WITH d AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 16 < 12 THEN 'big'
-         |         WHEN doc_id % 16 < 15 THEN 'mid'
-         |         ELSE 'small' END AS source
-         |  FROM documents),
-         |cnt AS (SELECT source, count(*) AS c FROM d GROUP BY 1),
-         |qt AS (SELECT source, CAST(floor(3.0 * sqrt(c)) AS BIGINT)
-         |         AS quota FROM cnt),
-         |hs AS MATERIALIZED (SELECT doc_id, source, $h AS h FROM d),
-         |rk AS (SELECT doc_id, source,
-         |    row_number() OVER (PARTITION BY source ORDER BY h, doc_id)
-         |      - 1 AS r
-         |  FROM hs)
-         |SELECT doc_id, source, CAST(r AS BIGINT) AS pos
-         |FROM rk JOIN qt USING (source) WHERE r < quota""".stripMargin
-    },
-
-    // q114: the custom-state sessionization under EVENT-TIME timeout.
-    // Closure rule (EventTimeSessionSpec pins every edge): a session
-    // with a successor (sid < per-user max) closed via the gap split
-    // and always emits; a user's FINAL session emits iff its ms-floored
-    // end (floor(last_us/1000)·1000 + gap) is STRICTLY before the final
-    // watermark (ms-floored global max − delay) — Spark fires
-    // EventTimeTimeout only when timeoutTimestamp < watermark. Session
-    // content/numbering arithmetic is q106's lag-split chain.
-    "q114_session_eventtime_stream" ->
-      """WITH m AS (SELECT (epoch_us(MAX(CAST(ts AS TIMESTAMP))) // 1000) * 1000
-        |                  - 3600000000 AS wm_us FROM events),
-        |flagged AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged),
-        |agg AS (
-        |  SELECT user_id, sid, CAST(min(ts) AS TIMESTAMP) AS session_start,
-        |    count(*) AS n_events,
-        |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-        |    max(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us
-        |  FROM sess GROUP BY user_id, sid),
-        |mx AS (SELECT user_id, max(sid) AS max_sid FROM agg GROUP BY user_id)
-        |SELECT agg.user_id, CAST(sid AS BIGINT) AS sess_id, session_start,
-        |  n_events, sum_value
-        |FROM agg JOIN mx USING (user_id), m
-        |WHERE sid < max_sid
-        |   OR (last_us // 1000) * 1000 + 1800000000 < m.wm_us""".stripMargin,
-
-    // q118: q114's closure-rule chain over the literal late-data
-    // fixture (rendered from the SAME lateEventRows the stream stages,
-    // so the two sides cannot drift) — the late events are designed to
-    // land exactly on batch sessionization, which is what the stream's
-    // gap-merge-over-the-unemitted-horizon guarantees for them.
-    "q118_session_late_data_stream" -> {
-      val vals = lateEventRows.map(r =>
-        s"(${r._2}, TIMESTAMP '${r._3}', ${r._4}, ${r._5})")
-        .mkString(",\n|    ")
-      s"""WITH ev AS (SELECT * FROM (VALUES
-         |    $vals) t(user_id, ts, event_id, value)),
-         |m AS (SELECT (epoch_us(MAX(ts)) // 1000) * 1000
-         |             - 3600000000 AS wm_us FROM ev),
-         |flagged AS (
-         |  SELECT user_id, ts, event_id, value,
-         |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-         |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-         |         THEN 1 ELSE 0 END AS new_sess
-         |  FROM ev
-         |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         |sess AS (
-         |  SELECT user_id, ts, event_id, value,
-         |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |      ROWS UNBOUNDED PRECEDING) AS sid
-         |  FROM flagged),
-         |agg AS (
-         |  SELECT user_id, sid, min(ts) AS session_start,
-         |    count(*) AS n_events,
-         |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-         |    max(epoch_us(ts)) AS last_us
-         |  FROM sess GROUP BY user_id, sid),
-         |mx AS (SELECT user_id, max(sid) AS max_sid FROM agg GROUP BY user_id)
-         |SELECT CAST(agg.user_id AS BIGINT) AS user_id,
-         |  CAST(sid AS BIGINT) AS sess_id, session_start,
-         |  n_events, sum_value
-         |FROM agg JOIN mx USING (user_id), m
-         |WHERE sid < max_sid
-         |   OR (last_us // 1000) * 1000 + 1800000000 < m.wm_us""".stripMargin
-    },
-
-    // q107: the streaming dedup passes exactly one survivor per
-    // distinct text — batch-1 copies (and the corpus's own intra-file
-    // repeats) all dropped. Any cross-batch state loss doubles ~every
-    // text and fails the hash.
-    "q107_dedup_stream" ->
-      "SELECT DISTINCT text FROM documents",
-
-    // q108: q47's oracle verbatim — the streaming bin-equality join
-    // over four time-sliced micro-batches must reproduce the batch
-    // ±5-minute pair set exactly (any pair lost at a slice boundary
-    // changes a count/sum and fails the hash).
-    "q108_proximity_stream" ->
-      """WITH e AS (SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS t
-        |           FROM events WHERE event_type = 'error'),
-        |a AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS t2, value FROM events)
-        |SELECT e.event_id, count(*) AS n_nearby,
-        |  CAST(sum(CAST(a.value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM e JOIN a ON abs(a.t2 - e.t) <= 300000000
-        |GROUP BY e.event_id""".stripMargin,
-
-    // q109: q42's ASOF JOIN oracle with the streaming operator's
-    // output column names — the per-user latest-view STATE must
-    // deliver exactly what the batch whole-timeline sort delivers.
-    "q109_asof_stream" ->
-      """WITH l AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value
-        |           FROM events WHERE event_type = 'click'),
-        |r AS (SELECT user_id, event_id AS r_event_id,
-        |             CAST(ts AS TIMESTAMP) AS r_ts, value AS r_value
-        |      FROM events WHERE event_type = 'view'
-        |      QUALIFY row_number() OVER (PARTITION BY user_id, ts
-        |                                 ORDER BY event_id DESC) = 1)
-        |SELECT l.user_id, l.event_id, l.ts, l.value,
-        |       r.r_event_id, r.r_ts, r.r_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.r_ts""".stripMargin,
-
-    // q39: bbox + shoelace centroid computed directly from the quad's
-    // coordinates — same fold order (edges in vertex order, 0.0-seeded
-    // left folds) as the WKB parser, so the WKB build→parse round trip
-    // must reproduce it bit-for-bit before 6dp rounding.
-    "q39_wkb_features" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH v AS (
-         |  SELECT c_custkey AS fid,
-         |    (c_custkey % 100) * 0.1 AS x0, (c_custkey % 73) * 0.1 AS y0,
-         |    1.0 + (c_custkey % 7) * 0.1 AS w, 1.0 + (c_custkey % 5) * 0.1 AS h
-         |  FROM customer),
-         |e AS (
-         |  SELECT fid, x0, y0, w, h,
-         |    x0*y0 - (x0+w)*y0 AS c1,
-         |    (x0+w)*(y0+1.0) - (x0+1.0)*y0 AS c2,
-         |    (x0+1.0)*(y0+h) - x0*(y0+1.0) AS c3,
-         |    x0*y0 - x0*(y0+h) AS c4
-         |  FROM v),
-         |g AS (
-         |  SELECT fid, x0, y0, w, h,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE), [c1, c2, c3, c4]),
-         |      (a0, z) -> a0 + z) AS a2,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      [(x0+(x0+w))*c1, ((x0+w)+(x0+1.0))*c2, ((x0+1.0)+x0)*c3, (x0+x0)*c4]),
-         |      (a0, z) -> a0 + z) AS sx,
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-         |      [(y0+y0)*c1, (y0+(y0+1.0))*c2, ((y0+1.0)+(y0+h))*c3, ((y0+h)+y0)*c4]),
-         |      (a0, z) -> a0 + z) AS sy
-         |  FROM e)
-         |SELECT fid,
-         |  ${r6("sy/(3.0*a2)")} AS lat, ${r6("sx/(3.0*a2)")} AS lon,
-         |  ${r6("x0")} AS minx, ${r6("y0")} AS miny,
-         |  ${r6("greatest(x0+w, x0+1.0)")} AS maxx,
-         |  ${r6("greatest(y0+h, y0+1.0)")} AS maxy
-         |FROM g""".stripMargin
-    },
-
-    "q37_semi_anti_join" ->
-      """SELECT c_custkey, 'active' AS status FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995)
-        |UNION ALL
-        |SELECT c_custkey, 'inactive' AS status FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND year(o_orderdate) = 1995)""".stripMargin,
-
-    "q38_kmv_distinct" ->
-      s"""WITH h AS (
-         |  SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
-         |         (1566083941 * ((${hashSql("CAST(l_orderkey AS VARCHAR)")}) + 1))
-         |           % 1000000007 AS g
-         |  FROM lineitem),
-         |g AS (SELECT month, count(*) AS rows,
-         |        list_sort(list_distinct(list(g))) AS hs
-         |      FROM h GROUP BY month)
-         |SELECT month,
-         |  CASE WHEN len(hs) < 64 THEN CAST(len(hs) AS DOUBLE)
-         |       ELSE floor((63.0 * 1000000007.0 / hs[64] - 1.0) * 10000 + 0.5) / 10000
-         |  END AS orders_est,
-         |  rows
-         |FROM g""".stripMargin,
-
-    "q24_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |           OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_sess
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts, value,
-        |    -- CAST: DuckDB's windowed sum over integers yields HUGEINT,
-        |    -- which pandas renders as float64 ("1.0") while Spark's
-        |    -- bigint renders "1" — the driver's value hash then differs
-        |    -- even though every value is numerically identical
-        |    CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sess_id
-        |  FROM flagged)
-        |SELECT user_id, sess_id, CAST(min(ts) AS TIMESTAMP) AS session_start,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM sess GROUP BY user_id, sess_id""".stripMargin,
-
-    // q42: DuckDB's native ASOF JOIN is the oracle — an independent
-    // engine's implementation of the same operator, not a SQL
-    // transliteration of ours. The right side dedupes equal-(user, ts)
-    // views to the greatest view_id, which is exactly the row our
-    // last-in-(t, tiebreak)-order window match selects.
-    "q42_asof_join" ->
-      """WITH l AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value
-        |           FROM events WHERE event_type = 'click'),
-        |r AS (SELECT user_id, event_id AS view_id,
-        |             CAST(ts AS TIMESTAMP) AS view_ts, value AS view_value
-        |      FROM events WHERE event_type = 'view'
-        |      QUALIFY row_number() OVER (PARTITION BY user_id, ts
-        |                                 ORDER BY event_id DESC) = 1)
-        |SELECT l.user_id, l.event_id, l.ts, l.value,
-        |       r.view_id, r.view_ts, r.view_value
-        |FROM l ASOF LEFT JOIN r
-        |  ON l.user_id = r.user_id AND l.ts >= r.view_ts""".stripMargin,
-
-    // q43: pair source = q14's exact-Jaccard pairs (the LSH config has
-    // full recall there — q14 is hash-identical to this all-pairs
-    // form), then a recursive-CTE transitive closure; min reachable id
-    // = the propagation fixpoint.
-    "q43_dup_clusters" ->
-      s"""WITH RECURSIVE $dupPairsSqlCtes,
-        |edges AS (SELECT a_id AS x, b_id AS y FROM pairs
-        |          UNION SELECT b_id, a_id FROM pairs),
-        |reach(x, y) AS (
-        |  SELECT x, y FROM edges
-        |  UNION
-        |  SELECT r.x, e.y FROM reach r JOIN edges e ON r.y = e.x
-        |  WHERE e.y <> r.x),
-        |lab AS (SELECT x AS doc_id, least(min(y), x) AS canon_id
-        |        FROM reach GROUP BY x),
-        |lab2 AS (SELECT d.doc_id, coalesce(l.canon_id, d.doc_id) AS canon_id
-        |         FROM documents d LEFT JOIN lab l USING (doc_id)),
-        |sizes AS (SELECT canon_id, count(*) AS cluster_size
-        |          FROM lab2 GROUP BY canon_id)
-        |SELECT doc_id, canon_id, cluster_size,
-        |       doc_id = canon_id AS is_canonical
-        |FROM lab2 JOIN sizes USING (canon_id)""".stripMargin,
-
-    "q44_stratified_sample" ->
-      s"""SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts,
-         |       event_type, value
-         |FROM events
-         |WHERE (${hashSql("CAST(event_id AS VARCHAR)")}) % 100 <
-         |  CASE event_type WHEN 'view' THEN 10 WHEN 'click' THEN 50
-         |                  WHEN 'purchase' THEN 100 ELSE 25 END""".stripMargin,
-
-    // q46: composition oracle — the q43 closure picks canonical docs,
-    // then q19's pred_lang and q20's quality formulas gate them.
-    "q46_clean_corpus" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val en = r6("CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)/len(t)")
-      val de = r6("CAST(len(list_filter(t, x -> x IN ('der','die','das','und','ist','ein'))) AS DOUBLE)/len(t)")
-      val fr = r6("CAST(len(list_filter(t, x -> x IN ('le','la','les','et','est','un'))) AS DOUBLE)/len(t)")
-      val meanLen = r6("(length(text) - (CAST(len(t) AS DOUBLE) - 1))/len(t)")
-      val stopR = r6("CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)/len(t)")
-      val quality = r6(s"""0.4 * least(CAST(len(t) AS DOUBLE)/200.0, 1.0)
-         |      + 0.3 * least($meanLen/8.0, 1.0)
-         |      + 0.3 * least($stopR*5.0, 1.0)""".stripMargin)
-      s"""WITH RECURSIVE $dupPairsSqlCtes,
-         |edges AS (SELECT a_id AS x, b_id AS y FROM pairs
-         |          UNION SELECT b_id, a_id FROM pairs),
-         |reach(x, y) AS (
-         |  SELECT x, y FROM edges
-         |  UNION
-         |  SELECT r.x, e.y FROM reach r JOIN edges e ON r.y = e.x
-         |  WHERE e.y <> r.x),
-         |lab AS (SELECT x AS doc_id, least(min(y), x) AS canon_id
-         |        FROM reach GROUP BY x),
-         |lab2 AS (SELECT d.doc_id, coalesce(l.canon_id, d.doc_id) AS canon_id
-         |         FROM documents d LEFT JOIN lab l USING (doc_id)),
-         |sizes AS (SELECT canon_id, count(*) AS cluster_size
-         |          FROM lab2 GROUP BY canon_id),
-         |canon AS (SELECT doc_id, cluster_size
-         |          FROM lab2 JOIN sizes USING (canon_id)
-         |          WHERE doc_id = canon_id),
-         |f AS (SELECT doc_id, cluster_size, text, string_split(text, ' ') AS t
-         |      FROM documents JOIN canon USING (doc_id))
-         |SELECT doc_id, cluster_size, len(t) AS ws_tokens, $quality AS quality
-         |FROM f
-         |WHERE (CASE
-         |    WHEN $fr >= $en AND $fr >= $de THEN 'fr'
-         |    WHEN $en >= $de THEN 'en' ELSE 'de' END) = 'en'
-         |  AND $quality >= 0.35""".stripMargin
-    },
-
-    "q48_per_group_cap" ->
-      s"""SELECT user_id, event_id, rank FROM (
-         |  SELECT user_id, event_id,
-         |    row_number() OVER (PARTITION BY user_id
-         |      ORDER BY (${hashSql("CAST(event_id AS VARCHAR)")}) ASC,
-         |               event_id ASC) AS rank
-         |  FROM events) WHERE rank <= 3""".stripMargin,
-
-    "q49_bloom_semi_join" ->
-      """SELECT l_orderkey, l_partkey, l_quantity FROM lineitem
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_orderkey = l_orderkey
-        |                AND o_totalprice > 400000.0)""".stripMargin,
-
-    // q50: PQ is deterministic end-to-end — seeds are slices of the
-    // first 16 vectors by id (cid = rank), assignment uses the same
-    // −2·v·c+‖c‖² partial and tie rule as the Spark kernel, Lloyd means
-    // are the same (sub,cid)-keyed two-level ordered folds with the
-    // empty-cluster carry, ADC tables are A − 2B + C of ascending-index
-    // fold dots, and the per-doc sum folds subspaces in ascending order
-    // from 0.0 — so the approximate result, quantization error
-    // included, reproduces bit-for-bit.
-    "q50_ann_pq_topk" -> {
-      val foldPd = "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list(qt.pd ORDER BY qt.sub)), (a0, x0) -> a0 + x0)"
-      s"""WITH e AS (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |esa AS (SELECT id, sub, v[sub*8+1 : sub*8+8] AS vs
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 8)) AS sub)),
-         |es AS (SELECT * FROM esa WHERE id % 2 = 0),
-         |pc0 AS (SELECT sub,
-         |  row_number() OVER (PARTITION BY sub ORDER BY id) - 1 AS cid,
-         |  vs AS c
-         |  FROM es WHERE id IN (SELECT id FROM e WHERE id % 2 = 0
-         |                       ORDER BY id LIMIT 16)),
-         |${pqIterSql(1, "pc0")},
-         |${pqIterSql(2, "pc1")},
-         |pes AS (SELECT esa.id, esa.sub, c.cid,
-         |  ${dotSql("esa.vs", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM esa JOIN pc2 c ON esa.sub = c.sub),
-         |pea AS (SELECT id, sub, cid FROM (
-         |  SELECT id, sub, cid,
-         |    row_number() OVER (PARTITION BY id, sub ORDER BY d2, cid) AS rn
-         |  FROM pes) WHERE rn = 1),
-         |qsub AS (SELECT id AS q_id, sub, vs FROM esa WHERE id < 8),
-         |qt AS (SELECT q.q_id, c.sub, c.cid,
-         |  ${dotSql("q.vs", "q.vs")} - 2*${dotSql("q.vs", "c.c")}
-         |    + ${dotSql("c.c", "c.c")} AS pd
-         |  FROM qsub q JOIN pc2 c ON q.sub = c.sub),
-         |sc AS (SELECT qt.q_id, pea.id AS n_id,
-         |  ${graft.functions.TextFunctions.round6Sql(foldPd)} AS approx_d2
-         |  FROM pea JOIN qt ON pea.sub = qt.sub AND pea.cid = qt.cid
-         |  GROUP BY qt.q_id, pea.id)
-         |SELECT q_id, n_id, approx_d2, rank FROM (
-         |  SELECT q_id, n_id, approx_d2,
-         |    row_number() OVER (PARTITION BY q_id
-         |      ORDER BY approx_d2 ASC, n_id ASC) AS rank
-         |  FROM sc WHERE q_id <> n_id) WHERE rank <= 5""".stripMargin
-    },
-
-    // q52: q43's closure picks clusters, q20's quality formula scores
-    // members, the argmax window (quality desc, doc_id asc — dup texts
-    // have IDENTICAL quality, so the id tiebreak decides) elects.
-    "q52_best_of_cluster" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val meanLen = r6("(length(text) - (CAST(len(t) AS DOUBLE) - 1))/len(t)")
-      val stopR = r6("CAST(len(list_filter(t, x -> x IN ('the','a','of','and','to','in','is'))) AS DOUBLE)/len(t)")
-      val quality = r6(s"""0.4 * least(CAST(len(t) AS DOUBLE)/200.0, 1.0)
-         |      + 0.3 * least($meanLen/8.0, 1.0)
-         |      + 0.3 * least($stopR*5.0, 1.0)""".stripMargin)
-      s"""WITH RECURSIVE $dupPairsSqlCtes,
-         |edges AS (SELECT a_id AS x, b_id AS y FROM pairs
-         |          UNION SELECT b_id, a_id FROM pairs),
-         |reach(x, y) AS (
-         |  SELECT x, y FROM edges
-         |  UNION
-         |  SELECT r.x, e.y FROM reach r JOIN edges e ON r.y = e.x
-         |  WHERE e.y <> r.x),
-         |lab AS (SELECT x AS doc_id, least(min(y), x) AS canon_id
-         |        FROM reach GROUP BY x),
-         |lab2 AS (SELECT d.doc_id, coalesce(l.canon_id, d.doc_id) AS canon_id
-         |         FROM documents d LEFT JOIN lab l USING (doc_id)),
-         |sizes AS (SELECT canon_id, count(*) AS cluster_size
-         |          FROM lab2 GROUP BY canon_id),
-         |q AS (SELECT doc_id, $quality AS quality
-         |      FROM (SELECT doc_id, text, string_split(text, ' ') AS t
-         |            FROM documents)),
-         |j AS (SELECT lab2.doc_id, lab2.canon_id, sizes.cluster_size, q.quality
-         |      FROM lab2 JOIN sizes USING (canon_id) JOIN q USING (doc_id))
-         |SELECT canon_id AS cluster_id, doc_id AS best_id,
-         |       ${r6("quality")} AS quality, cluster_size
-         |FROM (SELECT doc_id, canon_id, cluster_size, quality,
-         |    row_number() OVER (PARTITION BY canon_id
-         |      ORDER BY quality DESC, doc_id ASC) AS rn
-         |  FROM j) WHERE rn = 1""".stripMargin
-    },
-
-    "q53_percentiles" ->
-      """SELECT event_type,
-        |  quantile_cont(value, 0.5) AS p50,
-        |  quantile_cont(value, 0.95) AS p95,
-        |  count(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    // q82: quantile_cont shares Spark percentile's (n−1)·p
-    // interpolation (the q53 precedent); NULL handling is an explicit
-    // CASE in both engines (greatest/least NULL semantics differ).
-    "q82_winsorize" ->
-      """WITH b AS (SELECT event_type,
-        |    quantile_cont(value, 0.05) AS lo,
-        |    quantile_cont(value, 0.95) AS hi
-        |  FROM events GROUP BY event_type)
-        |SELECT e.event_id, e.event_type, e.value,
-        |  CASE WHEN e.value IS NULL THEN NULL
-        |       ELSE least(greatest(e.value, b.lo), b.hi) END AS v_clipped
-        |FROM events e JOIN b USING (event_type)""".stripMargin,
-
-    // q51: every arithmetic step mirrors the Spark expression order
-    // (constant folds like 1.2+1.0 are the same IEEE add in both
-    // engines); ranking is on RAW scores, rounding only at output.
-    "q51_bm25_terms" -> {
-      val score = "ln(1.0 + (s.n - dft.df + 0.5)/(dft.df + 0.5))" +
-        " * (tf.tf * (1.2 + 1.0))" +
-        " / (tf.tf + 1.2*(1.0 - 0.75 + 0.75*CAST(lens.dl AS DOUBLE)/s.avgdl))"
-      s"""WITH toks AS (SELECT doc_id, t AS term FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
-         |  WHERE t <> ''),
-         |tf AS (SELECT doc_id, term, count(*) AS tf
-         |  FROM toks GROUP BY doc_id, term),
-         |lens AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id),
-         |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-         |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-         |  CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-         |  FROM lens),
-         |sc AS (SELECT tf.doc_id, tf.term, $score AS score
-         |  FROM tf JOIN dft USING (term) JOIN lens USING (doc_id)
-         |  CROSS JOIN stats s)
-         |SELECT doc_id, term,
-         |  ${graft.functions.TextFunctions.round6Sql("score")} AS score, rank
-         |FROM (SELECT doc_id, term, score,
-         |    row_number() OVER (PARTITION BY doc_id
-         |      ORDER BY score DESC, term ASC) AS rank
-         |  FROM sc) WHERE rank <= 3""".stripMargin
-    },
-
-    "q47_proximity_join" ->
-      """WITH e AS (SELECT event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS t
-        |           FROM events WHERE event_type = 'error'),
-        |a AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS t2, value FROM events)
-        |SELECT e.event_id, count(*) AS n_nearby,
-        |  CAST(sum(CAST(a.value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM e JOIN a ON abs(a.t2 - e.t) <= 300000000
-        |GROUP BY e.event_id""".stripMargin,
-
-    // q45: the bounded-heap aggregate must reproduce the window form
-    // exactly — one oracle (q12's) serves both physical plans.
-    "q45_topk_heap" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rank FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-        |  FROM orders) WHERE rank <= 3""".stripMargin,
-
-    // q54: string trigrams stand in for the Spark side's 64-bit shingle
-    // hashes — intersection COUNTS agree unless two distinct shingles
-    // collide at 2^-64 (the q14/q17 equivalence).
-    "q54_decontaminate" ->
-      """WITH sh AS MATERIALIZED (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
-        |           sh_i -> t[sh_i] || '_' || t[sh_i+1] || '_' || t[sh_i+2])) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-        |  WHERE len(t) >= 3),
-        |bench AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id % 37 = 0),
-        |corp AS (SELECT doc_id, unnest(s) AS g FROM sh WHERE doc_id % 37 <> 0)
-        |SELECT corp.doc_id AS doc_id, count(*) AS n_overlap
-        |FROM corp JOIN bench USING (g) GROUP BY 1""".stripMargin,
-
-    "q55_boilerplate" -> {
-      val r6 = graft.functions.TextFunctions.round6Sql(
-        "CAST(coalesce(nf.n_frequent, 0) AS DOUBLE) / CAST(per.n_shingles AS DOUBLE)")
-      s"""WITH sh AS MATERIALIZED (
-         |  SELECT doc_id, list_distinct(list_transform(range(1, len(t)-1),
-         |           sh_i -> t[sh_i] || '_' || t[sh_i+1] || '_' || t[sh_i+2])) AS s
-         |  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-         |  WHERE len(t) >= 3),
-         |e AS (SELECT doc_id, unnest(s) AS g FROM sh),
-         |dfq AS (SELECT g FROM (SELECT g, count(*) AS df FROM e GROUP BY 1)
-         |        WHERE df >= 5),
-         |per AS (SELECT doc_id, count(*) AS n_shingles FROM e GROUP BY 1),
-         |nf AS (SELECT doc_id, count(*) AS n_frequent
-         |       FROM e JOIN dfq USING (g) GROUP BY 1)
-         |SELECT per.doc_id AS doc_id, per.n_shingles AS n_shingles,
-         |  coalesce(nf.n_frequent, 0) AS n_frequent, $r6 AS ratio
-         |FROM per LEFT JOIN nf USING (doc_id)""".stripMargin
-    },
-
-    "q56_repetition" -> repetitionSql,
-
-    // q57: the sketch construction (seeded portable hash mod width,
-    // min over depth rows) is mirrored exactly — including the
-    // over-estimates colliding buckets produce — AND the bounded
-    // candidate stream (per hash-bucket top lists by count desc, key
-    // asc; 64 buckets × 128) is mirrored by the cand window, so the
-    // bounding itself is oracle-checked.
-    "q57_heavy_hitters" ->
-      s"""WITH rs AS (SELECT unnest(range(0, 4)) AS r),
-         |ev AS (SELECT CAST(user_id AS VARCHAR) AS k FROM events),
-         |sk AS (SELECT rs.r AS r,
-         |         ${hashSql("(CAST(rs.r AS VARCHAR) || ':' || ev.k)")} % 64 AS b,
-         |         count(*) AS c
-         |       FROM ev CROSS JOIN rs GROUP BY 1, 2),
-         |keys0 AS (SELECT k, count(*) AS exact_count FROM ev GROUP BY 1),
-         |keys AS (SELECT k, exact_count FROM (
-         |    SELECT k, exact_count,
-         |      row_number() OVER (PARTITION BY (${hashSql("k")} % 64)
-         |        ORDER BY exact_count DESC, k ASC) AS rn
-         |    FROM keys0) WHERE rn <= 128),
-         |pr AS (SELECT keys.k AS k, keys.exact_count AS exact_count, rs.r AS r,
-         |         ${hashSql("(CAST(rs.r AS VARCHAR) || ':' || keys.k)")} % 64 AS b
-         |       FROM keys CROSS JOIN rs),
-         |est AS (SELECT pr.k AS k, pr.exact_count AS exact_count,
-         |         min(sk.c) AS est_count
-         |       FROM pr JOIN sk ON sk.r = pr.r AND sk.b = pr.b GROUP BY 1, 2)
-         |SELECT k AS key, est_count, exact_count FROM est
-         |WHERE est_count >= (SELECT count(*) // 100 FROM events)""".stripMargin,
-
-    // q58: both engines pick the latest (µs-truncated ts, event_id)
-    // observation per day, then forward-fill over the generated spine.
-    "q58_gap_fill" ->
-      """WITH p AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value, event_id,
-        |             CAST(ts AS DATE) AS day
-        |           FROM events WHERE event_type = 'purchase'),
-        |d AS (SELECT user_id, day, value FROM (
-        |    SELECT user_id, day, value,
-        |      row_number() OVER (PARTITION BY user_id, day
-        |        ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM p) WHERE rn = 1),
-        |sp AS (SELECT user_id,
-        |         CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-        |       FROM (SELECT user_id, min(day) AS d0, max(day) AS d1
-        |             FROM d GROUP BY 1)),
-        |f AS (SELECT sp.user_id AS user_id, sp.day AS day,
-        |        last_value(d.value IGNORE NULLS) OVER (PARTITION BY sp.user_id
-        |          ORDER BY sp.day
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value,
-        |        d.value IS NOT NULL AS observed
-        |      FROM sp LEFT JOIN d ON sp.user_id = d.user_id AND sp.day = d.day)
-        |SELECT user_id, day, value, observed FROM f""".stripMargin,
-
-    "q59_funnel" ->
-      """WITH v AS (SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS t1
-        |           FROM events WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id AS user_id, min(CAST(e.ts AS TIMESTAMP)) AS t2
-        |      FROM events e JOIN v ON e.user_id = v.user_id
-        |      WHERE e.event_type = 'click' AND CAST(e.ts AS TIMESTAMP) > v.t1
-        |      GROUP BY 1),
-        |p AS (SELECT e.user_id AS user_id, min(CAST(e.ts AS TIMESTAMP)) AS t3
-        |      FROM events e JOIN c ON e.user_id = c.user_id
-        |      WHERE e.event_type = 'purchase' AND CAST(e.ts AS TIMESTAMP) > c.t2
-        |      GROUP BY 1)
-        |SELECT v.user_id AS user_id, v.t1 AS t1, c.t2 AS t2, p.t3 AS t3,
-        |  1 + CAST(c.t2 IS NOT NULL AS INT) + CAST(p.t3 IS NOT NULL AS INT) AS stage
-        |FROM v LEFT JOIN c USING (user_id) LEFT JOIN p USING (user_id)""".stripMargin,
-
-    "q60_cube" ->
-      """SELECT event_type, day, count(*) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM (SELECT event_type, CAST(ts AS DATE) AS day, value FROM events)
-        |GROUP BY CUBE (event_type, day)""".stripMargin,
-
-    // q61: candidates are exactly q14's verified pair set (jaccard ≥
-    // 0.8), confirmed here by character-exact Levenshtein.
-    "q61_edit_distance" ->
-      s"""WITH $dupPairsSqlCtes
-        |SELECT p.a_id AS a_id, p.b_id AS b_id,
-        |       levenshtein(da.text, db.text) AS dist
-        |FROM pairs p
-        |JOIN documents da ON da.doc_id = p.a_id
-        |JOIN documents db ON db.doc_id = p.b_id
-        |WHERE levenshtein(da.text, db.text) <= 100""".stripMargin,
-
-    // q62: the PMI expression order mirrors the Spark side exactly
-    // (c_ab/N first, then the unigram product) — the BM25 discipline.
-    "q62_bigram_pmi" -> {
-      val pmi = graft.functions.TextFunctions.round6Sql(
-        "ln((CAST(bc.c_ab AS DOUBLE) / tot.nbi) / " +
-          "((CAST(ua.c AS DOUBLE) / mt.m) * (CAST(ub.c AS DOUBLE) / mt.m)))")
-      s"""WITH toks AS (SELECT string_split(text, ' ') AS t FROM documents),
-         |uni AS (SELECT tok, count(*) AS c
-         |        FROM (SELECT unnest(t) AS tok FROM toks) GROUP BY 1),
-         |bi AS (SELECT t[bi_i] AS a, t[bi_i+1] AS b
-         |       FROM (SELECT t, unnest(range(1, len(t))) AS bi_i FROM toks)),
-         |bc AS (SELECT a, b, count(*) AS c_ab FROM bi GROUP BY 1, 2
-         |       HAVING count(*) >= 25),
-         |tot AS (SELECT CAST(count(*) AS DOUBLE) AS nbi FROM bi),
-         |mt AS (SELECT CAST(sum(c) AS DOUBLE) AS m FROM uni)
-         |SELECT bc.a || '_' || bc.b AS gram, bc.c_ab AS c_ab, $pmi AS pmi
-         |FROM bc JOIN uni ua ON ua.tok = bc.a JOIN uni ub ON ub.tok = bc.b
-         |CROSS JOIN tot CROSS JOIN mt""".stripMargin
-    },
-
-    // q63: q36's coarse-quantizer CTEs (trained on the even-id sample)
-    // composed with q50's PQ CTEs; scoring is restricted to (query,
-    // neighbor) pairs whose coarse list is among the query's nProbe
-    // probes — the exact mirror of the composed Spark operator,
-    // recall loss and quantization error included.
-    "q63_ann_ivfpq_topk" -> {
-      val foldPd = "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list(qt.pd ORDER BY qt.sub)), (a0, x0) -> a0 + x0)"
-      s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-         |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-         |${ivfIterSql(1, "c0")},
-         |${ivfIterSql(2, "c1")},
-         |${ivfIterSql(3, "c2")},
-         |s4 AS (SELECT ea.id, ea.v, c.cid,
-         |  ${dotSql("ea.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM ea CROSS JOIN c3 c),
-         |a4 AS (SELECT id, cid FROM (
-         |  SELECT id, cid,
-         |    row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-         |  FROM s4) WHERE rn = 1),
-         |q AS (SELECT id AS q_id, v AS qv FROM ea WHERE id < 8),
-         |ps AS (SELECT q.q_id, c.cid,
-         |  ${dotSql("q.qv", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM q CROSS JOIN c3 c),
-         |pr AS (SELECT q_id, cid FROM (
-         |  SELECT q_id, cid,
-         |    row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn
-         |  FROM ps) WHERE rn <= 4),
-         |esa AS (SELECT id, sub, v[sub*8+1 : sub*8+8] AS vs
-         |  FROM ea CROSS JOIN (SELECT unnest(range(0, 8)) AS sub)),
-         |es AS (SELECT * FROM esa WHERE id % 2 = 0),
-         |pc0 AS (SELECT sub,
-         |  row_number() OVER (PARTITION BY sub ORDER BY id) - 1 AS cid,
-         |  vs AS c
-         |  FROM es WHERE id IN (SELECT id FROM e ORDER BY id LIMIT 16)),
-         |${pqIterSql(1, "pc0")},
-         |${pqIterSql(2, "pc1")},
-         |pes AS (SELECT esa.id, esa.sub, c.cid,
-         |  ${dotSql("esa.vs", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM esa JOIN pc2 c ON esa.sub = c.sub),
-         |pea AS (SELECT id, sub, cid FROM (
-         |  SELECT id, sub, cid,
-         |    row_number() OVER (PARTITION BY id, sub ORDER BY d2, cid) AS rn
-         |  FROM pes) WHERE rn = 1),
-         |qsub AS (SELECT id AS q_id, sub, vs FROM esa WHERE id < 8),
-         |qt AS (SELECT q2.q_id, c.sub, c.cid,
-         |  ${dotSql("q2.vs", "q2.vs")} - 2*${dotSql("q2.vs", "c.c")}
-         |    + ${dotSql("c.c", "c.c")} AS pd
-         |  FROM qsub q2 JOIN pc2 c ON q2.sub = c.sub),
-         |sc AS (SELECT qt.q_id, pea.id AS n_id,
-         |  ${graft.functions.TextFunctions.round6Sql(foldPd)} AS approx_d2
-         |  FROM pea JOIN qt ON pea.sub = qt.sub AND pea.cid = qt.cid
-         |  GROUP BY qt.q_id, pea.id),
-         |scf AS (SELECT sc.q_id, sc.n_id, sc.approx_d2
-         |  FROM sc JOIN a4 ON sc.n_id = a4.id
-         |  JOIN pr ON pr.q_id = sc.q_id AND pr.cid = a4.cid)
-         |SELECT q_id, n_id, approx_d2, rank FROM (
-         |  SELECT q_id, n_id, approx_d2,
-         |    row_number() OVER (PARTITION BY q_id
-         |      ORDER BY approx_d2 ASC, n_id ASC) AS rank
-         |  FROM scf WHERE q_id <> n_id) WHERE rank <= 5""".stripMargin
-    },
-
-    // q80: q63's coarse CTEs (c0..c3 + full assignment a4), then PQ
-    // trained/encoded on RESIDUALS rv = v − c(a4.cid); query tables
-    // are per-(q, probed list) from the query's residual against that
-    // list's centroid — the exact mirror of ivfPqResidualTopK
-    // (listTables semantics: a vector scores under its own list's
-    // table, and only for queries probing that list).
-    "q80_ann_ivfpq_residual_topk" -> {
-      val foldPd = "list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-        "list(qt.pd ORDER BY qt.sub)), (a0, x0) -> a0 + x0)"
-      s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-         |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-         |${ivfIterSql(1, "c0")},
-         |${ivfIterSql(2, "c1")},
-         |${ivfIterSql(3, "c2")},
-         |s4 AS (SELECT ea.id, ea.v, c.cid,
-         |  ${dotSql("ea.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM ea CROSS JOIN c3 c),
-         |a4 AS (SELECT id, cid FROM (
-         |  SELECT id, cid,
-         |    row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-         |  FROM s4) WHERE rn = 1),
-         |rv AS (SELECT ea.id,
-         |  list_transform(range(1, len(ea.v)+1), ri -> ea.v[ri] - c.c[ri]) AS v
-         |  FROM ea JOIN a4 ON ea.id = a4.id JOIN c3 c ON a4.cid = c.cid),
-         |esa AS (SELECT id, sub, v[sub*8+1 : sub*8+8] AS vs
-         |  FROM rv CROSS JOIN (SELECT unnest(range(0, 8)) AS sub)),
-         |es AS (SELECT * FROM esa WHERE id % 2 = 0),
-         |pc0 AS (SELECT sub,
-         |  row_number() OVER (PARTITION BY sub ORDER BY id) - 1 AS cid,
-         |  vs AS c
-         |  FROM es WHERE id IN (SELECT id FROM e ORDER BY id LIMIT 16)),
-         |${pqIterSql(1, "pc0")},
-         |${pqIterSql(2, "pc1")},
-         |pes AS (SELECT esa.id, esa.sub, c.cid,
-         |  ${dotSql("esa.vs", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM esa JOIN pc2 c ON esa.sub = c.sub),
-         |pea AS (SELECT id, sub, cid FROM (
-         |  SELECT id, sub, cid,
-         |    row_number() OVER (PARTITION BY id, sub ORDER BY d2, cid) AS rn
-         |  FROM pes) WHERE rn = 1),
-         |q AS (SELECT id AS q_id, v AS qv FROM ea WHERE id < 8),
-         |ps AS (SELECT q.q_id, c.cid,
-         |  ${dotSql("q.qv", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM q CROSS JOIN c3 c),
-         |pr AS (SELECT q_id, cid FROM (
-         |  SELECT q_id, cid,
-         |    row_number() OVER (PARTITION BY q_id ORDER BY d2, cid) AS rn
-         |  FROM ps) WHERE rn <= 4),
-         |qr AS (SELECT pr.q_id, pr.cid AS lcid,
-         |  list_transform(range(1, len(q.qv)+1), ri -> q.qv[ri] - c.c[ri]) AS rqv
-         |  FROM pr JOIN q ON pr.q_id = q.q_id JOIN c3 c ON pr.cid = c.cid),
-         |qsub AS (SELECT q_id, lcid, sub, rqv[sub*8+1 : sub*8+8] AS vs
-         |  FROM qr CROSS JOIN (SELECT unnest(range(0, 8)) AS sub)),
-         |qt AS (SELECT q2.q_id, q2.lcid, c.sub, c.cid,
-         |  ${dotSql("q2.vs", "q2.vs")} - 2*${dotSql("q2.vs", "c.c")}
-         |    + ${dotSql("c.c", "c.c")} AS pd
-         |  FROM qsub q2 JOIN pc2 c ON q2.sub = c.sub),
-         |sc AS (SELECT qt.q_id, pea.id AS n_id,
-         |  ${graft.functions.TextFunctions.round6Sql(foldPd)} AS approx_d2
-         |  FROM pea JOIN a4 ON pea.id = a4.id
-         |  JOIN qt ON pea.sub = qt.sub AND pea.cid = qt.cid
-         |    AND qt.lcid = a4.cid
-         |  GROUP BY qt.q_id, pea.id)
-         |SELECT q_id, n_id, approx_d2, rank FROM (
-         |  SELECT q_id, n_id, approx_d2,
-         |    row_number() OVER (PARTITION BY q_id
-         |      ORDER BY approx_d2 ASC, n_id ASC) AS rank
-         |  FROM sc WHERE q_id <> n_id) WHERE rank <= 5""".stripMargin
-    },
-
-    // q81/q83: ONE span-derivation CTE chain serves both oracles (the
-    // engine's shared-derivation principle, mirrored). The oracle
-    // groups on the RAW n-gram string where the engine groups on
-    // (xxhash64, length) — the q13 fingerprint precedent: a collision
-    // would surface here as a hash mismatch.
-    "q81_repeated_spans" ->
-      s"""WITH $repeatedSpanCtes
-         |SELECT doc_id, start_tok, end_tok, marked_grams FROM spans""".stripMargin,
-
-    // q89: the (i,j) product sums mirror the engine's round6+DECIMAL
-    // policy; cov derives in the identical double expression order
-    // (g/n − (si/n)·(sj/n)).
-    "q89_gram_cov" -> gramCovSql,
-
-    // q92: power iteration from q89's ROUNDED covariances — both
-    // engines start from identical doubles (q89 is hash-equal), so
-    // the unrolled ordered-fold iterations (the ivfIterSql precedent)
-    // produce the identical eigenvector, sign included.
-    "q92_pca_project" -> {
-      val r6 = graft.functions.TextFunctions.round6Sql _
-      val itersSql = (1 to 8).map(k => pcaIterSql(k, s"w${k - 1}"))
-        .mkString(",\n")
-      s"""WITH g AS MATERIALIZED ($gramCovSql),
-         |cv AS MATERIALIZED (SELECT i, j, cov FROM g
-         |       UNION ALL SELECT j AS i, i AS j, cov FROM g WHERE i <> j),
-         |w0 AS MATERIALIZED (SELECT unnest(range(0, 64)) AS i,
-         |       ${r6("1.0/sqrt(64.0)")} AS x),
-         |$itersSql,
-         |wa AS (SELECT list(x ORDER BY i) AS w FROM w8),
-         |e AS (SELECT vec_id,
-         |  list_transform(embedding, px -> CAST(px AS DOUBLE)) AS v
-         |  FROM embeddings WHERE len(embedding) = 64)
-         |SELECT vec_id, ${r6(dotSql("e.v", "wa.w"))} AS pc1
-         |FROM e CROSS JOIN wa""".stripMargin
-    },
-
-    // q90: quantile_cont ≡ Spark percentile (q53/q82 precedent);
-    // zero-IQR keys scale to NULL, not ±Inf.
-    "q90_robust_scale" -> {
-      val sc = graft.functions.TextFunctions.round6Sql(
-        "(e.value - b.med) / b.iqr")
-      s"""WITH b AS (SELECT event_type,
-         |    quantile_cont(value, 0.5) AS med,
-         |    quantile_cont(value, 0.75) - quantile_cont(value, 0.25) AS iqr
-         |  FROM events GROUP BY event_type)
-         |SELECT e.event_id, e.event_type, e.value,
-         |  CASE WHEN e.value IS NULL OR b.iqr = 0 THEN NULL
-         |       ELSE $sc END AS v_scaled
-         |FROM events e JOIN b USING (event_type)""".stripMargin
-    },
-
-    // q86: the oracle dedups on RAW text (the q13 precedent — an
-    // engine-side (xxhash64, length) collision would surface here).
-    "q86_incremental_dedup" ->
-      """WITH corpus AS (SELECT * FROM documents WHERE doc_id % 2 = 0),
-        |batch AS (SELECT * FROM documents WHERE doc_id % 2 = 1),
-        |firsts AS (SELECT min(doc_id) AS doc_id FROM batch GROUP BY text),
-        |admitted AS (
-        |  SELECT b.doc_id FROM batch b JOIN firsts f USING (doc_id)
-        |  WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.text = b.text))
-        |SELECT doc_id, lang FROM batch JOIN admitted USING (doc_id)""".stripMargin,
-
-    // q87: identical integer window arithmetic; DuckDB's 1-based
-    // inclusive list slice clamps at the list end like Spark's slice.
-    "q87_sliding_chunks" ->
-      """WITH t AS (SELECT doc_id AS id, string_split(text, ' ') AS toks
-        |           FROM documents),
-        |n AS (SELECT id, toks, CAST(len(toks) AS BIGINT) AS n FROM t),
-        |ch AS (SELECT id, toks, n,
-        |  CASE WHEN n <= 64 THEN 1 ELSE ((n - 64 + 47) // 48) + 1 END AS nchunks
-        |  FROM n)
-        |SELECT id, chunk_id, chunk_id * 48 AS start_tok,
-        |  least(64, n - chunk_id * 48) AS n_tok,
-        |  array_to_string(toks[chunk_id * 48 + 1 : chunk_id * 48 + 64], ' ')
-        |    AS chunk_text
-        |FROM (SELECT id, toks, n, unnest(range(0, nchunks)) AS chunk_id FROM ch)""".stripMargin,
-
-    // q84: same two-pass arithmetic as Sampling.mixSample, with the
-    // expression trees parenthesized to match Spark's left-assoc
-    // evaluation exactly (min(n/s) feasibility scalar, then
-    // floor(((res*s)*nout)/n) per-group thresholds, then the KMV-
-    // scrambled portable-hash bucket at 1e-6 granularity).
-    "q84_source_mix" ->
-      s"""WITH shares(g, s) AS (VALUES ('en', 0.4), ('zh', 0.2),
-         |  ('es', 0.2), ('de', 0.1), ('fr', 0.1)),
-         |cnt AS (SELECT lang AS g, CAST(count(*) AS DOUBLE) AS n
-         |        FROM documents JOIN shares ON lang = g GROUP BY lang),
-         |nout AS (SELECT min(n / s) AS nout FROM cnt JOIN shares USING (g)),
-         |thr AS (SELECT g, CAST(floor(1000000.0 * s * nout / n) AS BIGINT) AS thr
-         |        FROM cnt JOIN shares USING (g) CROSS JOIN nout)
-         |SELECT doc_id, lang FROM documents JOIN thr ON lang = g
-         |WHERE 1566083941 * ((${hashSql("CAST(doc_id AS VARCHAR)")}) + 1)
-         |      % 1000000007 % 1000000 < thr""".stripMargin,
-
-    // q83: apply the q81 cut list — ANTI JOIN on the span ranges, then
-    // order-deterministic text rebuild; pass-through docs via LEFT JOIN.
-    "q83_span_cut" ->
-      s"""WITH $repeatedSpanCtes,
-         |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok,
-         |         unnest(range(0, len(string_split(text, ' ')))) AS pos
-         |         FROM documents),
-         |kept AS (SELECT t.doc_id, t.pos, t.tok FROM toks t ANTI JOIN spans s
-         |         ON t.doc_id = s.doc_id
-         |         AND t.pos >= s.start_tok AND t.pos < s.end_tok),
-         |reb AS (SELECT doc_id,
-         |        array_to_string(list(tok ORDER BY pos), ' ') AS text_cut,
-         |        count(*) AS nk FROM kept GROUP BY doc_id)
-         |SELECT d.doc_id, coalesce(reb.text_cut, '') AS text_cut,
-         |  len(string_split(d.text, ' ')) - coalesce(reb.nk, 0) AS removed_tokens
-         |FROM documents d LEFT JOIN reb ON d.doc_id = reb.doc_id""".stripMargin,
-
-    // q64: register rank uses bin()-string bit length — integer-exact,
-    // no floating log2; Σ2^(−reg) is a sum of exact powers of two
-    // (order-independent in double), so the estimate mirrors exactly.
-    "q64_hll_distinct" ->
-      s"""WITH h0 AS (
-         |  SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS month,
-         |         l_orderkey,
-         |         ${hashSql("CAST(l_orderkey AS VARCHAR)")} AS ph
-         |  FROM lineitem),
-         |h AS (SELECT month, l_orderkey,
-         |        (1566083941 * (ph + 1)) % 1000000007 AS g1,
-         |        (1103515245 * (ph + 7)) % 1000000007 AS g2
-         |      FROM h0),
-         |r AS (SELECT month, g1 % 64 AS b,
-         |        max(25 - length(ltrim(bin(g2 % 16777216), '0'))) AS reg
-         |      FROM h GROUP BY month, b),
-         |a AS (SELECT month,
-         |        sum(power(2.0, -reg)) + (64 - count(*)) AS s,
-         |        64 - count(*) AS zeros
-         |      FROM r GROUP BY month),
-         |x AS (SELECT month, count(DISTINCT l_orderkey) AS exact_d
-         |      FROM h GROUP BY month),
-         |e AS (SELECT a.month AS month,
-         |        0.709 * 4096.0 / a.s AS raw, a.zeros AS zeros
-         |      FROM a)
-         |SELECT e.month AS month,
-         |  floor((CASE WHEN raw <= 160.0 AND zeros > 0
-         |              THEN 64.0 * ln(64.0 / zeros) ELSE raw END) * 10000 + 0.5)
-         |    / 10000 AS orders_est,
-         |  x.exact_d AS orders_exact
-         |FROM e JOIN x ON e.month = x.month""".stripMargin,
-
-    // q65: bin ids, cumulative counts and in-bin interpolation mirror
-    // the Spark expressions term for term (t = p·n computed once,
-    // width = (hi−lo)/64, est = lo + (bin + (t−cum_prev)/cnt)·width).
-    "q65_histogram_quantiles" -> {
-      val est = graft.functions.TextFunctions.round6Sql(
-        "lo + (CAST(bin AS DOUBLE) + (p * CAST(n AS DOUBLE) - " +
-          "CAST(cum_prev AS DOUBLE)) / CAST(cnt AS DOUBLE)) * ((hi - lo) / 64)")
-      s"""WITH base AS (SELECT event_type AS key, CAST(value AS DOUBLE) AS v
-         |              FROM events WHERE value IS NOT NULL),
-         |stats AS (SELECT key, min(v) AS lo, max(v) AS hi, count(*) AS n
-         |          FROM base GROUP BY 1),
-         |binned AS (SELECT b.key AS key,
-         |    CAST(CASE WHEN s.hi = s.lo THEN 0
-         |         ELSE least(floor((b.v - s.lo) / (s.hi - s.lo) * 64), 63)
-         |         END AS BIGINT) AS bin,
-         |    count(*) AS cnt
-         |  FROM base b JOIN stats s ON b.key = s.key GROUP BY 1, 2),
-         |cum AS (SELECT binned.key AS key, bin, cnt, s.lo, s.hi, s.n,
-         |    sum(cnt) OVER (PARTITION BY binned.key ORDER BY bin
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM binned JOIN stats s ON binned.key = s.key),
-         |pr AS (SELECT key, bin, cnt, lo, hi, n, cum, cum - cnt AS cum_prev,
-         |    unnest([0.5, 0.95]) AS p FROM cum)
-         |SELECT key, p, $est AS est, n
-         |FROM pr
-         |WHERE CAST(cum AS DOUBLE) >= p * CAST(n AS DOUBLE)
-         |  AND CAST(cum_prev AS DOUBLE) < p * CAST(n AS DOUBLE)""".stripMargin
-    },
-
-    "q66_ohlc_bars" ->
-      """WITH base AS (SELECT event_type AS series, CAST(ts AS DATE) AS day,
-        |    CAST(ts AS TIMESTAMP) AS ts2, event_id AS id, value AS v
-        |  FROM events),
-        |w AS (SELECT series, day, v,
-        |    row_number() OVER (PARTITION BY series, day
-        |      ORDER BY ts2 ASC, id ASC) AS rn1,
-        |    row_number() OVER (PARTITION BY series, day
-        |      ORDER BY ts2 DESC, id DESC) AS rn2
-        |  FROM base)
-        |SELECT series, day,
-        |  max(CASE WHEN rn1 = 1 THEN v END) AS open,
-        |  max(v) AS high, min(v) AS low,
-        |  max(CASE WHEN rn2 = 1 THEN v END) AS close,
-        |  count(*) AS n
-        |FROM w GROUP BY 1, 2""".stripMargin,
-
-    // q67: the salted two-stage plan must be RESULT-NEUTRAL — its
-    // oracle is the plain one-stage GROUP BY (decimal partials make
-    // the merge order-independent).
-    "q67_salted_agg" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q68_token_drift" -> {
-      val pa = "(CAST(c_a AS DOUBLE) + 1.0) / (n_a + vocab)"
-      val pb = "(CAST(c_b AS DOUBLE) + 1.0) / (n_b + vocab)"
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH ta AS (SELECT unnest(string_split(text, ' ')) AS tok
-         |            FROM documents WHERE length(source) = 4),
-         |tb AS (SELECT unnest(string_split(text, ' ')) AS tok
-         |       FROM documents WHERE length(source) <> 4),
-         |ca AS (SELECT tok, count(*) AS c_a FROM ta GROUP BY 1),
-         |cb AS (SELECT tok, count(*) AS c_b FROM tb GROUP BY 1),
-         |j AS (SELECT coalesce(ca.tok, cb.tok) AS tok,
-         |        coalesce(c_a, 0) AS c_a, coalesce(c_b, 0) AS c_b
-         |      FROM ca FULL OUTER JOIN cb ON ca.tok = cb.tok),
-         |tot AS (SELECT CAST(sum(c_a) AS DOUBLE) AS n_a,
-         |          CAST(sum(c_b) AS DOUBLE) AS n_b,
-         |          CAST(count(*) AS DOUBLE) AS vocab FROM j)
-         |SELECT tok, c_a, c_b, ${r6(pa)} AS p_a, ${r6(pb)} AS p_b,
-         |  ${r6(s"($pa) * ln(($pa) / ($pb))")} AS contrib
-         |FROM j CROSS JOIN tot WHERE c_a + c_b >= 20""".stripMargin
-    },
-
-    // q69: the integer fixed-point design makes three unrolled rounds
-    // exactly mirrorable — floor-div (`//`) contributions and integer
-    // sums leave no FP-order freedom; the only double appears in the
-    // final micro-units → rank projection.
-    "q69_pagerank" -> {
-      def iter(i: Int): String = {
-        val prev = s"r${i - 1}"
-        s"""c$i AS (SELECT e.dst AS dst,
-           |    sum(r.r * 85 // 100 // o.deg) AS in_sum
-           |  FROM edges e JOIN $prev r ON e.src = r.id
-           |  JOIN outdeg o ON e.src = o.src GROUP BY 1),
-           |r$i AS (SELECT v.id AS id,
-           |    (1000000000000 * 15 // 100 // nv.n) + coalesce(c.in_sum, 0) AS r
-           |  FROM verts v CROSS JOIN nv LEFT JOIN c$i c ON v.id = c.dst)""".stripMargin
-      }
-      s"""WITH $dupPairsSqlCtes,
-         |verts AS (SELECT doc_id AS id FROM documents),
-         |edges AS (SELECT a_id AS src, b_id AS dst FROM pairs
-         |          UNION ALL SELECT b_id AS src, a_id AS dst FROM pairs),
-         |outdeg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1),
-         |nv AS (SELECT count(*) AS n FROM verts),
-         |r0 AS (SELECT v.id AS id, 1000000000000 // nv.n AS r
-         |       FROM verts v CROSS JOIN nv),
-         |${iter(1)},
-         |${iter(2)},
-         |${iter(3)}
-         |SELECT id, CAST(r AS DOUBLE) / 1000000000000.0 AS rank FROM r3""".stripMargin
-    },
-
-    // q71: the full chain — 3 unrolled IVF Lloyd iterations (the q36
-    // mirror, shared helper), argmin assignment (ties → lowest cid),
-    // within-cluster lower-id cosine probe — is deterministic, so the
-    // drop decisions reproduce exactly.
-    "q71_semdedup" ->
-      s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-         |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-         |${ivfIterSql(1, "c0")},
-         |${ivfIterSql(2, "c1")},
-         |${ivfIterSql(3, "c2")},
-         |s4 AS (SELECT ea.id, ea.v, c.cid,
-         |  ${dotSql("ea.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM ea CROSS JOIN c3 c),
-         |asn AS (SELECT id, v, cid FROM (
-         |  SELECT id, v, cid,
-         |    row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-         |  FROM s4) WHERE rn = 1),
-         |nr AS (SELECT id, v, cid, sqrt(${dotSql("v", "v")}) AS nrm FROM asn),
-         |dr AS (SELECT DISTINCT a.id AS id
-         |  FROM nr a JOIN nr b ON a.cid = b.cid AND b.id < a.id
-         |  WHERE a.nrm > 0 AND b.nrm > 0
-         |    AND round(${dotSql("a.v", "b.v")} / (a.nrm * b.nrm), 6) >= 0.35)
-         |SELECT nr.id AS id, nr.cid AS cid, (dr.id IS NULL) AS kept
-         |FROM nr LEFT JOIN dr ON nr.id = dr.id""".stripMargin,
-
-    // q72: the binned containment join must equal the naive inequality
-    // join — DuckDB runs the naive form directly (exact DECIMAL sums
-    // make the aggregate order-free).
-    "q72_interval_lookup" ->
-      """WITH bands AS (SELECT n_name,
-        |    n_nationkey * 20.0 AS lo, n_nationkey * 20.0 + 30.0 AS hi
-        |  FROM nation)
-        |SELECT b.n_name AS band, count(*) AS n,
-        |  CAST(sum(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
-        |GROUP BY 1""".stripMargin,
-
-    "q73_hash_split" ->
-      s"""WITH b AS (SELECT doc_id, length(text) AS chars,
-         |    ${hashSql("CAST(doc_id AS VARCHAR)")} % 100 AS bk
-         |  FROM documents)
-         |SELECT CASE WHEN bk < 80 THEN 'train'
-         |            WHEN bk < 90 THEN 'val' ELSE 'test' END AS split,
-         |  count(*) AS n_docs, CAST(sum(chars) AS BIGINT) AS chars
-         |FROM b GROUP BY 1""".stripMargin,
-
-    // q74: per-shard cumulative sums + integer DIV chunk arithmetic —
-    // the whole layout is exact integer math over a deterministic
-    // (shard, id) order.
-    "q74_concat_chunks" ->
-      s"""WITH b AS (SELECT doc_id AS id,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS tokens,
-         |    ${hashSql("CAST(doc_id AS VARCHAR)")} % 8 AS shard
-         |  FROM documents),
-         |c AS (SELECT id, shard, tokens,
-         |    CAST(sum(tokens) OVER (PARTITION BY shard ORDER BY id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-         |  FROM b)
-         |SELECT id, shard, tokens, cum - tokens AS start_off,
-         |  (cum - tokens) // 512 AS chunk_id,
-         |  CAST(CASE WHEN tokens = 0 THEN 0
-         |       ELSE (cum - 1) // 512 - (cum - tokens) // 512 + 1 END AS BIGINT)
-         |    AS n_chunks
-         |FROM c""".stripMargin,
-
-    // q75: contribs mirror Spark term-for-term (same +1/+|V| add-one
-    // arithmetic, same round6 before the DECIMAL(28,6) sum, division
-    // after the exact sum).
-    "q75_lm_score" -> lmScoreSql,
-
-    // q156: the whole Viterbi-EM unrolled — candidate substrings,
-    // round6'd log-prob maps, the forward DP as a flat [best, choice]
-    // list fold, and the backtrack as a RECURSIVE CTE walk. Two
-    // DuckDB-1.0 lambda hazards are designed around (found by
-    // per-word differential testing against an independent python
-    // DP): (a) a list_reduce nested INSIDE a list_reduce lambda
-    // cross-contaminates rows — the inner argmax is therefore a
-    // list_transform + list_aggregate('max') + list_filter two-pass
-    // (same j-ascending strict-> tie rule: the filter picks the
-    // FIRST j attaining the max); (b) a second row-referencing
-    // list_reduce (the backtrack) contaminates too — hence the
-    // set-based recursive walk, no lambda at all. Missing pieces are
-    // the engine's exact -1e9 penalty; add-one M-steps; final prune.
-    "q156_unigram_train" ->
-      s"""WITH RECURSIVE $unigramOracleCtes
-         |$unigramFinalSql""".stripMargin,
-
-    // q159: the SERVING path through the SAME trained map — the q156
-    // chain nests whole, its pruned output becomes the score map, one
-    // more fw/walk pass segments every distinct word, and the doc
-    // piece stream (word order x in-word piece order, walk `pos` = the
-    // piece's start offset) is position-weight checksummed.
-    "q159_unigram_segment" ->
-      s"""WITH RECURSIVE $unigramOracleCtes,
-         |mF AS (SELECT map_from_entries(list(struct_pack(
-         |    k := piece, v := score))) AS sc
-         |  FROM ($unigramFinalSql) fin),
-         |${unigramEStepSql("mF", "fw3", "walk3", "seg3", "u3")},
-         |wordseg AS (SELECT word, list(piece ORDER BY pos) AS pieces
-         |  FROM walk3 WHERE piece IS NOT NULL GROUP BY word),
-         |docw AS (SELECT doc_id, g['wi'] AS wi, g['w'] AS word FROM (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(ws) + 1),
-         |      i -> struct_pack(wi := i, w := ws[CAST(i AS INT)]))) AS g
-         |  FROM (SELECT doc_id, list_filter(
-         |      regexp_split_to_array(text, '[ \\t\\n\\r\\f\\x0B]+'),
-         |      x -> x <> '') AS ws FROM documents))),
-         |str AS (SELECT doc_id, wi, g2['pi'] AS pi, g2['p'] AS piece FROM (
-         |  SELECT doc_id, wi, unnest(list_transform(range(1, len(pieces) + 1),
-         |      i -> struct_pack(pi := i, p := pieces[CAST(i AS INT)]))) AS g2
-         |  FROM docw JOIN wordseg USING (word))),
-         |pos AS (SELECT doc_id, piece,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY wi, pi) AS p
-         |  FROM str)
-         |SELECT doc_id, count(*) AS n_pieces,
-         |  CAST(sum((${hashSql("piece")}) * p) AS BIGINT) AS piece_checksum
-         |FROM pos GROUP BY doc_id""".stripMargin,
-
-    // q179: the q156 chain nests whole, the pruned map drops the
-    // bottom-16 multi-char pieces (score ASC, piece ASC — the engine's
-    // pruneScores rule), TWO serving E-steps (full fwB / pruned fwA)
-    // segment every distinct word, per-doc counts join.
-    "q179_unigram_prune_refit" ->
-      s"""WITH RECURSIVE $unigramOracleCtes,
-         |finT AS MATERIALIZED (SELECT piece, score
-         |  FROM ($unigramFinalSql)),
-         |dropk AS (SELECT piece FROM (
-         |    SELECT piece,
-         |      row_number() OVER (ORDER BY score ASC, piece ASC) AS rk
-         |    FROM finT WHERE length(piece) > 1) WHERE rk <= 16),
-         |mF AS (SELECT map_from_entries(list(struct_pack(
-         |    k := piece, v := score))) AS sc FROM finT),
-         |mP AS (SELECT map_from_entries(list(struct_pack(
-         |    k := piece, v := score))) AS sc
-         |  FROM finT WHERE piece NOT IN (SELECT piece FROM dropk)),
-         |${unigramEStepSql("mF", "fwB", "walkB", "segB", "uB")},
-         |${unigramEStepSql("mP", "fwA", "walkA", "segA", "uA")},
-         |wordsegB AS (SELECT word, count(*) AS np
-         |  FROM walkB WHERE piece IS NOT NULL GROUP BY word),
-         |wordsegA AS (SELECT word, list(piece ORDER BY pos) AS pieces
-         |  FROM walkA WHERE piece IS NOT NULL GROUP BY word),
-         |docw AS (SELECT doc_id, g['wi'] AS wi, g['w'] AS word FROM (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(ws) + 1),
-         |      i -> struct_pack(wi := i, w := ws[CAST(i AS INT)]))) AS g
-         |  FROM (SELECT doc_id, list_filter(
-         |      regexp_split_to_array(text, '[ \\t\\n\\r\\f\\x0B]+'),
-         |      x -> x <> '') AS ws FROM documents))),
-         |nb AS (SELECT doc_id, CAST(sum(np) AS BIGINT) AS n_before
-         |  FROM docw JOIN wordsegB USING (word) GROUP BY 1),
-         |strA AS (SELECT doc_id, wi, g2['pi'] AS pi, g2['p'] AS piece
-         |  FROM (
-         |  SELECT doc_id, wi, unnest(list_transform(
-         |      range(1, len(pieces) + 1),
-         |      i -> struct_pack(pi := i, p := pieces[CAST(i AS INT)]))) AS g2
-         |  FROM docw JOIN wordsegA USING (word))),
-         |posA AS (SELECT doc_id, piece,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY wi, pi) AS p
-         |  FROM strA),
-         |na AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_after,
-         |    CAST(sum((${hashSql("piece")}) * p) AS BIGINT)
-         |      AS pruned_checksum
-         |  FROM posA GROUP BY doc_id)
-         |SELECT nb.doc_id, nb.n_before, na.n_after,
-         |  na.n_after - nb.n_before AS fertility_delta,
-         |  na.pruned_checksum
-         |FROM nb JOIN na USING (doc_id)""".stripMargin,
-
-    // q160: the WHOLE curation chain replayed stage by stage — the
-    // q134 URL canonicalization, q136 C4 line pass, q141 paragraph
-    // election, q131 Gopher panel, then the q147 classifier chain and
-    // q148 DSIR chain (SHARED defs — classifierChainSql/dsirChainSql,
-    // so the composed model is definitionally the standalone one)
-    // trained/selected over the curated survivors k4.
-    "q160_curate_e2e" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val stops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-        .map(w => s"(CASE WHEN list_contains(ws, '$w') THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH b0 AS (SELECT doc_id, lang,
-         |    'HTTP://WWW.Site' || CAST(doc_id % 250 % 7 AS VARCHAR) ||
-         |      '.COM:80/Articles/' || CAST(doc_id % 250 AS VARCHAR) ||
-         |      '?utm_source=feed&id=' || CAST(doc_id % 250 AS VARCHAR) AS url,
-         |    concat_ws(chr(10), text || ' and that is the end.',
-         |      'Subscribe to our newsletter today.',
-         |      'Too short.',
-         |      CASE WHEN doc_id % 11 = 0 THEN 'code { block }'
-         |           ELSE 'Filler line number six right here.' END) AS page
-         |  FROM documents),
-         |u1 AS (SELECT doc_id, string_split(url, '#')[1] AS s0 FROM b0),
-         |u2 AS (SELECT doc_id,
-         |    lower(regexp_extract(s0, '^([^:/?#]+)://', 1)) AS scheme,
-         |    regexp_replace(s0, '^[^:/?#]+://', '') AS rest FROM u1),
-         |u3 AS (SELECT doc_id, scheme,
-         |    lower(regexp_extract(rest, '^([^/?]*)', 1)) AS auth0,
-         |    substring(rest, length(regexp_extract(rest, '^([^/?]*)', 1)) + 1)
-         |      AS tail FROM u2),
-         |u4 AS (SELECT doc_id, scheme,
-         |    CASE WHEN scheme = 'http' AND ends_with(auth0, ':80')
-         |           THEN left(auth0, length(auth0) - 3)
-         |         WHEN scheme = 'https' AND ends_with(auth0, ':443')
-         |           THEN left(auth0, length(auth0) - 4)
-         |         ELSE auth0 END AS auth,
-         |    CASE WHEN contains(tail, '?')
-         |         THEN left(tail, strpos(tail, '?') - 1) ELSE tail END AS path,
-         |    CASE WHEN contains(tail, '?')
-         |         THEN substring(tail, strpos(tail, '?') + 1) ELSE '' END AS qs
-         |  FROM u3),
-         |u5 AS (SELECT doc_id,
-         |    scheme || '://' || auth || path ||
-         |    CASE WHEN len(kept) = 0 THEN ''
-         |         ELSE '?' || array_to_string(kept, '&') END AS canon_url
-         |  FROM (SELECT *,
-         |      list_sort(list_filter(string_split(qs, '&'),
-         |        pp -> pp <> '' AND NOT (
-         |          starts_with(string_split(pp, '=')[1], 'utm_') OR
-         |          string_split(pp, '=')[1] IN ('gclid', 'fbclid', 'msclkid'))))
-         |        AS kept
-         |    FROM u4)),
-         |k1 AS MATERIALIZED (SELECT b0.* FROM b0
-         |  JOIN (SELECT min(doc_id) AS doc_id FROM u5 GROUP BY canon_url) mu
-         |  USING (doc_id)),
-         |c1 AS (SELECT doc_id, lang, page,
-         |    list_transform(string_split(page, chr(10)),
-         |      li -> trim(li, ' ' || chr(9) || chr(13) || chr(12) || chr(11)))
-         |      AS ls
-         |  FROM k1),
-         |c2 AS (SELECT doc_id, lang, page,
-         |    list_filter(ls, li -> li <> ''
-         |      AND (ends_with(li, '.') OR ends_with(li, '!') OR
-         |           ends_with(li, '?') OR ends_with(li, '"'))
-         |      AND len(list_filter(
-         |            regexp_split_to_array(li, '[ \\t\\n\\r\\f\\x0B]+'),
-         |            w -> w <> '')) >= 5
-         |      AND NOT contains(lower(li), 'javascript')) AS kept
-         |  FROM c1),
-         |k2 AS MATERIALIZED (SELECT doc_id, lang,
-         |    array_to_string(kept, chr(10)) AS t1
-         |  FROM c2
-         |  WHERE NOT contains(lower(page), 'lorem ipsum')
-         |    AND NOT contains(page, '{') AND len(kept) >= 3),
-         |p1 AS (SELECT doc_id, unnest(string_split(t1, chr(10))) AS p0,
-         |    unnest(range(0, len(string_split(t1, chr(10))))) AS pos
-         |  FROM k2),
-         |p2 AS (SELECT doc_id, pos, trim(p0) AS p FROM p1
-         |       WHERE length(trim(p0)) > 0),
-         |p3 AS (SELECT doc_id, pos, p FROM (
-         |    SELECT doc_id, pos, p, row_number() OVER
-         |      (PARTITION BY p ORDER BY doc_id, pos) AS rk FROM p2)
-         |  WHERE rk = 1),
-         |k3 AS MATERIALIZED (SELECT k2.doc_id, k2.lang,
-         |    agg.t2 AS t2
-         |  FROM k2 JOIN (SELECT doc_id,
-         |      string_agg(p, chr(10) ORDER BY pos) AS t2
-         |    FROM p3 GROUP BY doc_id) agg USING (doc_id)),
-         |go1 AS (SELECT doc_id,
-         |    list_filter(regexp_split_to_array(t2, '[ \\t\\n\\r\\f\\x0B]+'),
-         |      x -> x <> '') AS ws,
-         |    list_filter(list_transform(string_split(t2, chr(10)),
-         |      l -> trim(l, ' ' || chr(9) || chr(13) || chr(12) || chr(11))),
-         |      x -> x <> '') AS ls
-         |  FROM k3),
-         |go2 AS (SELECT doc_id,
-         |    len(ws) AS n_words,
-         |    coalesce(list_sum(list_transform(ws, x -> length(x))), 0)
-         |      AS sum_chars,
-         |    len(list_filter(ws, x -> contains(x, '#') OR contains(x, '...')))
-         |      AS n_sym,
-         |    len(ls) AS n_lines,
-         |    len(list_filter(ls, l -> l[1] = '-' OR l[1] = '*')) AS n_bullet,
-         |    len(list_filter(ls, l -> ends_with(l, '...'))) AS n_ell,
-         |    len(list_filter(ws, w -> regexp_matches(w, '[A-Za-z]')))
-         |      AS n_alpha,
-         |    ($stops) AS n_stop
-         |  FROM go1),
-         |go3 AS (SELECT doc_id FROM go2
-         |  WHERE n_words BETWEEN 50 AND 100000
-         |    AND (CASE WHEN n_words = 0 THEN 0.0
-         |         ELSE ${r6("CAST(sum_chars AS DOUBLE)/n_words")} END)
-         |      BETWEEN 3.0 AND 10.0
-         |    AND (CASE WHEN n_words = 0 THEN 0.0
-         |         ELSE ${r6("CAST(n_sym AS DOUBLE)/n_words")} END) <= 0.1
-         |    AND (CASE WHEN n_lines = 0 THEN 0.0
-         |         ELSE ${r6("CAST(n_bullet AS DOUBLE)/n_lines")} END) <= 0.9
-         |    AND (CASE WHEN n_lines = 0 THEN 0.0
-         |         ELSE ${r6("CAST(n_ell AS DOUBLE)/n_lines")} END) <= 0.3
-         |    AND (CASE WHEN n_words = 0 THEN 0.0
-         |         ELSE ${r6("CAST(n_alpha AS DOUBLE)/n_words")} END) >= 0.8
-         |    AND n_stop >= 2),
-         |k4 AS MATERIALIZED (SELECT k3.doc_id, k3.lang, k3.t2
-         |  FROM k3 JOIN go3 USING (doc_id)),
-         |${classifierChainSql(
-        """SELECT doc_id AS id,
-          |    CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-          |    string_split(t2, ' ') AS t FROM k4""".stripMargin)},
-         |${dsirChainSql(
-        """SELECT doc_id AS id, lang = 'en' AS tgt,
-          |    string_split(t2, ' ') AS t FROM k4""".stripMargin,
-        dim = 64, k = 50)}
-         |SELECT k4.doc_id, k4.lang,
-         |  ${hashSql("k4.t2")} AS text_hash,
-         |  sc.score AS clf_score, dsel.logw, dsel.rank
-         |FROM k4
-         |JOIN sc ON k4.doc_id = sc.id
-         |JOIN dsel ON k4.doc_id = dsel.id
-         |WHERE dsel.rank IS NOT NULL""".stripMargin
-    },
-
-    // q153: definitional identity with the standalone queries — the
-    // q19/q20/q56/q131 oracle bodies nest as CTEs and join on doc_id
-    // (plus one n_chars projection); any drift in the fused kernel
-    // pass breaks the corresponding column's hash.
-    "q153_quality_signals" ->
-      s"""WITH ql AS ($langIdSql),
-         |qt AS ($textQualitySql),
-         |qr AS ($repetitionSql),
-         |qg AS ($gopherGateSql),
-         |nc AS (SELECT doc_id, CAST(length(text) AS INT) AS n_chars
-         |       FROM documents)
-         |SELECT nc.doc_id, nc.n_chars,
-         |  qt.ws_tokens, qt.re_tokens, qt.quality,
-         |  ql.en_score, ql.pred_lang,
-         |  qr.dup_ngram_ratio, qr.top_token_ratio,
-         |  qg.n_words, qg.mean_word_len, qg.symbol_ratio,
-         |  qg.bullet_ratio, qg.ellipsis_ratio, qg.alpha_ratio,
-         |  qg.n_stop_present, qg.n_rules_failed,
-         |  qg.pass AS gopher_pass
-         |FROM nc
-         |JOIN ql USING (doc_id) JOIN qt USING (doc_id)
-         |JOIN qr USING (doc_id) JOIN qg ON qg.id = nc.doc_id""".stripMargin,
-
-    // q151: the q75 pair derivation with Kneser–Ney arithmetic — the
-    // context/continuation tables DERIVED from the bigram counts, the
-    // |bigrams| scalar, and the one-transcendental contribution whose
-    // operand tree matches the engine expression operand-for-operand.
-    "q151_kneser_ney_score" -> knScoreSql,
-
-    // q162: q151's whole KN derivation nested as a subquery (the q146
-    // convention, with the LM upgraded from add-one to Kneser–Ney —
-    // the ACTUAL CCNet shape: KenLM-family perplexity into per-lang
-    // tercile buckets), quantile_cont bounds, <=-chain labels.
-    "q162_kn_perplexity_buckets" ->
-      s"""WITH scored AS ($knScoreSql),
-         |sl AS (SELECT s.doc_id, d.lang, s.n_pairs, s.nll
-         |  FROM scored s JOIN documents d ON s.doc_id = d.doc_id),
-         |b AS (SELECT lang,
-         |    quantile_cont(nll, 1.0/3) AS lo,
-         |    quantile_cont(nll, 2.0/3) AS hi
-         |  FROM sl GROUP BY lang)
-         |SELECT sl.doc_id, sl.lang, sl.n_pairs, sl.nll,
-         |  CASE WHEN sl.nll <= b.lo THEN 'head'
-         |       WHEN sl.nll <= b.hi THEN 'middle'
-         |       ELSE 'tail' END AS bucket
-         |FROM sl JOIN b ON sl.lang = b.lang""".stripMargin,
-
-    // q161: the two-level interpolated-KN operand tree replayed — raw
-    // trigram counts at the top order, continuation counts over
-    // trigram types one level down, bigram-type fan-in at the unigram
-    // level, discount 0.75 at both orders, the exact cast/assoc/
-    // division order of knTrigramScore's one transcendental.
-    "q161_kn_trigram_score" -> {
-      val p2 = "((greatest(CAST(cont AS DOUBLE) - 0.75, 0.0) + " +
-        "0.75 * CAST(nfw2 AS DOUBLE) * " +
-        "(CAST(n1 AS DOUBLE) / CAST(nbt.nb AS DOUBLE))) / " +
-        "CAST(nmid AS DOUBLE))"
-      val contrib = graft.functions.TextFunctions.round6Sql(
-        "-ln((greatest(CAST(c3 AS DOUBLE) - 0.75, 0.0) + " +
-          s"0.75 * CAST(n3fw AS DOUBLE) * $p2) / CAST(c2 AS DOUBLE))")
-      s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-         |tr AS MATERIALIZED (SELECT doc_id,
-         |    g['a'] AS a, g['b'] AS b, g['c'] AS c FROM (
-         |    SELECT doc_id, unnest(list_transform(range(1, len(t) - 1),
-         |      ti -> struct_pack(a := t[ti], b := t[ti+1], c := t[ti+2]))) AS g
-         |    FROM tk WHERE len(t) >= 3)),
-         |tri AS MATERIALIZED (SELECT a, b, c, count(*) AS c3
-         |  FROM tr GROUP BY 1, 2, 3),
-         |g1 AS (SELECT a, b, sum(c3) AS c2, count(*) AS n3fw
-         |  FROM tri GROUP BY 1, 2),
-         |g2 AS MATERIALIZED (SELECT b, c, count(*) AS cont
-         |  FROM tri GROUP BY 1, 2),
-         |g3 AS (SELECT b, sum(cont) AS nmid, count(*) AS nfw2
-         |  FROM g2 GROUP BY 1),
-         |prs AS (SELECT g['a'] AS a, g['b'] AS b FROM (
-         |    SELECT unnest(list_transform(range(1, len(t)),
-         |      pi -> struct_pack(a := t[pi], b := t[pi+1]))) AS g
-         |    FROM tk WHERE len(t) >= 2)),
-         |bt AS MATERIALIZED (SELECT DISTINCT a, b FROM prs),
-         |nbt AS (SELECT count(*) AS nb FROM bt),
-         |n1c AS (SELECT b AS c, count(*) AS n1 FROM bt GROUP BY 1)
-         |SELECT tr.doc_id AS doc_id, count(*) AS n_tris,
-         |  ${graft.functions.TextFunctions.round6Sql(
-             "CAST(sum(CAST(" + contrib + " AS DECIMAL(28,6))) AS DOUBLE)" +
-               " / CAST(count(*) AS DOUBLE)")} AS nll
-         |FROM tr JOIN tri USING (a, b, c) JOIN g1 USING (a, b)
-         |  JOIN g2 USING (b, c) JOIN g3 USING (b) JOIN n1c USING (c)
-         |  CROSS JOIN nbt
-         |GROUP BY 1""".stripMargin
-    },
-
-    // q184: q161's model tables plus the pruning HAVING — trip keeps
-    // trigram types with c3 >= 2 (the engine's minCount filter);
-    // lower orders stay UNPRUNED. A LEFT join against trip decides
-    // hit vs pruned per occurrence; pruned rows take the backoff
-    // operand tree (c3 term zeroed: d·n3fw/c2 · P2, left-assoc).
-    "q184_kn_trigram_pruned" -> KnTrigramPrunedOracle,
-
-    // q185 replays q184's oracle verbatim: the bounded build is a
-    // PLAN branch (eager checkpoints, pruned-base derivations) — same
-    // model, same scores; the oracle proving that identity is the
-    // point of the query.
-    "q185_kn_trigram_pruned_bounded" -> KnTrigramPrunedOracle,
-
-    // q79: each column's profile block mirrors the Spark aggregates —
-    // non-null counts, the q38 KMV estimate formula over the same
-    // portable hashes, native-type min/max rendered to VARCHAR.
-    "q79_profile" -> {
-      def block(c: String): String = {
-        val g = s"(1566083941 * ((${hashSql(s"CAST($c AS VARCHAR)")}) + 1)) % 1000000007"
-        s"""SELECT '$c' AS "column", t.n_rows AS n_rows,
-           |  t.n_rows - s.cnt AS n_nulls,
-           |  CASE WHEN len(s.hs) < 64 THEN CAST(len(s.hs) AS DOUBLE)
-           |       ELSE floor((63.0 * 1000000007.0 / s.hs[64] - 1.0) * 10000 + 0.5) / 10000
-           |  END AS ndv_est,
-           |  s.mn AS min_val, s.mx AS max_val
-           |FROM (SELECT list_sort(list_distinct(list($g)
-           |          FILTER (WHERE $c IS NOT NULL))) AS hs,
-           |        count($c) AS cnt,
-           |        CAST(min($c) AS VARCHAR) AS mn,
-           |        CAST(max($c) AS VARCHAR) AS mx
-           |      FROM events) s CROSS JOIN t""".stripMargin
-      }
-      s"""WITH t AS (SELECT count(*) AS n_rows FROM events)
-         |${Seq("event_id", "user_id", "event_type", "value")
-             .map(block).mkString("\nUNION ALL\n")}""".stripMargin
-    },
-
-    // q78: hash-uniform priorities mirror term-for-term (same +1 /
-    // (Mod+1) uniform, same ln(u)/w, same round6 before ranking).
-    "q78_weighted_sample" -> {
-      val p = graft.functions.TextFunctions.round6Sql(
-        s"ln(CAST(${hashSql("CAST(event_id AS VARCHAR)")} + 1 AS DOUBLE)" +
-          " / 1000000008.0) / value")
-      s"""WITH b AS (SELECT event_id, $p AS p
-         |  FROM events WHERE CAST(value AS DOUBLE) > 0)
-         |SELECT id, priority, rank FROM (
-         |  SELECT event_id AS id, p AS priority,
-         |    row_number() OVER (ORDER BY p DESC, event_id ASC) AS rank
-         |  FROM b) WHERE rank <= 500""".stripMargin
-    },
-
-    // q88: the q78 priority formula, ranked per event_type.
-    "q88_weighted_sample_per_group" -> {
-      val p = graft.functions.TextFunctions.round6Sql(
-        s"ln(CAST(${hashSql("CAST(event_id AS VARCHAR)")} + 1 AS DOUBLE)" +
-          " / 1000000008.0) / value")
-      s"""WITH b AS (SELECT event_type, event_id, $p AS p
-         |  FROM events WHERE CAST(value AS DOUBLE) > 0)
-         |SELECT event_type, id, priority, rank FROM (
-         |  SELECT event_type, event_id AS id, p AS priority,
-         |    row_number() OVER (PARTITION BY event_type
-         |      ORDER BY p DESC, event_id ASC) AS rank
-         |  FROM b) WHERE rank <= 100""".stripMargin
-    },
-
-    // q76: μ/σ from EXACT decimal sums, derived in the same double
-    // expression order as the operator (μ = s1/n; σ² = s2/n − μ·μ).
-    "q76_zscore" -> {
-      val z = graft.functions.TextFunctions.round6Sql(
-        "(value - s1/n) / sqrt(s2/n - (s1/n)*(s1/n))")
-      s"""WITH st AS (SELECT event_type,
-         |    CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS s1,
-         |    CAST(sum(CAST(CAST(value AS DECIMAL(18,6)) *
-         |      CAST(value AS DECIMAL(18,6)) AS DECIMAL(38,12))) AS DOUBLE) AS s2,
-         |    CAST(count(value) AS DOUBLE) AS n
-         |  FROM events GROUP BY 1)
-         |SELECT e.event_id, e.event_type, e.value,
-         |  CASE WHEN s2/n - (s1/n)*(s1/n) > 0 THEN $z ELSE NULL END AS z
-         |FROM events e JOIN st USING (event_type)""".stripMargin
-    },
-
-    // q77: the lexical leg reuses the q51 BM25 mirror (restricted to
-    // the query doc's distinct terms, corpus = docs ≠ 0), the vector
-    // leg the q21 cosine mirror; both contribution sums and the rrf
-    // sum are round6 + DECIMAL — order-free exact end to end.
-    "q77_hybrid_rrf" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val bm25 = r6("ln(1.0 + (s.n - dft.df + 0.5)/(dft.df + 0.5))" +
-        " * (tf.tf * (1.2 + 1.0))" +
-        " / (tf.tf + 1.2*(1.0 - 0.75 + 0.75*CAST(lens.dl AS DOUBLE)/s.avgdl))")
-      val rrfC = r6("1.0/(60.0 + CAST(rank AS DOUBLE))")
-      s"""WITH qt AS (SELECT DISTINCT t AS term FROM (
-         |    SELECT unnest(string_split(text, ' ')) AS t
-         |    FROM documents WHERE doc_id = 0) WHERE t <> ''),
-         |toks AS (SELECT doc_id, t AS term FROM (
-         |    SELECT doc_id, unnest(string_split(text, ' ')) AS t
-         |    FROM documents WHERE doc_id <> 0) WHERE t <> ''),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-         |lens AS (SELECT doc_id, count(*) AS dl FROM toks GROUP BY 1),
-         |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |stats AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-         |    CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-         |  FROM lens),
-         |sc AS (SELECT tf.doc_id, $bm25 AS x
-         |  FROM tf JOIN qt USING (term) JOIN dft USING (term)
-         |  JOIN lens USING (doc_id) CROSS JOIN stats s),
-         |lexall AS (SELECT doc_id,
-         |    CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS score
-         |  FROM sc GROUP BY 1),
-         |lex AS (SELECT doc_id AS id, rnk AS rank FROM (
-         |    SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id ASC)
-         |      AS rnk FROM lexall) WHERE rnk <= 50),
-         |e AS (SELECT vec_id, embedding FROM embeddings),
-         |vsc AS (SELECT b.vec_id AS id,
-         |  round(
-         |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(a.embedding)+1),
-         |      zi -> CAST(a.embedding[zi] AS DOUBLE) * CAST(b.embedding[zi] AS DOUBLE))), (a0, x0) -> a0 + x0)
-         |    / (sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(a.embedding)+1),
-         |         zi -> CAST(a.embedding[zi] AS DOUBLE) * CAST(a.embedding[zi] AS DOUBLE))), (a0, x0) -> a0 + x0))
-         |     * sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len(b.embedding)+1),
-         |         zi -> CAST(b.embedding[zi] AS DOUBLE) * CAST(b.embedding[zi] AS DOUBLE))), (a0, x0) -> a0 + x0))), 6) AS sim
-         |  FROM e a JOIN e b ON a.vec_id = 0 AND b.vec_id <> 0),
-         |vec AS (SELECT id, rnk AS rank FROM (
-         |    SELECT id, row_number() OVER (ORDER BY sim DESC, id ASC) AS rnk
-         |    FROM vsc) WHERE rnk <= 50),
-         |u AS (SELECT id, $rrfC AS x FROM lex
-         |      UNION ALL SELECT id, $rrfC AS x FROM vec),
-         |f AS (SELECT id, CAST(sum(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS rrf
-         |      FROM u GROUP BY 1)
-         |SELECT id, rrf, rank FROM (
-         |  SELECT id, rrf, row_number() OVER (ORDER BY rrf DESC, id ASC) AS rank
-         |  FROM f) WHERE rank <= 20""".stripMargin
-    },
-
-    "q70_event_deltas" ->
-      """WITH b AS (SELECT user_id, event_id,
-        |             epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events)
-        |SELECT user_id, event_id,
-        |  lag(event_id) OVER w AS prev_event_id,
-        |  us - lag(us) OVER w AS delta_us
-        |FROM b WINDOW w AS (PARTITION BY user_id ORDER BY us ASC, event_id ASC)""".stripMargin,
-
-    // q93: the q01 mirror with weights from the committed CSV fixture —
-    // read_csv on the same absolute path the engine reads, pandas index
-    // column ignored by projection.
-    "q93_weights_csv_mean" ->
-      s"""WITH g AS ($gridSqlPlain),
-         |w AS (SELECT CAST(nhru_v1_1 AS BIGINT) AS fid,
-         |             CAST(i AS INT) AS i, CAST(j AS INT) AS j,
-         |             CAST(wght AS DOUBLE) AS wght
-         |      FROM read_csv('/root/repo/data/gm_nhru01_weights.csv',
-         |                    header = true))
-         |SELECT w.fid AS fid, g.time AS time,
-         |       floor((CAST(sum(CAST(w.wght AS DECIMAL(18,6))
-         |                      * CAST(g.pr AS DECIMAL(18,6))) AS DOUBLE)
-         |              / CAST(sum(CAST(w.wght AS DECIMAL(18,6))) AS DOUBLE))
-         |             * 10000.0 + 0.5) / 10000.0 AS wmean_pr
-         |FROM g JOIN w ON g.i = w.i AND g.j = w.j
-         |GROUP BY 1, 2""".stripMargin,
-
-    // q94: take-first = min (varname, URL) struct; the fixture keeps
-    // varnames unique per variable so arg_min is tie-free.
-    "q94_catalog_json_lookup" ->
-      """SELECT variable, min(varname) AS varname,
-        |       arg_min("URL", varname) AS "URL"
-        |FROM read_json('/root/repo/data/catalog.json')
-        |WHERE id = 'gridmet' AND variable IN ('pr', 'tmmx', 'tmmn')
-        |GROUP BY variable""".stripMargin,
-
-    // q95: the PRMS marker/skip-4/#### protocol expressed over the raw
-    // lines (read_csv with a delimiter absent from the file = one
-    // VARCHAR column per line, insertion-ordered), then the same
-    // isothermal pressure arithmetic at T = 288.15 K.
-    "q95_prms_elevation" ->
-      """WITH l AS (SELECT trim(line) AS line, row_number() OVER () AS rn
-        |  FROM read_csv('/root/repo/data/synthetic.param', header = false,
-        |                delim = '|', columns = {'line': 'VARCHAR'})),
-        |m AS (SELECT min(rn) AS mrn FROM l WHERE line = 'hru_elev'),
-        |v AS (SELECT l.line, l.rn FROM l, m WHERE l.rn > m.mrn + 4),
-        |t AS (SELECT min(rn) AS trn FROM v WHERE line LIKE '####%'),
-        |vals AS (SELECT CAST(v.line AS DOUBLE) AS elev,
-        |                row_number() OVER (ORDER BY v.rn) AS nhru
-        |         FROM v, t WHERE v.rn < t.trn)
-        |SELECT CAST(nhru AS BIGINT) AS nhru, elev,
-        |       round(1013.25 * exp(-9.80665 * elev / (287.05 * 288.15)), 6)
-        |         AS pres
-        |FROM vals""".stripMargin,
-
-    // q96: mapping CSV joined to the donor table — fill_fid names which
-    // donor row fills each missing feature.
-    "q96_fill_mapping_join" ->
-      """SELECT m.miss_fid, m.fill_fid, m.distance,
-        |       c.c_acctbal AS fill_val
-        |FROM read_csv('/root/repo/data/fill_mapping.csv', header = true) m
-        |JOIN customer c ON m.fill_fid = c.c_custkey""".stripMargin,
-
-    // q97: batch-1 survivors = min id per text; the grown fingerprint
-    // table's texts are exactly batch 1's DISTINCT texts (every text
-    // group elects a representative), so batch-2 admission is the
-    // in-batch min-id election anti-joined against them. The engine
-    // keys on (xxhash64, length); raw text here — a collision would
-    // surface as a mismatch (the q13 contract).
-    "q97_incremental_lifecycle" ->
-      """WITH b1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |b2 AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1),
-        |a1 AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id FROM b1 GROUP BY text),
-        |seen AS (SELECT DISTINCT text FROM b1),
-        |f2 AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id, text
-        |       FROM b2 GROUP BY text),
-        |a2 AS (SELECT f2.doc_id FROM f2 ANTI JOIN seen s ON f2.text = s.text)
-        |SELECT 1 AS batch, doc_id FROM a1
-        |UNION ALL SELECT 2 AS batch, doc_id FROM a2""".stripMargin,
-
-    // q98: bbox + shoelace centroid straight from the geographic twin's
-    // vertex list (closed rings, seq-ordered folds — the engine's
-    // cross/Σ(x_i+x_{i+1})·cross accumulation mirrored term for term;
-    // cx = sx/(3·a2) is sign-invariant so no winding flip needed).
-    "q98_shapefile_reproject" -> shapefileTwinOracle,
-
-    // q101: identical contract over the Albers fixture — the .shp
-    // carries the same features projected to USA_Contiguous_Albers, so
-    // the recovered geographic bbox/centroid matches the same twin.
-    "q101_shapefile_albers" -> shapefileTwinOracle,
-
-    // q100: the CFSv2 method-1 chain mirrored stage by stage — bbox
-    // predicate, per-cell median over members, weighted mean, the
-    // K→°C/°C→K round-trip kept float-exact (tmax − 273.15 then
-    // + 273.15, matching cfsv2Finalize → withRelativeHumidity), and
-    // the q09 physics expressions in the same operation order.
-    "q100_cfsv2_pipeline" ->
-      s"""WITH g AS (SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS time,
-         |    l_partkey % 25 AS i, l_suppkey % 10 AS j,
-         |    (l_partkey % 25) * 0.5 AS lon, (l_suppkey % 10) * 0.5 AS lat,
-         |    l_quantity + 273.15 AS tmmx, l_quantity + 262.85 AS tmmn,
-         |    l_extendedprice / 1000 AS pr, l_discount / 10 AS sph
-         |  FROM lineitem),
-         |sub AS (SELECT * FROM g
-         |  WHERE lon BETWEEN 2.0 - 0.04167 AND 10.0 + 0.04167
-         |    AND lat BETWEEN 1.0 - 0.04167 AND 4.0 + 0.04167),
-         |med AS (SELECT time, j, i,
-         |    median(tmmx) AS tmmx, median(tmmn) AS tmmn,
-         |    median(pr) AS pr, median(sph) AS sph
-         |  FROM sub GROUP BY 1, 2, 3),
-         |w AS ($weightsSql),
-         |agg AS (SELECT w.fid, m.time,
-         |    sum(w.wght*m.tmmx)/sum(w.wght) AS tmmx,
-         |    sum(w.wght*m.tmmn)/sum(w.wght) AS tmmn,
-         |    sum(w.wght*m.pr)/sum(w.wght) AS pr,
-         |    sum(w.wght*m.sph)/sum(w.wght) AS sph
-         |  FROM med m JOIN w ON m.i = w.i AND m.j = w.j GROUP BY 1, 2),
-         |dom AS (SELECT f.fid, t.time
-         |  FROM (SELECT DISTINCT p_partkey % 40 AS fid FROM part) f
-         |  CROSS JOIN (SELECT DISTINCT time FROM agg) t),
-         |fin AS (SELECT d.fid AS nhru, d.time,
-         |    a.tmmx - 273.15 AS tmax, a.tmmn - 273.15 AS tmin,
-         |    a.pr AS prcp, a.sph AS sph
-         |  FROM dom d LEFT JOIN agg a ON d.fid = a.fid AND d.time = a.time),
-         |rh AS (SELECT nhru, time, tmax, tmin, prcp, sph,
-         |    sph * (1013.25 * exp(-9.80665 * (nhru * 75.0)
-         |        / (287.05 * (((tmax + 273.15) + (tmin + 273.15)) / 2.0)))) / 0.622
-         |      / (6.1094 * exp(17.625
-         |           * ((((tmax + 273.15) + (tmin + 273.15)) / 2.0) - 273.15)
-         |           / (((((tmax + 273.15) + (tmin + 273.15)) / 2.0) - 273.15)
-         |              + 243.04)))
-         |      * 100.0 AS humidity
-         |  FROM fin)
-         |SELECT nhru, time, round(tmax, 4) AS tmax, round(tmin, 4) AS tmin,
-         |  round(prcp, 4) AS prcp, round(sph, 6) AS sph,
-         |  round(humidity, 4) AS humidity
-         |FROM rh""".stripMargin,
-
-    // q103: the CFSv2 method-2 chain — q100's CTE body with the median
-    // stage REMOVED and `ens` added to every grouping/domain key (the
-    // reference's 48-member loop flattened into one grouped
-    // aggregation); the K→°C/°C→K round-trip and q09 physics identical
-    // to q100. The `cells` CTE mirrors the engine's preCombine stage
-    // (Σw·Σx / Σw·n, not row-level Σw·x / Σw): algebraically equal but
-    // not bit-equal doubles — the oracle mirrors the engine's
-    // OPERATION ORDER, like every other query, so a value landing on a
-    // rounding boundary can't flip on one side only.
-    "q103_cfsv2_ensemble" ->
-      s"""WITH g AS (SELECT CAST(date_trunc('month', l_shipdate) AS DATE) AS time,
-         |    l_orderkey % 4 AS ens,
-         |    l_partkey % 25 AS i, l_suppkey % 10 AS j,
-         |    (l_partkey % 25) * 0.5 AS lon, (l_suppkey % 10) * 0.5 AS lat,
-         |    l_quantity + 273.15 AS tmmx, l_quantity + 262.85 AS tmmn,
-         |    l_extendedprice / 1000 AS pr, l_discount / 10 AS sph
-         |  FROM lineitem),
-         |sub AS (SELECT * FROM g
-         |  WHERE lon BETWEEN 2.0 - 0.04167 AND 10.0 + 0.04167
-         |    AND lat BETWEEN 1.0 - 0.04167 AND 4.0 + 0.04167),
-         |w AS ($weightsSql),
-         |cells AS (SELECT time, ens, i, j, count(*) AS n,
-         |    sum(tmmx) AS s_tmmx, sum(tmmn) AS s_tmmn,
-         |    sum(pr) AS s_pr, sum(sph) AS s_sph
-         |  FROM sub GROUP BY 1, 2, 3, 4),
-         |agg AS (SELECT w.fid, m.time, m.ens,
-         |    sum(w.wght*m.s_tmmx)/sum(w.wght*m.n) AS tmmx,
-         |    sum(w.wght*m.s_tmmn)/sum(w.wght*m.n) AS tmmn,
-         |    sum(w.wght*m.s_pr)/sum(w.wght*m.n) AS pr,
-         |    sum(w.wght*m.s_sph)/sum(w.wght*m.n) AS sph
-         |  FROM cells m JOIN w ON m.i = w.i AND m.j = w.j GROUP BY 1, 2, 3),
-         |dom AS (SELECT f.fid, t.time, e.ens
-         |  FROM (SELECT DISTINCT p_partkey % 40 AS fid FROM part) f
-         |  CROSS JOIN (SELECT DISTINCT time FROM agg) t
-         |  CROSS JOIN (SELECT DISTINCT ens FROM agg) e),
-         |fin AS (SELECT d.fid AS nhru, d.ens, d.time,
-         |    a.tmmx - 273.15 AS tmax, a.tmmn - 273.15 AS tmin,
-         |    a.pr AS prcp, a.sph AS sph
-         |  FROM dom d LEFT JOIN agg a
-         |    ON d.fid = a.fid AND d.time = a.time AND d.ens = a.ens),
-         |rh AS (SELECT nhru, ens, time, tmax, tmin, prcp, sph,
-         |    sph * (1013.25 * exp(-9.80665 * (nhru * 75.0)
-         |        / (287.05 * (((tmax + 273.15) + (tmin + 273.15)) / 2.0)))) / 0.622
-         |      / (6.1094 * exp(17.625
-         |           * ((((tmax + 273.15) + (tmin + 273.15)) / 2.0) - 273.15)
-         |           / (((((tmax + 273.15) + (tmin + 273.15)) / 2.0) - 273.15)
-         |              + 243.04)))
-         |      * 100.0 AS humidity
-         |  FROM fin)
-         |SELECT nhru, ens, time, round(tmax, 4) AS tmax, round(tmin, 4) AS tmin,
-         |  round(prcp, 4) AS prcp, round(sph, 6) AS sph,
-         |  round(humidity, 4) AS humidity
-         |FROM rh""".stripMargin,
-
-    // q104: the oracle is the EXACT argmin (q05's window form over 2D
-    // points) — the engine's grid-binning and fallback must be
-    // value-invisible. Literal doubles CAST explicitly (DuckDB would
-    // otherwise compute the coordinate products in DECIMAL).
-    "q104_nn_argmin_binned" ->
-      """WITH pts AS (SELECT c_custkey AS fid,
-        |    (c_custkey % 100) * CAST(0.37 AS DOUBLE) AS lat,
-        |    (c_custkey % 73) * CAST(0.53 AS DOUBLE) AS lon,
-        |    c_acctbal AS bal FROM customer),
-        | m AS (SELECT fid, lat, lon FROM pts WHERE bal < 0),
-        | d AS (SELECT fid, lat, lon FROM pts WHERE bal >= 0),
-        | p AS (SELECT m.fid AS miss_fid, d.fid AS fill_fid,
-        |         sqrt((m.lon-d.lon)*(m.lon-d.lon) + (m.lat-d.lat)*(m.lat-d.lat)) AS dist,
-        |         row_number() OVER (PARTITION BY m.fid
-        |           ORDER BY sqrt((m.lon-d.lon)*(m.lon-d.lon) + (m.lat-d.lat)*(m.lat-d.lat)), d.fid) AS rn
-        |       FROM m CROSS JOIN d)
-        |SELECT miss_fid, fill_fid, round(dist, 6) AS distance FROM p WHERE rn = 1""".stripMargin,
-
-    // q102: the BPE merge loop REPLAYED in SQL — a recursive CTE
-    // carries each distinct word's symbol list; every step merges all
-    // left-to-right non-overlapping occurrences of the lowest-ranked
-    // adjacent pair (the run-parity lambda reproduces greedy
-    // left-to-right for a==b runs without sequential state), stopping
-    // when no pair is ranked. Fixture merges/vocab ride as literal
-    // MAPs read from the SAME committed files the engine loads. Tokens
-    // then re-assemble per document in word order for the count +
-    // position-weighted checksum.
-    "q102_bpe_tokenize" ->
-      s"""WITH RECURSIVE
-         |dws AS MATERIALIZED (
-         |  SELECT doc_id, list_filter(string_split(text, ' '),
-         |                             x -> x <> '') AS ws
-         |  FROM documents),
-         |words AS MATERIALIZED (
-         |  SELECT DISTINCT w FROM (SELECT unnest(ws) AS w FROM dws)),
-         |rec AS (
-         |  SELECT w, list_transform(range(1, length(w)+1), i -> w[i]) AS syms,
-         |         0 AS it
-         |  FROM words
-         |  UNION ALL
-         |  SELECT w,
-         |    flatten(list_transform(range(1, len(syms)+1), i ->
-         |      CASE WHEN starts[i] THEN [a || b]
-         |           WHEN i > 1 AND starts[i-1] THEN []
-         |           ELSE [syms[i]] END)) AS syms,
-         |    it + 1
-         |  FROM (
-         |    SELECT w, syms, it, a, b,
-         |      list_transform(range(1, len(syms)), i ->
-         |        syms[i] = a AND syms[i+1] = b AND (a <> b OR
-         |          (i - coalesce(list_max(list_filter(range(2, i+1),
-         |             j -> syms[j-1] <> a)), 1)) % 2 = 0)) AS starts
-         |    FROM (
-         |      SELECT w, syms, it, syms[bi] AS a, syms[bi+1] AS b
-         |      FROM (
-         |        SELECT w, syms, it,
-         |          list_position(rks, list_aggregate(
-         |            list_filter(rks, x -> x IS NOT NULL), 'min')) AS bi
-         |        FROM (
-         |          SELECT w, syms, it,
-         |            list_transform(range(1, len(syms)), i ->
-         |              map_extract($bpeMergesMapSql,
-         |                          syms[i] || ' ' || syms[i+1])[1]) AS rks
-         |          FROM rec) t0
-         |        WHERE len(list_filter(rks, x -> x IS NOT NULL)) > 0) t1) t2) t3
-         |),
-         |tok AS MATERIALIZED (
-         |  SELECT r.w, list_transform(r.syms, s0 ->
-         |      coalesce(map_extract($bpeVocabMapSql, s0)[1], 0)) AS ids
-         |  FROM rec r
-         |  JOIN (SELECT w, max(it) AS mi FROM rec GROUP BY w) mx
-         |    ON r.w = mx.w AND r.it = mx.mi),
-         |dwords AS (
-         |  SELECT doc_id, u.wi AS wi, u.w AS w
-         |  FROM (SELECT doc_id, unnest(list_transform(range(1, len(ws)+1),
-         |          i -> struct_pack(wi := i, w := ws[i]))) AS u
-         |        FROM dws) t),
-         |contrib AS (
-         |  SELECT d.doc_id,
-         |    len(k.ids) AS nt,
-         |    (sum(len(k.ids)) OVER (PARTITION BY d.doc_id ORDER BY d.wi)
-         |       - len(k.ids)) * list_aggregate(k.ids, 'sum')
-         |      + list_aggregate(list_transform(range(1, len(k.ids)+1),
-         |          ki -> k.ids[ki] * ki), 'sum') AS ck
-         |  FROM dwords d JOIN tok k ON d.w = k.w)
-         |SELECT doc_id,
-         |  CAST(coalesce(sum(nt), 0) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(sum(ck), 0) AS BIGINT) AS checksum
-         |FROM documents LEFT JOIN contrib USING (doc_id)
-         |GROUP BY doc_id""".stripMargin,
-
-    // q99: the packed layout re-derived from first principles — shard
-    // by portable-hash of the id, per-shard cumulative offsets in id
-    // order, every token's global stream position, then per-chunk
-    // count + the position-weighted checksum (pos-within-chunk is
-    // pos − chunk·64, 1-based).
-    "q99_pack_chunks" -> {
-      s"""WITH tok AS MATERIALIZED (SELECT doc_id AS id,
-         |    list_transform(list_filter(string_split(text, ' '),
-         |                               w -> w <> ''),
-         |      w -> CAST(${hashSql("w")} % 65536 AS INT)) AS ids
-         |  FROM documents),
-         |off AS MATERIALIZED (SELECT id, ids, shard,
-         |    sum(len(ids)) OVER (PARTITION BY shard ORDER BY id)
-         |      - len(ids) AS start_off
-         |  FROM (SELECT id, ids,
-         |          ${hashSql("CAST(id AS VARCHAR)")} % 4 AS shard
-         |        FROM tok)),
-         |toks AS (SELECT shard,
-         |    unnest(list_transform(range(1, len(ids)+1),
-         |      qi -> struct_pack(pos := start_off + qi - 1,
-         |                        t := ids[qi]))) AS u
-         |  FROM off WHERE len(ids) > 0)
-         |SELECT shard, CAST(u.pos // 64 AS BIGINT) AS chunk_id,
-         |  CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CAST(u.t AS BIGINT)
-         |           * (u.pos - (u.pos // 64) * 64 + 1)) AS BIGINT)
-         |    AS checksum
-         |FROM toks
-         |GROUP BY 1, 2""".stripMargin
-    },
-
-    // q163: q99's stream arithmetic with the per-token mask derived
-    // from the doc-relative position (first min(8, n) tokens = prompt
-    // = mask 0), both checksums at chunk-relative 1-based positions.
-    "q163_sft_masked_pack" -> {
-      s"""WITH tok AS MATERIALIZED (SELECT doc_id AS id,
-         |    list_transform(list_filter(string_split(text, ' '),
-         |                               w -> w <> ''),
-         |      w -> CAST(${hashSql("w")} % 65536 AS INT)) AS ids
-         |  FROM documents),
-         |off AS MATERIALIZED (SELECT id, ids, shard,
-         |    sum(len(ids)) OVER (PARTITION BY shard ORDER BY id)
-         |      - len(ids) AS start_off
-         |  FROM (SELECT id, ids,
-         |          ${hashSql("CAST(id AS VARCHAR)")} % 4 AS shard
-         |        FROM tok)),
-         |toks AS (SELECT shard,
-         |    unnest(list_transform(range(1, len(ids)+1),
-         |      qi -> struct_pack(pos := start_off + qi - 1,
-         |                        t := ids[qi],
-         |                        m := CASE WHEN qi <= least(8, len(ids))
-         |                             THEN 0 ELSE 1 END))) AS u
-         |  FROM off WHERE len(ids) > 0)
-         |SELECT shard, CAST(u.pos // 64 AS BIGINT) AS chunk_id,
-         |  CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CAST(u.t AS BIGINT)
-         |           * (u.pos - (u.pos // 64) * 64 + 1)) AS BIGINT)
-         |    AS ids_checksum,
-         |  CAST(sum(CAST(u.m AS BIGINT)
-         |           * (u.pos - (u.pos // 64) * 64 + 1)) AS BIGINT)
-         |    AS mask_checksum,
-         |  CAST(sum(u.m) AS BIGINT) AS n_loss
-         |FROM toks
-         |GROUP BY 1, 2""".stripMargin
-    },
-
-    // q173: rank words (count DESC, word ASC), cumulative coverage
-    // read per candidate V — plain SQL over the vocab-sized table.
-    "q173_vocab_coverage_sweep" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH wc AS (SELECT w, count(*) AS c FROM (
-         |    SELECT unnest(list_filter(string_split(text, ' '),
-         |      x -> x <> '')) AS w FROM documents) GROUP BY 1),
-         |rk AS (SELECT c,
-         |    row_number() OVER (ORDER BY c DESC, w ASC) AS rank
-         |  FROM wc),
-         |tot AS (SELECT count(*) AS n_types,
-         |    CAST(sum(c) AS BIGINT) AS total FROM rk),
-         |cand(v) AS (VALUES (1000), (2000), (4000), (8000)),
-         |per AS (SELECT v,
-         |    CAST(sum(CASE WHEN rank <= v THEN c ELSE 0 END) AS BIGINT)
-         |      AS kept
-         |  FROM rk CROSS JOIN cand GROUP BY v)
-         |SELECT CAST(v AS BIGINT) AS vocab_size,
-         |  CAST(n_types AS BIGINT) AS n_types,
-         |  total AS total_tokens, kept AS kept_tokens,
-         |  ${r6("1.0 - CAST(kept AS DOUBLE) / CAST(total AS DOUBLE)")}
-         |    AS oov_rate
-         |FROM per CROSS JOIN tot""".stripMargin
-    },
-
-    // q168: the textbook form — explode words, per-(doc,word) counts,
-    // per-doc aggregate with the same round6-term decimal sum the
-    // engine's fold accumulates (order-free, so the two shapes match
-    // bit-for-bit).
-    "q168_entropy_signal" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH tk AS (SELECT doc_id,
-         |    list_filter(string_split(text, ' '), w -> w <> '') AS t
-         |  FROM documents),
-         |wc AS (SELECT doc_id, word, count(*) AS c FROM (
-         |    SELECT doc_id, unnest(t) AS word FROM tk) GROUP BY 1, 2),
-         |ag AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-         |    CAST(count(*) AS BIGINT) AS n_types,
-         |    CAST(sum(CAST(${r6("c * ln(c)")} AS DECIMAL(28,6)))
-         |      AS DOUBLE) AS sclc
-         |  FROM wc GROUP BY 1)
-         |SELECT doc_id, n_tokens, n_types,
-         |  ${r6("CAST(n_types AS DOUBLE) / CAST(n_tokens AS DOUBLE)")}
-         |    AS ttr,
-         |  ${r6("ln(CAST(n_tokens AS DOUBLE))" +
-             " - sclc / CAST(n_tokens AS DOUBLE)")} AS entropy
-         |FROM ag""".stripMargin
-    },
-
-    // q167: the EG trajectory unrolled — per-source mean nll over the
-    // q75 LM (lmScoreSql shared def), then 8 rounds of
-    // mix → excess → exp-update → renormalize, each scalar round6,
-    // decimal-exact tiny sums (the engine's dsum), uniform smoothing.
-    // The chain itself is the shared doremiChainSql def so q172's
-    // composition applies the IDENTICAL trajectory.
-    "q167_doremi_reweight" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH $doremiChainSql
-         |SELECT domain AS source, n_docs, loss,
-         |  ${r6("0.9 * alpha + 0.1 / d")} AS weight
-         |FROM a8 CROSS JOIN dc""".stripMargin
-    },
-
-    // q176: the MM trajectory unrolled — per-round denominator sums
-    // over both orientations, raw update, mean-1 renormalize, each
-    // scalar round6 and each tiny sum decimal-exact; per-round CTEs
-    // MATERIALIZED (the doremiChainSql inlining discipline). The
-    // chain is the shared btChainSql def so q177's calibration eval
-    // reads the IDENTICAL fitted strengths.
-    "q176_bradley_terry" -> BradleyTerryOracle,
-
-    // q186 replays q176's oracle verbatim: the join-form MM iteration
-    // is a PLAN choice only — the rows must be bit-identical to the
-    // fold's (the q184/q185 shared-oracle convention).
-    "q186_bradley_terry_joined" -> BradleyTerryOracle,
-
-    // q177: the fitted strengths (shared btChainSql) scored back
-    // against the data — per directed pair, predicted s_w/(s_w+s_l)
-    // vs empirical wins/games, absolute error round6.
-    "q177_bt_calibration" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH $btChainSql,
-         |dwins AS (SELECT w, l, count(*) AS n_wl FROM g GROUP BY 1, 2),
-         |cal AS (SELECT dw.w AS winner, dw.l AS loser, dw.n_wl,
-         |    o.n AS n_games,
-         |    ${r6("CAST(dw.n_wl AS DOUBLE) / CAST(o.n AS DOUBLE)")}
-         |      AS empirical,
-         |    ${r6("sw.s / (sw.s + sl.s)")} AS predicted
-         |  FROM dwins dw
-         |  JOIN orient o ON dw.w = o.i AND dw.l = o.j
-         |  JOIN s8 sw ON dw.w = sw.item
-         |  JOIN s8 sl ON dw.l = sl.item)
-         |SELECT winner, loser, CAST(n_wl AS BIGINT) AS n_wins,
-         |  CAST(n_games AS BIGINT) AS n_games, empirical, predicted,
-         |  ${r6("abs(empirical - predicted)")} AS abs_err
-         |FROM cal""".stripMargin
-    },
-
-    // q182: per n — explode SPACE-joined n-gram hashes (tokens split
-    // on space, so the space joiner is collision-free and byte-
-    // identical to the engine's concat_ws(" ", ...)), (source, gram)
-    // counts, source rollup; three legs UNION ALL.
-    "q182_distinct_n_diversity" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      def leg(n: Int): String = {
-        val gram = (0 until n).map(o => s"t[gi + $o]")
-          .mkString(" || ' ' || ")
-        s"""SELECT source, CAST($n AS BIGINT) AS n,
-           |  CAST(sum(c) AS BIGINT) AS total_ngrams,
-           |  CAST(count(*) AS BIGINT) AS distinct_ngrams,
-           |  ${r6("CAST(count(*) AS DOUBLE) / CAST(sum(c) AS DOUBLE)")}
-           |    AS distinct_ratio
-           |FROM (SELECT source, g, count(*) AS c FROM (
-           |    SELECT source, unnest(list_transform(
-           |        range(1, len(t) - ${n - 1} + 1),
-           |        gi -> ${hashSql(s"($gram)")})) AS g
-           |    FROM tk WHERE len(t) >= $n) GROUP BY 1, 2)
-           |GROUP BY source""".stripMargin
-      }
-      s"""WITH tk AS MATERIALIZED (SELECT source,
-         |    list_filter(string_split(text, ' '), w -> w <> '') AS t
-         |  FROM documents)
-         |${Seq(1, 2, 3).map(leg).mkString("\nUNION ALL\n")}""".stripMargin
-    },
-
-    // q183: the KMV estimator replayed in full per (source, n) —
-    // scramble g' = (A·(g+1)) mod M over DISTINCT gram hashes, sort,
-    // k-th order statistic, n̂ = (k−1)·M/h_k − 1 (4-dp), exact count
-    // below k — the q38 formula, one leg per n.
-    "q183_distinct_n_sketch" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      val k = 1024
-      def leg(n: Int): String = {
-        val gram = (0 until n).map(o => s"t[gi + $o]")
-          .mkString(" || ' ' || ")
-        s"""SELECT source, CAST($n AS BIGINT) AS n,
-           |  CAST(total_ngrams AS BIGINT) AS total_ngrams, distinct_est,
-           |  ${r6("distinct_est / CAST(total_ngrams AS DOUBLE)")}
-           |    AS distinct_ratio_est
-           |FROM (SELECT source, total_ngrams,
-           |    CASE WHEN len(hs) < $k THEN CAST(len(hs) AS DOUBLE)
-           |         ELSE floor((${k - 1}.0 * 1000000007.0 / hs[$k] - 1.0)
-           |                    * 10000 + 0.5) / 10000
-           |    END AS distinct_est
-           |  FROM (SELECT source, count(*) AS total_ngrams,
-           |      list_sort(list_distinct(list(
-           |        (1566083941 * (g + 1)) % 1000000007))) AS hs
-           |    FROM (SELECT source, unnest(list_transform(
-           |          range(1, len(t) - ${n - 1} + 1),
-           |          gi -> ${hashSql(s"($gram)")})) AS g
-           |      FROM tk WHERE len(t) >= $n)
-           |    GROUP BY source))""".stripMargin
-      }
-      s"""WITH tk AS MATERIALIZED (SELECT source,
-         |    list_filter(string_split(text, ' '), w -> w <> '') AS t
-         |  FROM documents)
-         |${Seq(1, 2, 3).map(leg).mkString("\nUNION ALL\n")}""".stripMargin
-    },
-
-    // q181: the q14 pair CTEs roll up by source pair, normalized by
-    // n_a·n_b (cross) or n(n−1)/2 (diagonal).
-    "q181_source_dup_matrix" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH $dupPairsSqlCtes,
-         |srcs AS (SELECT doc_id, source FROM documents),
-         |sp AS (SELECT least(sa.source, sb.source) AS source_a,
-         |    greatest(sa.source, sb.source) AS source_b
-         |  FROM pairs p
-         |  JOIN srcs sa ON p.a_id = sa.doc_id
-         |  JOIN srcs sb ON p.b_id = sb.doc_id),
-         |m AS (SELECT source_a, source_b, count(*) AS n_pairs
-         |  FROM sp GROUP BY 1, 2),
-         |c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1)
-         |SELECT m.source_a, m.source_b,
-         |  CAST(m.n_pairs AS BIGINT) AS n_pairs,
-         |  CAST(ca.n AS BIGINT) AS n_docs_a,
-         |  CAST(cb.n AS BIGINT) AS n_docs_b,
-         |  ${r6("CAST(m.n_pairs AS DOUBLE) / CAST(" +
-             "CASE WHEN m.source_a = m.source_b" +
-             " THEN ca.n * (ca.n - 1) // 2" +
-             " ELSE ca.n * cb.n END AS DOUBLE)")} AS dup_rate
-         |FROM m JOIN c ca ON m.source_a = ca.source
-         |JOIN c cb ON m.source_b = cb.source""".stripMargin
-    },
-
-    // q180: the argmax replayed as a window — (reward DESC, id ASC)
-    // rank 1 = winner, rank 2 = runner-up for the margin, floor 0.3.
-    "q180_best_of_n" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH q AS ($textQualitySql),
-         |r AS (SELECT doc_id AS id, doc_id // 4 AS grp,
-         |    quality AS reward FROM q),
-         |rk AS (SELECT id, grp, reward, row_number() OVER (
-         |    PARTITION BY grp ORDER BY reward DESC, id ASC) AS rn
-         |  FROM r),
-         |cnt AS (SELECT grp, count(*) AS n_candidates FROM r GROUP BY 1)
-         |SELECT w1.id, w1.grp AS group_id, w1.reward,
-         |  ${r6("w1.reward - coalesce(w2.reward, w1.reward)")} AS margin,
-         |  CAST(cnt.n_candidates AS BIGINT) AS n_candidates
-         |FROM rk w1
-         |LEFT JOIN rk w2 ON w1.grp = w2.grp AND w2.rn = 2
-         |JOIN cnt ON w1.grp = cnt.grp
-         |WHERE w1.rn = 1 AND w1.reward >= 0.3""".stripMargin
-    },
-
-    // q178: quality (textQualitySql) joined to the Gopher pass
-    // (gopherGateSql), decile bins with decimal-exact sums.
-    "q178_quality_calibration" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH q AS ($textQualitySql),
-         |gg AS ($gopherGateSql),
-         |j AS (SELECT q.quality AS s,
-         |    CASE WHEN gg.pass THEN 1.0 ELSE 0.0 END AS y
-         |  FROM q JOIN gg ON q.doc_id = gg.id),
-         |b AS (SELECT greatest(0, least(CAST(floor(s * 10) AS BIGINT),
-         |    9)) AS bin, s, y FROM j),
-         |ag AS (SELECT bin, count(*) AS n,
-         |    CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) AS ss,
-         |    CAST(sum(CAST(y AS DECIMAL(28,6))) AS DOUBLE) AS sy
-         |  FROM b GROUP BY 1),
-         |fin AS (SELECT bin, n, ${r6("ss / n")} AS avg_score,
-         |    ${r6("sy / n")} AS pos_rate FROM ag)
-         |SELECT bin, CAST(n AS BIGINT) AS n, avg_score, pos_rate,
-         |  ${r6("abs(avg_score - pos_rate)")} AS gap
-         |FROM fin""".stripMargin
-    },
-
-    // q175: the q20 quality reward (textQualitySql shared def) into
-    // decimal-exact group stats, mean/std/advantage mirrored op-for-op
-    // (mean computed ONCE and reused, as the engine does).
-    "q175_grpo_advantage" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH q AS ($textQualitySql),
-         |r AS (SELECT doc_id, doc_id // 4 AS grp, quality AS reward
-         |  FROM q),
-         |st AS (SELECT grp, count(*) AS n,
-         |    CAST(sum(CAST(reward AS DECIMAL(18,6))) AS DOUBLE) AS sr,
-         |    CAST(sum(CAST(reward AS DECIMAL(18,6))
-         |             * CAST(reward AS DECIMAL(18,6))) AS DOUBLE) AS sr2
-         |  FROM r GROUP BY 1),
-         |sj AS (SELECT r.doc_id, r.grp, r.reward, st.n,
-         |    st.sr / st.n AS mean, st.sr2
-         |  FROM r JOIN st USING (grp)),
-         |sd AS (SELECT doc_id, grp, reward, n, mean,
-         |    sqrt(greatest(0.0, sr2 / n - mean * mean)) AS std
-         |  FROM sj)
-         |SELECT doc_id, CAST(grp AS BIGINT) AS group_id, reward,
-         |  CAST(n AS BIGINT) AS n,
-         |  CASE WHEN std > 0.0 THEN ${r6("(reward - mean) / std")}
-         |       ELSE 0.0 END AS advantage
-         |FROM sd""".stripMargin
-    },
-
-    // q172: the q167 chain (shared def) renormalized decimal-exact
-    // into shares, then the q84 mixSample arithmetic — min(n/s)
-    // feasibility, per-group floor thresholds, KMV-scrambled buckets.
-    "q172_doremi_mix_apply" -> {
-      def r6(e: String) = graft.functions.TextFunctions.round6Sql(e)
-      s"""WITH $doremiChainSql,
-         |w AS (SELECT domain AS g,
-         |    ${r6("0.9 * alpha + 0.1 / d")} AS wgt
-         |  FROM a8 CROSS JOIN dc),
-         |sw AS (SELECT CAST(sum(CAST(wgt AS DECIMAL(28,6)))
-         |    AS DOUBLE) AS sws FROM w),
-         |shr AS (SELECT g, wgt / sws AS s FROM w CROSS JOIN sw),
-         |cnt AS (SELECT source AS g, CAST(count(*) AS DOUBLE) AS n
-         |  FROM documents JOIN shr ON source = g GROUP BY source),
-         |nout AS (SELECT min(n / s) AS nout
-         |  FROM cnt JOIN shr USING (g)),
-         |thr AS (SELECT g,
-         |    CAST(floor(((1000000.0 * s) * nout) / n) AS BIGINT) AS thr
-         |  FROM cnt JOIN shr USING (g) CROSS JOIN nout)
-         |SELECT doc_id, source FROM documents JOIN thr ON source = g
-         |WHERE 1566083941 * ((${hashSql("CAST(doc_id AS VARCHAR)")}) + 1)
-         |      % 1000000007 % 1000000 < thr""".stripMargin
-    },
-
-    // q166: the twin-plane collator replayed in list arithmetic —
-    // keep_p = min(|p|, max(0, L−|r|)) prompt tokens from the LEFT
-    // end's survivors (last keep_p), response right-truncated; ids
-    // checksum positionally, mask checksum in closed form
-    // Σ_{i=keep_p+1}^{len} i (the mask is 0^keep_p 1^(len−keep_p) by
-    // construction, so the closed form cross-checks the engine's
-    // actual array sum).
-    "q166_dpo_pair_pack" -> {
-      s"""WITH tok AS MATERIALIZED (SELECT doc_id AS id,
-         |    list_transform(list_filter(string_split(text, ' '),
-         |                               w -> w <> ''),
-         |      w -> CAST(${hashSql("w")} % 65536 AS INT)) AS ids
-         |  FROM documents),
-         |pr AS (SELECT id, ids, len(ids) AS n, least(6, len(ids)) AS np,
-         |    (len(ids) - least(6, len(ids))) // 2 AS half
-         |  FROM tok),
-         |sides AS (SELECT id,
-         |    list_transform(range(1, np+1), si -> ids[si]) AS p,
-         |    list_transform(range(np+1, np+half+1), si -> ids[si]) AS c,
-         |    list_transform(range(np+half+1, n+1), si -> ids[si]) AS r
-         |  FROM pr),
-         |planes AS (SELECT id, p, c, r,
-         |    least(len(p), greatest(0, 24 - len(c))) AS kpc,
-         |    least(len(p), greatest(0, 24 - len(r))) AS kpr
-         |  FROM sides WHERE len(c) > 0 AND len(r) > 0),
-         |built AS (SELECT id, kpc, kpr,
-         |    list_transform(range(len(p)-kpc+1, len(p)+1), bi -> p[bi])
-         |      || list_transform(range(1, least(len(c), 24-kpc)+1),
-         |           bi -> c[bi]) AS cp,
-         |    list_transform(range(len(p)-kpr+1, len(p)+1), bi -> p[bi])
-         |      || list_transform(range(1, least(len(r), 24-kpr)+1),
-         |           bi -> r[bi]) AS rp
-         |  FROM planes)
-         |SELECT id AS pair_id,
-         |  CAST(${hashSql("CAST(id AS VARCHAR)")} % 4 AS BIGINT) AS shard,
-         |  CAST(len(cp) AS BIGINT) AS c_len,
-         |  CAST(len(rp) AS BIGINT) AS r_len,
-         |  CAST(list_sum(list_transform(range(1, len(cp)+1),
-         |    ci -> CAST(cp[ci] AS BIGINT) * ci)) AS BIGINT)
-         |    AS c_ids_checksum,
-         |  CAST((len(cp)*(len(cp)+1) - kpc*(kpc+1)) // 2 AS BIGINT)
-         |    AS c_mask_checksum,
-         |  CAST(list_sum(list_transform(range(1, len(rp)+1),
-         |    ri -> CAST(rp[ri] AS BIGINT) * ri)) AS BIGINT)
-         |    AS r_ids_checksum,
-         |  CAST((len(rp)*(len(rp)+1) - kpr*(kpr+1)) // 2 AS BIGINT)
-         |    AS r_mask_checksum
-         |FROM built""".stripMargin
-    },
-
-    // q165: the q21 brute derivation at full width (truth) and each
-    // prefix width (one shared parameterized chain), then the q85
-    // recall compare per width — recall = hits/5, round6.
-    "q165_matryoshka_recall" -> {
-      val dims = Seq(8, 16, 32)
-      val chains = (bruteCosinePrefixTopKSql(0, "F") +:
-        dims.map(d => bruteCosinePrefixTopKSql(d, d.toString)))
-        .mkString(",\n")
-      val legs = dims.map { d =>
-        s"""SELECT $d AS dim, f.q_id,
-           |  CAST(count(t$d.n_id) AS BIGINT) AS hits,
-           |  floor(CAST(count(t$d.n_id) AS DOUBLE) / 5.0
-           |    * 1000000.0 + 0.5) / 1000000.0 AS recall
-           |FROM tF f LEFT JOIN t$d
-           |  ON f.q_id = t$d.q_id AND f.n_id = t$d.n_id
-           |GROUP BY f.q_id""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"WITH $chains\n$legs"
-    },
-
-    // q164: the q135/q149 frozen-IVF training+assignment chain over
-    // ALL vectors, then the two-level seeded order flattened to ONE
-    // window — ORDER BY (hc, cid, hd, id) is bit-identical to
-    // cluster-offsets + within-cluster ranks (hc is a function of
-    // cid, so clusters stay contiguous).
-    "q164_incontext_order" -> {
-      val seed = 20260815L
-      val hShard = hashSql(
-        s"(repeat('$seed~icps:' || CAST(cid AS VARCHAR) || ';', 3))")
-      val hc = hashSql(
-        s"(repeat('$seed~icpc:' || CAST(cid AS VARCHAR) || ';', 3))")
-      val hd = hashSql(
-        s"(repeat('$seed~icpd:' || CAST(id AS VARCHAR) || ';', 3))")
-      s"""WITH ea AS MATERIALIZED (SELECT vec_id AS id,
-         |  list_transform(embedding, ex -> CAST(ex AS DOUBLE)) AS v
-         |  FROM embeddings),
-         |e AS MATERIALIZED (SELECT * FROM ea WHERE id % 2 = 0),
-         |c0 AS (SELECT id AS cid, v AS c FROM e ORDER BY id LIMIT 16),
-         |${ivfIterSql(1, "c0")},
-         |${ivfIterSql(2, "c1")},
-         |${ivfIterSql(3, "c2")},
-         |sall AS (SELECT ea.id, c.cid,
-         |  ${dotSql("ea.v", "c.c")} * -2.0 + ${dotSql("c.c", "c.c")} AS d2
-         |  FROM ea CROSS JOIN c3 c),
-         |asg AS MATERIALIZED (SELECT id, cid FROM (SELECT id, cid,
-         |    row_number() OVER (PARTITION BY id ORDER BY d2, cid) AS rn
-         |  FROM sall) WHERE rn = 1),
-         |hs AS (SELECT id, cid,
-         |    ($hShard) % 4 AS shard, ($hc) AS hc, ($hd) AS hd
-         |  FROM asg)
-         |SELECT CAST(shard AS BIGINT) AS shard,
-         |  CAST(row_number() OVER (PARTITION BY shard
-         |       ORDER BY hc, cid, hd, id) - 1 AS BIGINT) AS pos,
-         |  id AS vec_id, CAST(cid AS BIGINT) AS cluster
-         |FROM hs""".stripMargin
-    }
-  )
 }

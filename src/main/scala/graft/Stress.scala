@@ -1481,9 +1481,9 @@ object Stress {
     * micro-batch — so streaming scenarios size partitions to per-batch
     * STATE volume, not to the 4×-cores rule the batch scenarios use
     * for shuffle/agg state. Same RULE as the q105–q109 harness
-    * (SparkEntry.withStreamShufflePartitions, which picks 8 for its
-    * few-MB sf0.1 states); the stress streams carry ~10× that state,
-    * hence 16. */
+    * (queries.StreamingQueries.withStreamShufflePartitions, which picks
+    * 8 for its few-MB sf0.1 states); the stress streams carry ~10× that
+    * state, hence 16. */
   private def withStatePartitions(sp: SparkSession, n: Int = 16)(
       body: => Unit): Unit = {
     val prev = sp.conf.get("spark.sql.shuffle.partitions")

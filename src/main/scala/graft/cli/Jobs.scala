@@ -61,8 +61,9 @@ import graft.sinks.Sinks
   *   graft.cli.Jobs dedup-admit --input-path batch/ --output-path out/
   *     --state-path state/ [--near [--threshold 0.8]]
   *   graft.cli.Jobs curate --input-path docs/ --output-path out/
-  *     [--blocklist f --url-col u] [--html] [--normalize] [--line-rules]
-  *     [--paragraph-dedup] [--classifier weights.txt [--min-score 0.5]]
+  *     [--blocklist f --url-col u] [--html true] [--normalize true]
+  *     [--line-rules true] [--paragraph-dedup true]
+  *     [--classifier weights.txt [--min-score 0.5]]
   *     [--keep-all true] [--signals-out sheet/]
   *
   * Deployment confs (100× clusters; see SCALE.md's deployment-conf
@@ -84,7 +85,10 @@ object Jobs {
     def has(k: String): Boolean = flags.contains(k)
   }
 
-  /** cyclopts-style parse: `--key value` pairs + boolean flags. */
+  /** cyclopts-style parse: `--key value` pairs + boolean flags. A value
+    * key followed by another `--` token fails instead of taking that
+    * token as its value: a misspelled flag would otherwise swallow the
+    * next one and silently switch both off. */
   def parseArgs(argv: Seq[String]): Args = {
     val boolFlags = Set("partial", "fill-missing", "verbose", "genmap", "near")
     @annotation.tailrec
@@ -95,8 +99,8 @@ object Jobs {
           val key = k.drop(2)
           if (boolFlags(key)) loop(tail, m, f + key)
           else tail match {
-            case v :: t2 => loop(t2, m + (key -> v), f)
-            case Nil => sys.error(s"missing value for --$key")
+            case v :: t2 if !v.startsWith("--") => loop(t2, m + (key -> v), f)
+            case _ => sys.error(s"missing value for --$key")
           }
         case other :: _ => sys.error(s"unexpected argument: $other")
       }

@@ -3,8 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
+import graft.queries.Shared
 
-/** Pins the persisted-artifact sharing in SparkEntry:
+/** Pins the persisted-artifact sharing in `graft.queries.Shared`:
   *
   *  - the ANN quantizers (IVF centroids, PQ codebooks) train ONCE per
   *    corpus and are served to q36/q50/q63 — never retrained per query
@@ -28,20 +29,20 @@ class ArtifactReuseSpec extends SparkSpec {
   }
 
   test("ANN quantizers train once per corpus, not per query") {
-    val t0 = SparkEntry.annTrainings.get()
+    val t0 = Shared.annTrainings.get()
     SparkEntry.queries("q36_ann_ivf_topk")(spark, dir)
-    assert(SparkEntry.annTrainings.get() - t0 === 1) // IVF trained
+    assert(Shared.annTrainings.get() - t0 === 1) // IVF trained
     SparkEntry.queries("q50_ann_pq_topk")(spark, dir)
-    assert(SparkEntry.annTrainings.get() - t0 === 2) // + PQ trained
+    assert(Shared.annTrainings.get() - t0 === 2) // + PQ trained
     SparkEntry.queries("q63_ann_ivfpq_topk")(spark, dir)
-    assert(SparkEntry.annTrainings.get() - t0 === 2) // q63 reuses BOTH
+    assert(Shared.annTrainings.get() - t0 === 2) // q63 reuses BOTH
     SparkEntry.queries("q36_ann_ivf_topk")(spark, dir)
     SparkEntry.queries("q50_ann_pq_topk")(spark, dir)
-    assert(SparkEntry.annTrainings.get() - t0 === 2) // re-asks are free
+    assert(Shared.annTrainings.get() - t0 === 2) // re-asks are free
     SparkEntry.queries("q80_ann_ivfpq_residual_topk")(spark, dir)
-    assert(SparkEntry.annTrainings.get() - t0 === 3) // + residual books
+    assert(Shared.annTrainings.get() - t0 === 3) // + residual books
     SparkEntry.queries("q80_ann_ivfpq_residual_topk")(spark, dir)
-    assert(SparkEntry.annTrainings.get() - t0 === 3) // IVF reused, books cached
+    assert(Shared.annTrainings.get() - t0 === 3) // IVF reused, books cached
   }
 
   test("dup-graph artifacts are shared across their consumer queries") {

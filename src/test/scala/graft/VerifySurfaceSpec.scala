@@ -26,6 +26,19 @@ class VerifySurfaceSpec extends SparkSpec {
     assert((o -- q).isEmpty, s"oracles without query: ${(o -- q).toSeq.sorted}")
   }
 
+  test("the declaration list holds 186 distinct names, each with a family") {
+    // the maps are built with toMap, which keeps one of two same-named
+    // declarations silently: a dropped or duplicated entry must fail here
+    // instead of shrinking the suite
+    val names = SparkEntry.declarations.map(_.name)
+    assert(names.size === 186)
+    assert(names.distinct.size === names.size,
+      s"names declared twice: ${names.diff(names.distinct).distinct.sorted}")
+    val untagged = SparkEntry.declarations.filter(_.family.trim.isEmpty)
+    assert(untagged.isEmpty,
+      s"declarations without a family: ${untagged.map(_.name)}")
+  }
+
   test("no query exposes a top-level array/map/struct output column") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>

@@ -17,6 +17,10 @@ class JobsSpec extends SparkSpec {
     assert(a.has("partial") && !a.has("fill-missing"))
     intercept[RuntimeException](Jobs.parseArgs(Seq("--end-date")))
     intercept[RuntimeException](Jobs.parseArgs(Seq("stray")))
+    // a misspelled flag must not swallow the next flag as its value
+    val swallow = intercept[RuntimeException](
+      Jobs.parseArgs(Seq("--fill-mising", "--partial")))
+    assert(swallow.getMessage == "missing value for --fill-mising")
     intercept[Exception](Jobs.validDate("01/02/2021"))
   }
 
