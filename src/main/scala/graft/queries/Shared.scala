@@ -371,16 +371,9 @@ object Shared {
        |  FROM b$n GROUP BY cid, pos),
        |c$n AS MATERIALIZED (SELECT cid, list(x ORDER BY pos) AS c FROM d$n GROUP BY cid)""".stripMargin
 
-  /** The committed source-reader fixtures (`data/` in this repo, or
-    * SPARK_GRAFT_DATA_DIR when set). An absolute path: the engine's
-    * Verify pass and the driver's DuckDB oracle pass run with different
-    * working directories, and both sides must read the identical file.
-    * Relative to the working directory of the JVM, which sbt sets to
-    * the repo root for run and test. */
-  private lazy val fixtureDir: java.nio.file.Path =
-    java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_DATA_DIR", "data"))
-      .toAbsolutePath.normalize
-
-  private[queries] def fixturePath(name: String): String =
-    fixtureDir.resolve(name).toString
+  /** The committed source-reader fixtures (`data/` in this repo). An
+    * absolute path: the engine's Verify pass and the driver's DuckDB
+    * oracle pass run with different working directories, and both
+    * sides must read the identical file. */
+  private[queries] def fixturePath(name: String): String = s"/root/repo/data/$name"
 }
