@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Staging
 import graft.tools.StressMetrics
 
 /** Scale-stress harness: runs the most shuffle-exposed operators on
@@ -139,8 +140,7 @@ object Stress {
       sp: SparkSession, scale: Double): (DataFrame, Long) = {
     val (dir, n) = paraStaged.getOrElse {
       val (d, rows) = paragraphPages(sp, scale)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_stress_paras_").toString
+      val path = Staging.scratchDir("graft_stress_paras_").toString
       d.write.mode("overwrite").parquet(path)
       val v = (path, rows)
       paraStaged = Some(v)
@@ -158,7 +158,7 @@ object Stress {
   // keyed by n — a single cached path would silently serve the FIRST
   // staged size to any later scenario asking for a different one — and
   // built under the object lock (check-then-set on a bare @volatile
-  // raced); staged dirs are removed recursively at JVM exit
+  // raced); staged dirs are Staging.scratchDir trees, removed at JVM exit
   private var entropyStaged: Map[Long, String] = Map.empty
   private var knStaged: Map[Long, String] = Map.empty
   private var cfsv2Staged: Map[Long, String] = Map.empty
@@ -173,9 +173,7 @@ object Stress {
       sp: SparkSession, n: Long): (DataFrame, Long) = {
     val dir = synchronized {
       knStaged.getOrElse(n, {
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_stress_kn_")
-        registerTempDirCleanup(path)
+        val path = Staging.scratchDir("graft_stress_kn_")
         corpus(sp, n, 120, 2000).select("id", "text")
           .write.mode("overwrite").parquet(path.toString)
         knStaged += (n -> path.toString)
@@ -188,9 +186,7 @@ object Stress {
       sp: SparkSession, n: Long): (DataFrame, Long) = {
     val dir = synchronized {
       entropyStaged.getOrElse(n, {
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_stress_entropy_")
-        registerTempDirCleanup(path)
+        val path = Staging.scratchDir("graft_stress_entropy_")
         corpus(sp, n, 200, 2000).write.mode("overwrite")
           .parquet(path.toString)
         entropyStaged += (n -> path.toString)
@@ -211,9 +207,7 @@ object Stress {
       sp: SparkSession, rows: Long): DataFrame = {
     val dir = synchronized {
       cfsv2Staged.getOrElse(rows, {
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_stress_cfsv2_")
-        registerTempDirCleanup(path)
+        val path = Staging.scratchDir("graft_stress_cfsv2_")
         val cells = 250L; val ens = 4
         val days = math.max(2, (rows / (cells * ens)).toInt)
         raster(sp, cells, days, dup = 1, ens = ens, width = 25)
@@ -231,15 +225,6 @@ object Stress {
     }
     sp.read.parquet(dir)
   }
-
-  private def registerTempDirCleanup(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
 
   /** Event-time base and span shared by [[events]] and
     * [[stageTimeSlicedEvents]] — the slicer's filter bounds MUST be the
@@ -269,40 +254,29 @@ object Stress {
   /** Stage `n` generated events as time-ordered source files for the
     * streaming scenarios (shared by sessionize_stateful_stream and
     * proximity_join_stream so their source shapes cannot drift):
-    * 20 slices at full scale, one sequential write per time slice —
-    * FileStreamSource orders by modification time, so write order =
-    * event-time order and watermark progress is monotone across
-    * micro-batches. Returns (sourceDir, checkpointDir, files). */
+    * 20 equal-width time slices at full scale, one file each, staged
+    * as a drop-box — FileStreamSource orders by modification time, so
+    * arrival order = event-time order and watermark progress is
+    * monotone across micro-batches. Returns (sourceDir, checkpointDir,
+    * files). */
   private def stageTimeSlicedEvents(
       sp: SparkSession, n: Long): (String, String, Int) = {
     val users = math.max(100L, n / 50)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stress_stream_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stress_ckpt_")
-    dir.toFile.deleteOnExit(); ckpt.toFile.deleteOnExit()
+    val dir = Staging.scratchDir("graft_stress_stream_")
+    val ckpt = Staging.scratchDir("graft_stress_ckpt_")
     val files = if (n >= 1000000L) 20 else 4
-    val ev = events(sp, n, users, days = StreamDays)
-    val t00 = EventEpochUs
     val sliceUs = StreamDays.toLong * 86400L * 1000000L / files
-    var staged = Set.empty[java.io.File]
-    (0 until files).foreach { k =>
-      // slice 0 takes the catch-all LOWER bound too: bounds derive from
-      // the same constants events() generates with, but an open lower
-      // edge makes row loss structurally impossible either way
-      ev.filter((if (k == 0) lit(true)
-           else col("ts") >= timestamp_micros(lit(t00 + k * sliceUs))) &&
-          (if (k == files - 1) lit(true)
-           else col("ts") < timestamp_micros(lit(t00 + (k + 1) * sliceUs))))
-        .repartition(1)
-        .write.mode("append").parquet(dir.toString)
-      // explicit ascending mtimes, 60 s apart: FileStreamSource orders
-      // by modification time, and two appends landing in the same
-      // millisecond would tie — delivering slices out of event-time
-      // order and late-dropping them at the watermark
-      val now = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.endsWith(".parquet") && !staged.contains(f))
-      now.foreach(_.setLastModified(1700000000000L + k * 60000L))
-      staged ++= now
-    }
+    // slice 0 takes the catch-all LOWER bound and the last slice the
+    // catch-all upper one: bounds derive from the same constants
+    // events() generates with, but open edges make row loss
+    // structurally impossible either way
+    val slice = least(greatest(
+      floor((unix_micros(col("ts")) - lit(EventEpochUs)) / lit(sliceUs)),
+      lit(0L)), lit(files - 1L))
+    Staging.stageDropBox(dir,
+      events(sp, n, users, days = StreamDays)
+        .withColumn("__slice", slice).repartition(col("__slice")),
+      "__slice", "events")
     (dir.toString, ckpt.toString, files)
   }
 
@@ -394,13 +368,7 @@ object Stress {
         val u = new java.net.URI(whDir)
         if (u.getPath != null && u.getPath.nonEmpty) u.getPath else whDir
       } catch { case _: java.net.URISyntaxException => whDir }
-    val loc = new java.io.File(whPath, table)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(loc)
-    }
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(whPath, table))
   }
 
   def scenarios(scale: Double): Seq[Scenario] = {
@@ -509,30 +477,17 @@ object Stress {
         val W2 = 1386
         val cells = math.max(8192L, (811000L * scale).toLong)
         val feats = math.max(500, (2462 * scale).toInt)
-        val drop = java.nio.file.Files.createTempDirectory("graft_stress_etl_drop_")
-        val out = java.nio.file.Files.createTempDirectory("graft_stress_etl_out_")
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stress_etl_ckpt_")
-        Seq(drop, out, ckpt).foreach(_.toFile.deleteOnExit())
+        val drop = Staging.scratchDir("graft_stress_etl_drop_")
+        val out = Staging.scratchDir("graft_stress_etl_out_")
+        val ckpt = Staging.scratchDir("graft_stress_etl_ckpt_")
         // stage one file per day, ascending mtimes (the drop-box
         // contract: each day lands whole) — untimed build work
-        val scratch = java.nio.file.Files.createTempDirectory("graft_stress_etl_w_")
-        raster(sp, cells, days, dup = 1, ens = 1, width = W2).drop("ens")
-          .withColumn("__d", date_format(col("time"), "yyyy-MM-dd"))
-          .repartition(col("__d"))
-          .write.mode("overwrite").partitionBy("__d").parquet(scratch.toString)
-        val dayDirs = Option(scratch.toFile.listFiles())
-          .getOrElse(Array.empty).filter(_.getName.startsWith("__d="))
-          .sortBy(_.getName)
-        require(dayDirs.length == days, s"staged ${dayDirs.length} days")
-        dayDirs.zipWithIndex.foreach { case (dd, k) =>
-          val parts = dd.listFiles().filter(_.getName.endsWith(".parquet"))
-          require(parts.length == 1,
-            s"${dd.getName}: expected one file from the day-repartition " +
-              s"write, found ${parts.length}")
-          val f = drop.resolve(f"$k%02d_day.parquet")
-          java.nio.file.Files.move(parts.head.toPath, f)
-          f.toFile.setLastModified(1700000000000L + k * 60000L)
-        }
+        val staged = Staging.stageDropBox(drop,
+          raster(sp, cells, days, dup = 1, ens = 1, width = W2).drop("ens")
+            .withColumn("__d", unix_date(to_date(col("time"))))
+            .repartition(col("__d")),
+          "__d", "day")
+        require(staged.length == days, s"staged ${staged.length} days")
         val w = weights(sp, feats, 12, W2,
           math.max(1L, cells / W2).toInt)
         (() => withStatePartitions(sp) {
@@ -776,15 +731,10 @@ object Stress {
         // fingerprint table under a NOT-yet-existing child path: the
         // bootstrap admit must see "no state" (an existing empty dir
         // would read as state and fail schema inference)
-        val state = java.nio.file.Files
-          .createTempDirectory("graft_stress_admit_state_").resolve("fp")
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_stress_admit_out_").resolve("out")
-        val drop = java.nio.file.Files
-          .createTempDirectory("graft_stress_admit_drop_")
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("graft_stress_admit_ckpt_")
-        Seq(state, drop, ckpt).foreach(_.toFile.deleteOnExit())
+        val state = Staging.scratchDir("graft_stress_admit_state_").resolve("fp")
+        val out = Staging.scratchDir("graft_stress_admit_out_").resolve("out")
+        val drop = Staging.scratchDir("graft_stress_admit_drop_")
+        val ckpt = Staging.scratchDir("graft_stress_admit_ckpt_")
         // untimed build: bootstrap the fingerprint state from the
         // prior corpus (the "yesterday" batch admit), then stage the
         // increment as 10 id-ranged files with ascending mtimes —
@@ -799,21 +749,11 @@ object Stress {
             transform(sequence(lit(0), lit(39)),
               i => tok(col("seed"), i, 50000)), " "))
           .select(col("id"), col("text"))
-        val files = 10
-        val per = (inc + files - 1) / files
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft_stress_admit_w_")
-        (0 until files).foreach { k =>
-          incr.filter(col("id") >= n + k * per &&
-              col("id") < n + (k + 1) * per)
-            .repartition(1).write.parquet(s"$scratch/b$k")
-          new java.io.File(s"$scratch/b$k").listFiles()
-            .filter(_.getName.endsWith(".parquet")).foreach { f =>
-              val t = drop.resolve(f"$k%02d_inc.parquet")
-              java.nio.file.Files.move(f.toPath, t)
-              t.toFile.setLastModified(1700000000000L + k * 60000L)
-            }
-        }
+        val per = (inc + 9) / 10
+        Staging.stageDropBox(drop,
+          incr.withColumn("__b", floor((col("id") - lit(n)) / lit(per)))
+            .repartition(col("__b")),
+          "__b", "inc")
         val writer = graft.streaming.EventPipeline.admitStream(sp,
             drop.toString, state.toString, out.toString, idCol = "id")
           .option("checkpointLocation", ckpt.toString)
@@ -1053,13 +993,7 @@ object Stress {
         val w = weights(sp, 40, 12, 25, 10)
         val elev = sp.range(40).select(col("id").as("nhru"),
           (col("id") * 75.0).as("elev"))
-        (restoringConfs(sp, Seq(
-          "spark.sql.execution.objectHashAggregate.sortBased.fallbackThreshold"))(() => {
-          sys.env.get("SPARK_GRAFT_CFSV2_OBJAGG_KEYS").foreach(v => sp.conf.set(
-            "spark.sql.execution.objectHashAggregate.sortBased.fallbackThreshold", v))
-          graft.etl.GridmetPipeline.cfsv2Median(g, w, features, elev)
-            .write.mode("overwrite").format("noop").save()
-        }), n)
+        (sink(graft.etl.GridmetPipeline.cfsv2Median(g, w, features, elev)), n)
       }),
       Scenario("bradley_terry_joinform", sp => {
         // round-18 verdict #3: the MM fold's size gate must HAND OFF
@@ -1616,20 +1550,6 @@ object Stress {
           if (now == last) settle += 1 else { settle = 0; last = now }
         }
         val m = listener.snapshot()
-        // SPARK_GRAFT_STRESS_STAGES=1: per-stage attribution rows on
-        // stderr (the QueryProf table) — which stage spilled/skewed,
-        // not just that the scenario did
-        if (sys.env.get("SPARK_GRAFT_STRESS_STAGES").contains("1")) {
-          System.err.println(s"[stress] ${sc.name} per-stage " +
-            "(stage tasks writeB readB spillB maxMs medMs):")
-          val cpu = listener.perStageCpu.map(r => r._1 -> r).toMap
-          listener.perStage.sortBy(-_._6).foreach {
-            case (id, nT, w, r, sp2, mx, med, _, _) =>
-              val c = cpu.get(id)
-              System.err.println(f"[stress]   $id%5d $nT%5d $w%11d $r%11d" +
-                f" $sp2%11d $mx%6d $med%6d | cpuMed ${c.map(_._4).getOrElse(0L)}%6d")
-          }
-        }
         // 1-min loadavg at scenario END (self-load dominated) plus the
         // pre-run baseline: wall seconds on a shared box are only
         // interpretable next to the load they ran under (BENCHNOTES.md

@@ -249,12 +249,7 @@ object Jobs {
   def runStageNetcdf(spark: SparkSession, a: Args): String = {
     val (t, x, y) = a.get("catalog-path") match {
       case Some(cat) =>
-        val row = Sources.catalogParquet(spark, cat)
-          .filter(col("id") === a("data-id"))
-          .select(col("T_name"), col("X_name"), col("Y_name"))
-          .limit(1).collect()
-        require(row.nonEmpty, s"catalog has no record for id=${a("data-id")}")
-        (row(0).getString(0), row(0).getString(1), row(0).getString(2))
+        GridmetPipeline.catalogCoords(Sources.catalogParquet(spark, cat), a("data-id"))
       case None => (a.get("t-name").getOrElse("day"),
         a.get("x-name").getOrElse("lon"), a.get("y-name").getOrElse("lat"))
     }
@@ -364,14 +359,6 @@ object Jobs {
     out
   }
 
-  /** Corpus → pretraining shards: tokenize `--input-path` documents,
-    * pack into `--context-len` windows across `--n-shards`
-    * deterministic streams, and write packed `.bin`/`.idx` shard files
-    * to `--output-path`. With `--bpe-vocab`/`--bpe-merges` (the public
-    * GPT-2 artifact pair) tokenization is REAL byte-pair encoding via
-    * the [[graft.functions.Bpe]] codegen kernel — the shards carry
-    * actual BPE ids; without them it falls back to the whitespace
-    * hash-bucket stub (plumbing-only runs). */
   /** CORPUS SELECTION job — the curation step between `dedup-admit`
     * and `pack-tokens`: score every document with the q20 quality
     * formula, optionally keep only the best `--budget` tokens
@@ -721,6 +708,14 @@ object Jobs {
     out
   }
 
+  /** Corpus → pretraining shards: tokenize `--input-path` documents,
+    * pack into `--context-len` windows across `--n-shards`
+    * deterministic streams, and write packed `.bin`/`.idx` shard files
+    * to `--output-path`. With `--bpe-vocab`/`--bpe-merges` (the public
+    * GPT-2 artifact pair) tokenization is REAL byte-pair encoding via
+    * the [[graft.functions.Bpe]] codegen kernel — the shards carry
+    * actual BPE ids; without them it falls back to the whitespace
+    * hash-bucket stub (plumbing-only runs). */
   def runPackTokens(spark: SparkSession, a: Args): String = {
     val docs = spark.read.parquet(a("input-path"))
     val idCol = a.get("id-col").getOrElse("doc_id")

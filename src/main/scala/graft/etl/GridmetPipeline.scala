@@ -74,11 +74,20 @@ object GridmetPipeline {
     * Y_name fields. */
   def normalizeCoordsFromCatalog(
       grid: DataFrame, catalog: DataFrame, dataId: String): DataFrame = {
+    val (t, x, y) = catalogCoords(catalog, dataId)
+    normalizeCoords(grid, t, x, y)
+  }
+
+  /** The (T_name, X_name, Y_name) coordinate names of catalog record
+    * `dataId`. A catalog can hold several records for one id; the
+    * lowest (T_name, X_name, Y_name) wins, so the choice does not
+    * depend on row or partition order. */
+  def catalogCoords(catalog: DataFrame, dataId: String): (String, String, String) = {
     val row = catalog.filter(col("id") === dataId)
       .select(col("T_name"), col("X_name"), col("Y_name"))
-      .orderBy(col("T_name")).limit(1).collect()
+      .orderBy(col("T_name"), col("X_name"), col("Y_name")).limit(1).collect()
     require(row.nonEmpty, s"catalog has no record for id=$dataId")
-    normalizeCoords(grid, row(0).getString(0), row(0).getString(1), row(0).getString(2))
+    (row(0).getString(0), row(0).getString(1), row(0).getString(2))
   }
 
   /** NN fill mapping for a finalized series — the genmap=True side of

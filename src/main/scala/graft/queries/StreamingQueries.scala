@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.sources.Staging
 import graft.streaming.EventPipeline
 
 import Shared._
@@ -28,7 +29,6 @@ object StreamingQueries extends QueryFamily("streaming") {
   private def eventsSlicedStreamDir(
       s: SparkSession, dir: String, files: Int = 4): String =
     streamSrcDirs.getOrElseUpdate(s"sliced$files:" + dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_sliced_")
       val ev = events(s, dir)
       // equal-COUNT slices on the (ts, event_id) rank, not equal-width
       // time windows: the events table is bursty, so uniform-time cuts
@@ -47,35 +47,14 @@ object StreamingQueries extends QueryFamily("streaming") {
           "break the as-of right-before-left rule (q109)")
       // ntile = equal-count buckets without a separate count() (and
       // without the int-overflow a rank*files product would hit above
-      // ~2^31/files rows); ONE pass writes every slice via partitionBy
-      // (global-window output is a single partition, so one file per
-      // slice directory).
+      // ~2^31/files rows); the global window's output is a single
+      // partition, so one write pass stages one file per slice. A table
+      // with fewer rows than `files` leaves some buckets empty: they
+      // stage no file (fewer staged files is still a valid stream).
       val w = Window.orderBy(col("ts"), col("event_id"))
-      val scratch =
-        java.nio.file.Files.createTempDirectory("graft_stream_sliced_w_")
-      ev.withColumn("__slice", ntile(files).over(w) - 1)
-        .write.mode("overwrite").partitionBy("__slice")
-        .parquet(scratch.toString)
-      val base = System.currentTimeMillis()
-      (0 until files).foreach { k =>
-        // a table with fewer rows than `files` leaves some ntile
-        // buckets empty — no __slice=k directory is written; skip
-        // rather than NPE (fewer staged files is still a valid stream)
-        Option(new java.io.File(scratch.toFile, s"__slice=$k").listFiles())
-          .foreach { entries =>
-            val parts = entries.filter(_.getName.endsWith(".parquet"))
-            // the global-window write produces ONE part per slice; if a
-            // plan change ever splits it, taking the head would silently
-            // drop rows from the staged stream — fail by name instead
-            require(parts.length == 1,
-              s"slice $k: expected exactly one parquet part file from " +
-                s"the single-partition write, found ${parts.length}")
-            val f = d.resolve(f"$k%02d_events.parquet")
-            java.nio.file.Files.move(parts.head.toPath, f)
-            f.toFile.setLastModified(base - (files - k).toLong * 60000L)
-          }
-      }
-      d.toFile.deleteOnExit()
+      val d = Staging.scratchDir("graft_stream_sliced_")
+      Staging.stageDropBox(d, ev.withColumn("__slice", ntile(files).over(w) - 1),
+        "__slice", "events")
       d.toString
     })
 
@@ -87,29 +66,14 @@ object StreamingQueries extends QueryFamily("streaming") {
     * (each time value's rows land whole in one file). */
   private def gridDailyStreamDir(s: SparkSession, dir: String): String =
     streamSrcDirs.getOrElseUpdate("griddaily:" + dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft_grid_daily_")
       val g = gridFromLineitem(t(s, dir, "lineitem"), nullify = false)
         .withColumn("time", date_trunc("year", col("time")).cast("date"))
-      val scratch =
-        java.nio.file.Files.createTempDirectory("graft_grid_daily_w_")
       // repartition BY the year: each year's rows land in one task, so
-      // the partitioned write emits exactly one file per year directory
-      g.withColumn("__y", year(col("time")))
-        .repartition(col("__y"))
-        .write.mode("overwrite").partitionBy("__y").parquet(scratch.toString)
-      val base = System.currentTimeMillis()
-      val years = Option(scratch.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("__y=")).sortBy(_.getName)
-      years.zipWithIndex.foreach { case (yd, k) =>
-        val parts = yd.listFiles().filter(_.getName.endsWith(".parquet"))
-        require(parts.length == 1,
-          s"${yd.getName}: expected one parquet part from the one-task " +
-            s"write, found ${parts.length}")
-        val f = d.resolve(f"$k%02d_grid.parquet")
-        java.nio.file.Files.move(parts.head.toPath, f)
-        f.toFile.setLastModified(base - (years.length - k).toLong * 60000L)
-      }
-      d.toFile.deleteOnExit()
+      // the partitioned write emits exactly one file per year
+      val d = Staging.scratchDir("graft_grid_daily_")
+      Staging.stageDropBox(d,
+        g.withColumn("__y", year(col("time"))).repartition(col("__y")),
+        "__y", "grid")
       d.toString
     })
 
@@ -156,22 +120,11 @@ object StreamingQueries extends QueryFamily("streaming") {
   private def lateEventsStreamDir(s: SparkSession): String =
     streamSrcDirs.getOrElseUpdate("late-events", {
       import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_late_")
-      val base = System.currentTimeMillis()
-      lateEventRows.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (k, rs) =>
-        val df = rs.map(r =>
-            (r._2, java.sql.Timestamp.valueOf(r._3), r._4, r._5.toDouble))
-          .toDF("user_id", "ts", "event_id", "value")
-        val scratch =
-          java.nio.file.Files.createTempDirectory("graft_stream_late_w_")
-        df.coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-        val part = scratch.toFile.listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val f = d.resolve(f"$k%02d_late.parquet")
-        java.nio.file.Files.move(part.toPath, f)
-        f.toFile.setLastModified(base - (3 - k).toLong * 60000L)
-      }
-      d.toFile.deleteOnExit()
+      val df = lateEventRows.map(r =>
+          (r._1, r._2, java.sql.Timestamp.valueOf(r._3), r._4, r._5.toDouble))
+        .toDF("__file", "user_id", "ts", "event_id", "value")
+      val d = Staging.scratchDir("graft_stream_late_")
+      Staging.stageDropBox(d, df.coalesce(1), "__file", "late")
       d.toString
     })
 
@@ -185,22 +138,14 @@ object StreamingQueries extends QueryFamily("streaming") {
     * cannot pass this query. */
   private def docsDedupStreamDir(s: SparkSession, dir: String): String =
     streamSrcDirs.getOrElseUpdate("dedup:" + dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft_stream_dedup_")
-      val f0 = d.resolve("0_documents.parquet")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/documents.parquet"), f0)
-      val scratch =
-        java.nio.file.Files.createTempDirectory("graft_stream_dedup_w_")
-      s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("doc_id", col("doc_id") + 100000)
-        .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-      val part = scratch.toFile.listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val f1 = d.resolve("1_documents_copy.parquet")
-      java.nio.file.Files.move(part.toPath, f1)
-      // strict mtime order: originals strictly before copies
-      f0.toFile.setLastModified(f1.toFile.lastModified() - 60000L)
-      d.toFile.deleteOnExit()
+      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val d = Staging.scratchDir("graft_stream_dedup_")
+      Staging.stageDropBox(d,
+        docs.withColumn("__copy", lit(0))
+          .unionByName(docs.withColumn("doc_id", col("doc_id") + 100000)
+            .withColumn("__copy", lit(1)))
+          .coalesce(1),
+        "__copy", "documents")
       d.toString
     })
 
@@ -258,8 +203,7 @@ object StreamingQueries extends QueryFamily("streaming") {
   private def runStreamToParquet(
       s: SparkSession,
       w: org.apache.spark.sql.streaming.DataStreamWriter[_]): DataFrame = {
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_sink_")
-    d.toFile.deleteOnExit()
+    val d = Staging.scratchDir("graft_stream_sink_")
     val (out, ckpt) = (d.resolve("out"), d.resolve("ckpt"))
     withStreamShufflePartitions(s) {
       val q = w.format("parquet").option("path", out.toString)
@@ -767,11 +711,8 @@ object StreamingQueries extends QueryFamily("streaming") {
       // either way (replay writes nothing; the read-back is the same
       // table), so Verify and the sf0.1 spot see the same rows.
       val tmp = java.nio.file.Paths.get(
-        streamSrcDirs.getOrElseUpdate("dailyetl-state:" + dir, {
-          val p = java.nio.file.Files.createTempDirectory("graft_daily_etl_")
-          p.toFile.deleteOnExit()
-          p.toString
-        }))
+        streamSrcDirs.getOrElseUpdate("dailyetl-state:" + dir,
+          Staging.scratchDir("graft_daily_etl_").toString))
       val (out, ckpt) = (tmp.resolve("out"), tmp.resolve("ckpt"))
       val gate: String => Boolean = dayStr => {
         val day = java.time.LocalDate.parse(dayStr)

@@ -2,7 +2,6 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 import graft.model.Model
 
 /** Sinks (SURVEY.md §2.7). Parquet-first: the reference's CF-NetCDF
@@ -213,8 +212,14 @@ object Sinks {
     }.mkString(",")
     val globals = (Model.GlobalAttrs ++ extraAttrs)
       .map { case (k, v) => s""""$k": "$v"""" }.mkString(",")
-    Files.writeString(Paths.get(path, "_attrs.json"),
-      s"""{"global": {$globals}, "variables": {$varAttrs}}""")
+    // the sidecar follows the OUTPUT path's filesystem, like the
+    // parquet beside it: java.nio cannot open a file:/hdfs:/s3a: URI
+    val attrs = new org.apache.hadoop.fs.Path(path, "_attrs.json")
+    val out = attrs.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      .create(attrs, true)
+    try out.write(s"""{"global": {$globals}, "variables": {$varAttrs}}"""
+      .getBytes("UTF-8"))
+    finally out.close()
   }
 
   /** K3 — NN-mapping CSV (`helper.py:75-77`; default name `helper.py:13`). */

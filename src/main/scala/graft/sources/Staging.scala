@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.nio.file.{Files, Path}
+
+import org.apache.hadoop.fs.{FileSystem, FileUtil}
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, floor, lit}
 import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
@@ -18,8 +22,77 @@ import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
   * Bucketed output must go through the session catalog (`saveAsTable`) —
   * Spark's bucketing metadata lives in the table definition, not the
   * files.
+  *
+  * Stream inputs land as a drop-box ([[stageDropBox]]); every scratch
+  * directory the engine makes comes from [[scratchDir]].
   */
 object Staging {
+
+  /** The per-JVM scratch root under `java.io.tmpdir`. One shutdown hook
+    * removes the whole tree (`deleteOnExit` cannot: it skips non-empty
+    * directories). The hook runs after Spark's own hooks have stopped
+    * the context, so no streaming query or state store still writes
+    * into it. A JVM killed before its hooks run leaves exactly this one
+    * `graft_scratch_<pid>_*` directory behind. */
+  private lazy val scratchRoot: Path = {
+    val root = Files.createTempDirectory(
+      s"graft_scratch_${ProcessHandle.current().pid()}_")
+    ShutdownHookManager.get().addShutdownHook(
+      () => FileUtil.fullyDelete(root.toFile): Unit,
+      FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
+    root
+  }
+
+  /** A fresh directory under the per-JVM scratch root, removed with it
+    * at JVM exit. */
+  def scratchDir(prefix: String): Path =
+    Files.createTempDirectory(scratchRoot, prefix)
+
+  /** Modification time of the first drop-box file; slice k lands
+    * k minutes later. */
+  private val DropBoxEpochMs = 1700000000000L
+
+  /** Stage `frame` as a file-stream drop-box in `dir`: one parquet file
+    * per distinct value of the integral column `sliceCol`, in ascending
+    * slice order, named `NN_<name>.parquet`, with modification times
+    * strictly ascending 60 s apart. FileStreamSource delivers files in
+    * modification-time order, so arrival order is slice order (two files
+    * written in the same millisecond would tie). Empty slices stage no
+    * file.
+    *
+    * The frame is written ONCE, partitioned by `sliceCol`, so the
+    * caller's plan decides the cost: each slice's rows must sit in one
+    * task (a single-partition plan, `coalesce(1)` or
+    * `repartition(col(sliceCol))`). A slice that lands as any number of
+    * part files other than one fails by name rather than dropping rows
+    * from the stream. Returns the staged files in arrival order. */
+  def stageDropBox(
+      dir: Path, frame: DataFrame, sliceCol: String, name: String): Seq[Path] = {
+    val scratch = scratchDir("graft_dropbox_w_")
+    frame.write.mode(SaveMode.Overwrite).partitionBy(sliceCol)
+      .parquet(scratch.toString)
+    val slices = Option(scratch.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith(s"$sliceCol="))
+      .map { d =>
+        val v = d.getName.stripPrefix(s"$sliceCol=")
+        v.toLongOption.getOrElse(throw new IllegalArgumentException(
+          s"drop-box slice ${d.getName}: $sliceCol must be an integral " +
+            "slice number")) -> d
+      }
+      .sortBy(_._1)
+    val staged = slices.toSeq.zipWithIndex.map { case ((_, d), k) =>
+      val parts = d.listFiles().filter(_.getName.endsWith(".parquet"))
+      require(parts.length == 1,
+        s"drop-box slice ${d.getName}: expected exactly one parquet part " +
+          s"file, found ${parts.length}")
+      val f = Files.move(parts.head.toPath, dir.resolve(f"$k%02d_$name.parquet"))
+      require(f.toFile.setLastModified(DropBoxEpochMs + k * 60000L),
+        s"drop-box slice ${d.getName}: cannot set the modification time of $f")
+      f
+    }
+    FileUtil.fullyDelete(scratch.toFile)
+    staged
+  }
 
   /** Stage a long-form grid as a partitioned, bucketed table. */
   def stageGrid(

@@ -794,14 +794,23 @@ class JobsSpec extends SparkSpec {
     import graft.etl.GridmetPipeline
     val g = Seq((Timestamp.valueOf("2021-01-01 00:00:00"), 40.0, -100.0, 1.0))
       .toDF("day", "latitude", "longitude", "pr")
-    val cat = Seq(("gridmet", "day", "longitude", "latitude"),
-        ("other", "t", "x", "y"))
-      .toDF("id", "T_name", "X_name", "Y_name")
-    val out = GridmetPipeline.normalizeCoordsFromCatalog(g, cat, "gridmet")
-    assert(out.columns.toSet == Set("time", "lat", "lon", "pr"))
-    // already-canonical names pass through untouched
-    val same = GridmetPipeline.normalizeCoords(out, "time", "lon", "lat")
-    assert(same.columns.toSet == out.columns.toSet)
+    // two records for one id: the lookup (shared with stage-netcdf)
+    // picks the same one whatever the row order
+    val recs = Seq(("gridmet", "time", "lon", "lat"), ("other", "t", "x", "y"),
+      ("gridmet", "day", "longitude", "latitude"))
+    Seq(recs, recs.reverse).foreach { rs =>
+      val cat = rs.toDF("id", "T_name", "X_name", "Y_name").repartition(3)
+      assert(GridmetPipeline.catalogCoords(cat, "gridmet") ==
+        (("day", "longitude", "latitude")))
+      val out = GridmetPipeline.normalizeCoordsFromCatalog(g, cat, "gridmet")
+      assert(out.columns.toSet == Set("time", "lat", "lon", "pr"))
+      // already-canonical names pass through untouched
+      val same = GridmetPipeline.normalizeCoords(out, "time", "lon", "lat")
+      assert(same.columns.toSet == out.columns.toSet)
+    }
+    val e = intercept[IllegalArgumentException](GridmetPipeline.catalogCoords(
+      recs.toDF("id", "T_name", "X_name", "Y_name"), "absent"))
+    assert(e.getMessage.contains("id=absent"))
   }
 
   test("stage-netcdf: gridded .nc → staged parquet → gridmet → contract (full lifecycle)") {

@@ -196,4 +196,14 @@ class SinksSpec extends SparkSpec {
     val tmax = nc.vars.find(_.name == "tmax").get.data.asInstanceOf[DoubleData].v
     assert(math.abs(tmax(0) - (285.5 - 273.15)) < 1e-9)
   }
+
+  test("writeContract writes data and the _attrs.json sidecar to a file: URI output path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-contract-uri")
+    val uri = dir.resolve("out").toUri.toString
+    assert(uri.startsWith("file:"), uri)
+    Sinks.writeContract(contractDf, uri)
+    assert(spark.read.parquet(uri).count() == 6)
+    val attrs = java.nio.file.Files.readString(dir.resolve("out/_attrs.json"))
+    assert(attrs.startsWith("""{"global": {"""), attrs)
+  }
 }

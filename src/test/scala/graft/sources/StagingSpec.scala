@@ -4,7 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Bucketed staging: co-located joins/aggregations read pre-shuffled
-  * data — the Exchange disappears from the plan. */
+  * data — the Exchange disappears from the plan. Plus the drop-box
+  * stager and the per-JVM scratch-dir lifecycle. */
 class StagingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -227,4 +228,63 @@ class StagingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS graft_bucket_g")
     }
   }
+
+  test("stageDropBox: one file per slice, in slice order, mtimes strictly ascending 60 s apart") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dropbox")
+    // slice numbers sort numerically (10 after 2), not by directory name
+    val slices = Seq(10, 2, 0, 11)
+    val df = (0 until 40).map(k => (slices(k % 4), k.toLong)).toDF("s", "v")
+    val staged = Staging.stageDropBox(dir, df.coalesce(1), "s", "ev")
+    assert(staged.map(_.getFileName.toString) ==
+      Seq("00_ev.parquet", "01_ev.parquet", "02_ev.parquet", "03_ev.parquet"))
+    assert(dir.toFile.list().sorted.toSeq == staged.map(_.getFileName.toString))
+    val mtimes = staged.map(_.toFile.lastModified())
+    assert(mtimes.sliding(2).forall { case Seq(a, b) => b - a == 60000L }, mtimes)
+    // each file holds exactly its slice's rows, without the slice column
+    staged.zip(slices.sorted).foreach { case (f, sl) =>
+      val got = spark.read.parquet(f.toString)
+      assert(got.columns.toSeq == Seq("v"))
+      assert(got.as[Long].collect().sorted.toSeq ==
+        (0 until 40).filter(k => slices(k % 4) == sl).map(_.toLong), f)
+    }
+  }
+
+  test("stageDropBox: a slice written as two part files fails and names the slice") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dropbox-split")
+    val twoTasks = spark.range(0, 10, 1, 2).withColumn("s", lit(7))
+    val e = intercept[IllegalArgumentException](
+      Staging.stageDropBox(dir, twoTasks, "s", "ev"))
+    assert(e.getMessage.contains("s=7") && e.getMessage.contains("found 2"),
+      e.getMessage)
+  }
+
+  test("scratchDir: the exit hook removes the scratch root with every tree that holds files") {
+    // a separate JVM, so the real shutdown hook runs on its exit
+    val tmp = java.nio.file.Files.createTempDirectory("graft-scratch-exit")
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val p = new ProcessBuilder(javaBin, s"-Djava.io.tmpdir=$tmp",
+        "-cp", System.getProperty("java.class.path"),
+        "graft.sources.ScratchProbe")
+      .redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
+    assert(p.waitFor() == 0, out)
+    val made = out.linesIterator.filter(_.startsWith("scratch ")).map(l =>
+      java.nio.file.Paths.get(l.stripPrefix("scratch "))).toSeq
+    assert(made.length == 2 && made.forall(_.startsWith(tmp)), out)
+    assert(made.map(_.getParent).distinct.length == 1, "one root per JVM")
+    assert(made.forall(d => !d.toFile.exists()), out)
+    assert(tmp.toFile.list().isEmpty, tmp.toFile.list().toSeq)
+  }
+}
+
+/** Makes two [[Staging.scratchDir]] trees holding files, prints them and
+  * exits: StagingSpec checks that nothing of them survives the JVM. */
+object ScratchProbe {
+  def main(args: Array[String]): Unit =
+    Seq("probe_a_", "probe_b_").foreach { prefix =>
+      val d = Staging.scratchDir(prefix)
+      java.nio.file.Files.createDirectories(d.resolve("sub"))
+      java.nio.file.Files.writeString(d.resolve("sub/part.txt"), "rows")
+      println(s"scratch $d")
+    }
 }
