@@ -1586,7 +1586,8 @@ object Stress {
           // off THIS column, durations off a quiet-box capture.
           s""""max_byte_skew":${
             math.rint(listener.maxByteSkew() * 100) / 100},""" +
-          s""""stages":${m.stageCount},"tasks":${m.taskCount}}"""
+          s""""stages":${m.stageCount},"tasks":${m.taskCount},""" +
+          s""""codegen_compiles":${m.codegenCompiles}}"""
         println(line)
         // SPARK_GRAFT_STRESS_STAGES=1: per-stage drill-down straight
         // from the harness, so a spilling scenario can be attributed

@@ -184,33 +184,19 @@ object Jobs {
       // consumed instead of recomputing the mapping.
       val mappingPath = s"${a("output-path")}/" +
         a.get("mapping-file").getOrElse("fill_missing_nearest.csv")
-      val out =
-        if (filled && a.has("genmap")) {
-          // build the unfilled series ONCE, derive + persist the mapping,
-          // and fill that same series — no second aggregation DAG
-          val unfilled = GridmetPipeline.gridmet(grid, weights, features,
-            start = start, end = end, partial = a.has("partial"),
-            strategy = weightJoinArg(spark, a))
-          GridmetPipeline.fillMapping(unfilled, features) match {
-            case None => unfilled
-            case Some(m) =>
-              Sinks.writeMappingCsv(m, mappingPath)
-              // fill from the persisted CSV: truncates the NN-join lineage
-              // so the output job broadcasts a tiny file-backed table
-              // instead of re-running the mapping computation
-              GridmetPipeline.applyFill(unfilled,
-                Sources.fillMappingCsv(spark, mappingPath))
-          }
-        } else {
-          val mapping =
-            if (filled && a.get("mapping-file").isDefined)
-              Some(Sources.fillMappingCsv(spark, mappingPath))
-            else None
-          GridmetPipeline.gridmet(grid, weights, features,
-            start = start, end = end,
-            partial = a.has("partial"), fillMissing = filled,
-            mapping = mapping, strategy = weightJoinArg(spark, a))
-        }
+      val given =
+        if (filled && !a.has("genmap") && a.get("mapping-file").isDefined)
+          Some(Sources.fillMappingCsv(spark, mappingPath))
+        else None
+      // --genmap: the mapping is derived on the driver while the series
+      // is built, and that one local table both fills the series and is
+      // written here — the CSV is never read back
+      val run = GridmetPipeline.gridmetWithMapping(grid, weights, features,
+        start = start, end = end,
+        partial = a.has("partial"), fillMissing = filled,
+        mapping = given, strategy = weightJoinArg(spark, a))
+      if (a.has("genmap")) run.derivedMapping.foreach(Sinks.writeMappingCsv(_, mappingPath))
+      val out = run.series
       val name = a.get("file-prefix").getOrElse("") + Sinks.outputName(start, filled)
       val path = s"${a("output-path")}/$name"
       Sinks.writeContract(Sinks.ordered(out, "time", "nhru"), path)

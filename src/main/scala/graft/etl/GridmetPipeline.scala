@@ -1,11 +1,14 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import graft.operators.{WeightedMean, FillMissing, EnsembleStats}
 import graft.functions.Physics
+import graft.sources.Sources
 
 /** End-to-end pipeline composition — the reference's three stages
   * (`initialize` → `run_weights` → `finalize` [→ `_fill_missing`],
@@ -17,18 +20,23 @@ object GridmetPipeline {
   /** F2 — buffered-bbox spatial subset (`etl.py:307-340`): restrict the
     * grid to the features' total bounds ± one cell (buffer const
     * `etl.py:321`). In relational form the descending-lat slice order is
-    * irrelevant; this is a pushed-down range predicate on (lon, lat). */
-  def bboxSubset(grid: DataFrame, features: DataFrame, buffer: Double = 0.04167): DataFrame = {
-    // cast → double: feature tables written by other engines may carry
-    // DECIMAL bounds, which Row.getDouble would reject
-    val b = features.agg(
-      min(col("minx").cast("double")).as("minx"),
-      min(col("miny").cast("double")).as("miny"),
-      max(col("maxx").cast("double")).as("maxx"),
-      max(col("maxy").cast("double")).as("maxy")).first()
+    * irrelevant; this is a pushed-down range predicate on (lon, lat).
+    * The bounds come from the driver-side [[Sources.featureTable]]. */
+  def bboxSubset(grid: DataFrame, features: DataFrame, buffer: Double = BboxBuffer): DataFrame =
+    withinBounds(grid, Sources.featureTable(features), buffer)
+
+  /** One grid cell in degrees (`etl.py:321`). */
+  private val BboxBuffer = 0.04167
+
+  /** [[bboxSubset]] on a feature table already on the driver. The
+    * bounds are cast to double as they are collected: feature tables
+    * written by other engines may carry DECIMAL bounds. */
+  private def withinBounds(grid: DataFrame, table: Sources.FeatureTable, buffer: Double): DataFrame = {
+    val b = table.bounds.getOrElse(throw new IllegalArgumentException(
+      "the bbox subset needs the features' minx, miny, maxx and maxy columns"))
     grid.filter(
-      col("lon").between(b.getDouble(0) - buffer, b.getDouble(2) + buffer) &&
-        col("lat").between(b.getDouble(1) - buffer, b.getDouble(3) + buffer))
+      col("lon").between(b.minx - buffer, b.maxx + buffer) &&
+        col("lat").between(b.miny - buffer, b.maxy + buffer))
   }
 
   /** F3 — time-range subset (`etl.py:407`, `etl.py:670`). The time
@@ -96,19 +104,53 @@ object GridmetPipeline {
     * nothing is missing (`helper.py:48-50`). Persist with
     * [[graft.sinks.Sinks.writeMappingCsv]] and reuse on later runs via
     * [[graft.sources.Sources.fillMappingCsv]] (genmap=False,
-    * `helper.py:79`). */
+    * `helper.py:79`). [[gridmet]] derives the same mapping from its
+    * persisted aggregate, at the first day of its driver-side time axis;
+    * this entry point, given only the series, finds that day with one
+    * aggregation and splits on the series' slice there. */
   def fillMapping(
       out: DataFrame, features: DataFrame,
-      probeVar: String = "tmax"): Option[DataFrame] = {
-    val (miss, present) = FillMissing.splitMissing(
-      out.withColumnRenamed("nhru", "fid"), probeVar)
+      probeVar: String = "tmax"): Option[DataFrame] =
+    Option(out.agg(min(col("time"))).first().get(0)).flatMap { t0 =>
+      val (miss, present) = out.filter(col("time") === lit(t0))
+        .select(col("nhru").cast(LongType), col(probeVar).isNull)
+        .collect().toSeq.partition(_.getBoolean(1))
+      nearest(miss.map(_.getLong(0)), present.map(_.getLong(0)), Sources.centroids(features))
+    }.map(mappingTable(out.sparkSession, _))
+
+  /** The NN mapping of the `miss` fids to the `present` ones, on the
+    * driver ([[FillMissing.nearestMappingLocal]]): both sides take their
+    * coordinates from the driver-side `centroids` (read only when
+    * something is missing; a fid without one drops out). Returns the
+    * |missing| (miss_fid, fill_fid, distance) rows in miss_fid order,
+    * or None when nothing is missing. */
+  private def nearest(
+      miss: Seq[Long], present: Seq[Long],
+      centroids: => Map[Long, (Double, Double)]): Option[Seq[(Long, Long, Double)]] =
     if (miss.isEmpty) None
     else {
-      val missF = miss.join(features, "fid").select("fid", "lat", "lon")
-      val presF = present.join(features, "fid").select("fid", "lat", "lon")
-      Some(FillMissing.nearestMapping(missF, presF))
+      val at = centroids
+      def coords(fids: Seq[Long]): Seq[(Long, Double, Double)] =
+        fids.flatMap(f => at.get(f).map { case (lat, lon) => (f, lat, lon) })
+      Some(FillMissing.nearestMappingLocal(coords(miss), coords(present)))
     }
+
+  /** The fill path's t0 split of the `fids`, (missing, present), from
+    * ONE collect over the persisted aggregate: a feature is present when
+    * its aggregate row at `t0` has a non-null tmmx (tmax before the
+    * finalize, which only shifts it), and missing otherwise, which
+    * includes the features the weighted mean left out: the dense series
+    * holds those as all-null rows. */
+  private def splitAt(aggOnce: DataFrame, t0: Any, fids: Seq[Long]): (Seq[Long], Seq[Long]) = {
+    val present = aggOnce.filter(col("time") === lit(t0) && col("tmmx").isNotNull)
+      .select(col("fid")).collect().map(_.getLong(0)).toSet
+    fids.partition(f => !present(f))
   }
+
+  /** Mapping rows as a local table in the mapping CSV's schema. */
+  private def mappingTable(
+      spark: org.apache.spark.sql.SparkSession, rows: Seq[(Long, Long, Double)]): DataFrame =
+    spark.createDataFrame(rows.map(Row.fromTuple).asJava, Sources.FillMappingSchema)
 
   private val owned =
     new scala.util.DynamicVariable[Option[mutable.Buffer[DataFrame]]](None)
@@ -122,6 +164,21 @@ object GridmetPipeline {
     finally cached.foreach(_.unpersist(blocking = false))
   }
 
+  /** persist(), NOT localCheckpoint(): both materialize once (the
+    * CacheManager substitutes the InMemoryRelation under every
+    * reference), but persist KEEPS LINEAGE — on a real cluster a lost
+    * executor recomputes the partition instead of permanently failing
+    * the job (checkpoint blocks have no recompute path). The
+    * CacheManager holds the entry until it is unpersisted, so it is
+    * registered with the enclosing [[releasingCaches]] scope, unless
+    * the caller had already cached this plan. */
+  private def persistOwned(df: DataFrame): DataFrame = {
+    val fresh = df.storageLevel == StorageLevel.NONE
+    val once = df.persist(StorageLevel.MEMORY_AND_DISK)
+    if (fresh) owned.value.foreach(_ += once)
+    once
+  }
+
   /** Reindex the aggregated series to the FULL feature × time (× ens)
     * domain: the weighted mean's inner join drops features whose weight
     * cells fall outside the (subset) grid, but the reference's output
@@ -131,35 +188,61 @@ object GridmetPipeline {
     * all-null rows existing. Both sides are POST-aggregation (features ×
     * timesteps), far smaller than the data plane — a plain shuffle join.
     * (The preserved side of an outer join can't be the broadcast build
-    * side; Spark ignores such a hint with a warning.) */
+    * side; Spark ignores such a hint with a warning.) The aggregate
+    * feeds the plan once per domain axis plus the outer join, so it is
+    * persisted ([[persistOwned]]). Post-aggregation size: |features| ×
+    * |timesteps| × |ens|, the small end of the DAG. */
   private def reindex(
       agg: DataFrame, features: DataFrame, extraKeys: Seq[String]): DataFrame = {
-    val keyCols = Seq("fid", "time") ++ extraKeys
-    // The aggregated series feeds the plan 2–3 times (one distinct per
-    // domain dimension + the outer join), and ReuseExchange cannot
-    // unify the differing aggregates above it — without a barrier the
-    // whole scan→join→agg subtree would run once PER REFERENCE.
-    // persist(), NOT localCheckpoint(): both materialize once (the
-    // CacheManager substitutes the InMemoryRelation under every
-    // reference), but persist KEEPS LINEAGE — on a real cluster a lost
-    // executor recomputes the partition instead of permanently failing
-    // the job (checkpoint blocks have no recompute path). The
-    // CacheManager holds the entry until it is unpersisted, so it is
-    // registered with the enclosing [[releasingCaches]] scope, unless
-    // the caller had already cached this plan. Post-aggregation size:
-    // |features| × |timesteps| × |ens|, the small end of the DAG.
-    val fresh = agg.storageLevel == StorageLevel.NONE
-    val aggOnce = agg.persist(StorageLevel.MEMORY_AND_DISK)
-    if (fresh) owned.value.foreach(_ += aggOnce)
+    val aggOnce = persistOwned(agg)
     val domain = (Seq("time") ++ extraKeys)
       .foldLeft(features.select(col("fid"))) { (d, k) =>
         d.crossJoin(aggOnce.select(col(k)).distinct())
       }
-    domain.join(aggOnce, keyCols, "left")
+    domain.join(aggOnce, Seq("fid", "time") ++ extraKeys, "left")
+  }
+
+  /** [[reindex]] for the fill path, whose t0 probe needs the time axis
+    * on the driver: the aggregate is persisted ([[persistOwned]]) and
+    * its |days| timestamps are collected in ONE aggregation, which
+    * materializes it. Without a driver-side consumer of the axis, the
+    * in-plan domain of [[reindex]] saves that action (measured on
+    * `cfsv2_region`). Returns the persisted aggregate and its sorted
+    * time axis. */
+  private def withTimeAxis(agg: DataFrame): (DataFrame, Seq[Any]) = {
+    val aggOnce = persistOwned(agg)
+    (aggOnce, aggOnce.agg(array_sort(collect_set(col("time")))).first().getSeq[Any](0))
+  }
+
+  /** The dense feature × `times` series over the aggregate, with the
+    * axis joined back as a local table. A feature in `donorOf` reads its
+    * donor's aggregate rows instead of its own: the NN fill (J3) as a
+    * key substitution on the |features|-row domain, before the join, so
+    * the series is built once and never scanned twice. Null-safe keys
+    * spare the aggregate's build side a null-filter pass; they match the
+    * same rows as `===` but for a null feature id, which no valid
+    * feature or weight table holds (the axis has no null time). */
+  private def denseOnAxis(
+      aggOnce: DataFrame, features: DataFrame, times: Seq[Any],
+      donorOf: Map[Long, Long]): DataFrame = {
+    val axis = aggOnce.sparkSession.createDataFrame(times.map(Row(_)).asJava,
+      StructType(Seq(aggOnce.schema("time"))))
+    val src =
+      if (donorOf.isEmpty) col("fid")
+      else coalesce(element_at(typedLit(donorOf), col("fid").cast(LongType)), col("fid"))
+    val domain = features.select(col("fid"), src.as("__src")).crossJoin(axis)
+    domain.join(aggOnce,
+      domain("__src") <=> aggOnce("fid") && domain("time") <=> aggOnce("time"), "left")
+      .select(domain("fid") +: domain("time") +:
+        aggOnce.columns.filterNot(Set("fid", "time")).toSeq.map(aggOnce(_)): _*)
   }
 
   /** Full gridMET pipeline: subset → area-weighted mean (A1/A2) →
-    * finalize (rename/units/humidity) → optional NN fill.
+    * finalize (rename/units/humidity) → optional NN fill. The series
+    * alone; [[gridmetWithMapping]] also returns the mapping it derived.
+    * The call persists the aggregate, which stays cached until
+    * released, so run it and the actions on its output inside
+    * [[releasingCaches]].
     *
     * @param grid     staged long-form grid (time, j, i, lat, lon, vars…)
     * @param weights  (fid, i, j, wght)
@@ -179,17 +262,60 @@ object GridmetPipeline {
       preCombine: Boolean = false,
       mapping: Option[DataFrame] = None,
       strategy: graft.operators.WeightJoin =
-        graft.operators.WeightJoin.Auto): DataFrame = {
-    val subset = timeSubset(bboxSubset(grid, features), start, end)
-    val agg = reindex(
-      WeightedMean(subset, weights, vars, masked = partial,
-        preCombine = preCombine, strategy = strategy),
-      features, Nil)
-    val out = Convert.gridmetFinalize(agg)
-    if (!fillMissing) out
-    else mapping.orElse(fillMapping(out, features)) match {
-      case None => out // early-exit (`helper.py:48-50`)
-      case Some(m) => applyFill(out, m)
+        graft.operators.WeightJoin.Auto): DataFrame =
+    gridmetWithMapping(grid, weights, features, vars, start, end, partial,
+      fillMissing, preCombine, mapping, strategy).series
+
+  /** [[gridmet]]'s series and the NN fill mapping it derived (a local
+    * table of |missing| rows, for the genmap CSV) — None when no fill
+    * ran, nothing was missing, or `mapping` was given. */
+  final case class GridmetOutput(series: DataFrame, derivedMapping: Option[DataFrame])
+
+  /** [[gridmet]], returning the derived mapping too. With the fill on,
+    * the driver reads the persisted aggregate twice — its time axis, then
+    * the missing/present split at the axis' first day — and derives the
+    * mapping there; the filled dense series is then ONE plan over the
+    * aggregate ([[denseOnAxis]]), read once by the caller's sink. A given
+    * `mapping` (the reuse path) fills the dense series with
+    * [[applyFill]]. */
+  def gridmetWithMapping(
+      grid: DataFrame, weights: DataFrame, features: DataFrame,
+      vars: Seq[String] = Seq("tmmx", "tmmn", "pr", "rmax", "rmin", "vs"),
+      start: String, end: String,
+      partial: Boolean = false, fillMissing: Boolean = false,
+      preCombine: Boolean = false,
+      mapping: Option[DataFrame] = None,
+      strategy: graft.operators.WeightJoin =
+        graft.operators.WeightJoin.Auto): GridmetOutput = {
+    // one collect of the feature table serves the bbox and the fill
+    val table = Sources.featureTable(features)
+    // the weighted mean reads the keys and the variables only; with the
+    // cell keys after the first column, as in the weight table (fid, i,
+    // j, wght), both sides of a sort-merge join share one generated sort
+    // ordering, sort prefix and partitioning projection
+    val keys = Seq("time", "i", "j") ++ Seq("tile").filter(grid.columns.contains)
+    val subset = timeSubset(withinBounds(grid, table, BboxBuffer), start, end)
+      .select((keys ++ vars).map(col): _*)
+    val agg = WeightedMean(subset, weights, vars, masked = partial,
+      preCombine = preCombine, strategy = strategy)
+    if (!fillMissing) GridmetOutput(Convert.gridmetFinalize(reindex(agg, features, Nil)), None)
+    else {
+      val (aggOnce, times) = withTimeAxis(agg)
+      def dense(donorOf: Map[Long, Long]) =
+        Convert.gridmetFinalize(denseOnAxis(aggOnce, features, times, donorOf))
+      mapping match {
+        case Some(m) => GridmetOutput(applyFill(dense(Map.empty), m), None)
+        case None =>
+          times.headOption.flatMap { t0 =>
+            val (miss, present) = splitAt(aggOnce, t0, table.centroids.keys.toSeq)
+            nearest(miss, present, table.centroids)
+          } match {
+            case None => GridmetOutput(dense(Map.empty), None) // early-exit (`helper.py:48-50`)
+            case Some(rows) =>
+              GridmetOutput(dense(rows.map { case (m, f, _) => m -> f }.toMap),
+                Some(mappingTable(aggOnce.sparkSession, rows)))
+          }
+      }
     }
   }
 

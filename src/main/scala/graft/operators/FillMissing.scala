@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** J2/J3/F5 — nearest-neighbor gap filling (SURVEY.md §2.5).
+/** J2/J3 — nearest-neighbor gap filling (SURVEY.md §2.5); the F5
+  * missing/present split runs on the driver in
+  * [[graft.etl.GridmetPipeline.fillMapping]].
   *
   * Reference (`helper.py:9-122`): split the feature set into missing vs
   * present using the FIRST timestep of one variable (`helper.py:45`,
@@ -63,6 +65,35 @@ object FillMissing {
       .agg(min(col("fill_fid")).as("fill_fid"))
       .select(col("miss_fid"), col("fill_fid"),
         sqrt(col("best_d2")).as("distance"))
+  }
+
+  /** J2 on the driver: [[nearestMapping]]'s contract over driver-side
+    * (fid, lat, lon) tables, for callers that already hold both sides
+    * there. The same squared-distance arithmetic in the same order, so
+    * winners, ties (smallest donor fid) and distances are bit-identical
+    * to the Spark form (FillMissingSpec pins it). O(|missing|·|donors|)
+    * on one core; result in miss_fid order. */
+  def nearestMappingLocal(
+      missing: Seq[(Long, Double, Double)],
+      donors: Seq[(Long, Double, Double)]): Seq[(Long, Long, Double)] = {
+    val fid = donors.map(_._1).toArray
+    val lat = donors.map(_._2).toArray
+    val lon = donors.map(_._3).toArray
+    missing.sortBy(_._1).flatMap { case (m, mLat, mLon) =>
+      var best = -1
+      var bestD2 = 0.0
+      var k = 0
+      while (k < fid.length) {
+        val dx = mLon - lon(k)
+        val dy = mLat - lat(k)
+        val d2 = dx * dx + dy * dy
+        // Double.compare orders NaN last, as Spark's min does
+        val c = if (best < 0) -1 else java.lang.Double.compare(d2, bestD2)
+        if (c < 0 || (c == 0 && fid(k) < fid(best))) { best = k; bestD2 = d2 }
+        k += 1
+      }
+      if (best < 0) None else Some((m, fid(best), math.sqrt(bestD2)))
+    }
   }
 
   /** J2 at scale: grid-binned nearest-donor mapping — the documented
@@ -148,16 +179,6 @@ object FillMissing {
     resolved.unionByName(fallback)
   }
 
-  /** F5: split the feature ids of `ts` into (missing, present) based on
-    * nullness of `probeVar` at the earliest timestep — the reference's
-    * exact convention (`helper.py:43-61`: `isel(time=[0])` on tmax). */
-  def splitMissing(ts: DataFrame, probeVar: String): (DataFrame, DataFrame) = {
-    val t0 = ts.agg(min(col("time"))).first().get(0)
-    val slice = ts.filter(col("time") === lit(t0))
-    (slice.filter(col(probeVar).isNull).select("fid"),
-      slice.filter(col(probeVar).isNotNull).select("fid"))
-  }
-
   /** J3: overwrite each missing feature's whole series with its donor's.
     * `ts` is (fid, time, vars…); `mapping` is (miss_fid, fill_fid, …).
     * Donor values are fetched with a join on (donor fid, time). Mapped
@@ -170,8 +191,10 @@ object FillMissing {
     // series projection exceeds the broadcast cap. Semi-join the series to
     // the mapped donor fids first (itself a broadcast semi-join: `mapping`
     // is missing-set-bounded by the `helper.py:48-50` early exit), making
-    // the broadcast side |mapped donors| × |time| rows.
-    val donorFids = mapping.select(col("fill_fid").as("__sel_fid")).distinct()
+    // the broadcast side |mapped donors| × |time| rows. No distinct on
+    // the fids: duplicates cannot change a semi-join's result, and a
+    // distinct would only add a shuffle.
+    val donorFids = mapping.select(col("fill_fid").as("__sel_fid"))
     val donor = ts
       .join(broadcast(donorFids), ts("fid") === col("__sel_fid"), "left_semi")
       .select(
@@ -184,9 +207,11 @@ object FillMissing {
         col("__fill_fid") === col("__donor_fid") &&
           ts("time") === col("__donor_time"),
         "left")
+    // each filled column keeps the series column's metadata (its units)
     val filled = vars.foldLeft(withDonor) { (df, v) =>
       df.withColumn(v,
-        when(col("__fill_fid").isNotNull, col(s"__donor_$v")).otherwise(col(v)))
+        when(col("__fill_fid").isNotNull, col(s"__donor_$v")).otherwise(col(v))
+          .as(v, ts.schema(v).metadata))
     }
     filled.select(Seq(ts("fid"), ts("time")) ++ vars.map(col): _*)
   }

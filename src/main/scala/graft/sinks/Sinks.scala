@@ -29,7 +29,8 @@ object Sinks {
     * pre-sized file via [[NetcdfClassic.StreamingWriter]]. Driver
     * memory is O(|features| × |vars|) — one time-slice — plus the
     * coordinate axes themselves (|days| + |features| longs, which ARE
-    * output variables and so are irreducible). The reference
+    * output variables and so are irreducible; both come from one
+    * aggregation pass over the projected series). The reference
     * materializes the whole cube in xarray before `to_netcdf`
     * (`etl.py:465`); at millions of features × years of days that is
     * a driver OOM this writer structurally cannot hit. The fixed
@@ -69,31 +70,25 @@ object Sinks {
     import NetcdfClassic._
     val dataVars = Seq("tmax", "tmin", "prcp", "rhmax", "rhmin", "ws", "humidity")
       .filter(ts.columns.contains)
-    // persist-with-lineage (the reindex pattern): the projection feeds
-    // THREE consumers — the two axis-domain collects and the sorted
-    // record stream — and without a barrier each would re-run the
-    // whole upstream pipeline (typically the full aggregation DAG this
-    // sink is documented for). Executors hold the materialization;
-    // the DRIVER still sees only one time-slice at a time.
+    // two passes over the projection, the axis aggregation and the
+    // sorted record stream: callers hand in the written contract table,
+    // whose re-read is cheap, so nothing is cached (a caller with an
+    // expensive `ts` persists it first)
     val proj = ts.select(
       col("nhru").cast("long").as("nhru"),
       datediff(col("time").cast("date"), lit(start).cast("date")).cast("long")
         .as("day"),
       struct(dataVars.map(v => col(v).cast("double")): _*).as("vals"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // axis domains: AGGREGATION outputs (|days| and |features| longs —
-    // they become the int64 coordinate variables, so this is the
-    // file's own axis data, not the matrix)
-    val days = proj.select(col("day")).distinct().orderBy(col("day"))
-      .collect().map(_.getLong(0))
-    val hrus = proj.select(col("nhru")).distinct().orderBy(col("nhru"))
-      .collect().map(_.getLong(0))
+    // axis domains: both sorted distinct sets from ONE aggregation pass
+    // (|days| and |features| longs — they become the int64 coordinate
+    // variables, so this is the file's own axis data, not the matrix)
+    val axes = proj.agg(array_sort(collect_set(col("day"))),
+      array_sort(collect_set(col("nhru")))).first()
+    val days = axes.getSeq[Long](0).toArray
+    val hrus = axes.getSeq[Long](1).toArray
     val dayIdx = days.zipWithIndex.toMap
     val hruIdx = hrus.zipWithIndex.toMap
-    val centroid = features
-      .select(col("fid").cast("long"), col("lat").cast("double"),
-        col("lon").cast("double"))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val centroid = graft.sources.Sources.centroids(features)
     val crsAtts = Seq(
       Att("_FillValue", AttVal(Double.NaN)),
       Att("crs_wkt", AttVal(Model.CrsWkt)),
@@ -189,10 +184,7 @@ object Sinks {
         rowsStreamed += 1
       }
       if (haveDay) flush(curDay)
-    } finally {
-      w.close()
-      proj.unpersist(blocking = false)
-    }
+    } finally w.close()
     NetcdfWriteStats(w.slabsWritten, rowsStreamed, hrus.length)
   }
 

@@ -18,15 +18,55 @@ object Sources {
     * (`cfsv2_nhru01a_weights.csv:1`). `fidCol` is the `--fid` CLI arg
     * (`cli.py:76-82`), e.g. "nhru_v1_1". */
   def weightsCsv(spark: SparkSession, path: String, fidCol: String): DataFrame = {
-    val raw = spark.read.option("header", "true").option("inferSchema", "false").csv(path)
-    val cols = raw.columns
+    val cols = csvHeader(spark, path)
     require(cols.contains(fidCol) && cols.contains("i") && cols.contains("j")
       && cols.contains("wght"), s"weights file must have ($fidCol,i,j,wght), got ${cols.mkString(",")}")
+    val raw = spark.read.option("header", "true")
+      .schema(StructType(cols.map(StructField(_, StringType))))
+      .csv(path)
     raw.select(
       col(fidCol).cast(LongType).as("fid"),
       col("i").cast(IntegerType).as("i"),
       col("j").cast(IntegerType).as("j"),
       col("wght").cast(DoubleType).as("wght"))
+  }
+
+  /** The column names of a headed, comma-separated CSV file (of the
+    * first data file, for a directory or glob), read on the driver: the
+    * header is one line, and letting Spark infer it runs a job and
+    * compiles its plan on every read. Names follow Spark's CSV reader:
+    * surrounding double quotes are dropped, an empty name becomes
+    * `_c<index>`, and case-insensitive duplicates get their index
+    * appended. */
+  private[sources] def csvHeader(spark: SparkSession, path: String): Seq[String] = {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val glob = new Path(path)
+    val fs: FileSystem = glob.getFileSystem(conf)
+    def dataFiles(p: Path): Seq[Path] =
+      if (fs.getFileStatus(p).isFile) Seq(p)
+      else fs.listStatus(p).toSeq.map(_.getPath)
+        .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+        .sortBy(_.toString).flatMap(dataFiles)
+    val file = Option(fs.globStatus(glob)).toSeq.flatten.map(_.getPath)
+      .sortBy(_.toString).flatMap(dataFiles).headOption
+      .getOrElse(throw new IllegalArgumentException(s"no CSV file at $path"))
+    val codec = new org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(file)
+    val raw = fs.open(file)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      if (codec == null) raw else codec.createInputStream(raw), "UTF-8"))
+    val line = try Option(in.readLine()).getOrElse("") finally in.close()
+    val names = line.stripPrefix("\uFEFF").split(",(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)", -1)
+      .toSeq.map { n =>
+        if (n.length >= 2 && n.startsWith("\"") && n.endsWith("\"")) n.substring(1, n.length - 1)
+        else n
+      }
+    val lower = names.map(_.toLowerCase(java.util.Locale.ROOT))
+    names.zipWithIndex.map { case (n, i) =>
+      if (n.isEmpty) s"_c$i"
+      else if (lower.count(_ == lower(i)) > 1) s"$n$i"
+      else n
+    }
   }
 
   /** S6 — PRMS parameter-file scan (`helper.py:124-173`): find the
@@ -67,13 +107,61 @@ object Sources {
       .select(col("variable"), col("first.varname").as("varname"),
         col("first.URL").as("URL"))
 
+  /** The part of the feature table the driver needs, from ONE collect
+    * of |features| rows: the centroids, fid → (lat, lon) (a feature
+    * with a null coordinate has no entry), and the total bounds, each
+    * when the table has its columns (fid/lat/lon, minx/miny/maxx/maxy). */
+  final case class FeatureTable(
+      centroidsRead: Option[Map[Long, (Double, Double)]], bounds: Option[Bounds]) {
+    def centroids: Map[Long, (Double, Double)] = centroidsRead.getOrElse(
+      throw new IllegalArgumentException("the feature table has no fid, lat and lon columns"))
+  }
+
+  /** (minx, miny, maxx, maxy) over all features. */
+  final case class Bounds(minx: Double, miny: Double, maxx: Double, maxy: Double)
+
+  /** [[FeatureTable]] of `features`. The bbox subset, the NN fill and
+    * the NetCDF coordinate variables all read it through this one plan,
+    * so a run compiles its generated code once. Bounds follow Spark's
+    * min/max: nulls are skipped and NaN sorts above every number. */
+  def featureTable(features: DataFrame): FeatureTable = {
+    def has(cs: Seq[String]) = cs.forall(features.columns.contains)
+    val centroidCols = Seq("fid", "lat", "lon")
+    val boundCols = Seq("minx", "miny", "maxx", "maxy")
+    val withCentroids = has(centroidCols)
+    val withBounds = has(boundCols)
+    val read = (if (withCentroids) centroidCols else Nil) ++ (if (withBounds) boundCols else Nil)
+    val rows = features.select(read.map(c =>
+      col(c).cast(if (c == "fid") LongType else DoubleType)): _*).collect()
+    val centroids = if (!withCentroids) None else Some(rows.collect {
+      case r if !r.isNullAt(1) && !r.isNullAt(2) => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))
+    }.toMap)
+    def values(i: Int) = rows.filterNot(_.isNullAt(i)).map(_.getDouble(i))
+    val bounds = if (!withBounds) None else {
+      val first = if (withCentroids) 3 else 0
+      val Seq(minx, miny, maxx, maxy) = (first until first + 4).map(values)
+      require(Seq(minx, miny, maxx, maxy).forall(_.nonEmpty),
+        "feature bounds (minx, miny, maxx, maxy) are all null")
+      val order = Ordering.Double.TotalOrdering
+      Some(Bounds(minx.min(order), miny.min(order), maxx.max(order), maxy.max(order)))
+    }
+    FeatureTable(centroids, bounds)
+  }
+
+  /** Feature centroids on the driver, fid → (lat, lon): |features|
+    * entries, the NetCDF lat/lon coordinate variables and the NN fill's
+    * donor table ([[featureTable]]). */
+  def centroids(features: DataFrame): Map[Long, (Double, Double)] =
+    featureTable(features).centroids
+
+  /** The NN fill mapping's columns (`helper.py:75-77`). */
+  val FillMappingSchema: StructType = StructType(Seq(
+    StructField("miss_fid", LongType), StructField("fill_fid", LongType),
+    StructField("distance", DoubleType)))
+
   /** S7 — NN-mapping CSV (`helper.py:79`). */
   def fillMappingCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true")
-      .schema(StructType(Seq(
-        StructField("miss_fid", LongType), StructField("fill_fid", LongType),
-        StructField("distance", DoubleType))))
-      .csv(path)
+    spark.read.option("header", "true").schema(FillMappingSchema).csv(path)
 
   /** S10 (full form) — re-ingest a contract NetCDF file (this engine's
     * [[graft.sinks.Sinks.writeNetcdf]] output, or any classic-model

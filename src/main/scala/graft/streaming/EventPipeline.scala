@@ -578,6 +578,13 @@ object EventPipeline extends Serializable {
       if (!drained && !selfFinished) Thread.sleep(50)
     }
     q.exception.foreach(e => throw e)
+    // stop between batches, inside the same timeout: stopping a no-data
+    // batch mid-way interrupts its state-store commit, which logs
+    // CANNOT_WRITE_STATE_STORE errors. The gap between batches is the
+    // source's polling delay (~10 ms), so a 1 ms poll catches it
+    // without taking a core from the batch it waits on.
+    while (q.isActive && q.status.isTriggerActive &&
+        System.currentTimeMillis() - t0 < timeoutMs) Thread.sleep(1)
     q.stop()
     drained || selfFinished
   }

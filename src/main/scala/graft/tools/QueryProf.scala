@@ -74,7 +74,8 @@ object QueryProf {
         println(f"[prof] $name trial $t wall=$sec%.3f s stages=${s.stageCount}" +
           f" tasks=${s.taskCount} shufW=${s.shuffleWriteBytes}" +
           f" shufR=${s.shuffleReadBytes} spill=${s.spillBytes}" +
-          f" skew1s=${s.maxTaskSkew1s}%.2f cpuSkew1s=${s.maxTaskSkew1sCpu}%.2f")
+          f" skew1s=${s.maxTaskSkew1s}%.2f cpuSkew1s=${s.maxTaskSkew1sCpu}%.2f" +
+          f" codegen_compiles=${s.codegenCompiles}")
         if (t == trials) {
           println("[prof]   stage tasks    writeB     readB    spillB " +
             "maxMs medMs | medCpu maxCpu gcOfMax")

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import scala.collection.mutable
 
@@ -25,6 +26,12 @@ final class StressMetrics extends SparkListener {
 
   private val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
 
+  /** Generated classes compiled in this JVM so far: Janino compiles
+    * only on a codegen-cache miss, so the count since [[reset]] is the
+    * classes a window had to compile (the counter is process-wide). */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private var compilesAtReset = compiles
+
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val m = e.taskMetrics
     if (m != null) {
@@ -42,7 +49,10 @@ final class StressMetrics extends SparkListener {
     }
   }
 
-  def reset(): Unit = synchronized(stages.clear())
+  def reset(): Unit = synchronized {
+    stages.clear()
+    compilesAtReset = compiles
+  }
 
   /** Aggregate view over all stages seen since the last reset. */
   final case class Snapshot(
@@ -72,7 +82,12 @@ final class StressMetrics extends SparkListener {
         * the partitioning really handed one task more work. This is
         * the column that settles the round-16 "2.2–2.9 filtered skew,
         * byte skew ~1" attribution file. */
-      maxTaskSkew1sCpu: Double)
+      maxTaskSkew1sCpu: Double,
+      /** Codegen compiles (cache misses) since the last reset. Spark's
+        * generated-class cache holds 100 entries; a working set that
+        * outgrows it recompiles on every run, which shows here as a
+        * count that no longer drops on a second, warm run. */
+      codegenCompiles: Long)
 
   def snapshot(minTasksForSkew: Int = 8): Snapshot = synchronized {
     val ss = stages.values.toSeq
@@ -99,7 +114,8 @@ final class StressMetrics extends SparkListener {
       maxTaskSkew = if (skews.isEmpty) 1.0 else skews.max,
       maxTaskSkew1s = if (skews1s.isEmpty) 1.0 else skews1s.max,
       maxTaskSkew1sCpu =
-        if (skews1sCpu.isEmpty) 1.0 else skews1sCpu.max)
+        if (skews1sCpu.isEmpty) 1.0 else skews1sCpu.max,
+      codegenCompiles = compiles - compilesAtReset)
   }
 
   /** Per-stage diagnostic rows (stageId, tasks, writeB, readB, spillB,

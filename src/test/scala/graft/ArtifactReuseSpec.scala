@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.queries.Shared
+import graft.sources.Staging
 
 /** Pins the persisted-artifact sharing in `graft.queries.Shared`:
   *
@@ -21,7 +22,7 @@ import graft.queries.Shared
 class ArtifactReuseSpec extends SparkSpec {
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_artifacts_")
+    val d = Staging.scratchDir("graft_artifacts_")
     Seq("documents.parquet", "embeddings.parquet").foreach { f =>
       Files.copy(Paths.get(s"/root/testdata/sf0.001/$f"), d.resolve(f))
     }

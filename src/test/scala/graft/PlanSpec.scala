@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import graft.sources.Staging
 
 /** Physical-plan shape assertions — the 100 TB design intent, pinned:
   * filters reach the parquet scan, small sides broadcast, aggregates
@@ -83,7 +84,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("filter + projection push down to the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString
+    val dir = Staging.scratchDir("graft-plan").toString
     Seq((1L, 10.0, "x"), (2L, -5.0, "y")).toDF("k", "v", "s")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir).filter($"v" > 0).select("k", "v")
@@ -97,7 +98,7 @@ class PlanSpec extends SparkSpec {
     import graft.functions.VecFunctions.foldDot
     // parquet-backed input: a local relation would be constant-folded
     // into a LocalTableScan with no codegen stage to observe
-    val dir = java.nio.file.Files.createTempDirectory("graft-cg").toString
+    val dir = Staging.scratchDir("graft-cg").toString
     Seq(("abc", Seq(1.0f, 2.0f))).toDF("s", "v")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
@@ -112,7 +113,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("IVF top-k: corpus never shuffles or broadcasts — query-side exchanges only") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-plan").toString
+    val dir = Staging.scratchDir("graft-ivf-plan").toString
     (0 until 200).map(i => (i.toLong, Seq.tabulate(8)(d => (i % 7 + d).toFloat)))
       .toDF("vec_id", "embedding").write.mode("overwrite").parquet(dir)
     val corpus = spark.read.parquet(dir)
@@ -139,7 +140,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("exact dedup: exchange keyed on (xxhash64, length), not document text") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-plan").toString
+    val dir = Staging.scratchDir("graft-dedup-plan").toString
     (1 to 50).map(i => (i.toLong, s"document body $i"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     val p = plan(graft.operators.Dedup.exact(
@@ -155,7 +156,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("blocked simhash pairs: hash equi-join, no nested-loop product") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sim-plan").toString
+    val dir = Staging.scratchDir("graft-sim-plan").toString
     (1 to 50).map(i => (i.toLong, s"some words repeated $i times over"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     val p = plan(graft.operators.Dedup.simhashPairsBlocked(
@@ -169,7 +170,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ngram jaccard hot path: legs exchange on (blk, h, SALT)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-salt-plan").toString
+    val dir = Staging.scratchDir("graft-salt-plan").toString
     (1 to 50).map(i => (i.toLong, "en", s"common phrase here $i"))
       .toDF("doc_id", "lang", "text").write.mode("overwrite").parquet(dir)
     // hotDf=0 → every shingle hot → the salted legs must re-shuffle on
@@ -183,7 +184,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ngram jaccard: both self-join legs reuse ONE postings exchange") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ngram-plan").toString
+    val dir = Staging.scratchDir("graft-ngram-plan").toString
     (1 to 50).map(i => (i.toLong, "en", s"shared vocabulary words $i and more"))
       .toDF("doc_id", "lang", "text").write.mode("overwrite").parquet(dir)
     val df = graft.operators.Dedup.ngramJaccardPairs(
@@ -200,7 +201,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("LSH near-dup: bucket equi-join, never a nested-loop pair scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lshnd-plan").toString
+    val dir = Staging.scratchDir("graft-lshnd-plan").toString
     (0 until 60).map(i => (i.toLong, Seq.tabulate(8)(d => ((i + d) % 5).toFloat)))
       .toDF("vec_id", "embedding").write.mode("overwrite").parquet(dir)
     val p = plan(graft.operators.Similarity.nearDupPairsLsh(

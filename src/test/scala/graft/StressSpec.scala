@@ -1,6 +1,7 @@
 package graft
 
 import graft.tools.StressMetrics
+import org.apache.spark.sql.functions.sum
 
 /** Harness check for [[Stress]]: every scenario builds and completes
   * at ~1/2000 scale with the listener attached, and the metrics it
@@ -48,5 +49,16 @@ class StressSpec extends SparkSpec {
           assert(m.shuffleWriteBytes > 0, s"${sc.name}: no shuffle observed")
       }
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("codegen_compiles counts cache misses: a new plan compiles, its rerun does not") {
+    val m = new StressMetrics
+    // a literal no earlier plan in this JVM used: generated code embeds it
+    val k = System.nanoTime() % 1000000007L
+    def run(): Unit = spark.range(1000).selectExpr(s"id + $k AS x").agg(sum("x")).collect()
+    m.reset(); run()
+    assert(m.snapshot().codegenCompiles > 0)
+    m.reset(); run()
+    assert(m.snapshot().codegenCompiles == 0)
   }
 }

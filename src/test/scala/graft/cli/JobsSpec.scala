@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.{ZonedDateTime, ZoneOffset, LocalDate}
+import graft.sources.Staging
 
 /** CLI surface end-to-end: parse → pipeline → contract sink on disk. */
 class JobsSpec extends SparkSpec {
@@ -25,7 +26,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("gridmet-etl job: staged grid → contract parquet + attrs sidecar") {
-    val dir = Files.createTempDirectory("graft-job").toString
+    val dir = Staging.scratchDir("graft-job").toString
     val t1 = Timestamp.valueOf("2021-01-01 00:00:00")
     // stage inputs
     (for { i <- 0 to 1; j <- 0 to 1 } yield
@@ -55,7 +56,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("gridmet-etl job: .shp target suffix-dispatches through the shapefile reader") {
-    val dir = Files.createTempDirectory("graft-job-shp").toString
+    val dir = Staging.scratchDir("graft-job-shp").toString
     val t1 = Timestamp.valueOf("2021-01-01 00:00:00")
     (for { i <- 0 to 1; j <- 0 to 1 } yield
       (t1, j, i, 40.0 + j, -100.0 + i, 285.0 + i, 275.0 + i, 1.0, 80.0, 40.0, 3.0))
@@ -81,7 +82,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("genmap round-trip: --genmap persists the NN mapping; a rerun consumes it") {
-    val dir = Files.createTempDirectory("graft-genmap").toString
+    val dir = Staging.scratchDir("graft-genmap").toString
     val t1 = Timestamp.valueOf("2021-01-01 00:00:00")
     // feature 1 covered by weights, feature 2 NOT → missing, NN-filled from 1
     (for { i <- 0 to 1; j <- 0 to 1 } yield
@@ -117,8 +118,98 @@ class JobsSpec extends SparkSpec {
     assert(byF(2L) == byF(1L))
   }
 
+  test("gridmet --fill-missing --genmap: its generated classes fit the codegen cache; a warm rerun schedules within its budget") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Staging.scratchDir("graft-genmap-budget").toString
+    // 4×3 cells × 3 days; cell (3, 2) is null on every day (feature 6,
+    // whose only cell it is, masks to all-null) and feature 7 has no
+    // weights (the reindex adds it all-null): both are filled
+    val days = (0 to 2).map(d => Timestamp.valueOf(s"2021-03-0${d + 1} 00:00:00"))
+    (for { (t, d) <- days.zipWithIndex; i <- 0 to 3; j <- 0 to 2 } yield {
+      val dead = i == 3 && j == 2
+      def v(x: Double): Option[Double] = if (dead) None else Some(x)
+      (t, j, i, 40.0 + 0.5 * j, -100.0 + 0.5 * i, v(280.0 + i + 0.25 * j + d),
+        v(270.0 + i - 0.5 * d), v(0.1 * (i * 3 + j)), v(70.0 + j), v(30.0 + i), v(2.0 + 0.1 * d))
+    }).toDF("time", "j", "i", "lat", "lon", "tmmx", "tmmn", "pr", "rmax", "rmin", "vs")
+      .write.parquet(s"$dir/grid")
+    Seq((1L, 40.2, -99.8), (2L, 40.3, -99.1), (3L, 40.9, -99.7), (4L, 40.6, -98.6),
+        (5L, 40.1, -98.9), (6L, 41.0, -98.5), (7L, 40.95, -98.55))
+      .map { case (f, lat, lon) => (f, lat, lon, -100.25, 39.75, -98.25, 41.25) }
+      .toDF("nhru_v1_1", "lat", "lon", "minx", "miny", "maxx", "maxy")
+      .write.parquet(s"$dir/feats")
+    Files.writeString(java.nio.file.Paths.get(dir, "w.csv"),
+      "nhru_v1_1,i,j,wght\n1,0,0,0.5\n1,1,0,0.5\n2,1,1,1.0\n3,0,2,0.25\n" +
+        "3,1,2,0.75\n4,2,1,0.6\n4,3,1,0.4\n5,2,0,1.0\n6,3,2,1.0\n")
+    def run(n: Int): String = Jobs.runGridmet(spark, Jobs.parseArgs(Seq(
+      "--start-date", "2021-03-01", "--end-date", "2021-03-03",
+      "--grid-path", s"$dir/grid", "--target-file", s"$dir/feats",
+      "--weights-file", s"$dir/w.csv", "--fid", "nhru_v1_1",
+      "--output-path", s"$dir/out$n", "--partial", "--fill-missing", "--genmap")))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def settled(): Int = { // listener events arrive asynchronously
+      var last = -1; var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val now = jobs.get()
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+      last
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // Spark's codegen cache: 100 entries, keyed by (class loader, source),
+    // so in local mode a stage's class has a driver and an executor entry
+    val codegenCache = {
+      val m = CodeGenerator.getClass.getDeclaredMethod("cache")
+      m.setAccessible(true)
+      m.invoke(CodeGenerator)
+    }
+    def onCache(method: String): AnyRef =
+      codegenCache.getClass.getMethod(method).invoke(codegenCache)
+    // the working set: with the cache emptied, the first run compiles
+    // each of its classes once. How many of them a warm rerun recompiles
+    // is not asserted: that depends on how the JVM's class-loader
+    // identity hashes spread the keys over the cache's segments
+    onCache("invalidateAll")
+    val c0 = compiles
+    run(1)
+    val workingSet = compiles - c0
+    val resident = onCache("size")
+    spark.sparkContext.addSparkListener(listener)
+    val path = try {
+      val c1 = compiles; val j0 = settled()
+      val p = run(2)
+      val j1 = settled()
+      val (rerunJobs, rerunCompiles) = (j1 - j0, compiles - c1)
+      info(s"working set $workingSet classes ($resident resident); warm rerun: " +
+        s"$rerunJobs jobs, $rerunCompiles compiles")
+      // 41 classes and 15 jobs here; 60 and 22 with the dense series
+      // persisted and filled from a donor and a target side, and 125
+      // compiles from empty (100 resident) and 49 jobs where every action
+      // re-derived it
+      assert(workingSet <= 50, s"generated classes in one run: $workingSet")
+      assert(rerunJobs <= 18, s"jobs on the warm rerun: $rerunJobs")
+      p
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // pinned outputs: the contract's rows (count and an order-free
+    // hash) and the mapping CSV's lines
+    val contract = spark.read.parquet(path)
+    val digest = contract.agg(count(lit(1)),
+      sum(xxhash64(contract.columns.map(col).toIndexedSeq: _*).cast("decimal(38,0)")))
+      .first()
+    assert((digest.getLong(0), digest.getDecimal(1).toString) == ((21L, "10971946770681936309")), digest)
+    val csv = spark.read.text(s"$dir/out2/fill_missing_nearest.csv").as[String]
+      .collect().toSeq.sorted
+    assert(csv == Seq("6,4,0.4123105625617633", "7,4,0.3535533905932748",
+      "miss_fid,fill_fid,distance"), csv)
+  }
+
   test("dedup-admit job: two-run lifecycle over persisted fingerprint state") {
-    val dir = Files.createTempDirectory("graft-dedup-job").toString
+    val dir = Staging.scratchDir("graft-dedup-job").toString
     Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
       .toDF("doc_id", "text").write.parquet(s"$dir/batch1")
     Seq((10L, "alpha"), (11L, "gamma"))
@@ -138,7 +229,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("pack-tokens job: documents -> packed shards, token-count preserving") {
-    val dir = Files.createTempDirectory("graft-pack-job").toString
+    val dir = Staging.scratchDir("graft-pack-job").toString
     val docs = Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta"),
       (3L, "eta theta iota kappa lambda mu nu xi"))
       .toDF("doc_id", "text")
@@ -158,7 +249,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("pack-sft job: conversations -> twin token/mask GTOK planes with identical geometry") {
-    val dir = Files.createTempDirectory("graft-pack-sft").toString
+    val dir = Staging.scratchDir("graft-pack-sft").toString
     val convs = Seq(
       (1L, "user asks one thing", "assistant answers with several words"),
       (2L, "short prompt", "a reply"),
@@ -191,7 +282,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("mix-weights job: DoReMi weight artifact round-trips and matches the operator") {
-    val dir = Files.createTempDirectory("graft-mixw").toString
+    val dir = Staging.scratchDir("graft-mixw").toString
     val docs = (1L to 40L).map { i =>
       val src = if (i % 2 == 0) "web" else "books"
       // give the two sources different bigram surprisal profiles
@@ -221,7 +312,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("select-corpus --weights-file: TSV-applied mixture equals the in-plan apply") {
-    val dir = Files.createTempDirectory("graft-mixapply").toString
+    val dir = Staging.scratchDir("graft-mixapply").toString
     val docs = (1L to 60L).map { i =>
       val src = if (i % 2 == 0) "web" else "books"
       val text = if (i % 2 == 0) s"common words common words unique$i token"
@@ -253,7 +344,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("pack-dpo job: preference pairs -> four aligned GTOK planes keyed by pair_id") {
-    val dir = Files.createTempDirectory("graft-pack-dpo").toString
+    val dir = Staging.scratchDir("graft-pack-dpo").toString
     val pairs = Seq(
       (1L, "please summarize this text", "a good concise summary",
         "a bad long rambling answer"),
@@ -289,7 +380,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("pack-tokens --fim-pct: PSM rearrangement feeds the shards (sentinels counted)") {
-    val dir = Files.createTempDirectory("graft-pack-fim").toString
+    val dir = Staging.scratchDir("graft-pack-fim").toString
     val docs = Seq((1L, "alpha beta gamma delta"), (2L, "epsilon zeta"),
       (3L, "eta theta iota kappa lambda mu nu xi"))
       .toDF("doc_id", "text")
@@ -313,7 +404,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("pack-tokens --shuffle-seed + --mix: seeded training order with per-source quotas") {
-    val dir = Files.createTempDirectory("graft-pack-shuf").toString
+    val dir = Staging.scratchDir("graft-pack-shuf").toString
     val docs = Seq(
       (1L, "alpha beta gamma", "web"), (2L, "delta epsilon", "web"),
       (3L, "zeta eta theta iota", "web"), (4L, "kappa lambda", "web"),
@@ -348,7 +439,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("pack-tokens --epochs / --anneal-quality / --boundaries-out: training-order family on the CLI") {
-    val dir = Files.createTempDirectory("graft-pack-curr").toString
+    val dir = Staging.scratchDir("graft-pack-curr").toString
     val docs = Seq(
       (1L, "alpha beta gamma", "web"), (2L, "delta epsilon", "web"),
       (3L, "zeta eta theta iota", "web"), (4L, "kappa lambda", "web"),
@@ -401,7 +492,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("pack-tokens --span-corrupt-out: span table matches the operator over the CLI's own tokenization") {
-    val dir = Files.createTempDirectory("graft-pack-span").toString
+    val dir = Staging.scratchDir("graft-pack-span").toString
     // docs long enough to carry ≥2 full 16-token blocks
     val docs = (0L until 30L).map(i =>
       (i, (0 until 40).map(j => s"w${(i * 7 + j) % 90}").mkString(" "),
@@ -425,7 +516,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("pack-tokens --binpack-out: bin assignment matches the operator over the CLI's own tokenization") {
-    val dir = Files.createTempDirectory("graft-pack-bin").toString
+    val dir = Staging.scratchDir("graft-pack-bin").toString
     val docs = (0L until 30L).map(i =>
       (i, (0 until ((i % 12) + 1).toInt)
         .map(j => s"w${(i * 7 + j) % 90}").mkString(" "), "web"))
@@ -447,7 +538,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("select-corpus --dsir-target-col: importance resample gates the pool") {
-    val dir = Files.createTempDirectory("graft-select-dsir").toString
+    val dir = Staging.scratchDir("graft-select-dsir").toString
     // half the pool speaks the target vocabulary, half something else
     val docs = (0L until 40L).map { i =>
       val tgt = i % 4 == 0
@@ -471,7 +562,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("select-corpus: budget + cluster-keyed split matches the operator composition") {
-    val dir = Files.createTempDirectory("graft-select").toString
+    val dir = Staging.scratchDir("graft-select").toString
     val docs = (0L until 60L).map(i =>
       (i, (0 until ((i % 15) + 2).toInt)
         .map(j => if (j % 3 == 0) "the" else s"w${(i * 7 + j) % 90}")
@@ -506,7 +597,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("train-bpe: learned artifacts load through Bpe and tokenize with the learned merges") {
-    val dir = Files.createTempDirectory("graft-bpe-train").toString
+    val dir = Staging.scratchDir("graft-bpe-train").toString
     val docs = Seq(
       "low low low low low lower lower newest newest",
       "newest newest newest newest widest widest widest")
@@ -548,7 +639,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("curate job: html extraction -> canonical-URL dedup -> gopher gate") {
-    val dir = Files.createTempDirectory("graft-curate").toString
+    val dir = Staging.scratchDir("graft-curate").toString
     val good = (("the quick brown fox jumps over the lazy dog to be " +
       "sure of that and it will have done so with ease ") * 3).trim
     def page(body: String) =
@@ -598,7 +689,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("curate job: blocklist, normalize and paragraph-dedup stages") {
-    val dir = Files.createTempDirectory("graft-curate2").toString
+    val dir = Staging.scratchDir("graft-curate2").toString
     val body = (("the quick brown fox jumps over the lazy dog to be " +
       "sure of that and it will have done so with ease ") * 3).trim
     val banner = "Subscribe to the newsletter for updates on the dog."
@@ -632,7 +723,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("dedup-admit --near: near-dup lifecycle across two batches with persisted signatures") {
-    val dir = Files.createTempDirectory("graft-admit-near").toString
+    val dir = Staging.scratchDir("graft-admit-near").toString
     val base = "the quick brown fox jumps over the lazy dog every morning"
     Seq((1L, base), (2L, base + " extraword"), (3L, "completely different words in this other document right here"))
       .toDF("doc_id", "text").write.parquet(s"$dir/b1")
@@ -658,7 +749,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("curate --signals-out: the q153 sheet covers exactly the survivors") {
-    val dir = Files.createTempDirectory("graft-curate-signals").toString
+    val dir = Staging.scratchDir("graft-curate-signals").toString
     val longDoc = (("the quick brown fox jumps over the lazy dog and " +
       "then runs back home to rest for a while before dinner ") * 5).trim
     Seq((1L, longDoc), (2L, "tiny"))
@@ -676,7 +767,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("curate --weights-file: persisted DoReMi mixture gates curate without refitting") {
-    val dir = Files.createTempDirectory("graft-curate-mix").toString
+    val dir = Staging.scratchDir("graft-curate-mix").toString
     val body = (("the quick brown fox jumps over the lazy dog to be " +
       "sure of that and it will have done so with ease ") * 3).trim
     val docs = (1L to 60L).map { i =>
@@ -710,7 +801,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("loadMixWeights validates the artifact at the parse site") {
-    val dir = Files.createTempDirectory("graft-mixval").toString
+    val dir = Staging.scratchDir("graft-mixval").toString
     def write(name: String, content: String): String = {
       val p = java.nio.file.Paths.get(dir, name)
       java.nio.file.Files.write(p, content.getBytes("UTF-8"))
@@ -738,7 +829,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("train-unigram: piece-table artifact matches the operator, scores round-trip") {
-    val dir = Files.createTempDirectory("graft-unigram").toString
+    val dir = Staging.scratchDir("graft-unigram").toString
     (1 to 20).map(_ => "shop shut shed").toDF("text")
       .write.parquet(s"$dir/docs")
     Jobs.runTrainUnigram(spark, Jobs.parseArgs(Seq(
@@ -761,7 +852,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("train-classifier artifact round-trips and gates curate") {
-    val dir = Files.createTempDirectory("graft-clf").toString
+    val dir = Staging.scratchDir("graft-clf").toString
     val goodBody = (("the quick brown fox jumps over the lazy dog to " +
       "be sure of that and it will have done so with ease ") * 3).trim
     val badBody = (("the omega psi of the chi and delta to sigma in " +
@@ -816,7 +907,7 @@ class JobsSpec extends SparkSpec {
   test("stage-netcdf: gridded .nc → staged parquet → gridmet → contract (full lifecycle)") {
     import graft.sinks.NetcdfClassic
     import graft.sinks.NetcdfClassic._
-    val dir = Files.createTempDirectory("graft-stage").toString
+    val dir = Staging.scratchDir("graft-stage").toString
     // a gridMET-shaped 3-D file: dims (day, lat, lon) + 1-D coords,
     // tmmx/tmmn/... data vars, one fill-value hole
     val (nT, nY, nX) = (2, 2, 3)
@@ -864,7 +955,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("cfsv2-etl method 2: ens-partitioned ensemble output") {
-    val dir = Files.createTempDirectory("graft-job2").toString
+    val dir = Staging.scratchDir("graft-job2").toString
     val t1 = Timestamp.valueOf("2021-02-01 00:00:00")
     (for { e <- 0 to 1; i <- 0 to 1 } yield
       (t1, e, 0, i, 40.0, -100.0 + i, 285.0 + e, 275.0 + e, 1.0, 0.008))
@@ -893,7 +984,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("gridmet-etl and cfsv2-etl release what they cached, and only that") {
-    val dir = Files.createTempDirectory("graft-job-cache").toString
+    val dir = Staging.scratchDir("graft-job-cache").toString
     val t1 = Timestamp.valueOf("2021-02-01 00:00:00")
     (for { i <- 0 to 1; j <- 0 to 1 } yield
       (t1, j, i, 40.0 + j, -100.0 + i, 285.0 + i, 275.0 + i, 1.0, 80.0, 40.0, 3.0))
@@ -921,6 +1012,10 @@ class JobsSpec extends SparkSpec {
     val before = cached
     Jobs.runGridmet(spark, Jobs.parseArgs(Seq("--start-date", "2021-02-01",
       "--end-date", "2021-02-01", "--grid-path", s"$dir/grid") ++ common))
+    // the fill path also caches the dense series it fills
+    Jobs.runGridmet(spark, Jobs.parseArgs(Seq("--start-date", "2021-02-01",
+      "--end-date", "2021-02-01", "--grid-path", s"$dir/grid",
+      "--fill-missing", "--genmap", "--file-prefix", "filled_") ++ common))
     for (m <- Seq("1", "2"))
       Jobs.runCfsv2(spark, Jobs.parseArgs(Seq("--grid-path", s"$dir/ens_grid",
         "--model-param-file", s"$dir/params", "--method", m,
@@ -932,7 +1027,7 @@ class JobsSpec extends SparkSpec {
 
   test("daily-etl job: gated incremental cycles over a day-file drop-box (the Gridmet_current loop)") {
     import graft.operators.WeightedMean
-    val dir = Files.createTempDirectory("graft-daily-job").toString
+    val dir = Staging.scratchDir("graft-daily-job").toString
     def plane(d: Int) = Seq((0, 0), (0, 1), (1, 0), (1, 1)).toDF("i", "j")
       .select(lit(f"2021-07-$d%02d").cast("date").as("time"), $"i", $"j",
         (lit(d * 10.0) + $"i" * 2 + $"j").as("pr"))
@@ -992,7 +1087,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("daily-etl with --weight-join tiled:WxH sets the deployment confs (via WeightedMean, the one place)") {
-    val dir = Files.createTempDirectory("graft-daily-tiled").toString
+    val dir = Staging.scratchDir("graft-daily-tiled").toString
     val plane = Seq((0, 0), (0, 1), (1, 0), (1, 1)).toDF("i", "j")
       .select(lit("2021-08-01").cast("date").as("time"), $"i", $"j",
         (lit(5.0) + $"i" * 2 + $"j").as("pr"))

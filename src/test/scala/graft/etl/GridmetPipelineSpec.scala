@@ -3,6 +3,7 @@ package graft.etl
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import graft.sources.Staging
 
 /** End-to-end pipeline over a synthetic fixture replicating the
   * reference's shape (SURVEY.md §5 strategy 5), plus the golden output
@@ -60,7 +61,7 @@ class GridmetPipelineSpec extends SparkSpec {
     // TIMESTAMP(MICROS, isAdjustedToUTC=false) → TimestampNTZType
     // (the round-8 events drift class); the pipeline must produce the
     // identical series through either encoding
-    val dir = java.nio.file.Files.createTempDirectory("grid_ntz").toString
+    val dir = Staging.scratchDir("grid_ntz").toString
     grid.withColumn("time",
         col("time").cast(org.apache.spark.sql.types.TimestampNTZType))
       .write.mode("overwrite").parquet(dir)
@@ -96,24 +97,70 @@ class GridmetPipelineSpec extends SparkSpec {
     val f3 = features.union(
       Seq((3L, 40.1, -99.6, -100.0, 40.0, -99.0, 41.0))
         .toDF("fid", "lat", "lon", "minx", "miny", "maxx", "maxy"))
-    val unfilled = GridmetPipeline.gridmet(grid, w3, f3,
-      start = "2021-01-01", end = "2021-01-02")
-    // weighted-mean inner join drops fid 3 entirely (no matching cells);
-    // reference semantics: the feature exists with NaNs — fill stage needs
-    // the row present, so the pipeline reindexes before filling
-    val filled = GridmetPipeline.gridmet(grid, w3, f3,
-      start = "2021-01-01", end = "2021-01-02", fillMissing = true)
-    val f3row = filled.filter($"nhru" === 3 && $"time" === t1)
-      .select("tmax").as[Double].collect()
-    assert(f3row.length == 1, s"fid 3 present after fill (got ${filled.count()} rows total)")
-    // donor must be fid 1 (nearest centroid to (40.1,-99.6))
-    val donor = filled.filter($"nhru" === 1 && $"time" === t1)
-      .select("tmax").as[Double].head()
-    assert(f3row.head == donor)
-    // without fill, the feature is still present (reference: dense
-    // feature×time output array) but all-null
-    val unfilledF3 = unfilled.filter($"nhru" === 3).select("tmax").collect()
-    assert(unfilledF3.length == 2 && unfilledF3.forall(_.isNullAt(0)))
+    // both calls cache what they persist; release it with the test
+    GridmetPipeline.releasingCaches {
+      val unfilled = GridmetPipeline.gridmet(grid, w3, f3,
+        start = "2021-01-01", end = "2021-01-02")
+      // weighted-mean inner join drops fid 3 entirely (no matching cells);
+      // reference semantics: the feature exists with NaNs — fill stage needs
+      // the row present, so the pipeline reindexes before filling
+      val filled = GridmetPipeline.gridmet(grid, w3, f3,
+        start = "2021-01-01", end = "2021-01-02", fillMissing = true)
+      val f3row = filled.filter($"nhru" === 3 && $"time" === t1)
+        .select("tmax").as[Double].collect()
+      assert(f3row.length == 1, s"fid 3 present after fill (got ${filled.count()} rows total)")
+      // donor must be fid 1 (nearest centroid to (40.1,-99.6))
+      val donor = filled.filter($"nhru" === 1 && $"time" === t1)
+        .select("tmax").as[Double].head()
+      assert(f3row.head == donor)
+      // without fill, the feature is still present (reference: dense
+      // feature×time output array) but all-null
+      val unfilledF3 = unfilled.filter($"nhru" === 3).select("tmax").collect()
+      assert(unfilledF3.length == 2 && unfilledF3.forall(_.isNullAt(0)))
+    }
+  }
+
+  test("the derived fill equals the join-based fill of the unfilled series, units kept") {
+    // features 3 (no grid coverage) and 4 (its only cell is null on the
+    // first day) are missing; feature 4's later days are overwritten too
+    val g = grid.withColumn("tmmx",
+      when($"i" === 0 && $"j" === 1 && $"time" === t1, lit(null)).otherwise($"tmmx"))
+    val w = weights.union(Seq((3L, 9, 9, 1.0), (4L, 0, 1, 1.0)).toDF("fid", "i", "j", "wght"))
+    val f = features.union(Seq(
+        (3L, 40.1, -99.6, -100.0, 40.0, -99.0, 41.0),
+        (4L, 40.4, -99.2, -100.0, 40.0, -99.0, 41.0))
+      .toDF("fid", "lat", "lon", "minx", "miny", "maxx", "maxy"))
+    GridmetPipeline.releasingCaches {
+      val run = GridmetPipeline.gridmetWithMapping(g, w, f,
+        start = "2021-01-01", end = "2021-01-02", fillMissing = true)
+      val mapping = run.derivedMapping.get
+      assert(mapping.select("miss_fid").as[Long].collect().toSeq == Seq(3L, 4L))
+      val unfilled = GridmetPipeline.gridmet(g, w, f, start = "2021-01-01", end = "2021-01-02")
+      val viaJoin = GridmetPipeline.applyFill(unfilled, mapping)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(viaJoin.columns.map(col).toIndexedSeq: _*).collect().map(_.toString).sorted.toSeq
+      assert(rows(run.series) == rows(viaJoin))
+      assert(run.series.count() == f.count() * 2)
+      for (out <- Seq(run.series, viaJoin))
+        assert(out.schema("tmax").metadata.getString("units") == "degree_Celsius")
+    }
+  }
+
+  test("fillMapping splits on the earliest timestep only") {
+    // nhru 1 null at t1 (→ missing) but present at t2; nhru 2 the
+    // opposite (present: only the first timestep counts, helper.py:45)
+    val ts = Seq(
+      (1L, t1, None: Option[Double]), (1L, t2, Some(5.0)),
+      (2L, t1, Some(3.0)), (2L, t2, None: Option[Double]),
+      (3L, t1, Some(4.0)), (3L, t2, Some(6.0))
+    ).toDF("nhru", "time", "tmax")
+    val feats = Seq((1L, 40.0, -99.0), (2L, 40.0, -98.0), (3L, 40.0, -99.5))
+      .toDF("fid", "lat", "lon")
+    val m = GridmetPipeline.fillMapping(ts, feats).get
+      .select("miss_fid", "fill_fid", "distance").as[(Long, Long, Double)].collect()
+    assert(m.toSeq == Seq((1L, 3L, 0.5)))
+    // nothing null at the first timestep → no mapping (helper.py:48-50)
+    assert(GridmetPipeline.fillMapping(ts.filter($"nhru" =!= 1), feats).isEmpty)
   }
 
   test("cfsv2 median and ensemble methods produce contract columns") {

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.operators.WeightedMean
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import graft.sources.Staging
 
 /** The incremental daily-ETL cadence (round-11 verdict ask #1): the
   * accumulated table must be HASH-IDENTICAL to the batch pipeline over
@@ -54,7 +54,7 @@ class IncrementalEtlSpec extends SparkSpec {
       .select(col("fid"), col("time"), col("pr"))
 
   test("full incremental run == batch pipeline over the full range") {
-    val base = Files.createTempDirectory("graft-inc-full").toString
+    val base = Staging.scratchDir("graft-inc-full").toString
     val src = stage(base, Seq(1, 2, 3, 4))
     assert(run(src, base).isRight)
     val batch = WeightedMean(spark.read.parquet(src), weights, Seq("pr"))
@@ -67,7 +67,7 @@ class IncrementalEtlSpec extends SparkSpec {
   }
 
   test("gate refusal DEFERS the blocked day: abort mid-range, restart completes with no dup/loss") {
-    val base = Files.createTempDirectory("graft-inc-gate").toString
+    val base = Staging.scratchDir("graft-inc-gate").toString
     val src = stage(base, Seq(1, 2, 3, 4))
     // cycle 1: upstream current only through day 2 — day 3's batch must
     // fail the stream BEFORE writing anything for it
@@ -87,7 +87,7 @@ class IncrementalEtlSpec extends SparkSpec {
   }
 
   test("at-least-once replay is idempotent: wiped checkpoint, same output table") {
-    val base = Files.createTempDirectory("graft-inc-replay").toString
+    val base = Staging.scratchDir("graft-inc-replay").toString
     val src = stage(base, Seq(1, 2, 3))
     assert(run(src, base).isRight)
     val first = rows(accumulated(base))
@@ -106,7 +106,7 @@ class IncrementalEtlSpec extends SparkSpec {
     // the reference's daily cycle runs the FULL etl incl. finalize;
     // finalize is a per-row map over (fid, time, vars), so applying it
     // per micro-batch must equal applying it once over the batch range
-    val base = Files.createTempDirectory("graft-inc-final").toString
+    val base = Staging.scratchDir("graft-inc-final").toString
     Seq(1, 2, 3).zipWithIndex.foreach { case (d, k) =>
       plane(d).withColumnRenamed("pr", "tmmx") // Kelvin-ish input var
         .coalesce(1).write.parquet(s"$base/src/part=$k")
@@ -130,7 +130,7 @@ class IncrementalEtlSpec extends SparkSpec {
   }
 
   test("day-atomicity tripwire: a day split across micro-batches aborts loudly instead of silently overwriting") {
-    val base = Files.createTempDirectory("graft-inc-split").toString
+    val base = Staging.scratchDir("graft-inc-split").toString
     // the staging bug the contract forbids: day 2's plane lands in TWO
     // drop-box files (half the cells each), so its second half arrives
     // in a LATER micro-batch after batch 1 already committed the day
@@ -153,7 +153,7 @@ class IncrementalEtlSpec extends SparkSpec {
   }
 
   test("catch-up batch with several whole days rewrites each day partition correctly") {
-    val base = Files.createTempDirectory("graft-inc-catchup").toString
+    val base = Staging.scratchDir("graft-inc-catchup").toString
     val src = stage(base, Seq(1, 2, 3, 4))
     // no files-per-trigger cap: all four day-files land in ONE batch
     val q = IncrementalEtl.dailyWeightedMeanStream(spark, src, weights,

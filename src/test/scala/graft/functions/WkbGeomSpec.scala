@@ -3,6 +3,7 @@ package graft.functions
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.nio.{ByteBuffer, ByteOrder}
+import graft.sources.Staging
 
 /** WKB envelope/centroid parser + polygon builder. */
 class WkbGeomSpec extends SparkSpec {
@@ -82,7 +83,7 @@ class WkbGeomSpec extends SparkSpec {
   test("builder round-trips through the parser; stays inside codegen") {
     // parquet-backed: a local relation would constant-fold to a
     // LocalTableScan with no codegen stage to observe
-    val dir = java.nio.file.Files.createTempDirectory("graft-wkb").toString
+    val dir = Staging.scratchDir("graft-wkb").toString
     Seq((1L, 2.0), (2L, 3.0)).toDF("id", "s").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
       .select($"id",

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.sources.Staging
 
 /** Dedup family: exact, MinHash+LSH, SimHash, n-gram Jaccard. */
 class DedupSpec extends SparkSpec {
@@ -46,8 +47,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("admitIncrement: persisted fingerprints reject batch-1 survivors in batch 2") {
-    val state = java.nio.file.Files
-      .createTempDirectory("graft-dedup-state").resolve("fp").toString
+    val state = Staging.scratchDir("graft-dedup-state").resolve("fp").toString
     val b1 = Seq(
       (1L, "first doc"), (2L, "second doc"), (3L, "first doc") // 3 = dup of 1
     ).toDF("doc_id", "text")
@@ -71,8 +71,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("admitIncrement: output persistence runs BEFORE the state append (crash ordering)") {
-    val state = java.nio.file.Files
-      .createTempDirectory("graft-dedup-crash").resolve("fp").toString
+    val state = Staging.scratchDir("graft-dedup-crash").resolve("fp").toString
     val batch = Seq((1L, "doc a"), (2L, "doc b")).toDF("doc_id", "text")
     // a crash DURING the output write must leave the state un-grown —
     // the recoverable failure order (re-run re-admits identically);
@@ -105,7 +104,7 @@ class DedupSpec extends SparkSpec {
     // the sink gains an at-least-once DUPLICATE of the batch — and
     // that duplicate must be the ONLY effect (state ends identical to
     // a crash-free run; no row lost, none invented).
-    val base = java.nio.file.Files.createTempDirectory("graft-dedup-crash2")
+    val base = Staging.scratchDir("graft-dedup-crash2")
     val state = base.resolve("fp").toString
     val outDir = base.resolve("out").toString
     val batch = Seq((1L, "doc a"), (2L, "doc b"), (3L, "doc a"))
@@ -143,7 +142,7 @@ class DedupSpec extends SparkSpec {
     // before output. The re-run anti-joins against the already-
     // appended fingerprints and silently admits NOTHING — the batch
     // is permanently dropped, no error anywhere.
-    val base = java.nio.file.Files.createTempDirectory("graft-dedup-rev")
+    val base = Staging.scratchDir("graft-dedup-rev")
     val state = base.resolve("fp").toString
     val batch = Seq((1L, "doc a"), (2L, "doc b")).toDF("doc_id", "text")
     // simulate the forbidden order's crash window: fingerprints landed …
@@ -164,7 +163,7 @@ class DedupSpec extends SparkSpec {
     // ids), so without the anti-join guard the state would gain a
     // second (id, h64, sig) copy per crash, inflating candidate
     // generation and hot-bucket counts on every later cycle.
-    val base = java.nio.file.Files.createTempDirectory("graft-near-crash")
+    val base = Staging.scratchDir("graft-near-crash")
     val state = base.resolve("sig").toString
     val batch = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-/** J2 NN arg-min (ties), F5 split, J3 series overwrite. */
+/** J2 NN arg-min (ties), J3 series overwrite. */
 class FillMissingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,17 +27,17 @@ class FillMissingSpec extends SparkSpec {
     assert(m == Map(1L -> 5L, 2L -> 6L))
   }
 
-  test("splitMissing uses the earliest timestep only") {
-    val t1 = Timestamp.valueOf("2021-01-01 00:00:00")
-    val t2 = Timestamp.valueOf("2021-01-02 00:00:00")
-    // fid 1 null at t1 (→ missing) but present at t2; fid 2 opposite
-    val ts = Seq(
-      (1L, t1, None: Option[Double]), (1L, t2, Some(5.0)),
-      (2L, t1, Some(3.0)), (2L, t2, None: Option[Double])
-    ).toDF("fid", "time", "tmax")
-    val (miss, present) = FillMissing.splitMissing(ts, "tmax")
-    assert(miss.as[Long].collect().toSeq == Seq(1L))
-    assert(present.as[Long].collect().toSeq == Seq(2L))
+  test("nearestMappingLocal equals the Spark argmin, ties and distances included") {
+    // points on a small lattice: many donors tie at the same distance,
+    // some sit exactly on a missing point
+    val pts = (0L until 300L).map(i => (i, (i * 37 % 11).toDouble * 0.1, (i * 53 % 13).toDouble * 0.3))
+    val (miss, donors) = pts.partition(_._1 % 5 == 0)
+    val viaSpark = FillMissing.nearestMapping(
+        miss.toDF("fid", "lat", "lon"), donors.toDF("fid", "lat", "lon"))
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(_._1)
+    assert(viaSpark.length == miss.length)
+    assert(FillMissing.nearestMappingLocal(miss, donors) == viaSpark)
+    assert(FillMissing.nearestMappingLocal(miss, Nil).isEmpty)
   }
 
   test("fillSeries overwrites the whole missing series with the donor's") {

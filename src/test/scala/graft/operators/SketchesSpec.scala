@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.sources.Staging
 
 class SketchesSpec extends SparkSpec {
   import spark.implicits._
@@ -112,7 +113,7 @@ class SketchesSpec extends SparkSpec {
     // the (r,b)→count table is an additive aggregate, so the SAME
     // operator runs under Structured Streaming unchanged — the
     // fixed-size mergeable-state contract, demonstrated end to end
-    val dir = java.nio.file.Files.createTempDirectory("graft-cms-stream").toString
+    val dir = Staging.scratchDir("graft-cms-stream").toString
     stream.write.mode("overwrite").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     val q = Sketches.cmsSketch(

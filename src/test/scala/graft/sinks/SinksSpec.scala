@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.model.Model
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import graft.sources.Staging
 
 /** NetCDF contract sink: structure golden-tested against gm_header.md,
   * plus byte-level round-trip through the CDF-5 writer/reader. */
@@ -28,7 +29,7 @@ class SinksSpec extends SparkSpec {
     Seq((10L, 40.1, -100.1), (20L, 40.2, -100.2)).toDF("fid", "lat", "lon")
 
   test("writeNetcdf emits the gm_header.md structure (CDF-5)") {
-    val path = java.nio.file.Files.createTempDirectory("graft-nc")
+    val path = Staging.scratchDir("graft-nc")
       .resolve("1980-01-01_filled_converted.nc").toString
     Sinks.writeNetcdf(contractDf, featuresDf, path, start = "1980-01-01")
     val nc = NetcdfClassic.read(path)
@@ -84,7 +85,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("CDF-5 writer/reader round-trips dims, attrs, int64 and doubles") {
-    val path = java.nio.file.Files.createTempDirectory("graft-nc")
+    val path = Staging.scratchDir("graft-nc")
       .resolve("roundtrip.nc").toString
     val nc = Nc(
       dims = Seq(Dim("x", 3L)),
@@ -106,7 +107,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("netcdfSeries re-ingests the sink's file back to the contract table") {
-    val path = java.nio.file.Files.createTempDirectory("graft-nc")
+    val path = Staging.scratchDir("graft-nc")
       .resolve("reingest.nc").toString
     Sinks.writeNetcdf(contractDf, featuresDf, path, start = "1980-01-01")
     val back = graft.sources.Sources.netcdfSeries(spark, path)
@@ -145,7 +146,7 @@ class SinksSpec extends SparkSpec {
       (col("id") + 1L).as("fid"),
       (lit(40.0) + col("id") / lit(100000.0)).as("lat"),
       (lit(-100.0) - col("id") / lit(100000.0)).as("lon"))
-    val path = java.nio.file.Files.createTempDirectory("graft-nc-big")
+    val path = Staging.scratchDir("graft-nc-big")
       .resolve("big.nc").toString
     val stats = Sinks.writeNetcdf(series, features, path, start = "2020-01-01")
     // incremental consumption: one slab per (day, var) + 5 axis puts —
@@ -188,7 +189,7 @@ class SinksSpec extends SparkSpec {
       .toDF("fid", "lat", "lon", "minx", "miny", "maxx", "maxy")
     val out = graft.etl.GridmetPipeline.gridmet(
       g, weights, features, start = "2021-01-01", end = "2021-01-02")
-    val path = java.nio.file.Files.createTempDirectory("graft-nc")
+    val path = Staging.scratchDir("graft-nc")
       .resolve(Sinks.outputName("2021-01-01", filled = false) + ".nc").toString
     Sinks.writeNetcdf(out, features, path, start = "2021-01-01")
     val nc = NetcdfClassic.read(path)
@@ -198,7 +199,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("writeContract writes data and the _attrs.json sidecar to a file: URI output path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-contract-uri")
+    val dir = Staging.scratchDir("graft-contract-uri")
     val uri = dir.resolve("out").toUri.toString
     assert(uri.startsWith("file:"), uri)
     Sinks.writeContract(contractDf, uri)

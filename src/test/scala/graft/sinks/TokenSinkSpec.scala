@@ -3,6 +3,7 @@ package graft.sinks
 import graft.SparkSpec
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
+import graft.sources.Staging
 
 class TokenSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -15,7 +16,7 @@ class TokenSinkSpec extends SparkSpec {
   ).toDF("shard", "chunk_id", "token_ids")
 
   test("packed uint16 shards: byte-exact layout + index") {
-    val dir = Files.createTempDirectory("graft-toksink").toString
+    val dir = Staging.scratchDir("graft-toksink").toString
     TokenSink.writePackedTokens(chunks, dir, bytesPerToken = 2)
     val bin0 = Files.readAllBytes(Paths.get(dir, "shard-00000.bin"))
     // chunk order ascending: [1,2,3] then [65535,0] as LE uint16
@@ -36,7 +37,7 @@ class TokenSinkSpec extends SparkSpec {
 
   test("round-trip: write then read equals the input, both widths") {
     for (bpt <- Seq(2, 4)) {
-      val dir = Files.createTempDirectory(s"graft-tok-rt$bpt").toString
+      val dir = Staging.scratchDir(s"graft-tok-rt$bpt").toString
       TokenSink.writePackedTokens(chunks, dir, bytesPerToken = bpt)
       val back = TokenSink.readPackedTokens(spark, dir)
         .as[(Int, Long, Seq[Int])].collect().sortBy(r => (r._1, r._2))
@@ -61,7 +62,7 @@ class TokenSinkSpec extends SparkSpec {
         docs, "doc_id", "source", seed = 42L, nShards = 3, mix = mix)
       val chunks = graft.operators.Packing.packTokenChunksAssigned(
         assigned, docs, col("doc_id"), col("ids"), contextLen = 16)
-      val dir = Files.createTempDirectory("graft-tok-stable").toString
+      val dir = Staging.scratchDir("graft-tok-stable").toString
       TokenSink.writePackedTokens(chunks, dir, bytesPerToken = 2)
       dir
     }
@@ -83,7 +84,7 @@ class TokenSinkSpec extends SparkSpec {
   }
 
   test("out-of-range token id fails the write loudly") {
-    val dir = Files.createTempDirectory("graft-tok-bad").toString
+    val dir = Staging.scratchDir("graft-tok-bad").toString
     val bad = Seq((0, 0L, Seq(70000))).toDF("shard", "chunk_id", "token_ids")
     val e = intercept[Exception] {
       TokenSink.writePackedTokens(bad, dir, bytesPerToken = 2)
@@ -107,7 +108,7 @@ class TokenSinkSpec extends SparkSpec {
       expr("(doc_id - 1) div 2")) // 2 docs per window for the test
     val grouped = withChunk.groupBy(col("shard"), col("chunk_id"))
       .agg(flatten(collect_list(col("token_ids"))).as("token_ids"))
-    val dir = Files.createTempDirectory("graft-tok-e2e").toString
+    val dir = Staging.scratchDir("graft-tok-e2e").toString
     TokenSink.writePackedTokens(grouped, dir)
     val back = TokenSink.readPackedTokens(spark, dir)
     assert(back.count() === 2L)
@@ -116,7 +117,7 @@ class TokenSinkSpec extends SparkSpec {
 
   test("gtok DSv2 source: distributed round-trip, one partition per shard, .bin skipped when pruned") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft-gtok-dsv2").toString
+    val dir = Staging.scratchDir("graft-gtok-dsv2").toString
     TokenSink.writePackedTokens(chunks, dir, bytesPerToken = 2)
     val back = spark.read.format("gtok").load(dir)
     // identical contents to the audit reader
@@ -134,7 +135,7 @@ class TokenSinkSpec extends SparkSpec {
     assert(inventory.as[(Int, Long)].collect().sortBy(_._1).toSeq
       === Seq((0, 2L), (1, 2L)))
     // int32 width round-trips through the same source
-    val dir4 = Files.createTempDirectory("graft-gtok-dsv2-4").toString
+    val dir4 = Staging.scratchDir("graft-gtok-dsv2-4").toString
     TokenSink.writePackedTokens(chunks, dir4, bytesPerToken = 4)
     assert(spark.read.format("gtok").load(dir4)
       .selectExpr("sum(size(token_ids))").as[Long].head() === 10L)
@@ -145,9 +146,9 @@ class TokenSinkSpec extends SparkSpec {
     val docs = Seq((1L, "the fast scan"), (2L, "big data table"),
       (3L, "merge sort window join"), (4L, "stream filter"))
       .toDF("doc_id", "text")
-    val in = Files.createTempDirectory("graft-bpe-in").toString
+    val in = Staging.scratchDir("graft-bpe-in").toString
     docs.write.mode("overwrite").parquet(in)
-    val out = Files.createTempDirectory("graft-bpe-out").toString
+    val out = Staging.scratchDir("graft-bpe-out").toString
     graft.cli.Jobs.runPackTokens(spark, graft.cli.Jobs.Args(Map(
       "input-path" -> in, "output-path" -> out,
       "context-len" -> "8", "n-shards" -> "2",

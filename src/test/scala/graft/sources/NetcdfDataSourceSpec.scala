@@ -21,7 +21,7 @@ class NetcdfDataSourceSpec extends SparkSpec {
       .toDF("nhru", "time", "tmax", "tmin", "prcp", "rhmax", "rhmin", "ws", "humidity")
     val features = Seq((10L, 40.1, -100.1), (20L, 40.2, -100.2), (30L, 40.3, -100.3))
       .toDF("fid", "lat", "lon")
-    val path = java.nio.file.Files.createTempDirectory("graft-dsv2")
+    val path = Staging.scratchDir("graft-dsv2")
       .resolve("series.nc").toString
     Sinks.writeNetcdf(df, features, path, start = "1980-01-01")
     path

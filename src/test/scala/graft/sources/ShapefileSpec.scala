@@ -11,7 +11,7 @@ class ShapefileSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_shp_").toString
+    Staging.scratchDir("graft_shp_").toString
 
   test("polygon .shp + .dbf round-trips through the WKB feature path") {
     val dir = tmp()

@@ -8,7 +8,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   private def write(name: String, content: String): String = {
-    val d = Files.createTempDirectory("graft-src")
+    val d = Staging.scratchDir("graft-src")
     val p = d.resolve(name)
     Files.writeString(p, content)
     p.toString
@@ -35,6 +35,48 @@ class SourcesSpec extends SparkSpec {
         |""".stripMargin)
     val w = Sources.weightsCsv(spark, p, "nhru_v1_1")
     assert(w.as[(Long, Int, Int, Double)].head() == ((7L, 10, 20, 1.0)))
+  }
+
+  test("weights CSV header: read on the driver, named as Spark's reader infers it") {
+    // quotes, an empty name and case-insensitive duplicates
+    val p = write("w3.csv", "\"nhru_v1_1\",,i,j,wght,I\n1,,2,3,0.5,9\n")
+    val inferred = spark.read.option("header", "true").csv(p).columns.toSeq
+    assert(Sources.csvHeader(spark, p) == inferred)
+    assert(inferred == Seq("nhru_v1_1", "_c1", "i2", "j", "wght", "I5"))
+    // a directory of part files, as Spark writes one: the first data file
+    val dir = Staging.scratchDir("graft-src-dir").resolve("w.csv").toString
+    Seq((1L, 4, 5, 0.25), (2L, 6, 7, 0.75)).toDF("nhru_v1_1", "i", "j", "wght")
+      .repartition(2).write.option("header", "true").csv(dir)
+    val w = Sources.weightsCsv(spark, dir, "nhru_v1_1")
+    assert(w.orderBy("fid").as[(Long, Int, Int, Double)].collect().toSeq ==
+      Seq((1L, 4, 5, 0.25), (2L, 6, 7, 0.75)))
+  }
+
+  test("feature table: centroids and Spark's min/max bounds from one collect") {
+    // a null centroid has no entry; bounds skip nulls, NaN sorts above
+    // every number (Spark's max), and DECIMAL bounds arrive as doubles
+    val f = Seq[(Long, Option[Double], Double, Option[Double], Double, Double, Double)](
+      (1L, Some(40.0), -99.0, Some(-99.5), 39.5, -98.5, Double.NaN),
+      (2L, None, -98.0, None, 38.0, -97.0, 41.0),
+      (3L, Some(41.0), -97.5, Some(-100.0), 40.5, -96.0, 42.0))
+      .toDF("fid", "lat", "lon", "minx", "miny", "maxx", "maxy")
+      .withColumn("miny", $"miny".cast("decimal(10,4)"))
+    val t = Sources.featureTable(f)
+    assert(t.centroids == Map(1L -> ((40.0, -99.0)), 3L -> ((41.0, -97.5))))
+    import org.apache.spark.sql.functions.{col, max, min}
+    val b = f.agg(min(col("minx").cast("double")), min(col("miny").cast("double")),
+      max(col("maxx").cast("double")), max(col("maxy").cast("double"))).first()
+    val got = t.bounds.get
+    assert(Seq(got.minx, got.miny, got.maxx).map(Double.box) ==
+      Seq(b.getDouble(0), b.getDouble(1), b.getDouble(2)).map(Double.box))
+    assert(got.maxy.isNaN && b.getDouble(3).isNaN)
+    // a table without the bound columns has centroids only, and one
+    // without coordinates bounds only
+    assert(Sources.featureTable(f.select("fid", "lat", "lon")).bounds.isEmpty)
+    val boundsOnly = Sources.featureTable(f.drop("lat", "lon"))
+    assert(boundsOnly.centroidsRead.isEmpty)
+    assert(boundsOnly.bounds.map(b => (b.minx, b.miny, b.maxx)) ==
+      t.bounds.map(b => (b.minx, b.miny, b.maxx)))
   }
 
   test("PRMS parameter file: hru_elev section, 4 header lines, #### terminator") {

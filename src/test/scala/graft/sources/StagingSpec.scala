@@ -230,7 +230,7 @@ class StagingSpec extends SparkSpec {
   }
 
   test("stageDropBox: one file per slice, in slice order, mtimes strictly ascending 60 s apart") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dropbox")
+    val dir = Staging.scratchDir("graft-dropbox")
     // slice numbers sort numerically (10 after 2), not by directory name
     val slices = Seq(10, 2, 0, 11)
     val df = (0 until 40).map(k => (slices(k % 4), k.toLong)).toDF("s", "v")
@@ -250,7 +250,7 @@ class StagingSpec extends SparkSpec {
   }
 
   test("stageDropBox: a slice written as two part files fails and names the slice") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dropbox-split")
+    val dir = Staging.scratchDir("graft-dropbox-split")
     val twoTasks = spark.range(0, 10, 1, 2).withColumn("s", lit(7))
     val e = intercept[IllegalArgumentException](
       Staging.stageDropBox(dir, twoTasks, "s", "ev"))
@@ -260,7 +260,7 @@ class StagingSpec extends SparkSpec {
 
   test("scratchDir: the exit hook removes the scratch root with every tree that holds files") {
     // a separate JVM, so the real shutdown hook runs on its exit
-    val tmp = java.nio.file.Files.createTempDirectory("graft-scratch-exit")
+    val tmp = Staging.scratchDir("graft-scratch-exit")
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val p = new ProcessBuilder(javaBin, s"-Djava.io.tmpdir=$tmp",
         "-cp", System.getProperty("java.class.path"),

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import graft.sources.Staging
 
 /** Append-mode SESSION windows (q111): merging session state + emit-once
   * watermark eviction together, through the file sink. */
@@ -26,9 +27,9 @@ class AppendModeSessionSpec extends SparkSpec {
       (1L, ts("2021-01-01 10:00:00"), 3L, 4.0, "click"),
       (2L, ts("2021-01-01 11:30:00"), 4L, 8.0, "view")
     ).toDF("user_id", "ts", "event_id", "value", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess-append").toString
+    val dir = Staging.scratchDir("graft-sess-append").toString
     ev.write.mode("overwrite").parquet(dir)
-    val sink = java.nio.file.Files.createTempDirectory("graft-sess-append-sink")
+    val sink = Staging.scratchDir("graft-sess-append-sink")
     EventPipeline.sessionWindowsStreamAppend(spark, dir, gapMinutes = 30)
       .format("parquet").option("path", sink.resolve("out").toString)
       .option("checkpointLocation", sink.resolve("ckpt").toString)

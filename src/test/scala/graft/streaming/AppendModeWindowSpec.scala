@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import graft.sources.Staging
 
 /** Append-mode tumbling windows (q110): emit-once on watermark close,
   * through the file sink — the 100× deployment shape for streaming
@@ -23,9 +24,9 @@ class AppendModeWindowSpec extends SparkSpec {
       (1L, ts("2021-01-01 11:15:00"), 3L, 4.0, "click"),
       (1L, ts("2021-01-01 13:00:00"), 4L, 8.0, "view")
     ).toDF("user_id", "ts", "event_id", "value", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft-append").toString
+    val dir = Staging.scratchDir("graft-append").toString
     ev.write.mode("overwrite").parquet(dir)
-    val sink = java.nio.file.Files.createTempDirectory("graft-append-sink")
+    val sink = Staging.scratchDir("graft-append-sink")
     val q = EventPipeline.tumblingCountsStreamAppend(spark, dir)
       .format("parquet").option("path", sink.resolve("out").toString)
       .option("checkpointLocation", sink.resolve("ckpt").toString)
@@ -48,9 +49,9 @@ class AppendModeWindowSpec extends SparkSpec {
   }
 
   test("checkpoint/restart: open-window state recovered, closed windows emitted exactly once") {
-    val src = java.nio.file.Files.createTempDirectory("graft-app-rst-src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-app-rst-ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-app-rst-out").toString
+    val src = Staging.scratchDir("graft-app-rst-src").toString
+    val ckpt = Staging.scratchDir("graft-app-rst-ckpt").toString
+    val out = Staging.scratchDir("graft-app-rst-out").toString
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "hour_start TIMESTAMP, event_type STRING, n_events BIGINT, sum_value DOUBLE")
     def readOut() = spark.read.schema(schema).parquet(out)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import java.nio.file.Files
+import graft.sources.Staging
 
 /** Physical-encoding drift guard (round-8 regression class).
   *
@@ -43,7 +43,7 @@ class EventEncodingSpec extends SparkSpec {
 
   /** Write the fixture under one encoding; returns the parquet dir. */
   private def writeEncoded(kind: String): String = {
-    val dir = Files.createTempDirectory(s"ev_enc_$kind").toString
+    val dir = Staging.scratchDir(s"ev_enc_$kind").toString
     val df = kind match {
       case "int64ns" =>
         fixture.map { case (u, us, e, v) => (u, us * 1000L, e, v) }
@@ -147,7 +147,7 @@ class EventEncodingSpec extends SparkSpec {
   test("streaming unkeyed proximity join == batch RangeJoin on a bounded NTZ stream") {
     // NTZ-encoded source on purpose: the streaming form must carry the
     // same encoding seam as the batch operator it mirrors
-    val dir = Files.createTempDirectory("ev_prox_src").toString
+    val dir = Staging.scratchDir("ev_prox_src").toString
     fixture.map { case (u, us, e, v) =>
       val ldt = java.time.LocalDateTime.ofEpochSecond(
         Math.floorDiv(us, 1000000L),
@@ -156,7 +156,7 @@ class EventEncodingSpec extends SparkSpec {
       (u, ldt, e, v, if (e % 2 == 1) "error" else "ok")
     }.toDF("user_id", "ts", "event_id", "value", "event_type")
       .coalesce(1).write.mode("overwrite").parquet(dir)
-    val checkpoint = Files.createTempDirectory("ev_prox_ckpt").toString
+    val checkpoint = Staging.scratchDir("ev_prox_ckpt").toString
     val radius = 200000L // ±0.2 s: catches the 1-µs and 123456-µs gaps
     val q = EventPipeline.proximityJoinStream(spark, dir, "error", radius)
       .option("checkpointLocation", checkpoint)
@@ -173,7 +173,7 @@ class EventEncodingSpec extends SparkSpec {
   }
 
   test("stateful streaming sessionization runs on an NTZ-encoded source (batch parity)") {
-    val checkpoint = Files.createTempDirectory("ev_enc_ckpt").toString
+    val checkpoint = Staging.scratchDir("ev_enc_ckpt").toString
     val q = EventPipeline.sessionizeStream(spark, dirs("ntz"), gapMinutes = 30)
       .option("checkpointLocation", checkpoint)
       .format("memory").queryName("enc_ntz_sessions").start()

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
-import java.nio.file.Files
+import graft.sources.Staging
 
 /** Sessionization + tumbling windows; the streaming form must agree
   * with the batch form on static input (AvailableNow + memory sink). */
@@ -48,7 +48,7 @@ class EventPipelineSpec extends SparkSpec {
       (1L, ts("2031-01-01 00:00:00"), 98L, 0.0),  // sentinels
       (2L, ts("2031-01-01 00:00:00"), 99L, 0.0)
     ).toDF("user_id", "ts", "event_id", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = Staging.scratchDir("graft-sess").toString
     ev.write.mode("overwrite").parquet(dir)
 
     val q = EventPipeline.sessionizeStream(spark, dir, gapMinutes = 30)
@@ -74,7 +74,7 @@ class EventPipelineSpec extends SparkSpec {
       (1L, ts("2021-01-01 11:10:01"), 4L, 16.0), // 30m01s → NEW session
       (2L, ts("2021-01-01 12:00:00"), 5L, 8.0)
     ).toDF("user_id", "ts", "event_id", "value")
-    val dir = Files.createTempDirectory("graft-sw-stream").toString
+    val dir = Staging.scratchDir("graft-sw-stream").toString
     ev.write.mode("overwrite").parquet(dir)
 
     val q = EventPipeline.sessionWindowsStream(spark, dir, gapMinutes = 30)
@@ -99,7 +99,7 @@ class EventPipelineSpec extends SparkSpec {
       (ts("2021-01-01 10:30:00"), "view", 8.0),
       (ts("2021-01-01 11:05:00"), "view", 4.0)
     ).toDF("ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = Staging.scratchDir("graft-stream").toString
     ev.write.mode("overwrite").parquet(dir)
 
     val q = EventPipeline.tumblingCountsStream(spark, dir)
@@ -123,7 +123,7 @@ class EventPipelineSpec extends SparkSpec {
       (2L, 21L, ts("2021-01-01 10:05:00"), "view"),
       (2L, 22L, ts("2021-01-01 10:21:00"), "click")  // joins view 21
     ).toDF("user_id", "event_id", "ts", "event_type")
-    val dir = Files.createTempDirectory("graft-ssjoin").toString
+    val dir = Staging.scratchDir("graft-ssjoin").toString
     ev.write.mode("overwrite").parquet(dir)
 
     val q = EventPipeline.clickViewJoinStream(spark, dir, beforeMinutes = 30)
@@ -146,7 +146,7 @@ class EventPipelineSpec extends SparkSpec {
       (1L, 13L, ts("2021-01-01 10:30:00"), 4.0, "click"), // same-ts view wins
       (2L, 20L, ts("2021-01-01 09:00:00"), 5.0, "click")  // no view -> nulls
     ).toDF("user_id", "event_id", "ts", "value", "event_type")
-    val dir = Files.createTempDirectory("graft-asof-stream").toString
+    val dir = Staging.scratchDir("graft-asof-stream").toString
     ev.write.mode("overwrite").parquet(dir)
 
     val q = EventPipeline.asofStream(spark, dir)
@@ -172,7 +172,7 @@ class EventPipelineSpec extends SparkSpec {
       (1L, 11L, ts("2021-01-01 10:00:00.000200"), 2.0, "click"), // no match
       (1L, 12L, ts("2021-01-01 10:00:00.000900"), 3.0, "click")  // -> view 10
     ).toDF("user_id", "event_id", "ts", "value", "event_type")
-    val dir = Files.createTempDirectory("graft-asof-subms").toString
+    val dir = Staging.scratchDir("graft-asof-subms").toString
     ev.write.mode("overwrite").parquet(dir)
     val q = EventPipeline.asofStream(spark, dir)
       .format("memory").queryName("asof_subms").start()
@@ -195,7 +195,7 @@ class EventPipelineSpec extends SparkSpec {
       (1L, ts("2021-01-01 10:30:00.000500"), 2L, 2.0),
       (1L, ts("2021-01-01 12:00:00.000000"), 3L, 4.0) // flushes session 2
     ).toDF("user_id", "ts", "event_id", "value")
-    val dir = Files.createTempDirectory("graft-sess-subms").toString
+    val dir = Staging.scratchDir("graft-sess-subms").toString
     ev.write.mode("overwrite").parquet(dir)
     val q = EventPipeline.sessionizeStream(spark, dir, gapMinutes = 30)
       .format("memory").queryName("sess_subms").start()
@@ -210,15 +210,15 @@ class EventPipelineSpec extends SparkSpec {
   }
 
   test("checkpoint/restart recovers flatMapGroupsWithState session state") {
-    val src = Files.createTempDirectory("graft-restart-src").toString
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
+    val src = Staging.scratchDir("graft-restart-src").toString
+    val ckpt = Staging.scratchDir("graft-restart-ckpt").toString
     // RUN 1: two events of an OPEN session — append mode emits nothing,
     // the open session lives only in the state store checkpoint
     Seq((1L, ts("2021-01-01 10:00:00"), 1L, 1.0),
         (1L, ts("2021-01-01 10:10:00"), 2L, 2.0))
       .toDF("user_id", "ts", "event_id", "value")
       .write.mode("append").parquet(src)
-    val outDir = Files.createTempDirectory("graft-restart-out").toString
+    val outDir = Staging.scratchDir("graft-restart-out").toString
     val sessSchema = org.apache.spark.sql.Encoders
       .product[EventPipeline.Session].schema
     def readOut() = spark.read.schema(sessSchema).parquet(outDir)
@@ -254,7 +254,7 @@ class EventPipelineSpec extends SparkSpec {
       (1L, "alpha beta"), (2L, "gamma"), (3L, "alpha beta"),
       (4L, "gamma"), (5L, "delta")
     ).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-dedup-stream").toString
+    val dir = Staging.scratchDir("graft-dedup-stream").toString
     docs.write.mode("overwrite").parquet(dir)
 
     val q = EventPipeline.dedupDocStream(spark, dir)
@@ -269,7 +269,7 @@ class EventPipelineSpec extends SparkSpec {
   }
 
   test("streaming doc dedup drops duplicates ACROSS micro-batches (q107 shape)") {
-    val base = Files.createTempDirectory("graft-dedup-xbatch").toString
+    val base = Staging.scratchDir("graft-dedup-xbatch").toString
     // two one-file arrivals: originals, then a duplicate text under a
     // new id — mtime-ordered so FileStreamSource delivers them in that
     // order, and maxFilesPerTrigger=1 puts them in SEPARATE batches
@@ -301,7 +301,7 @@ class EventPipelineSpec extends SparkSpec {
 
   test("streaming admission == per-file batch admitIncrement (shared state)") {
     import graft.operators.Dedup
-    val base = Files.createTempDirectory("graft-admit-parity").toString
+    val base = Staging.scratchDir("graft-admit-parity").toString
     // two source files, name-ordered = arrival-ordered; "alpha" recurs
     // across files (stream must reject the second via persisted state)
     // and "beta" recurs within file 2 (in-batch min-id election)
@@ -331,7 +331,7 @@ class EventPipelineSpec extends SparkSpec {
   }
 
   test("proximity join stream: two-batch restart — cross-batch pairs from recovered state, late events dropped") {
-    val base = Files.createTempDirectory("graft-prox-restart").toString
+    val base = Staging.scratchDir("graft-prox-restart").toString
     val radius = 200000L // ±0.2 s
     val t0 = ts("2021-06-01 12:00:00")
     def plus(us: Long) = {
@@ -381,7 +381,7 @@ class EventPipelineSpec extends SparkSpec {
   }
 
   test("checkpoint/restart: admission stream continues from persisted state") {
-    val base = Files.createTempDirectory("graft-admit-restart").toString
+    val base = Staging.scratchDir("graft-admit-restart").toString
     Seq((1L, "first"), (2L, "second")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$base/src/part=a")
     def run(): Unit = {

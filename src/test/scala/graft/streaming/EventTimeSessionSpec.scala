@@ -3,7 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
-import java.nio.file.Files
+import graft.sources.Staging
 
 /** Event-time-timeout sessionization (round-11 verdict ask #2):
   * watermark-driven session closure must be DETERMINISTIC — a pure
@@ -46,7 +46,7 @@ class EventTimeSessionSpec extends SparkSpec {
     // gap 30 min, delay 1 h. A's only event at 10:00 → end 10:30.
     // B's events at 10:00 and 11:30 (split) put max ts at 11:30 →
     // final watermark 10:30 == A's end EXACTLY.
-    val base = Files.createTempDirectory("graft-et-boundary").toString
+    val base = Staging.scratchDir("graft-et-boundary").toString
     val src = stageFiles(base, Seq(Seq(
       (1L, ts("2021-06-01 10:00:00"), 1L, 1.0),
       (2L, ts("2021-06-01 10:00:00"), 2L, 2.0),
@@ -68,7 +68,7 @@ class EventTimeSessionSpec extends SparkSpec {
     // final watermark 1 ms PAST A's end → A's session must emit.
     // (1 ms, not 1 µs: the watermark is ms-floored, so a 1 µs nudge
     // would floor away — that arithmetic is pinned by q110/q111.)
-    val base = Files.createTempDirectory("graft-et-boundary2").toString
+    val base = Staging.scratchDir("graft-et-boundary2").toString
     val src = stageFiles(base, Seq(Seq(
       (1L, ts("2021-06-01 10:00:00"), 1L, 1.0),
       (2L, ts("2021-06-01 10:00:00"), 2L, 2.0),
@@ -81,7 +81,7 @@ class EventTimeSessionSpec extends SparkSpec {
   }
 
   test("cross-batch parity: emitted set == batch sessions under the q114 closure rule") {
-    val base = Files.createTempDirectory("graft-et-parity").toString
+    val base = Staging.scratchDir("graft-et-parity").toString
     val f1 = Seq(
       (1L, ts("2021-06-01 10:00:00"), 1L, 1.5),
       (1L, ts("2021-06-01 10:10:00"), 2L, 2.25),
@@ -119,7 +119,7 @@ class EventTimeSessionSpec extends SparkSpec {
   }
 
   test("tombstone keeps per-user session NUMBERING across a timeout emission") {
-    val base = Files.createTempDirectory("graft-et-tomb").toString
+    val base = Staging.scratchDir("graft-et-tomb").toString
     val f1 = Seq((2L, ts("2021-06-01 10:05:00"), 1L, 1.0))
       .toDF("user_id", "ts", "event_id", "value")
     // raises wm to 11:00 → 2's session (end 10:35) times out, state
@@ -142,7 +142,7 @@ class EventTimeSessionSpec extends SparkSpec {
   }
 
   test("checkpoint/restart: open session and WATERMARK recover; timeout fires from recovered state") {
-    val base = Files.createTempDirectory("graft-et-restart").toString
+    val base = Staging.scratchDir("graft-et-restart").toString
     val src = s"$base/src"
     val sessSchema = org.apache.spark.sql.Encoders
       .product[EventPipeline.Session].schema

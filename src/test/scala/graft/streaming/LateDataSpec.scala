@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import java.sql.Timestamp
-import java.nio.file.Files
+import graft.sources.Staging
 
 /** Late-data semantics of [[EventPipeline.sessionizeStatefulEventTime]]
   * (round-12 verdict ask #1: the guard was real code with no asserting
@@ -43,7 +43,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("late fold regresses start (never end) and an expired-on-arrival session emits EXACTLY once, ordinal preserved") {
-    val base = Files.createTempDirectory("graft-late-fold").toString
+    val base = Staging.scratchDir("graft-late-fold").toString
     val f1 = Seq((10L, ts("2021-06-01 12:00:00"), 1L, 1.0),
                  (10L, ts("2021-06-01 12:05:00"), 2L, 2.0),
                  (40L, ts("2021-06-01 15:00:00"), 3L, 4.0)) // wm → 14:00
@@ -67,7 +67,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("a late event beyond the gap BEFORE the open session's start forms its own earlier session (no fold), ordinals in batch order") {
-    val base = Files.createTempDirectory("graft-late-insert").toString
+    val base = Staging.scratchDir("graft-late-insert").toString
     val f1 = Seq((20L, ts("2021-06-01 13:00:00"), 1L, 1.0),
                  (40L, ts("2021-06-01 15:00:00"), 2L, 2.0)) // wm → 14:00
       .toDF("user_id", "ts", "event_id", "value")
@@ -85,7 +85,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("a late event BRIDGES an earlier late run and the open session into one batch-identical session") {
-    val base = Files.createTempDirectory("graft-late-bridge").toString
+    val base = Staging.scratchDir("graft-late-bridge").toString
     val f1 = Seq((30L, ts("2021-06-01 12:00:00"), 1L, 1.0),
                  (30L, ts("2021-06-01 12:05:00"), 2L, 2.0),
                  (40L, ts("2021-06-01 15:00:00"), 3L, 4.0)) // wm → 14:00
@@ -102,7 +102,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("a late session ending exactly AT the current watermark arms its timeout AT it (legal) and closes only when the watermark strictly passes") {
-    val base = Files.createTempDirectory("graft-late-atwm").toString
+    val base = Staging.scratchDir("graft-late-atwm").toString
     val f1 = Seq((40L, ts("2021-06-01 15:00:00"), 1L, 1.0)) // wm → 14:00
       .toDF("user_id", "ts", "event_id", "value")
     // late singleton at 13:30: end 14:00 == the CURRENT watermark —
@@ -118,7 +118,7 @@ class LateDataSpec extends SparkSpec {
   }
 
   test("a late session ending exactly ON the FINAL watermark stays open (strict <, late path)") {
-    val base = Files.createTempDirectory("graft-late-final").toString
+    val base = Staging.scratchDir("graft-late-final").toString
     val f1 = Seq((40L, ts("2021-06-01 15:00:00"), 1L, 1.0)) // wm → 14:00
       .toDF("user_id", "ts", "event_id", "value")
     // same late singleton, but nothing ever advances the watermark past

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import graft.sources.Staging
 
 /** The RocksDB state-store backend (the 100× deployment option — heap-
   * resident HDFS-backed state is the scale-killer at millions of keys)
@@ -33,7 +34,7 @@ class RocksDbParitySpec extends SparkSpec {
       (1L, ts("2031-01-01 00:00:00"), 98L, 0.0), // sentinels close real sessions
       (2L, ts("2031-01-01 00:00:00"), 99L, 0.0)
     ).toDF("user_id", "ts", "event_id", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-rocks-sess").toString
+    val dir = Staging.scratchDir("graft-rocks-sess").toString
     ev.write.mode("overwrite").parquet(dir)
     withRocksDb {
       val q = EventPipeline.sessionizeStream(spark, dir, gapMinutes = 30)
@@ -60,7 +61,7 @@ class RocksDbParitySpec extends SparkSpec {
       (2L, ts("2021-06-01 10:05:00"), 4L, 8.0),  // times out at wm 11:00
       (3L, ts("2021-06-01 12:00:00"), 5L, 16.0)  // max ts; held
     ).toDF("user_id", "ts", "event_id", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-rocks-etsess").toString
+    val dir = Staging.scratchDir("graft-rocks-etsess").toString
     ev.write.mode("overwrite").parquet(dir)
     def run(name: String, rocks: Boolean): Set[Seq[Any]] = {
       def go(): Unit = {
@@ -87,9 +88,9 @@ class RocksDbParitySpec extends SparkSpec {
       (1L, ts("2021-01-01 11:15:00"), 3L, 4.0, "click"),
       (1L, ts("2021-01-01 13:00:00"), 4L, 8.0, "view")
     ).toDF("user_id", "ts", "event_id", "value", "event_type")
-    val dir = java.nio.file.Files.createTempDirectory("graft-rocks-win").toString
+    val dir = Staging.scratchDir("graft-rocks-win").toString
     ev.write.mode("overwrite").parquet(dir)
-    val sink = java.nio.file.Files.createTempDirectory("graft-rocks-win-sink")
+    val sink = Staging.scratchDir("graft-rocks-win-sink")
     withRocksDb {
       EventPipeline.tumblingCountsStreamAppend(spark, dir)
         .format("parquet").option("path", sink.resolve("out").toString)
