@@ -24,7 +24,8 @@ package graft
   *     (queries with zero successful trials, whose median reads -1).
   */
 object Bench {
-  private def loadavg(): Seq[Double] =
+  /** 1/5/15-min load averages; -1 each where /proc/loadavg is unreadable. */
+  private[graft] def loadavg(): Seq[Double] =
     try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")))
       .trim.split("\\s+").take(3).toSeq.map(_.toDouble)

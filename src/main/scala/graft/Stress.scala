@@ -1452,15 +1452,11 @@ object Stress {
         case p if p.endsWith(".HDFSBackedStateStoreProvider") => "hdfs"
         case p => p
       }
-    def loadavg1(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split(" ")(0).toDouble catch { case _: Throwable => -1.0 }
     // external-contention baseline: the run itself drives the 1-min
     // loadavg toward ~#cores once scenarios start, so only the
     // PRE-RUN reading separates "slow box" from "own work"
-    val runStartLoad = loadavg1()
-    val listener = new StressMetrics
-    spark.sparkContext.addSparkListener(listener)
+    val runStartLoad = Bench.loadavg().head
+    val listener = new StressMetrics().attach(spark.sparkContext)
     // big scenarios (the ~19-min kn_trigram_pruned_5m scale point) are
     // STANDING rows of the suite, but a routine full run skips them
     // unless SPARK_GRAFT_STRESS_BIG=1 — naming one in STRESS_ONLY
@@ -1540,22 +1536,13 @@ object Stress {
         val t0 = System.nanoTime()
         action()
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener events are delivered async (listenerBus is
-        // private[spark]); poll until the task count stops moving
-        var last = -1
-        var settle = 0
-        while (settle < 3) {
-          Thread.sleep(200)
-          val now = listener.snapshot().taskCount
-          if (now == last) settle += 1 else { settle = 0; last = now }
-        }
         val m = listener.snapshot()
         // 1-min loadavg at scenario END (self-load dominated) plus the
         // pre-run baseline: wall seconds on a shared box are only
         // interpretable next to the load they ran under (BENCHNOTES.md
         // documents ±30% machine-state swings); the byte/skew/spill
         // columns are load-invariant.
-        val load = loadavg1()
+        val load = Bench.loadavg().head
         val line =
           s"""{"scenario":"${sc.name}","input_rows":$inputRows,""" +
           s""""state_store":"$stateStore","warmups":$warmups,""" +
@@ -1582,31 +1569,15 @@ object Stress {
           // bytes-based companion: max_task_skew is task DURATIONS and
           // inflates on a loaded box and on sub-second noise stages;
           // the byte distribution is the load-invariant partitioning
-          // signal (StressMetrics.maxByteSkew doc) — read skew claims
-          // off THIS column, durations off a quiet-box capture.
-          s""""max_byte_skew":${
-            math.rint(listener.maxByteSkew() * 100) / 100},""" +
-          s""""stages":${m.stageCount},"tasks":${m.taskCount},""" +
-          s""""codegen_compiles":${m.codegenCompiles}}"""
+          // signal (StressMetrics.Snapshot.maxByteSkew) — read skew
+          // claims off THIS column, durations off a quiet-box capture.
+          s""""max_byte_skew":${math.rint(m.maxByteSkew * 100) / 100},""" +
+          s""""jobs":${m.jobCount},"stages":${m.stageCount},"tasks":${m.taskCount},""" +
+          s""""codegen_compiles":${m.codegenCompiles},""" +
+          // the per-stage drill-down, so a capture diff can attribute a
+          // scenario's spill or skew to a stage without a rerun
+          s""""stage_rows":${m.stageRows.map(_.json).mkString("[", ",", "]")}}"""
         println(line)
-        // SPARK_GRAFT_STRESS_STAGES=1: per-stage drill-down straight
-        // from the harness, so a spilling scenario can be attributed
-        // without reproducing its exact session/sequence in a separate
-        // tool
-        if (sys.env.get("SPARK_GRAFT_STRESS_STAGES").contains("1")) {
-          val cpu = listener.perStageCpu.map(t => t._1 -> t).toMap
-          println(f"${"stage"}%6s ${"tasks"}%6s ${"writeMB"}%9s " +
-            f"${"readMB"}%9s ${"spillMB"}%9s ${"maxMs"}%8s ${"medMs"}%8s " +
-            f"${"maxCpu"}%8s ${"medCpu"}%8s ${"gcOfMax"}%8s")
-          listener.perStage.sortBy(_._1).foreach {
-            case (id, tasks, w, r, sp2, mx, med, _, _) =>
-              val (_, _, _, medC, maxC, gcMx) =
-                cpu.getOrElse(id, (id, 0L, 0L, 0L, 0L, 0L))
-              println(f"$id%6d $tasks%6d ${w / 1e6}%9.0f ${r / 1e6}%9.0f " +
-                f"${sp2 / 1e6}%9.0f $mx%8d $med%8d $maxC%8d $medC%8d " +
-                f"$gcMx%8d")
-          }
-        }
         System.out.flush()
         line
       }

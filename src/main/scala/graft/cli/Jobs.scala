@@ -420,6 +420,23 @@ object Jobs {
     out
   }
 
+  /** Write a UTF-8 text artifact, replacing any file at `path`. Artifacts
+    * follow the path's Hadoop filesystem, like every other output here:
+    * with an object-storage path a java.nio write would land on local
+    * driver disk instead. Parent directories are created. */
+  private def writeText(spark: SparkSession, path: String, body: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Read a UTF-8 text artifact [[writeText]] wrote. */
+  private def readText(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
   /** TOKENIZER-TRAINING job — learns `--n-merges` BPE merges from the
     * corpus ([[graft.operators.BpeTrain.trainMerges]], q130) and writes
     * the PUBLIC GPT-2 artifact pair (`vocab.json` + `merges.txt`,
@@ -442,12 +459,6 @@ object Jobs {
       .select(explode(split(col("word"), "")).as("c"))
       .filter(col("c") =!= "").distinct()
       .collect().map(_.getString(0)).sorted
-    // the artifacts follow the OUTPUT path's filesystem, like every
-    // other job here — with an object-storage --output-path a
-    // java.nio write would land on local driver disk instead
-    val dirPath = new org.apache.hadoop.fs.Path(a("output-path"))
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dirPath)
     def jsonEsc(s: String): String = s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
@@ -463,12 +474,8 @@ object Jobs {
     val vocabJson = tokens.zipWithIndex
       .map { case (t, i) => s""""${jsonEsc(t)}": $i""" }
       .mkString("{", ", ", "}")
-    def writeUtf8(name: String, body: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(dirPath, name), true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-    }
-    writeUtf8("vocab.json", vocabJson)
-    writeUtf8("merges.txt",
+    writeText(spark, s"${a("output-path")}/vocab.json", vocabJson)
+    writeText(spark, s"${a("output-path")}/merges.txt",
       ("#version: 0.2" +: merges.map { case (l, r) => s"$l $r" })
         .mkString("", "\n", "\n"))
     a("output-path")
@@ -491,12 +498,8 @@ object Jobs {
       .localCheckpoint()
     val w = graft.operators.Classifier.trainLogistic(
       feats, dim, iters, lr = 0.5)
-    val outPath = new org.apache.hadoop.fs.Path(a("output-path"))
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = s"dim $dim\niters $iters\nlr 0.5\n" +
-      w.map(_.toString).mkString("w ", " ", "\n")
-    val out = fs.create(outPath, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeText(spark, a("output-path"), s"dim $dim\niters $iters\nlr 0.5\n" +
+      w.map(_.toString).mkString("w ", " ", "\n"))
     a("output-path")
   }
 
@@ -522,12 +525,8 @@ object Jobs {
         col(sourceCol), col("nll"), rounds, eta, smoothing)
       .orderBy(col("domain"))
       .collect() // |domains| rows — bounded artifact
-    val outPath = new org.apache.hadoop.fs.Path(a("output-path"))
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = w.map(r => s"${r.getString(0)}\t${r.getLong(1)}\t" +
-      s"${r.getDouble(2)}\t${r.getDouble(3)}").mkString("", "\n", "\n")
-    val out = fs.create(outPath, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeText(spark, a("output-path"), w.map(r => s"${r.getString(0)}\t${r.getLong(1)}\t" +
+      s"${r.getDouble(2)}\t${r.getDouble(3)}").mkString("", "\n", "\n"))
     a("output-path")
   }
 
@@ -547,13 +546,9 @@ object Jobs {
         iters = a.get("iters").getOrElse("2").toInt)
       .orderBy(col("score").desc, col("piece").asc)
       .collect() // vocab-bounded artifact (the train-bpe pattern)
-    val outPath = new org.apache.hadoop.fs.Path(a("output-path"))
-    val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = pieces.map(r =>
+    writeText(spark, a("output-path"), pieces.map(r =>
       s"${r.getString(0)}\t${r.getDouble(1)}\t${r.getLong(2)}")
-      .mkString("", "\n", "\n")
-    val out = fs.create(outPath, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+      .mkString("", "\n", "\n"))
     a("output-path")
   }
 
@@ -564,13 +559,7 @@ object Jobs {
     * shortest-repr toString ↔ parseDouble). */
   def loadMixWeights(
       spark: SparkSession, path: String): Seq[(String, Double)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val body =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val rows = body.split("\n").toSeq.filter(_.nonEmpty).zipWithIndex.map {
+    val rows = readText(spark, path).split("\n").toSeq.filter(_.nonEmpty).zipWithIndex.map {
       case (line, i) =>
         val f = line.split("\t")
         require(f.length == 4,
@@ -611,16 +600,17 @@ object Jobs {
   /** Parse the [[runTrainClassifier]] artifact back to weights. */
   def loadClassifierWeights(
       spark: SparkSession, path: String): Array[Double] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val body =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val wLine = body.linesIterator.find(_.startsWith("w "))
+    val wLine = readText(spark, path).linesIterator.find(_.startsWith("w "))
       .getOrElse(sys.error(s"no weights line in classifier artifact $path"))
     wLine.drop(2).trim.split("\\s+").map(_.toDouble)
   }
+
+  /** The whitespace hash-bucket tokenizer (q99's scheme): each
+    * non-empty space-separated word of column `c` becomes
+    * pmod(xxhash64(word), `mod`) as an INT token id. */
+  private def hashTokens(c: String, mod: Long = 65536L) =
+    expr(s"transform(filter(split($c, ' '), w -> w <> ''), " +
+      s"w -> CAST(pmod(xxhash64(w), ${mod}L) AS INT))")
 
   /** SFT PACKING job — (prompt, response) conversations to MASKED
     * pretraining shards: tokens under the q99 hash scheme, packed by
@@ -640,12 +630,9 @@ object Jobs {
     val rCol = a.get("response-col").getOrElse("response")
     val contextLen = a.get("context-len").getOrElse("512").toInt
     val nShards = a.get("n-shards").getOrElse("8").toInt
-    def toks(c: String) =
-      expr(s"transform(filter(split($c, ' '), w -> w <> ''), " +
-        "w -> CAST(pmod(xxhash64(w), 65536L) AS INT))")
     val packed = graft.operators.Packing.sftMaskedPack(
         convs.select(col(idCol).as("id"),
-          toks(pCol).as("p"), toks(rCol).as("r")),
+          hashTokens(pCol).as("p"), hashTokens(rCol).as("r")),
         col("id"), col("p"), col("r"), contextLen, nShards)
       .localCheckpoint() // one packing evaluation feeds both planes
     val out = a("output-path")
@@ -674,12 +661,9 @@ object Jobs {
     val rCol = a.get("rejected-col").getOrElse("rejected")
     val contextLen = a.get("context-len").getOrElse("512").toInt
     val nShards = a.get("n-shards").getOrElse("8").toInt
-    def toks(c: String) =
-      expr(s"transform(filter(split($c, ' '), w -> w <> ''), " +
-        "w -> CAST(pmod(xxhash64(w), 65536L) AS INT))")
     val packed = graft.operators.Packing.dpoPairPack(
-        pairs.select(col(idCol).as("id"), toks(pCol).as("p"),
-          toks(cCol).as("c"), toks(rCol).as("r")),
+        pairs.select(col(idCol).as("id"), hashTokens(pCol).as("p"),
+          hashTokens(cCol).as("c"), hashTokens(rCol).as("r")),
         col("id"), col("p"), col("c"), col("r"), contextLen, nShards)
       .localCheckpoint() // one packing evaluation feeds all four planes
     val out = a("output-path")
@@ -716,9 +700,7 @@ object Jobs {
       case (Some(v), Some(m)) =>
         graft.functions.Bpe.bpe_tokenize(col(textCol),
           graft.functions.Bpe.load(v, m))
-      case (None, None) =>
-        expr(s"transform(filter(split($textCol, ' '), w -> w <> ''), " +
-          s"w -> CAST(pmod(xxhash64(w), ${hashMod}L) AS INT))")
+      case (None, None) => hashTokens(textCol, hashMod)
       case _ => throw new IllegalArgumentException(
         "--bpe-vocab and --bpe-merges must be given together")
     }

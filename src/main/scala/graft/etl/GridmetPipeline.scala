@@ -276,8 +276,8 @@ object GridmetPipeline {
     * the missing/present split at the axis' first day — and derives the
     * mapping there; the filled dense series is then ONE plan over the
     * aggregate ([[denseOnAxis]]), read once by the caller's sink. A given
-    * `mapping` (the reuse path) fills the dense series with
-    * [[applyFill]]. */
+    * `mapping` (the reuse path) is collected and checked ([[donorsOf]])
+    * and fills the same way. */
   def gridmetWithMapping(
       grid: DataFrame, weights: DataFrame, features: DataFrame,
       vars: Seq[String] = Seq("tmmx", "tmmn", "pr", "rmax", "rmin", "vs"),
@@ -304,7 +304,7 @@ object GridmetPipeline {
       def dense(donorOf: Map[Long, Long]) =
         Convert.gridmetFinalize(denseOnAxis(aggOnce, features, times, donorOf))
       mapping match {
-        case Some(m) => GridmetOutput(applyFill(dense(Map.empty), m), None)
+        case Some(m) => GridmetOutput(dense(donorsOf(m, features)), None)
         case None =>
           times.headOption.flatMap { t0 =>
             val (miss, present) = splitAt(aggOnce, t0, table.centroids.keys.toSeq)
@@ -317,6 +317,31 @@ object GridmetPipeline {
           }
       }
     }
+  }
+
+  /** The donor of each missing feature in a given fill mapping, collected
+    * to the driver (|missing| rows). The mapping comes from outside the
+    * run, so it is checked first: a repeated `miss_fid` would multiply
+    * that feature's rows, a null field (Spark's permissive CSV reader
+    * turns an unparsable one into null) would leave it unfilled, and a
+    * `miss_fid` or `fill_fid` that names none of the `features` has no
+    * series to fill or read (the reference's `ds.sel` raises there too).
+    * Each fails naming the mapping's file and the fid. */
+  private def donorsOf(mapping: DataFrame, features: DataFrame): Map[Long, Long] = {
+    val source = if (mapping.inputFiles.isEmpty) "the given table" else mapping.inputFiles.mkString(", ")
+    def reject(why: String) = throw new IllegalArgumentException(s"fill mapping $source: $why")
+    val rows = mapping.select(Sources.FillMappingSchema.map(f => col(f.name).cast(f.dataType)): _*)
+      .collect()
+    rows.find(_.anyNull).foreach(r => reject(s"a null or unparsable field in row (${r.mkString(", ")})"))
+    val pairs = rows.map(r => r.getLong(0) -> r.getLong(1))
+    pairs.groupBy(_._1).collectFirst { case (m, ps) if ps.length > 1 =>
+      reject(s"miss_fid $m appears ${ps.length} times")
+    }
+    val fids = features.select(col("fid").cast(LongType)).collect()
+      .collect { case r if !r.isNullAt(0) => r.getLong(0) }.toSet
+    pairs.iterator.flatMap { case (m, f) => Iterator(m, f) }.find(!fids(_))
+      .foreach(f => reject(s"fid $f names no feature"))
+    pairs.toMap
   }
 
   /** Apply an NN fill mapping to a finalized series (the J3 stage on

@@ -12,38 +12,6 @@ import org.apache.spark.sql.types._
   */
 object Model {
 
-  /** One row of the cell→polygon weight table (S3, `cli.py:68-75`).
-    * `wght` is the fractional area of grid cell (i,j) inside feature fid. */
-  final case class Weight(fid: Long, i: Int, j: Int, wght: Double)
-
-  /** One catalog record (S4/S5, `etl.py:162-177`, `etl.py:646-655`).
-    * Only the fields the pipelines actually consume. */
-  final case class CatalogEntry(
-      id: String,
-      varname: String,
-      variable: String,
-      url: String,
-      units: String,
-      tName: String,
-      xName: String,
-      yName: String,
-      x1: Double,
-      y1: Double,
-      resX: Double,
-      resY: Double,
-      ncols: Int,
-      nrows: Int,
-      toptobottom: Boolean)
-
-  /** Per-feature centroid + bounds (S2; consumed at `etl.py:322`,
-    * `helper.py:58,69`). */
-  final case class Feature(
-      fid: Long, lat: Double, lon: Double,
-      minx: Double, miny: Double, maxx: Double, maxy: Double)
-
-  /** NN fill mapping row (`helper.py:75-79`). */
-  final case class FillMapping(missFid: Long, fillFid: Long, distance: Double)
-
   /** Long-form staged grid schema (FIXTURES.md §1). One row per
     * (time [, ens], j, i); climate variables are wide columns. */
   def gridSchema(vars: Seq[String], withEns: Boolean): StructType = {

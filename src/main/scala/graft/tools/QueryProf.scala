@@ -2,9 +2,9 @@ package graft.tools
 
 /** Dev tool: run named SparkEntry queries bench-shaped (local[$CPUS],
   * shuffle = cpus, AQE on, noop sink, warm tables) with a
-  * [[StressMetrics]] listener attached, and print per-stage wall/CPU/
-  * byte rows per trial — the measurement seam guide §1 asks for before
-  * any change. Usage:
+  * [[StressMetrics]] window attached, and print each trial's totals and
+  * the last trial's per-stage wall/CPU/byte rows — the measurement seam
+  * guide §1 asks for before any change. Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     runMain graft.tools.QueryProf q108_proximity_stream [more ...]
   * SPARK_GRAFT_PROF_TRIALS (default 2) trials per query; per-stage rows
@@ -16,8 +16,7 @@ object QueryProf {
     val trials = graft.Sessions.envInt("SPARK_GRAFT_PROF_TRIALS", 2)
     val spark = graft.Sessions.querySuite(graft.Sessions.cores(32), "WARN")
     graft.Sessions.warmTables(spark, sfDir)
-    val m = new StressMetrics
-    spark.sparkContext.addSparkListener(m)
+    val m = new StressMetrics().attach(spark.sparkContext)
     // SPARK_GRAFT_PROF_SAMPLE_MS=N: in-process stack sampler over the
     // executor task threads (jstack/jcmd cannot attach in this
     // sandbox); prints a frame histogram per query so non-CPU task
@@ -71,23 +70,13 @@ object QueryProf {
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
         val s = m.snapshot()
-        println(f"[prof] $name trial $t wall=$sec%.3f s stages=${s.stageCount}" +
-          f" tasks=${s.taskCount} shufW=${s.shuffleWriteBytes}" +
+        println(f"[prof] $name trial $t wall=$sec%.3f s jobs=${s.jobCount}" +
+          f" stages=${s.stageCount} tasks=${s.taskCount} shufW=${s.shuffleWriteBytes}" +
           f" shufR=${s.shuffleReadBytes} spill=${s.spillBytes}" +
           f" skew1s=${s.maxTaskSkew1s}%.2f cpuSkew1s=${s.maxTaskSkew1sCpu}%.2f" +
           f" codegen_compiles=${s.codegenCompiles}")
-        if (t == trials) {
-          println("[prof]   stage tasks    writeB     readB    spillB " +
-            "maxMs medMs | medCpu maxCpu gcOfMax")
-          val cpu = m.perStageCpu.map(r => r._1 -> r).toMap
-          m.perStage.sortBy(-_._6).foreach {
-            case (id, n, w, r, sp, mx, med, _, _) =>
-              val c = cpu.get(id)
-              println(f"[prof]   $id%5d $n%5d $w%9d $r%9d $sp%9d $mx%5d $med%5d" +
-                f" | ${c.map(_._4).getOrElse(0L)}%6d ${c.map(_._5).getOrElse(0L)}%6d" +
-                f" ${c.map(_._6).getOrElse(0L)}%7d")
-          }
-        }
+        if (t == trials)
+          s.stageRows.sortBy(-_.maxTaskMs).foreach(r => println(s"[prof]   ${r.json}"))
       }
       if (sampleMs.isDefined) {
         println(s"[prof] $name task-thread sample histogram (top 15):")

@@ -1,30 +1,26 @@
 package graft.tools
 
+import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.Bridge
 import scala.collection.mutable
 
-/** Task-metrics collector for the scale-stress harness ([[graft.Stress]])
-  * and the skew specs: accumulates per-stage shuffle bytes, spill and
-  * task durations so a run can report MEASURED numbers — rows/s, peak
-  * shuffle, max-task/median-task skew — instead of plan-audit
-  * arguments. Attach around exactly one action; scenarios run serially
-  * so the window is unambiguous. */
+/** The one measured window for the scale-stress harness
+  * ([[graft.Stress]]), QueryProf and the specs: accumulates jobs and
+  * per-stage shuffle bytes, spill and task durations so a run can
+  * report MEASURED numbers — rows/s, peak shuffle, max-task/median-task
+  * skew — instead of plan-audit arguments. [[attach]] it to a context,
+  * then bracket exactly one action with [[reset]] (or the attach) and
+  * [[snapshot]]: each drains Spark's listener bus first, so the window
+  * holds every event the action posted and none from before it.
+  * Scenarios run serially, so the window is unambiguous. */
 final class StressMetrics extends SparkListener {
-
-  final case class StageAgg(
-      var tasks: Int = 0,
-      var shuffleWriteBytes: Long = 0L,
-      var shuffleReadBytes: Long = 0L,
-      var spillBytes: Long = 0L,
-      var peakExecMem: Long = 0L,
-      val taskMs: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty,
-      val taskCpuMs: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty,
-      val taskGcMs: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty,
-      val taskWriteB: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty,
-      val taskReadB: mutable.ArrayBuffer[Long] = mutable.ArrayBuffer.empty)
+  import StressMetrics._
 
   private val stages = mutable.LinkedHashMap.empty[Int, StageAgg]
+  private var jobs = 0
+  @volatile private var attached: Option[SparkContext] = None
 
   /** Generated classes compiled in this JVM so far: Janino compiles
     * only on a codegen-cache miss, so the count since [[reset]] is the
@@ -32,13 +28,30 @@ final class StressMetrics extends SparkListener {
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
   private var compilesAtReset = compiles
 
+  /** Register on `sc`'s listener bus, after the events already posted
+    * there, so the first window starts clean; [[close]] removes it. */
+  def attach(sc: SparkContext): this.type = {
+    Bridge.drainListenerBus(sc)
+    sc.addSparkListener(this)
+    attached = Some(sc)
+    this
+  }
+
+  def close(): Unit = {
+    attached.foreach(_.removeSparkListener(this))
+    attached = None
+  }
+
+  /** Wait for the events already posted. Not under the lock: the bus
+    * thread needs it to deliver them. */
+  private def drain(): Unit = attached.foreach(Bridge.drainListenerBus)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val m = e.taskMetrics
     if (m != null) {
-      val s = stages.getOrElseUpdate(e.stageId, StageAgg())
-      s.tasks += 1
-      s.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
-      s.shuffleReadBytes += m.shuffleReadMetrics.totalBytesRead
+      val s = stages.getOrElseUpdate(e.stageId, new StageAgg)
       s.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
       s.peakExecMem = math.max(s.peakExecMem, m.peakExecutionMemory)
       s.taskMs += m.executorRunTime
@@ -49,18 +62,86 @@ final class StressMetrics extends SparkListener {
     }
   }
 
-  def reset(): Unit = synchronized {
-    stages.clear()
-    compilesAtReset = compiles
+  /** Start a new window after every event posted so far. */
+  def reset(): Unit = {
+    drain()
+    synchronized {
+      stages.clear()
+      jobs = 0
+      compilesAtReset = compiles
+    }
   }
 
-  /** Aggregate view over all stages seen since the last reset. */
+  /** The window so far, read after every event posted so far. */
+  def snapshot(): Snapshot = {
+    drain()
+    synchronized {
+      val ss = stages.values.toSeq
+      def median(xs: mutable.ArrayBuffer[Long]) = xs.sorted.apply(xs.length / 2)
+      def maxOr1(xs: Seq[Double]) = if (xs.isEmpty) 1.0 else xs.max
+      def stageSkews(minMedianMs: Long, sel: StageAgg => mutable.ArrayBuffer[Long]) =
+        ss.map(sel).filter(_.length >= MinTasksForSkew).flatMap { xs =>
+          val med = math.max(1L, median(xs))
+          if (med >= minMedianMs) Some(xs.max.toDouble / med) else None
+        }
+      def byteSkew(xs: mutable.ArrayBuffer[Long]): Option[Double] = {
+        val total = xs.sum
+        if (xs.length < MinTasksForSkew || total < 64 * 1024) None
+        else Some(xs.max.toDouble / (total.toDouble / xs.length))
+      }
+      Snapshot(
+        jobCount = jobs,
+        maxTaskSkew = maxOr1(stageSkews(0L, _.taskMs)),
+        maxTaskSkew1s = maxOr1(stageSkews(1000L, _.taskMs)),
+        maxTaskSkew1sCpu = maxOr1(stageSkews(1000L, _.taskCpuMs)),
+        maxByteSkew = maxOr1(ss.flatMap(s => byteSkew(s.taskWriteB) ++ byteSkew(s.taskReadB))),
+        codegenCompiles = compiles - compilesAtReset,
+        stageRows = stages.toSeq.sortBy(_._1).map { case (id, s) =>
+          StageRow(id, s.taskMs.length, s.taskWriteB.sum, s.taskReadB.sum, s.spillBytes,
+            s.peakExecMem, s.taskMs.max, median(s.taskMs), s.taskCpuMs.max, median(s.taskCpuMs),
+            s.taskGcMs(s.taskMs.indexOf(s.taskMs.max)), s.taskReadB.max, s.taskWriteB.max)
+        })
+    }
+  }
+}
+
+object StressMetrics {
+
+  /** Stages with fewer tasks have no meaningful max/median or max/mean. */
+  private val MinTasksForSkew = 8
+
+  /** One stage's task metrics, one entry per task in each buffer. It
+    * is made for the stage's first task, so no buffer is empty. */
+  private final class StageAgg {
+    var spillBytes = 0L
+    var peakExecMem = 0L
+    val taskMs, taskCpuMs, taskGcMs, taskWriteB, taskReadB = mutable.ArrayBuffer.empty[Long]
+  }
+
+  /** One stage's drill-down row — what the aggregate snapshot can't
+    * give when a scenario's spill or skew needs ATTRIBUTING to a stage
+    * before it can be fixed (round 15: kneser_ney's 11.7 GB "probe join
+    * spill" was actually partial-aggregate fallback). Max CPU ≈ median
+    * CPU with max wall ≫ median wall is a stall (GC/I/O), not uneven
+    * work; `gcOfMaxMs` is the GC of the max-WALL task. */
+  final case class StageRow(
+      stageId: Int, tasks: Int,
+      shuffleWriteBytes: Long, shuffleReadBytes: Long, spillBytes: Long, peakExecMem: Long,
+      maxTaskMs: Long, medianTaskMs: Long, maxCpuMs: Long, medianCpuMs: Long,
+      gcOfMaxMs: Long, maxTaskReadBytes: Long, maxTaskWriteBytes: Long) {
+    def json: String =
+      s"""{"stage":$stageId,"tasks":$tasks,""" +
+        s""""shuffle_write_bytes":$shuffleWriteBytes,"shuffle_read_bytes":$shuffleReadBytes,""" +
+        s""""spill_bytes":$spillBytes,"peak_exec_mem":$peakExecMem,""" +
+        s""""max_task_ms":$maxTaskMs,"median_task_ms":$medianTaskMs,""" +
+        s""""max_cpu_ms":$maxCpuMs,"median_cpu_ms":$medianCpuMs,"gc_of_max_ms":$gcOfMaxMs,""" +
+        s""""max_task_read_bytes":$maxTaskReadBytes,"max_task_write_bytes":$maxTaskWriteBytes}"""
+  }
+
+  /** Aggregate view over all jobs and stages seen since the last reset. */
   final case class Snapshot(
-      stageCount: Int, taskCount: Int,
-      shuffleWriteBytes: Long, shuffleReadBytes: Long,
-      peakStageShuffleWriteBytes: Long, spillBytes: Long,
-      peakTaskExecMem: Long,
-      /** max over stages (with >= minTasksForSkew tasks) of
+      jobCount: Int,
+      /** max over stages (with >= [[MinTasksForSkew]] tasks) of
         * max-task-ms / median-task-ms — the skew measurement. */
       maxTaskSkew: Double,
       /** [[maxTaskSkew]] restricted to stages whose MEDIAN task runs
@@ -83,96 +164,27 @@ final class StressMetrics extends SparkListener {
         * the column that settles the round-16 "2.2–2.9 filtered skew,
         * byte skew ~1" attribution file. */
       maxTaskSkew1sCpu: Double,
+      /** Bytes-based skew: max over exchange stages with >=
+        * [[MinTasksForSkew]] tasks and >= 64 KiB of max-task-bytes /
+        * mean-task-bytes, taking the worse of the shuffle-write and
+        * shuffle-read sides. Bytes, not durations — task wall times on
+        * a small fixture are scheduling noise, while the per-task byte
+        * distribution IS the partitioning the 100 TB claim is about.
+        * Tiny exchanges skew arbitrarily and harm nothing. */
+      maxByteSkew: Double,
       /** Codegen compiles (cache misses) since the last reset. Spark's
         * generated-class cache holds 100 entries; a working set that
         * outgrows it recompiles on every run, which shows here as a
         * count that no longer drops on a second, warm run. */
-      codegenCompiles: Long)
-
-  def snapshot(minTasksForSkew: Int = 8): Snapshot = synchronized {
-    val ss = stages.values.toSeq
-    def stageSkews(minMedianMs: Long,
-        sel: StageAgg => mutable.ArrayBuffer[Long]) = ss
-      .filter(s => sel(s).length >= minTasksForSkew)
-      .flatMap { s =>
-        val sorted = sel(s).sorted
-        val med = math.max(1L, sorted(sorted.length / 2))
-        if (med >= minMedianMs) Some(sorted.last.toDouble / med) else None
-      }
-    val skews = stageSkews(0L, _.taskMs)
-    val skews1s = stageSkews(1000L, _.taskMs)
-    val skews1sCpu = stageSkews(1000L, _.taskCpuMs)
-    Snapshot(
-      stageCount = ss.length,
-      taskCount = ss.map(_.tasks).sum,
-      shuffleWriteBytes = ss.map(_.shuffleWriteBytes).sum,
-      shuffleReadBytes = ss.map(_.shuffleReadBytes).sum,
-      peakStageShuffleWriteBytes =
-        if (ss.isEmpty) 0L else ss.map(_.shuffleWriteBytes).max,
-      spillBytes = ss.map(_.spillBytes).sum,
-      peakTaskExecMem = if (ss.isEmpty) 0L else ss.map(_.peakExecMem).max,
-      maxTaskSkew = if (skews.isEmpty) 1.0 else skews.max,
-      maxTaskSkew1s = if (skews1s.isEmpty) 1.0 else skews1s.max,
-      maxTaskSkew1sCpu =
-        if (skews1sCpu.isEmpty) 1.0 else skews1sCpu.max,
-      codegenCompiles = compiles - compilesAtReset)
+      codegenCompiles: Long,
+      /** Per-stage rows in stage-id order. */
+      stageRows: Seq[StageRow]) {
+    def stageCount: Int = stageRows.length
+    def taskCount: Int = stageRows.map(_.tasks).sum
+    def shuffleWriteBytes: Long = stageRows.map(_.shuffleWriteBytes).sum
+    def shuffleReadBytes: Long = stageRows.map(_.shuffleReadBytes).sum
+    def peakStageShuffleWriteBytes: Long = stageRows.map(_.shuffleWriteBytes).maxOption.getOrElse(0L)
+    def spillBytes: Long = stageRows.map(_.spillBytes).sum
+    def peakTaskExecMem: Long = stageRows.map(_.peakExecMem).maxOption.getOrElse(0L)
   }
-
-  /** Per-stage diagnostic rows (stageId, tasks, writeB, readB, spillB,
-    * maxTaskMs, medianTaskMs) — the drill-down the aggregate snapshot
-    * can't give when a scenario's spill or skew needs ATTRIBUTING to a
-    * stage before it can be fixed (round 15: kneser_ney's 11.7 GB
-    * "probe join spill" was actually partial-aggregate fallback). */
-  def perStage: Seq[(Int, Int, Long, Long, Long, Long, Long, Long, Long)] =
-    synchronized {
-      stages.toSeq.map { case (id, s) =>
-        val sorted = s.taskMs.sorted
-        val med = if (sorted.isEmpty) 0L else sorted(sorted.length / 2)
-        val mx = if (sorted.isEmpty) 0L else sorted.last
-        val mxr = if (s.taskReadB.isEmpty) 0L else s.taskReadB.max
-        val mxw = if (s.taskWriteB.isEmpty) 0L else s.taskWriteB.max
-        (id, s.tasks, s.shuffleWriteBytes, s.shuffleReadBytes,
-          s.spillBytes, mx, med, mxr, mxw)
-      }
-    }
-
-  /** CPU/GC drill-down companion to [[perStage]]: (stageId, medWallMs,
-    * maxWallMs, medCpuMs, maxCpuMs, gcMsOfMaxWallTask) — the row that
-    * attributes a wall straggler: max CPU ≈ median CPU with max wall ≫
-    * median wall is a stall (GC/I/O), not uneven work. */
-  def perStageCpu: Seq[(Int, Long, Long, Long, Long, Long)] =
-    synchronized {
-      stages.toSeq.map { case (id, s) =>
-        val w = s.taskMs.sorted
-        val c = s.taskCpuMs.sorted
-        val medW = if (w.isEmpty) 0L else w(w.length / 2)
-        val maxW = if (w.isEmpty) 0L else w.last
-        val medC = if (c.isEmpty) 0L else c(c.length / 2)
-        val maxC = if (c.isEmpty) 0L else c.last
-        // GC of the max-WALL task (not the max GC overall)
-        val gcOfMax = if (s.taskMs.isEmpty) 0L else
-          s.taskGcMs(s.taskMs.indexOf(s.taskMs.max))
-        (id, medW, maxW, medC, maxC, gcOfMax)
-      }
-    }
-
-  /** Bytes-based skew: max over qualifying exchange stages of
-    * max-task-bytes / mean-task-bytes, taking the worse of the
-    * shuffle-write and shuffle-read sides. Bytes, not durations —
-    * task wall times on a small fixture are scheduling noise, while
-    * the per-task byte distribution IS the partitioning the 100 TB
-    * claim is about. Stages below `minBytes` total or `minTasks`
-    * tasks are ignored (tiny exchanges skew arbitrarily and harm
-    * nothing). */
-  def maxByteSkew(minTasks: Int = 8, minBytes: Long = 64 * 1024): Double =
-    synchronized {
-      def ratio(xs: mutable.ArrayBuffer[Long]): Option[Double] = {
-        val total = xs.sum
-        if (xs.length < minTasks || total < minBytes) None
-        else Some(xs.max.toDouble / (total.toDouble / xs.length))
-      }
-      val rs = stages.values.toSeq.flatMap(s =>
-        ratio(s.taskWriteB).toSeq ++ ratio(s.taskReadB).toSeq)
-      if (rs.isEmpty) 1.0 else rs.max
-    }
 }

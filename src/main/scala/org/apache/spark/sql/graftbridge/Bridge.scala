@@ -1,14 +1,19 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal bridge into `private[sql]` Spark internals: Column ↔
-  * catalyst Expression conversion for our custom expressions. Lives
-  * under the org.apache.spark.sql package solely for access; no Spark
-  * internals are modified. */
+/** Minimal bridge into `private[sql]` and `private[spark]` Spark
+  * internals: Column ↔ catalyst Expression conversion for our custom
+  * expressions, and the listener bus. Lives under the
+  * org.apache.spark.sql package solely for access; no Spark internals
+  * are modified. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Block until every listener event posted so far has been delivered. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.tools.StressMetrics
-import org.apache.spark.sql.functions.sum
+import org.apache.spark.sql.functions.{col, sum}
 
 /** Harness check for [[Stress]]: every scenario builds and completes
   * at ~1/2000 scale with the listener attached, and the metrics it
@@ -13,20 +13,13 @@ import org.apache.spark.sql.functions.sum
 class StressSpec extends SparkSpec {
 
   test("all stress scenarios complete at spec scale with coherent metrics") {
-    val listener = new StressMetrics
-    spark.sparkContext.addSparkListener(listener)
+    val listener = new StressMetrics().attach(spark.sparkContext)
     try {
       Stress.scenarios(0.0005).foreach { sc =>
         val (action, inputRows) = sc.build(spark)
         listener.reset()
         assert(inputRows > 0, sc.name)
         action()
-        var last = -1; var stable = 0
-        while (stable < 3) {
-          Thread.sleep(100)
-          val now = listener.snapshot().taskCount
-          if (now == last) stable += 1 else { stable = 0; last = now }
-        }
         val m = listener.snapshot()
         assert(m.taskCount > 0, sc.name)
         assert(m.maxTaskSkew >= 1.0, sc.name)
@@ -48,7 +41,22 @@ class StressSpec extends SparkSpec {
         else if (sc.name != "proximity_join")
           assert(m.shuffleWriteBytes > 0, s"${sc.name}: no shuffle observed")
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally listener.close()
+  }
+
+  test("the window holds each action's events: 8 tasks and 1 job per action, 0 jobs for a lazy plan") {
+    val m = new StressMetrics().attach(spark.sparkContext)
+    try {
+      (1 to 20).foreach { i =>
+        m.reset()
+        spark.range(0, 1000, 1, 8).foreach(_ => ())
+        val s = m.snapshot()
+        assert((s.taskCount, s.jobCount) == ((8, 1)), s"action $i")
+      }
+      m.reset()
+      spark.range(0, 1000, 1, 8).groupBy((col("id") % 7).as("k")).agg(sum("id"))
+      assert(m.snapshot().jobCount == 0)
+    } finally m.close()
   }
 
   test("codegen_compiles counts cache misses: a new plan compiles, its rerun does not") {

@@ -81,10 +81,11 @@ class JobsSpec extends SparkSpec {
     assert(approx(out.select("tmax").as[Double].head(), 285.5 - 273.15))
   }
 
-  test("genmap round-trip: --genmap persists the NN mapping; a rerun consumes it") {
-    val dir = Staging.scratchDir("graft-genmap").toString
+  /** Stages a gridMET run where feature 1 is covered by weights and
+    * feature 2 is NOT (missing, NN-filled from 1); returns the fill
+    * run's arguments, with output under `dir`/out. */
+  private def genmapRun(dir: String): Seq[String] = {
     val t1 = Timestamp.valueOf("2021-01-01 00:00:00")
-    // feature 1 covered by weights, feature 2 NOT → missing, NN-filled from 1
     (for { i <- 0 to 1; j <- 0 to 1 } yield
       (t1, j, i, 40.0 + j, -100.0 + i, 285.0 + i, 275.0 + i, 1.0, 80.0, 40.0, 3.0))
       .toDF("time", "j", "i", "lat", "lon", "tmmx", "tmmn", "pr", "rmax", "rmin", "vs")
@@ -95,11 +96,16 @@ class JobsSpec extends SparkSpec {
       .write.parquet(s"$dir/feats")
     Files.writeString(java.nio.file.Paths.get(dir, "w.csv"),
       "nhru_v1_1,i,j,wght\n1,0,0,0.5\n1,1,0,0.5\n")
-    val base = Seq(
+    Seq(
       "--start-date", "2021-01-01", "--end-date", "2021-01-01",
       "--grid-path", s"$dir/grid", "--target-file", s"$dir/feats",
       "--weights-file", s"$dir/w.csv", "--fid", "nhru_v1_1",
       "--output-path", s"$dir/out", "--fill-missing")
+  }
+
+  test("genmap round-trip: --genmap persists the NN mapping; a rerun consumes it") {
+    val dir = Staging.scratchDir("graft-genmap").toString
+    val base = genmapRun(dir)
     // run 1: generate + persist the mapping
     val p1 = Jobs.runGridmet(spark, Jobs.parseArgs(base :+ "--genmap"))
     val csv = spark.read.option("header", "true")
@@ -118,10 +124,26 @@ class JobsSpec extends SparkSpec {
     assert(byF(2L) == byF(1L))
   }
 
+  test("--mapping-file: a repeated miss_fid, an unparsable field or an unknown fid fails naming the file and the fid") {
+    Seq(
+      // the mapping's left join would duplicate feature 2's rows
+      "2,1,0.41\n2,1,0.41" -> "miss_fid 2 appears 2 times",
+      // the permissive CSV reader reads "one" as null: 2 would stay unfilled
+      "2,one,0.41" -> "(2, null, 0.41)",
+      "2,9,0.41" -> "fid 9 names no feature").foreach { case (rows, why) =>
+      val dir = Staging.scratchDir("graft-bad-mapping").toString
+      val base = genmapRun(dir)
+      Files.createDirectories(java.nio.file.Paths.get(dir, "out"))
+      Files.writeString(java.nio.file.Paths.get(dir, "out", "m.csv"),
+        s"miss_fid,fill_fid,distance\n$rows\n")
+      val e = intercept[IllegalArgumentException](
+        Jobs.runGridmet(spark, Jobs.parseArgs(base ++ Seq("--mapping-file", "m.csv"))))
+      assert(e.getMessage.contains(s"$dir/out/m.csv") && e.getMessage.contains(why), e.getMessage)
+    }
+  }
+
   test("gridmet --fill-missing --genmap: its generated classes fit the codegen cache; a warm rerun schedules within its budget") {
-    import org.apache.spark.metrics.source.CodegenMetrics
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = Staging.scratchDir("graft-genmap-budget").toString
     // 4×3 cells × 3 days; cell (3, 2) is null on every day (feature 6,
     // whose only cell it is, masks to all-null) and feature 7 has no
@@ -147,20 +169,6 @@ class JobsSpec extends SparkSpec {
       "--grid-path", s"$dir/grid", "--target-file", s"$dir/feats",
       "--weights-file", s"$dir/w.csv", "--fid", "nhru_v1_1",
       "--output-path", s"$dir/out$n", "--partial", "--fill-missing", "--genmap")))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def settled(): Int = { // listener events arrive asynchronously
-      var last = -1; var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val now = jobs.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      last
-    }
-    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // Spark's codegen cache: 100 entries, keyed by (class loader, source),
     // so in local mode a stage's class has a driver and an executor entry
     val codegenCache = {
@@ -174,19 +182,19 @@ class JobsSpec extends SparkSpec {
     // each of its classes once. How many of them a warm rerun recompiles
     // is not asserted: that depends on how the JVM's class-loader
     // identity hashes spread the keys over the cache's segments
-    onCache("invalidateAll")
-    val c0 = compiles
-    run(1)
-    val workingSet = compiles - c0
-    val resident = onCache("size")
-    spark.sparkContext.addSparkListener(listener)
+    val window = new graft.tools.StressMetrics().attach(spark.sparkContext)
     val path = try {
-      val c1 = compiles; val j0 = settled()
+      onCache("invalidateAll")
+      window.reset()
+      run(1)
+      val workingSet = window.snapshot().codegenCompiles
+      val resident = onCache("size")
+      window.reset()
       val p = run(2)
-      val j1 = settled()
-      val (rerunJobs, rerunCompiles) = (j1 - j0, compiles - c1)
+      val rerun = window.snapshot()
+      val rerunJobs = rerun.jobCount
       info(s"working set $workingSet classes ($resident resident); warm rerun: " +
-        s"$rerunJobs jobs, $rerunCompiles compiles")
+        s"$rerunJobs jobs, ${rerun.codegenCompiles} compiles")
       // 41 classes and 15 jobs here; 60 and 22 with the dense series
       // persisted and filled from a donor and a target side, and 125
       // compiles from empty (100 resident) and 49 jobs where every action
@@ -194,7 +202,7 @@ class JobsSpec extends SparkSpec {
       assert(workingSet <= 50, s"generated classes in one run: $workingSet")
       assert(rerunJobs <= 18, s"jobs on the warm rerun: $rerunJobs")
       p
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally window.close()
     // pinned outputs: the contract's rows (count and an order-free
     // hash) and the mapping CSV's lines
     val contract = spark.read.parquet(path)

@@ -82,21 +82,14 @@ class RelevanceSpec extends SparkSpec {
     // N/avgdl used to be collected at call time (head()) — the same
     // construction-eagerness the CMS guard was cured of; they now ride
     // as a broadcast 1-row stats DataFrame inside the one execution
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        { jobs.incrementAndGet(); () }
-    }
     val docs = Seq((1L, "a b"), (2L, "b c")).toDF("doc_id", "text")
-    spark.sparkContext.addSparkListener(l)
+    val m = new graft.tools.StressMetrics().attach(spark.sparkContext)
     try {
       val plan = Relevance.bm25TopTerms(docs, "doc_id", "text")
       val plan2 = Relevance.bm25QueryRank(docs, "doc_id", "text", Seq("b"))
-      Thread.sleep(1000) // listener bus is async; let any job surface
-      assert(jobs.get() === 0, "construction must not run jobs")
+      assert(m.snapshot().jobCount === 0, "construction must not run jobs")
       assert(plan.count() >= 1L && plan2.count() >= 1L)
-    } finally spark.sparkContext.removeSparkListener(l)
+    } finally m.close()
   }
 
   test("no unpartitioned window anywhere in the fused retrieval plan") {

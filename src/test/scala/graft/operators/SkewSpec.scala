@@ -22,25 +22,17 @@ class SkewSpec extends SparkSpec {
     * window so the measurement sees the raw partitioning, not four
     * coarse buckets merged into one. */
   private def measureSkew(action: => Unit): Double = {
-    val listener = new StressMetrics
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val prevCoalesce =
       spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.sparkContext.addSparkListener(listener)
+    val listener = new StressMetrics().attach(spark.sparkContext)
     try {
       action
-      // listener delivery is async; settle before reading
-      var last = -1; var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val now = listener.snapshot().taskCount
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      listener.maxByteSkew(minTasks = 8, minBytes = 64 * 1024)
+      listener.snapshot().maxByteSkew
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
+      listener.close()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
     }

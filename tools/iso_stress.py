@@ -4,11 +4,14 @@
 Runs each named scenario ALONE in its own JVM, gating every launch on
 the 1-min loadavg dropping under a threshold so per-row loadavg
 columns record a genuinely quiet box — the distinct_n discipline from
-round 16, mechanized. Rows append into one JSON array artifact.
+round 16, mechanized. Rows append into one JSON array artifact; each
+row carries its job count and per-stage drill-down ("jobs",
+"stage_rows"), so a spilling or skewed row can be attributed to a stage
+from the artifact alone.
 
 Usage: python3 tools/iso_stress.py out.json scenario1,scenario2,...
 Env: ISO_LOAD_MAX (default 1.5), ISO_WAIT_SEC (max settle wait, 600),
-     SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_STRESS_STAGES passthru.
+     SPARK_GRAFT_CPUS (default 32).
 """
 import json
 import os
@@ -56,8 +59,7 @@ for name in names:
         print("\n".join(r.stdout.decode(errors="replace")
                         .splitlines()[-30:]))
         sys.exit(1)
-    # full stdout (incl. any STRESS_STAGES drill-down tables) kept per
-    # scenario; side-prints surfaced inline
+    # full stdout kept per scenario; side-prints surfaced inline
     with open(f"/tmp/iso_{name}.log", "wb") as lf:
         lf.write(r.stdout)
     for ln in r.stdout.decode(errors="replace").splitlines():
