@@ -28,6 +28,9 @@ import graft.sinks.Sinks
   *     [--file-prefix p_] [--partial] [--fill-missing]
   *     [--weight-join auto|broadcast|sort-merge|tiled:WxH]
   *   graft.cli.Jobs cfsv2-etl ... --method 1|2 --model-param-file params
+  *   graft.cli.Jobs stage-netcdf --nc-file day.nc --output-path g.parquet
+  *     [--catalog-path cat.parquet --data-id gridmet
+  *       | --t-name day --x-name lon --y-name lat]
   *   graft.cli.Jobs daily-etl --grid-stream-path drop/ --weights-file
   *     w.csv --fid nhru_v1_1 --output-path out/ --checkpoint-path ckpt/
   *     [--published-through yyyy-mm-dd] [--vars a,b,c] [--partial]
@@ -65,6 +68,9 @@ import graft.sinks.Sinks
   *     [--line-rules true] [--paragraph-dedup true]
   *     [--classifier weights.txt [--min-score 0.5]]
   *     [--keep-all true] [--signals-out sheet/]
+  *
+  * Each subcommand takes only the keys its job reads ([[commands]]);
+  * `main` rejects any other before it starts Spark.
   *
   * Deployment confs (100× clusters; see SCALE.md's deployment-conf
   * table): the tiled weight-join strategy — requested via
@@ -231,7 +237,9 @@ object Jobs {
   /** S1 staging: gridded NetCDF file → long-form staged parquet, with
     * the coordinate names taken from the catalog record when given
     * (`--catalog-path` + `--data-id`) or from explicit
-    * `--t-name/--x-name/--y-name` args (gridMET defaults otherwise). */
+    * `--t-name/--x-name/--y-name` args (gridMET defaults otherwise).
+    * The `netcdf-classic` scan reads the file on executors, split by
+    * time range; nothing is materialized on the driver. */
   def runStageNetcdf(spark: SparkSession, a: Args): String = {
     val (t, x, y) = a.get("catalog-path") match {
       case Some(cat) =>
@@ -239,8 +247,9 @@ object Jobs {
       case None => (a.get("t-name").getOrElse("day"),
         a.get("x-name").getOrElse("lon"), a.get("y-name").getOrElse("lat"))
     }
-    val grid = Sources.netcdfGrid(spark, a("nc-file"),
-      tName = t, yName = y, xName = x)
+    val grid = spark.read.format("netcdf-classic")
+      .option("tName", t).option("yName", y).option("xName", x)
+      .load(a("nc-file"))
     val path = a("output-path")
     grid.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
     path
@@ -947,33 +956,66 @@ object Jobs {
     out
   }
 
+  /** One subcommand: its job and the keys, values and flags alike, that
+    * the job reads. */
+  final case class Command(run: (SparkSession, Args) => String, keys: Set[String])
+
+  private def keys(names: String): Set[String] = names.split("\\s+").toSet
+
+  val commands: Map[String, Command] = Map(
+    "gridmet-etl" -> Command(runGridmet, keys("start-date end-date grid-path " +
+      "target-file weights-file fid output-path file-prefix partial fill-missing " +
+      "genmap mapping-file weight-join")),
+    "cfsv2-etl" -> Command(runCfsv2, keys("grid-path target-file weights-file fid " +
+      "model-param-file method output-path file-prefix")),
+    "stage-netcdf" -> Command(runStageNetcdf, keys("nc-file output-path " +
+      "catalog-path data-id t-name x-name y-name")),
+    "daily-etl" -> Command(runDailyEtl, keys("grid-stream-path weights-file fid " +
+      "output-path checkpoint-path published-through vars partial weight-join")),
+    "dedup-admit" -> Command(runDedupAdmit, keys("input-path output-path " +
+      "state-path id-col text-col near threshold")),
+    "select-corpus" -> Command(runSelectCorpus, keys("input-path output-path " +
+      "id-col text-col dsir-target-col dsir-k dsir-dim budget weights-file " +
+      "source-col splits clusters")),
+    "curate" -> Command(runCurate, keys("input-path output-path id-col text-col " +
+      "blocklist url-col html normalize line-rules paragraph-dedup paragraph-sep " +
+      "keep-all classifier min-score weights-file source-col signals-out")),
+    "train-bpe" -> Command(runTrainBpe, keys("input-path output-path text-col n-merges")),
+    "train-classifier" -> Command(runTrainClassifier, keys("input-path output-path " +
+      "id-col text-col label-col dim iters")),
+    "train-unigram" -> Command(runTrainUnigram, keys("input-path output-path " +
+      "text-col max-piece-len min-count max-vocab iters")),
+    "pack-tokens" -> Command(runPackTokens, keys("input-path output-path id-col " +
+      "text-col fim-pct fim-seed bpe-vocab bpe-merges context-len n-shards " +
+      "span-corrupt-out span-seed span-block span-len span-one-in binpack-out " +
+      "binpack-seed shuffle-seed mix source-col epochs anneal-quality boundaries-out")),
+    "pack-sft" -> Command(runPackSft, keys("input-path output-path id-col " +
+      "prompt-col response-col context-len n-shards")),
+    "pack-dpo" -> Command(runPackDpo, keys("input-path output-path id-col " +
+      "prompt-col chosen-col rejected-col context-len n-shards")),
+    "mix-weights" -> Command(runMixWeights, keys("input-path output-path id-col " +
+      "text-col source-col rounds eta smoothing")))
+
+  /** The subcommand `name`, after checking that `a` holds only keys it
+    * reads: a misspelled key would otherwise be ignored, and the job
+    * would run on that key's default. */
+  def command(name: String, a: Args): Command = {
+    val c = commands.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown subcommand: $name (want ${commands.keys.toSeq.sorted.mkString(" | ")})"))
+    val unknown = (a.m.keySet ++ a.flags) -- c.keys
+    require(unknown.isEmpty,
+      s"$name does not take ${unknown.toSeq.sorted.map("--" + _).mkString(", ")}; " +
+        s"it takes ${c.keys.toSeq.sorted.map("--" + _).mkString(" ")}")
+    c
+  }
+
   def main(argv: Array[String]): Unit = {
     require(argv.nonEmpty,
-      "subcommand required: gridmet-etl | cfsv2-etl | stage-netcdf | " +
-        "daily-etl | dedup-admit | select-corpus | curate | train-bpe | " +
-        "train-classifier | train-unigram | pack-tokens | pack-sft | " +
-        "pack-dpo | mix-weights")
+      s"subcommand required: ${commands.keys.toSeq.sorted.mkString(" | ")}")
     val a = parseArgs(argv.tail.toSeq)
+    val c = command(argv.head, a)
     val spark = session()
-    try {
-      val path = argv.head match {
-        case "gridmet-etl" => runGridmet(spark, a)
-        case "cfsv2-etl" => runCfsv2(spark, a)
-        case "stage-netcdf" => runStageNetcdf(spark, a)
-        case "daily-etl" => runDailyEtl(spark, a)
-        case "dedup-admit" => runDedupAdmit(spark, a)
-        case "select-corpus" => runSelectCorpus(spark, a)
-        case "curate" => runCurate(spark, a)
-        case "train-bpe" => runTrainBpe(spark, a)
-        case "train-classifier" => runTrainClassifier(spark, a)
-        case "train-unigram" => runTrainUnigram(spark, a)
-        case "pack-tokens" => runPackTokens(spark, a)
-        case "pack-sft" => runPackSft(spark, a)
-        case "pack-dpo" => runPackDpo(spark, a)
-        case "mix-weights" => runMixWeights(spark, a)
-        case other => sys.error(s"unknown subcommand: $other")
-      }
-      println(s"WROTE $path")
-    } finally spark.stop()
+    try println(s"WROTE ${c.run(spark, a)}")
+    finally spark.stop()
   }
 }

@@ -1,13 +1,14 @@
 package graft.sinks
 
 import java.io.{ByteArrayOutputStream, DataOutputStream}
-import java.nio.file.{Files, Paths}
 import java.nio.{ByteBuffer, ByteOrder}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 
-/** Minimal pure-JVM NetCDF classic writer + reader, CDF-5 variant
-  * (magic `CDF\x05`) — the classic-model format extension that adds
-  * NC_INT64, which the reference's output contract needs for its
-  * `int64 time(time)` / `int64 nhru(nhru)` coordinates
+/** Minimal pure-JVM NetCDF classic writer, header parser and element
+  * decoder, CDF-5 variant (magic `CDF\x05`) — the classic-model format
+  * extension that adds NC_INT64, which the reference's output contract
+  * needs for its `int64 time(time)` / `int64 nhru(nhru)` coordinates
   * (`gm_header.md:63-68`, encoding control `helper.py:103-121`).
   *
   * Format follows the published classic/CDF-5 file-format
@@ -32,7 +33,10 @@ import java.nio.{ByteBuffer, ByteOrder}
   * post-step over output-sized data; the 100 TB data plane stays in
   * parquet ([[Sinks.writeContract]]), and larger-than-memory outputs
   * chunk by time range into one file per chunk (the reference's own
-  * per-day/per-ensemble file layout, K4).
+  * per-day/per-ensemble file layout, K4). Files are read back through
+  * the `netcdf-classic` scan ([[graft.sources.netcdf.NetcdfDataSource]]),
+  * which parses the header here and decodes variable slices with
+  * [[Input]].
   */
 object NetcdfClassic {
 
@@ -57,26 +61,23 @@ object NetcdfClassic {
   }
   final case class Att(name: String, value: AttVal)
 
-  sealed trait VarData { def ncType: Int; def nelems: Long }
-  final case class DoubleData(v: Array[Double]) extends VarData {
-    def ncType = NcDouble; def nelems = v.length.toLong
-  }
-  final case class LongData(v: Array[Long]) extends VarData {
-    def ncType = NcInt64; def nelems = v.length.toLong
-  }
-
-  /** dimIds index into the file's dim list; data length must equal the
-    * product of the referenced dim lengths (checked at write). */
-  final case class Var(name: String, dimIds: Seq[Int], atts: Seq[Att], data: VarData)
-
-  final case class Nc(dims: Seq[Dim], gatts: Seq[Att], vars: Seq[Var])
-
-  private def typeSize(t: Int): Int = t match {
+  def elemSize(t: Int): Int = t match {
     case NcChar => 1
-    case NcInt => 4
-    case NcDouble => 8
-    case NcInt64 => 8
-    case other => throw new IllegalArgumentException(s"unsupported nc_type $other")
+    case NcInt | NcFloat => 4
+    case NcDouble | NcInt64 => 8
+    case other => throw new IllegalArgumentException(s"unsupported nc_type ${typeName(other)}")
+  }
+
+  /** The CDL name of an nc_type code, for error messages. */
+  def typeName(t: Int): String = t match {
+    case NcByte => "NC_BYTE"
+    case NcChar => "NC_CHAR"
+    case NcShort => "NC_SHORT"
+    case NcInt => "NC_INT"
+    case NcFloat => "NC_FLOAT"
+    case NcDouble => "NC_DOUBLE"
+    case NcInt64 => "NC_INT64"
+    case other => s"nc_type $other"
   }
 
   private def pad4(n: Long): Long = (n + 3) & ~3L
@@ -95,9 +96,7 @@ object NetcdfClassic {
     * holds ONE time-slice per variable in memory instead of the dense
     * time×feature matrix ([[Sinks.writeNetcdf]] does exactly that).
     * Unwritten gaps read as zeros (`setLength` pre-sizes the file);
-    * writers that need fill sentinels write them in their slabs. Byte
-    * output is identical to the all-at-once [[write]], which now
-    * delegates here (golden-tested in SinksSpec). */
+    * writers that need fill sentinels write them in their slabs. */
   final class StreamingWriter(path: String, decl: NcDecl) extends AutoCloseable {
     private val nelems: IndexedSeq[Long] = decl.vars.map(v =>
       v.dimIds.map(decl.dims(_).length).product).toIndexedSeq
@@ -108,13 +107,13 @@ object NetcdfClassic {
       var off = serializeHeader(decl, nelems, decl.vars.map(_ => 0L)).length.toLong
       decl.vars.zipWithIndex.map { case (v, i) =>
         val b = off
-        off += pad4(nelems(i) * typeSize(v.ncType))
+        off += pad4(nelems(i) * elemSize(v.ncType))
         b
       }.toIndexedSeq
     }
     private val totalLen: Long =
       if (decl.vars.isEmpty) serializeHeader(decl, nelems, Nil).length.toLong
-      else begins.last + pad4(nelems.last * typeSize(decl.vars.last.ncType))
+      else begins.last + pad4(nelems.last * elemSize(decl.vars.last.ncType))
     private val idx: Map[String, Int] = decl.vars.map(_.name).zipWithIndex.toMap
     private val raf = new java.io.RandomAccessFile(path, "rw")
     raf.setLength(0L) // truncate any previous file
@@ -131,7 +130,7 @@ object NetcdfClassic {
         s"$name: declared nc_type ${v.ncType}, slab is $ncType")
       require(offsetElems >= 0 && offsetElems + n <= nelems(i),
         s"$name: slab [$offsetElems, ${offsetElems + n}) outside 0..${nelems(i)}")
-      begins(i) + offsetElems * typeSize(ncType)
+      begins(i) + offsetElems * elemSize(ncType)
     }
     def putDoubles(name: String, offsetElems: Long, a: Array[Double]): Unit = {
       val pos = target(name, offsetElems, a.length, NcDouble)
@@ -146,23 +145,6 @@ object NetcdfClassic {
       raf.seek(pos); raf.write(buf.array()); slabsWritten += 1
     }
     def close(): Unit = raf.close()
-  }
-
-  def write(path: String, nc: Nc): Unit = {
-    nc.vars.foreach { v =>
-      val expect = v.dimIds.map(i => nc.dims(i).length).product
-      require(v.data.nelems == expect,
-        s"${v.name}: data has ${v.data.nelems} elems, dims imply $expect")
-    }
-    val decl = NcDecl(nc.dims, nc.gatts,
-      nc.vars.map(v => VarDecl(v.name, v.dimIds, v.atts, v.data.ncType)))
-    val w = new StreamingWriter(path, decl)
-    try nc.vars.foreach { v =>
-      v.data match {
-        case DoubleData(a) => w.putDoubles(v.name, 0L, a)
-        case LongData(a) => w.putLongs(v.name, 0L, a)
-      }
-    } finally w.close()
   }
 
   private def serializeHeader(
@@ -216,7 +198,7 @@ object NetcdfClassic {
         v.dimIds.foreach(i => d.writeLong(i.toLong))
         attList(v.atts)
         d.writeInt(v.ncType)
-        d.writeLong(pad4(ne * typeSize(v.ncType))) // vsize
+        d.writeLong(pad4(ne * elemSize(v.ncType))) // vsize
         d.writeLong(begin)
       }
     }
@@ -231,55 +213,79 @@ object NetcdfClassic {
       ncType: Int, vsize: Long, begin: Long)
   final case class Header(dims: Seq[Dim], gatts: Seq[Att], vars: Seq[VarHeader])
 
-  def elemSize(t: Int): Int = typeSize(t)
-
   /** Header-only parse of all three classic variants — CDF-1
     * (`CDF\x01`, 32-bit sizes/offsets), CDF-2 (`CDF\x02`, 64-bit
     * offsets) and CDF-5 (`CDF\x05`, 64-bit everything + int64 data).
     * No unlimited-dimension (record) support — the engine's contract
     * files are fixed-size.
     *
-    * Reads only the header bytes (64 KiB first, doubling on underflow)
-    * — per-partition readers in the DSv2 scan call this, and loading a
-    * multi-GB data file whole just to parse its header would break the
-    * scan's "only requested byte ranges are touched" contract. */
+    * The file opens through its path's Hadoop FileSystem (a local path,
+    * a `file:` URI or a cluster path), with the active session's Hadoop
+    * configuration when there is one. */
   def readHeader(path: String): Header = {
-    val fileLen = Files.size(Paths.get(path))
+    val conf = org.apache.spark.sql.SparkSession.getActiveSession
+      .map(_.sparkContext.hadoopConfiguration).getOrElse(new Configuration())
+    val in = open(path, conf)
+    try readHeader(in) finally in.close()
+  }
+
+  /** An open NetCDF file and its length: the scan reads its header and
+    * then only the byte ranges it needs, with positioned reads. */
+  final class Input(stream: FSDataInputStream, val length: Long) extends AutoCloseable {
+    def bytes(offset: Long, n: Int): ByteBuffer = {
+      val b = new Array[Byte](n)
+      stream.readFully(offset, b)
+      ByteBuffer.wrap(b)
+    }
+    /** Elements [from, from + n) of `v`, decoded as doubles. */
+    def doubles(v: VarHeader, from: Long, n: Int): Array[Double] = {
+      val w = elemSize(v.ncType)
+      NetcdfClassic.doubles(v.ncType, bytes(v.begin + from * w, n * w), n)
+    }
+    /** The first `n` elements of integer variable `v`. */
+    def longs(v: VarHeader, n: Int): Array[Long] =
+      NetcdfClassic.longs(v.ncType, bytes(v.begin, n * elemSize(v.ncType)), n)
+    def close(): Unit = stream.close()
+  }
+
+  def open(path: String, conf: Configuration): Input = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    new Input(fs.open(p), fs.getFileStatus(p).getLen)
+  }
+
+  /** Reads only the header bytes (64 KiB first, growing on underflow):
+    * loading a multi-GB data file whole just to parse its header would
+    * break the scan's "only requested byte ranges are touched"
+    * contract. */
+  def readHeader(in: Input): Header = {
     var attempt = 64L * 1024
     while (true) {
-      val n = math.min(attempt, fileLen).toInt
-      val bytes = new Array[Byte](n)
-      val raf = new java.io.RandomAccessFile(path, "r")
-      try raf.readFully(bytes) finally raf.close()
-      try return parseHeader(ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN))
+      val buf = in.bytes(0L, math.min(attempt, in.length).toInt)
+      try return parseHeader(buf)
       catch {
-        case _: java.nio.BufferUnderflowException if n < fileLen =>
+        case _: java.nio.BufferUnderflowException if buf.capacity < in.length =>
           attempt *= 8 // header larger than the guess: retry bigger
       }
     }
     sys.error("unreachable")
   }
 
-  /** Full reader: header + all variable data. Covers golden-header
-    * specs, re-ingest of this engine's own outputs, and reference-era
-    * classic files. */
-  def read(path: String): Nc = {
-    val buf = ByteBuffer.wrap(Files.readAllBytes(Paths.get(path)))
-      .order(ByteOrder.BIG_ENDIAN)
-    val h = parseHeader(buf.duplicate().order(ByteOrder.BIG_ENDIAN))
-    val vars = h.vars.map { vh =>
-      val nelems = vh.dimIds.map(h.dims(_).length).product.toInt
-      buf.position(vh.begin.toInt)
-      val data: VarData = vh.ncType match {
-        case NcDouble => DoubleData(Array.fill(nelems)(buf.getDouble()))
-        case NcFloat => DoubleData(Array.fill(nelems)(buf.getFloat().toDouble))
-        case NcInt64 => LongData(Array.fill(nelems)(buf.getLong()))
-        case NcInt => LongData(Array.fill(nelems)(buf.getInt().toLong))
-        case other => throw new IllegalArgumentException(s"var type $other")
-      }
-      Var(vh.name, vh.dimIds, vh.atts, data)
-    }
-    Nc(h.dims, h.gatts, vars)
+  /** The element decoder: the first `n` values of type `t` in the
+    * big-endian `buf`, as doubles. NC_FLOAT widens, and so do the
+    * integer types, for coordinates; any other type fails naming it. */
+  def doubles(t: Int, buf: ByteBuffer, n: Int): Array[Double] = t match {
+    case NcDouble => val a = new Array[Double](n); buf.asDoubleBuffer().get(a); a
+    case NcFloat => val a = new Array[Float](n); buf.asFloatBuffer().get(a); a.map(_.toDouble)
+    case NcInt | NcInt64 => longs(t, buf, n).map(_.toDouble)
+    case other => throw new IllegalArgumentException(s"cannot decode ${typeName(other)} as double")
+  }
+
+  /** The element decoder for integer values: NC_INT widens to long. */
+  def longs(t: Int, buf: ByteBuffer, n: Int): Array[Long] = t match {
+    case NcInt64 => val a = new Array[Long](n); buf.asLongBuffer().get(a); a
+    case NcInt => val a = new Array[Int](n); buf.asIntBuffer().get(a); a.map(_.toLong)
+    case other => throw new IllegalArgumentException(s"cannot decode ${typeName(other)} as long")
   }
 
   private def parseHeader(buf: ByteBuffer): Header = {

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** PACKED-TOKEN binary sink — the terminal artifact of a pretraining
@@ -28,7 +28,9 @@ import org.apache.spark.sql.functions._
   * driver collect, no local-disk assumption); within a partition the
   * rows arrive chunk-sorted (`sortWithinPartitions`), so files are
   * written append-only in one pass. One file per shard, `nShards`
-  * chosen by the caller = the write parallelism dial. */
+  * chosen by the caller = the write parallelism dial. The shards read
+  * back through `spark.read.format("gtok")`
+  * ([[graft.sources.gtok.GtokDataSource]]). */
 object TokenSink {
 
   /** Write `chunks` — (shard int, chunk_id long, token_ids array<int>)
@@ -111,57 +113,5 @@ object TokenSink {
         }
         closeShard()
       }
-  }
-
-  /** Read a packed-token directory back to (shard, chunk_id,
-    * token_ids) — the driver-side AUDIT path and the round-trip proof
-    * (whole-file reads, ≤ 2 GB per shard). The DISTRIBUTED loader is
-    * `spark.read.format("gtok").load(dir)`
-    * ([[graft.sources.gtok.GtokDataSource]]): one executor-side
-    * partition per shard, streaming reads, no size cap. */
-  def readPackedTokens(spark: SparkSession, dir: String): DataFrame = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val shards = fs.listStatus(new Path(dir)).map(_.getPath)
-      .filter(_.getName.matches("shard-\\d+\\.idx")).sortBy(_.getName)
-    val rows = shards.toSeq.flatMap { idxPath =>
-      val shard = idxPath.getName.stripPrefix("shard-")
-        .stripSuffix(".idx").toInt
-      val idxBytes = readAll(fs, idxPath)
-      val ib = ByteBuffer.wrap(idxBytes).order(ByteOrder.LITTLE_ENDIAN)
-      val magic = new Array[Byte](4); ib.get(magic)
-      require(new String(magic, "US-ASCII") == "GTOK",
-        s"bad magic in $idxPath")
-      require(ib.getInt() == 1, s"unsupported version in $idxPath")
-      val bpt = ib.getInt()
-      val n = ib.getInt()
-      val binBytes = readAll(fs, new Path(dir, f"shard-$shard%05d.bin"))
-      val bb = ByteBuffer.wrap(binBytes).order(ByteOrder.LITTLE_ENDIAN)
-      (0 until n).map { _ =>
-        val chunkId = ib.getLong()
-        val len = ib.getInt()
-        val ids = Array.fill(len)(
-          if (bpt == 2) bb.getShort() & 0xffff else bb.getInt())
-        (shard, chunkId, ids.toSeq)
-      }
-    }
-    import spark.implicits._
-    rows.toDF("shard", "chunk_id", "token_ids")
-  }
-
-  private def readAll(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path): Array[Byte] = {
-    val len = fs.getFileStatus(p).getLen
-    // a silent .toInt would wrap past 2 GB and corrupt the read; this
-    // whole-file audit path is bounded by JVM array limits by design
-    require(len <= Int.MaxValue,
-      s"$p is $len bytes — past the 2 GB whole-file read limit of this " +
-        "audit reader; use the distributed shard reader for large shards")
-    val in = fs.open(p)
-    try {
-      val buf = new Array[Byte](len.toInt)
-      in.readFully(0, buf)
-      buf
-    } finally in.close()
   }
 }

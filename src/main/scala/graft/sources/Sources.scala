@@ -1,14 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Source readers (SURVEY.md §2.1). The data plane is Parquet-first:
-  * gridded rasters are staged as long-form parquet (S1 — the
-  * OPeNDAP/NetCDF fetch is a driver-side staging step outside the Spark
-  * data plane by design, SURVEY.md §7.3); the small control tables below
-  * have dedicated readers.
+  * gridded rasters are staged as long-form parquet (S1 — the OPeNDAP
+  * fetch stays outside the Spark data plane by design, SURVEY.md §7.3;
+  * a fetched NetCDF file stages through the `netcdf-classic` scan,
+  * [[graft.sources.netcdf.NetcdfDataSource]]); the small control tables
+  * below have dedicated readers.
   */
 object Sources {
 
@@ -72,11 +73,15 @@ object Sources {
   /** S6 — PRMS parameter-file scan (`helper.py:124-173`): find the
     * `hru_elev` marker line, skip 4 header lines, read one float per
     * line until the `####` terminator. The file is tiny (one value per
-    * HRU) so this parses driver-side and returns (nhru, elev) with
-    * nhru = 1-based position, matching the reference's positional
-    * ordering. */
+    * HRU) so this parses driver-side, with no Spark job, and returns
+    * (nhru, elev) with nhru = 1-based position, matching the
+    * reference's positional ordering. The file opens through its path's
+    * Hadoop FileSystem (a local path, a `file:` URI or a cluster path). */
   def prmsElevations(spark: SparkSession, path: String): DataFrame = {
-    val lines = scala.io.Source.fromFile(path).getLines().toVector
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+      finally in.close()
     val start = lines.indexWhere(_.trim == "hru_elev")
     require(start >= 0, s"no hru_elev section in $path")
     val body = lines.drop(start + 1 + 4) // marker + 4 header lines
@@ -162,123 +167,6 @@ object Sources {
   /** S7 — NN-mapping CSV (`helper.py:79`). */
   def fillMappingCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").schema(FillMappingSchema).csv(path)
-
-  /** S10 (full form) — re-ingest a contract NetCDF file (this engine's
-    * [[graft.sinks.Sinks.writeNetcdf]] output, or any classic-model
-    * CDF-1/2/5 file with the same (time, feature) layout) back into the
-    * long-form series DataFrame: one row per (feature, time), data vars
-    * as columns, `_FillValue` sentinels back to nulls, the int64
-    * days-since time axis decoded to timestamps. The reference re-opens
-    * its own intermediates the same way (`etl.py:476-478`,
-    * `helper.py:33-37`); file contents are output-sized by contract. */
-  def netcdfSeries(
-      spark: SparkSession, path: String,
-      featureDim: String = "nhru"): DataFrame = {
-    import graft.sinks.NetcdfClassic
-    import graft.sinks.NetcdfClassic._
-    val nc = NetcdfClassic.read(path)
-    val byName = nc.vars.map(v => v.name -> v).toMap
-    val dimId = nc.dims.zipWithIndex.map { case (d, i) => d.name -> i }.toMap
-    require(dimId.contains("time") && dimId.contains(featureDim),
-      s"expected dims (time, $featureDim), got ${nc.dims.map(_.name)}")
-    val timeVar = byName("time")
-    val units = timeVar.atts.find(_.name == "units").map {
-      case Att(_, AttText(s)) => s
-      case other => sys.error(s"unexpected time units attr $other")
-    }.getOrElse(sys.error("time var has no units attr"))
-    require(units.startsWith("days since "),
-      s"unsupported time encoding: $units")
-    // decode in UTC explicitly — Timestamp.valueOf(LocalDateTime) would
-    // use the JVM default zone and disagree with the writer (UTC
-    // session tz) and the DSv2 reader on any non-UTC machine
-    val origin = java.time.LocalDate.parse(units.drop("days since ".length).take(10))
-    val days = timeVar.data.asInstanceOf[LongData].v
-    val times = days.map(d => new java.sql.Timestamp(
-      origin.plusDays(d).atStartOfDay(java.time.ZoneOffset.UTC)
-        .toInstant.toEpochMilli))
-    val fids = byName(featureDim).data.asInstanceOf[LongData].v
-    val dataVars = nc.vars.filter(v =>
-      v.dimIds == Seq(dimId("time"), dimId(featureDim)))
-    val rows = for {
-      ti <- times.indices
-      hi <- fids.indices
-    } yield Row.fromSeq(
-      Seq(fids(hi), times(ti)) ++ dataVars.map { v =>
-        val fill = v.atts.collectFirst {
-          case Att("_FillValue", AttDoubles(Seq(f))) => f
-        }
-        val x = v.data.asInstanceOf[DoubleData].v(ti * fids.length + hi)
-        if (x.isNaN || fill.contains(x)) null else x
-      })
-    val schema = StructType(
-      Seq(StructField(featureDim, LongType, nullable = false),
-        StructField("time", TimestampType, nullable = false)) ++
-        dataVars.map(v => StructField(v.name, DoubleType, nullable = true)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq), schema)
-  }
-
-  /** S1 (local full form) — stage a GRIDDED NetCDF classic file (the
-    * reference's actual input shape: dims (T, Y, X), e.g. gridMET's
-    * (day, lat, lon) with 1-D coordinate vars) into the engine's
-    * long-form staged grid `(time, j, i, lat, lon, vars…)`
-    * (FIXTURES.md §1, `Model.gridSchema`). Coordinate names come from
-    * the catalog record (T_name/X_name/Y_name — `etl.py:329-331`,
-    * `etl.py:399-408`); only the remote OPeNDAP fetch itself stays
-    * outside the engine (zero-egress environment). Driver-side
-    * materialization, one file per call — stage big archives one
-    * time-chunk file at a time, exactly the reference's per-day pulls. */
-  def netcdfGrid(
-      spark: SparkSession, path: String,
-      tName: String = "day", yName: String = "lat",
-      xName: String = "lon"): DataFrame = {
-    import graft.sinks.NetcdfClassic
-    import graft.sinks.NetcdfClassic._
-    val nc = NetcdfClassic.read(path)
-    val byName = nc.vars.map(v => v.name -> v).toMap
-    val dimId = nc.dims.zipWithIndex.map { case (d, i) => d.name -> i }.toMap
-    require(Seq(tName, yName, xName).forall(dimId.contains),
-      s"expected dims ($tName, $yName, $xName), got ${nc.dims.map(_.name)}")
-    def coord(name: String): Array[Double] = byName(name).data match {
-      case DoubleData(v) => v
-      case LongData(v) => v.map(_.toDouble)
-    }
-    val lats = coord(yName)
-    val lons = coord(xName)
-    val timeVar = byName(tName)
-    val units = timeVar.atts.collectFirst { case Att("units", AttText(s)) => s }
-      .getOrElse(sys.error(s"$tName var has no units attr"))
-    require(units.startsWith("days since "), s"unsupported time encoding: $units")
-    val origin = java.time.LocalDate.parse(units.drop("days since ".length).take(10))
-    val times = timeVar.data.asInstanceOf[LongData].v.map(d =>
-      new java.sql.Timestamp(
-        origin.plusDays(d).atStartOfDay(java.time.ZoneOffset.UTC)
-          .toInstant.toEpochMilli))
-    val wantDims = Seq(dimId(tName), dimId(yName), dimId(xName))
-    val dataVars = nc.vars.filter(_.dimIds == wantDims)
-    require(dataVars.nonEmpty, s"no ($tName, $yName, $xName) data variables")
-    val rows = for {
-      ti <- times.indices
-      j <- lats.indices
-      i <- lons.indices
-    } yield Row.fromSeq(
-      Seq(times(ti), j, i, lats(j), lons(i)) ++ dataVars.map { v =>
-        val fill = v.atts.collectFirst {
-          case Att("_FillValue", AttDoubles(Seq(f))) => f
-        }
-        val x = v.data.asInstanceOf[DoubleData]
-          .v((ti * lats.length + j) * lons.length + i)
-        if (x.isNaN || fill.contains(x)) null else x
-      })
-    val schema = StructType(
-      Seq(StructField("time", TimestampType, nullable = false),
-        StructField("j", IntegerType, nullable = false),
-        StructField("i", IntegerType, nullable = false),
-        StructField("lat", DoubleType, nullable = false),
-        StructField("lon", DoubleType, nullable = false)) ++
-        dataVars.map(v => StructField(v.name, DoubleType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), schema)
-  }
 
   /** S2 (full form) — GeoParquet feature ingestion: derive the engine's
     * `(fid, lat, lon, minx, miny, maxx, maxy)` feature table from a raw

@@ -22,13 +22,12 @@ import org.apache.spark.util.SerializableConfiguration
   *
   *   spark.read.format("gtok").load("/path/to/shards")
   *
-  * Schema: (shard int, chunk_id long, token_ids array<int>) — identical
-  * to `TokenSink.readPackedTokens`, but executed by Spark's scan
-  * machinery: ONE InputPartition PER SHARD FILE (`nShards` is the write
-  * AND read parallelism dial), each executor streaming its shard's
-  * `.bin` sequentially with the sidecar `.idx` driving chunk bounds —
-  * no driver collect, no whole-file buffering (shards past 2 GB stream
-  * fine; the whole-file audit reader caps there by design). Dropping
+  * Schema: (shard int, chunk_id long, token_ids array<int>), executed
+  * by Spark's scan machinery: ONE InputPartition PER SHARD FILE
+  * (`nShards` is the write AND read parallelism dial), each executor
+  * streaming its shard's `.bin` sequentially with the sidecar `.idx`
+  * driving chunk bounds — no driver collect, no whole-file buffering
+  * (shards past 2 GB stream fine). Dropping
   * `token_ids` from the projection skips the `.bin` bytes ENTIRELY —
   * chunk inventories (counts, ids) read only the 12-byte-per-chunk
   * sidecars. Files resolve through the Hadoop FileSystem API, so the

@@ -1,91 +1,153 @@
 package graft.sources.netcdf
 
 import java.util
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 import graft.sinks.NetcdfClassic
-import graft.sinks.NetcdfClassic.{Att, AttDoubles, AttText, Header}
+import graft.sinks.NetcdfClassic._
 
-/** DataSource V2 scan over contract NetCDF classic files (S1/S10 in
-  * Spark-native form):
+/** DataSource V2 scan over NetCDF classic files (S1/S10 in Spark-native
+  * form), the engine's one NetCDF decoder:
   *
   *   spark.read.format("netcdf-classic").load("/path/file.nc")
   *
-  * Schema: (featureDim long, time timestamp, <2-D data vars> double) —
-  * the long-form series table, same as `Sources.netcdfSeries` but
-  * executed by Spark's scan machinery instead of a driver collect:
+  * The file's dimensions decide its layout ([[Layout]]):
+  *
+  *  - GRIDDED, when it has the `yName` and `xName` dimensions: the
+  *    (time, y, x) input of S1 (gridMET's (day, lat, lon)), read as the
+  *    engine's long-form staged grid `(time, j, i, lat, lon, <vars>)`
+  *    (FIXTURES.md §1, `Model.gridSchema`);
+  *  - SERIES otherwise: a (time, featureDim) contract file, read as the
+  *    long-form series table `(featureDim, time, <vars>)` (S10).
+  *
+  * Both are executed by Spark's scan machinery:
   *
   *  - PARTITIONED by time-index ranges (option `rowsPerPartition`
   *    bounds rows per split) — executors read in parallel;
-  *  - COLUMN PRUNING is real I/O pruning: the row layout of a classic
-  *    file is one contiguous (time → features) block per variable, so
-  *    a reader seeks exactly the requested vars' slices for its time
-  *    range and never touches dropped columns' bytes (ReadSchema in
-  *    `.explain` reflects it);
-  *  - `_FillValue` sentinels and NaN decode to null; the int64
-  *    "days since" axis decodes to timestamps.
+  *  - COLUMN PRUNING is real I/O pruning: a classic file stores each
+  *    variable as one contiguous time-major block, so a reader seeks
+  *    exactly the requested vars' slices for its time range and never
+  *    touches dropped columns' bytes (ReadSchema in `.explain`
+  *    reflects it);
+  *  - `_FillValue` sentinels and NaN decode to null; the "days since"
+  *    time axis decodes to timestamps.
   *
-  * Options: `path`, `featureDim` (default "nhru"), `rowsPerPartition`
-  * (default 65536). */
+  * Data variables are NC_FLOAT or NC_DOUBLE (read as double), the time
+  * axis and feature ids NC_INT or NC_INT64; any other type fails when
+  * the schema is built. Files open through the path's Hadoop
+  * FileSystem, so a `file:` URI or a cluster path reads like a local
+  * one.
+  *
+  * Options: `path`, `tName` (the time variable, default "time"),
+  * `yName`/`xName` (the grid coordinates, default "lat"/"lon"),
+  * `featureDim` (default "nhru"), `rowsPerPartition` (default 65536). */
 class NetcdfDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "netcdf-classic"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    NetcdfDataSource.schemaOf(
-      NetcdfClassic.readHeader(NetcdfDataSource.path(options)),
-      options.getOrDefault("featureDim", "nhru"))
+    NetcdfDataSource.table(options).schema()
 
   override def getTable(
       schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val options = new CaseInsensitiveStringMap(properties)
-    new NetcdfTable(NetcdfDataSource.path(options),
-      options.getOrDefault("featureDim", "nhru"),
-      Integer.parseInt(options.getOrDefault("rowsPerPartition", "65536")))
-  }
+      properties: util.Map[String, String]): Table =
+    NetcdfDataSource.table(new CaseInsensitiveStringMap(properties))
 }
 
 object NetcdfDataSource {
-  private[netcdf] def path(options: CaseInsensitiveStringMap): String = {
-    val p = options.get("path")
-    require(p != null, "netcdf-classic needs a path")
-    p
+  private[netcdf] def table(options: CaseInsensitiveStringMap): NetcdfTable = {
+    val path = options.get("path")
+    require(path != null, "netcdf-classic needs a path")
+    val header = NetcdfClassic.readHeader(path)
+    new NetcdfTable(path, header,
+      Layout.of(header, options.getOrDefault("tName", "time"),
+        options.getOrDefault("featureDim", "nhru"),
+        options.getOrDefault("yName", "lat"), options.getOrDefault("xName", "lon")),
+      Integer.parseInt(options.getOrDefault("rowsPerPartition", "65536")))
   }
 
-  private[netcdf] def schemaOf(h: Header, featureDim: String): StructType = {
-    val dimId = h.dims.zipWithIndex.map { case (d, i) => d.name -> i }.toMap
-    require(dimId.contains("time") && dimId.contains(featureDim),
-      s"expected dims (time, $featureDim), got ${h.dims.map(_.name)}")
-    StructType(
-      Seq(StructField(featureDim, LongType, nullable = false),
-        StructField("time", TimestampType, nullable = false)) ++
-        h.vars.filter(_.dimIds == Seq(dimId("time"), dimId(featureDim)))
-          .map(v => StructField(v.name, DoubleType, nullable = true)))
+  /** The decoded time axis in epoch micros — shared by the scan's
+    * partition pruning (driver) and each reader. Small (nTimes longs). */
+  private[netcdf] def timeAxisMicros(in: Input, header: Header, time: String): Array[Long] = {
+    val tv = header.vars.find(_.name == time).get
+    val units = tv.atts.collectFirst { case Att("units", AttText(s)) => s }
+      .getOrElse(throw new IllegalArgumentException(s"$time var has no units"))
+    require(units.startsWith("days since "), s"unsupported time units: $units")
+    val origin = java.time.LocalDate
+      .parse(units.drop("days since ".length).take(10))
+      .atStartOfDay(java.time.ZoneOffset.UTC)
+    in.longs(tv, header.dims(tv.dimIds.head).length.toInt)
+      .map(d => origin.plusDays(d).toInstant.toEpochMilli * 1000L)
   }
 }
 
-class NetcdfTable(path: String, featureDim: String, rowsPerPartition: Int)
+/** A file's layout: the time variable, the dimensions of one time step
+  * (`Seq(featureDim)` for a series, `Seq(y, x)` for a grid) and the
+  * data variables over exactly (time, cells…), in declaration order. */
+final case class Layout(time: String, cells: Seq[String], data: Seq[String]) {
+  def gridded: Boolean = cells.length == 2
+
+  def schema: StructType = {
+    def key(n: String, t: DataType) = StructField(n, t, nullable = false)
+    val keys =
+      if (gridded) Seq(key("time", TimestampType), key("j", IntegerType),
+        key("i", IntegerType), key("lat", DoubleType), key("lon", DoubleType))
+      else Seq(key(cells.head, LongType), key("time", TimestampType))
+    StructType(keys ++ data.map(StructField(_, DoubleType, nullable = true)))
+  }
+}
+
+object Layout {
+  private val Real = Seq(NcFloat, NcDouble)
+  private val Integral = Seq(NcInt, NcInt64)
+
+  /** Gridded when the file has the y and x dimensions, a series
+    * otherwise. Every variable the layout reads must have a type the
+    * scan decodes; the error names the variable and its type. */
+  def of(h: Header, time: String, featureDim: String, y: String, x: String): Layout = {
+    val dims = h.dims.map(_.name)
+    val cells = if (dims.contains(y) && dims.contains(x)) Seq(y, x) else Seq(featureDim)
+    require((time +: cells).forall(dims.contains),
+      s"expected dims ($time, $featureDim) or ($time, $y, $x), got ${dims.mkString("(", ", ", ")")}")
+    val byName = h.vars.map(v => v.name -> v).toMap
+    def check(name: String, types: Seq[Int]): Unit = {
+      val v = byName.getOrElse(name,
+        throw new IllegalArgumentException(s"no coordinate variable $name"))
+      require(types.contains(v.ncType), s"variable $name has type " +
+        s"${typeName(v.ncType)}; the scan reads ${types.map(typeName).mkString(" or ")}")
+    }
+    check(time, Integral)
+    if (cells.length == 2) cells.foreach(check(_, Real ++ Integral))
+    else check(featureDim, Integral)
+    val dimIds = (time +: cells).map(dims.indexOf)
+    val data = h.vars.filter(_.dimIds == dimIds).map(_.name)
+    data.foreach(check(_, Real))
+    require(cells.length == 1 || data.nonEmpty, s"no ($time, $y, $x) data variables")
+    Layout(time, cells, data)
+  }
+}
+
+class NetcdfTable(path: String, header: Header, layout: Layout, rowsPerPartition: Int)
     extends Table with SupportsRead {
-  private lazy val header = NetcdfClassic.readHeader(path)
   override def name(): String = s"netcdf-classic:$path"
-  override def schema(): StructType = NetcdfDataSource.schemaOf(header, featureDim)
+  override def schema(): StructType = layout.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new NetcdfScanBuilder(path, featureDim, rowsPerPartition, header, schema())
+    new NetcdfScanBuilder(path, header, layout, rowsPerPartition)
 }
 
-class NetcdfScanBuilder(
-    path: String, featureDim: String, rowsPerPartition: Int,
-    header: Header, full: StructType)
+class NetcdfScanBuilder(path: String, header: Header, layout: Layout, rowsPerPartition: Int)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-  private var required: StructType = full
+  private var required: StructType = layout.schema
   private var timeBounds: (Long, Long) = (Long.MinValue, Long.MaxValue)
   private var accepted: Array[Filter] = Array.empty
 
@@ -121,33 +183,33 @@ class NetcdfScanBuilder(
   }
   override def pushedFilters(): Array[Filter] = accepted
 
-  override def build(): Scan = new NetcdfScan(
-    path, featureDim, rowsPerPartition, header, required, timeBounds)
+  override def build(): Scan =
+    new NetcdfScan(path, header, layout, rowsPerPartition, required, timeBounds)
 }
 
 final case class NetcdfInputPartition(tiStart: Int, tiEnd: Int) extends InputPartition
 
 class NetcdfScan(
-    path: String, featureDim: String, rowsPerPartition: Int,
-    header: Header, required: StructType,
-    timeBounds: (Long, Long) = (Long.MinValue, Long.MaxValue))
+    path: String, header: Header, layout: Layout, rowsPerPartition: Int,
+    required: StructType, timeBounds: (Long, Long))
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  private def nTimes: Int =
-    header.dims(header.vars.find(_.name == "time").get.dimIds.head).length.toInt
-  private def nFeat: Int = {
-    val fid = header.vars.find(_.name == featureDim).get
-    header.dims(fid.dimIds.head).length.toInt
-  }
+  private def dimLength(name: String): Int =
+    header.dims.find(_.name == name).get.length.toInt
+  private def nTimes: Int = dimLength(layout.time)
+  private def conf: SerializableConfiguration =
+    new SerializableConfiguration(SparkSession.active.sparkContext.hadoopConfiguration)
 
   /** Time-index window satisfying the pushed bounds. The contract time
     * axis is ascending; when it isn't, pruning is skipped (correctness
     * never depends on it — filters are residual). */
   private def timeWindow(): (Int, Int) = {
     if (timeBounds == (Long.MinValue, Long.MaxValue)) return (0, nTimes)
-    val times = NetcdfPartitionReader.timeAxisMicros(path, header)
+    val in = NetcdfClassic.open(path, conf.value)
+    val times = try NetcdfDataSource.timeAxisMicros(in, header, layout.time)
+      finally in.close()
     if (!times.indices.drop(1).forall(i => times(i - 1) <= times(i)))
       return (0, nTimes)
     val lo = times.indexWhere(_ >= timeBounds._1) match {
@@ -160,93 +222,80 @@ class NetcdfScan(
 
   override def planInputPartitions(): Array[InputPartition] = {
     val (lo, hi) = timeWindow()
-    val timesPerPart = math.max(1, rowsPerPartition / math.max(1, nFeat))
+    val cells = layout.cells.map(dimLength).product
+    val timesPerPart = math.max(1, rowsPerPartition / math.max(1, cells))
     (lo until hi by timesPerPart).map { t0 =>
       NetcdfInputPartition(t0, math.min(hi, t0 + timesPerPart))
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new NetcdfReaderFactory(path, featureDim, required)
+    new NetcdfReaderFactory(path, layout, required, conf)
 }
 
-class NetcdfReaderFactory(path: String, featureDim: String, required: StructType)
+class NetcdfReaderFactory(
+    path: String, layout: Layout, required: StructType, conf: SerializableConfiguration)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[NetcdfInputPartition]
-    new NetcdfPartitionReader(path, featureDim, required, part.tiStart, part.tiEnd)
+    new NetcdfPartitionReader(path, layout, required, part.tiStart, part.tiEnd, conf)
   }
 }
 
 /** Reads its time-index slice with per-variable seeks — only the
-  * REQUIRED columns' byte ranges are touched. */
+  * REQUIRED columns' byte ranges are touched. Row `pos` is time step
+  * `tiStart + pos / cells`, cell `pos % cells` (row-major over the
+  * cell dimensions). */
 class NetcdfPartitionReader(
-    path: String, featureDim: String, required: StructType,
-    tiStart: Int, tiEnd: Int)
+    path: String, layout: Layout, required: StructType,
+    tiStart: Int, tiEnd: Int, conf: SerializableConfiguration)
     extends PartitionReader[InternalRow] {
 
-  private val header = NetcdfClassic.readHeader(path)
+  private val in = NetcdfClassic.open(path, conf.value)
+  private val header = NetcdfClassic.readHeader(in)
   private val byName = header.vars.map(v => v.name -> v).toMap
-  private val dimId = header.dims.zipWithIndex.map { case (d, i) => d.name -> i }.toMap
-  private val nFeat = header.dims(dimId(featureDim)).length.toInt
+  private val dims = layout.cells.map(c => header.dims.find(_.name == c).get.length.toInt)
+  private val cells = dims.product
+  private val timesUs = NetcdfDataSource.timeAxisMicros(in, header, layout.time)
 
-  private val raf = new java.io.RandomAccessFile(path, "r")
-
-  private def readLongs1D(name: String): Array[Long] = {
-    val vh = byName(name)
-    val n = header.dims(vh.dimIds.head).length.toInt
-    val w = NetcdfClassic.elemSize(vh.ncType)
-    val bytes = new Array[Byte](n * w)
-    raf.seek(vh.begin); raf.readFully(bytes)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.tabulate(n)(i =>
-      if (vh.ncType == NetcdfClassic.NcInt64) bb.getLong(i * 8)
-      else bb.getInt(i * 4).toLong)
-  }
-
-  /** One contiguous (tiEnd−tiStart)·nFeat slice of a (time, feat)
-    * double variable. */
-  private def readSlice(name: String): Array[Double] = {
-    val vh = byName(name)
-    val n = (tiEnd - tiStart) * nFeat
-    val bytes = new Array[Byte](n * 8)
-    raf.seek(vh.begin + tiStart.toLong * nFeat * 8)
-    raf.readFully(bytes)
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.tabulate(n)(i => bb.getDouble(i * 8))
-  }
-
-  private val fids = readLongs1D(featureDim)
-  private val timesUs: Array[Long] =
-    NetcdfPartitionReader.timeAxisMicros(path, header)
-  private val dataCols: Array[(Int, Array[Double], Option[Double])] =
-    required.fields.zipWithIndex.collect {
-      case (f, i) if f.name != featureDim && f.name != "time" =>
-        val fill = byName(f.name).atts.collectFirst {
-          case Att("_FillValue", AttDoubles(Seq(v))) => v
-        }
-        (i, readSlice(f.name), fill)
+  /** Key column values of time step `ti` (absolute) and cell `c`. */
+  private val keyOf: Map[String, (Int, Int) => Any] = {
+    def cell(f: Int => Any): (Int, Int) => Any = (_, c) => f(c)
+    val time = "time" -> ((ti: Int, _: Int) => timesUs(ti))
+    if (layout.gridded) {
+      val coords = layout.cells.zip(dims).map { case (name, n) => in.doubles(byName(name), 0L, n) }
+      val nX = dims(1)
+      Map(time, "j" -> cell(_ / nX), "i" -> cell(_ % nX),
+        "lat" -> cell(c => coords(0)(c / nX)), "lon" -> cell(c => coords(1)(c % nX)))
+    } else {
+      val fids = in.longs(byName(layout.cells.head), cells)
+      Map(time, layout.cells.head -> cell(fids(_)))
     }
-  private val fidIdx =
-    if (required.fieldNames.contains(featureDim))
-      Some(required.fieldIndex(featureDim))
-    else None
-  private val timeIdx =
-    if (required.fieldNames.contains("time")) Some(required.fieldIndex("time"))
-    else None
+  }
+
+  private val keyCols: Array[(Int, (Int, Int) => Any)] =
+    required.fieldNames.zipWithIndex.collect {
+      case (f, i) if keyOf.contains(f) => (i, keyOf(f))
+    }
+  private val dataCols: Array[(Int, Array[Double], Option[Double])] =
+    required.fieldNames.zipWithIndex.collect {
+      case (f, i) if !keyOf.contains(f) =>
+        val v = byName(f)
+        val fill = v.atts.collectFirst { case Att("_FillValue", AttDoubles(Seq(x))) => x }
+        // the time-major slice [tiStart, tiEnd)
+        (i, in.doubles(v, tiStart.toLong * cells, (tiEnd - tiStart) * cells), fill)
+    }
 
   private var pos = -1
-  private val total = (tiEnd - tiStart) * nFeat
-  private val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-    required.length)
+  private val total = (tiEnd - tiStart) * cells
+  private val row = new GenericInternalRow(required.length)
 
   override def next(): Boolean = { pos += 1; pos < total }
 
   override def get(): InternalRow = {
-    val ti = pos / nFeat
-    val hi = pos % nFeat
-    fidIdx.foreach(i => row.update(i, fids(hi)))
-    timeIdx.foreach(i => row.update(i, timesUs(tiStart + ti)))
+    val ti = tiStart + pos / cells
+    val c = pos % cells
+    keyCols.foreach { case (i, f) => row.update(i, f(ti, c)) }
     dataCols.foreach { case (i, slice, fill) =>
       val x = slice(pos)
       if (x.isNaN || fill.contains(x)) row.update(i, null)
@@ -255,33 +304,5 @@ class NetcdfPartitionReader(
     row
   }
 
-  override def close(): Unit = raf.close()
-}
-
-object NetcdfPartitionReader {
-  /** The decoded time axis in epoch micros — shared by the scan's
-    * partition pruning (driver) and each reader. Small (nTimes longs). */
-  def timeAxisMicros(path: String, header: Header): Array[Long] = {
-    val tv = header.vars.find(_.name == "time")
-      .getOrElse(sys.error("no time variable"))
-    val units = tv.atts.collectFirst { case Att("units", AttText(s)) => s }
-      .getOrElse(sys.error("time var has no units"))
-    require(units.startsWith("days since "), s"unsupported time units: $units")
-    val origin = java.time.LocalDate
-      .parse(units.drop("days since ".length).take(10))
-      .atStartOfDay(java.time.ZoneOffset.UTC)
-    val n = header.dims(tv.dimIds.head).length.toInt
-    val w = NetcdfClassic.elemSize(tv.ncType)
-    val raf = new java.io.RandomAccessFile(path, "r")
-    try {
-      val bytes = new Array[Byte](n * w)
-      raf.seek(tv.begin); raf.readFully(bytes)
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      Array.tabulate(n) { i =>
-        val d = if (tv.ncType == NetcdfClassic.NcInt64) bb.getLong(i * 8)
-          else bb.getInt(i * 4).toLong
-        origin.plusDays(d).toInstant.toEpochMilli * 1000L
-      }
-    } finally raf.close()
-  }
+  override def close(): Unit = in.close()
 }

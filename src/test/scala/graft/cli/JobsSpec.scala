@@ -11,6 +11,8 @@ import graft.sources.Staging
 class JobsSpec extends SparkSpec {
   import spark.implicits._
 
+  private def gtok(dir: String) = spark.read.format("gtok").load(dir)
+
   test("parseArgs: values, boolean flags, errors") {
     val a = Jobs.parseArgs(Seq("--start-date", "2021-01-01", "--partial",
       "--fid", "nhru_v1_1"))
@@ -23,6 +25,46 @@ class JobsSpec extends SparkSpec {
       Jobs.parseArgs(Seq("--fill-mising", "--partial")))
     assert(swallow.getMessage == "missing value for --fill-mising")
     intercept[Exception](Jobs.validDate("01/02/2021"))
+  }
+
+  test("a subcommand rejects keys its job does not read, naming the accepted ones") {
+    for ((cmd, bad, meant) <- Seq(
+        ("gridmet-etl", Seq("--weight-jion", "sort-merge"), "--weight-join"),
+        ("gridmet-etl", Seq("--file-prefx", "p_"), "--file-prefix"),
+        ("gridmet-etl", Seq("--fill-missing", "--mapping-flie", "m.csv"), "--mapping-file"),
+        ("cfsv2-etl", Seq("--model-param-flie", "p"), "--model-param-file"),
+        ("pack-tokens", Seq("--near"), "--n-shards"))) {
+      val e = intercept[IllegalArgumentException](Jobs.command(cmd, Jobs.parseArgs(bad)))
+      assert(e.getMessage.contains(s"$cmd does not take ${bad.filterNot(_ == "--fill-missing").head}"),
+        e.getMessage)
+      assert(e.getMessage.contains(meant), e.getMessage)
+    }
+    assert(Jobs.command("gridmet-etl", Jobs.parseArgs(Seq(
+      "--fill-missing", "--genmap", "--weight-join", "sort-merge"))) == Jobs.commands("gridmet-etl"))
+    val e = intercept[IllegalArgumentException](Jobs.command("gridmet", Jobs.parseArgs(Nil)))
+    assert(e.getMessage.contains("unknown subcommand: gridmet") &&
+      e.getMessage.contains("gridmet-etl"), e.getMessage)
+  }
+
+  test("each subcommand declares exactly the keys its job reads") {
+    // the keys a method reads: a("k"), a.get("k"), a.has("k"), plus the
+    // keys of the Args-taking helpers it calls
+    val src = Files.readString(java.nio.file.Paths.get("src/main/scala/graft/cli/Jobs.scala"))
+    val starts = "\n  (?:private )?def (\\w+)".r.findAllMatchIn(src)
+      .map(m => m.group(1) -> m.start).toSeq
+    val bodies = starts.zip(starts.drop(1).map(_._2) :+ src.length)
+      .map { case ((name, from), to) => name -> src.substring(from, to) }.toMap
+    val key = "\\ba(?:\\.get|\\.has)?\\(\"([a-z0-9-]+)\"\\)".r
+    val direct = bodies.collect { case (name, b) if b.contains("a: Args") =>
+      name -> key.findAllMatchIn(b).map(_.group(1)).toSet }
+    def reads(name: String): Set[String] = direct(name) ++ direct.keys
+      .filter(h => h != name && bodies(name).contains(s"$h(spark, a)")).flatMap(direct)
+    val runOf = "\"([a-z0-9-]+)\" -> Command\\((\\w+),".r.findAllMatchIn(src)
+      .map(m => m.group(1) -> m.group(2)).toMap
+    assert(runOf.keySet == Jobs.commands.keySet && runOf.size == 14)
+    runOf.foreach { case (cmd, run) =>
+      assert(Jobs.commands(cmd).keys == reads(run), cmd)
+    }
   }
 
   test("gridmet-etl job: staged grid → contract parquet + attrs sidecar") {
@@ -245,7 +287,7 @@ class JobsSpec extends SparkSpec {
     val out = Jobs.runPackTokens(spark, Jobs.parseArgs(Seq(
       "--input-path", s"$dir/docs", "--output-path", s"$dir/shards",
       "--context-len", "4", "--n-shards", "2")))
-    val back = graft.sinks.TokenSink.readPackedTokens(spark, out)
+    val back = gtok(out)
     // every whitespace token of every doc landed in exactly one chunk
     assert(back.selectExpr("sum(size(token_ids))").as[Long].head() === 14L)
     // layout: each shard's non-final chunks are exactly context-len
@@ -267,9 +309,9 @@ class JobsSpec extends SparkSpec {
     val out = Jobs.runPackSft(spark, Jobs.parseArgs(Seq(
       "--input-path", s"$dir/convs", "--output-path", s"$dir/sft",
       "--context-len", "8", "--n-shards", "2")))
-    val toks = graft.sinks.TokenSink.readPackedTokens(spark, s"$out/tokens")
+    val toks = gtok(s"$out/tokens")
       .as[(Int, Long, Seq[Int])].collect().map(c => (c._1, c._2) -> c._3).toMap
-    val masks = graft.sinks.TokenSink.readPackedTokens(spark, s"$out/masks")
+    val masks = gtok(s"$out/masks")
       .as[(Int, Long, Seq[Int])].collect().map(c => (c._1, c._2) -> c._3).toMap
     // identical chunk geometry across the two planes
     assert(toks.keySet === masks.keySet)
@@ -364,7 +406,7 @@ class JobsSpec extends SparkSpec {
       "--input-path", s"$dir/pairs", "--output-path", s"$dir/dpo",
       "--context-len", "6", "--n-shards", "2")))
     def read(sub: String) =
-      graft.sinks.TokenSink.readPackedTokens(spark, s"$out/$sub")
+      gtok(s"$out/$sub")
         .as[(Int, Long, Seq[Int])].collect()
         .map(c => (c._1, c._2) -> c._3).toMap
     val ct = read("chosen_tokens"); val cm = read("chosen_masks")
@@ -397,7 +439,7 @@ class JobsSpec extends SparkSpec {
       "--input-path", s"$dir/docs", "--output-path", s"$dir/shards",
       "--context-len", "4", "--n-shards", "2",
       "--fim-pct", "100", "--fim-seed", "7")))
-    val back = graft.sinks.TokenSink.readPackedTokens(spark, out)
+    val back = gtok(out)
     // every doc transformed: 14 tokens + 3 sentinels per doc = 23
     assert(back.selectExpr("sum(size(token_ids))").as[Long].head() === 23L)
     // each transformed stream carries exactly one of each sentinel
@@ -435,7 +477,7 @@ class JobsSpec extends SparkSpec {
     val tokCounts = docs.collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").length).toMap
     val expectedTokens = assigned.map(a => tokCounts(a._1)).sum.toLong
-    val back = graft.sinks.TokenSink.readPackedTokens(spark, out)
+    val back = gtok(out)
     assert(back.selectExpr("sum(size(token_ids))").as[Long].head() ===
       expectedTokens)
     // a missing --mix fails loudly rather than silently packing all
@@ -467,7 +509,7 @@ class JobsSpec extends SparkSpec {
     val tokCounts = docs.collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").length).toMap
     val perEpoch = assigned.map(tokCounts(_)).sum.toLong
-    val back = graft.sinks.TokenSink.readPackedTokens(spark, out)
+    val back = gtok(out)
     assert(back.selectExpr("sum(size(token_ids))").as[Long].head() ===
       2L * perEpoch)
     // one boundary row per (doc, epoch) — each selected doc starts
@@ -483,7 +525,7 @@ class JobsSpec extends SparkSpec {
       "--context-len", "4", "--n-shards", "2",
       "--shuffle-seed", "42", "--mix", "web=0.5,book=0.5",
       "--anneal-quality", "9.9")))
-    assert(graft.sinks.TokenSink.readPackedTokens(spark, out2)
+    assert(gtok(out2)
       .selectExpr("sum(size(token_ids))").as[Long].head() === perEpoch)
     // loud refusals: the combination, and boundaries without a seed
     intercept[IllegalArgumentException] {
@@ -912,31 +954,36 @@ class JobsSpec extends SparkSpec {
     assert(e.getMessage.contains("id=absent"))
   }
 
-  test("stage-netcdf: gridded .nc → staged parquet → gridmet → contract (full lifecycle)") {
-    import graft.sinks.NetcdfClassic
+  /** A gridMET-shaped 3-D file: dims (day, lat, lon) + 1-D coords,
+    * tmmx/pr data vars, the first day from 2021-01-01, a fill-value
+    * hole in tmmx at (t=0, j=0, i=2). */
+  private def writeGridmetNc(path: String, nT: Int, nY: Int, nX: Int): Unit = {
     import graft.sinks.NetcdfClassic._
-    val dir = Staging.scratchDir("graft-stage").toString
-    // a gridMET-shaped 3-D file: dims (day, lat, lon) + 1-D coords,
-    // tmmx/tmmn/... data vars, one fill-value hole
-    val (nT, nY, nX) = (2, 2, 3)
+    import graft.sinks.NetcdfWholeFile._
     val fill = graft.model.Model.FillValue
     def cube(f: (Int, Int, Int) => Double): Array[Double] =
       (for { t <- 0 until nT; j <- 0 until nY; i <- 0 until nX }
         yield f(t, j, i)).toArray
-    val ncPath = s"$dir/gridmet_day.nc"
-    NetcdfClassic.write(ncPath, Nc(
+    write(path, Nc(
       dims = Seq(Dim("day", nT), Dim("lat", nY), Dim("lon", nX)),
       gatts = Seq(Att("Conventions", AttText("CF-1.8"))),
       vars = Seq(
         Var("day", Seq(0), Seq(Att("units", AttText("days since 1900-01-01 00:00:00"))),
-          LongData(Array(44195L, 44196L))), // 2021-01-01, 2021-01-02
-        Var("lat", Seq(1), Nil, DoubleData(Array(40.0, 41.0))),
-        Var("lon", Seq(2), Nil, DoubleData(Array(-100.0, -99.9, -99.8))),
+          LongData(Array.tabulate(nT)(44195L + _))), // 2021-01-01 on
+        Var("lat", Seq(1), Nil, DoubleData(Array.tabulate(nY)(40.0 + _))),
+        Var("lon", Seq(2), Nil, DoubleData(Array.tabulate(nX)(-100.0 + _ * 0.1))),
         Var("tmmx", Seq(0, 1, 2),
           Seq(Att("_FillValue", AttVal(fill))),
           DoubleData(cube((t, j, i) =>
             if (t == 0 && j == 0 && i == 2) fill else 285.0 + t + j + i))),
         Var("pr", Seq(0, 1, 2), Nil, DoubleData(cube((t, j, i) => t + 0.5))))))
+  }
+
+  test("stage-netcdf: gridded .nc → staged parquet → gridmet → contract (full lifecycle)") {
+    val dir = Staging.scratchDir("graft-stage").toString
+    val (nT, nY, nX) = (2, 2, 3)
+    val ncPath = s"$dir/gridmet_day.nc"
+    writeGridmetNc(ncPath, nT, nY, nX)
     // stage it
     val staged = Jobs.runStageNetcdf(spark, Jobs.parseArgs(Seq(
       "--nc-file", ncPath, "--output-path", s"$dir/staged")))
@@ -962,8 +1009,42 @@ class JobsSpec extends SparkSpec {
     assert(approx(tmax, 285.5 - 273.15))
   }
 
-  test("cfsv2-etl method 2: ens-partitioned ensemble output") {
-    val dir = Staging.scratchDir("graft-job2").toString
+  test("stage-netcdf: a file: URI stages through BatchScan netcdf-classic") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Staging.scratchDir("graft-stage-uri")
+    // 3 days of 150 × 200 cells: 90,000 rows, two time-range splits at
+    // the scan's default of 65,536 rows per partition
+    val nc = dir.resolve("gridmet_day.nc")
+    writeGridmetNc(nc.toString, 3, 150, 200)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val staged = try Jobs.runStageNetcdf(spark, Jobs.parseArgs(Seq(
+        "--nc-file", nc.toUri.toString, "--output-path", dir.resolve("staged").toString)))
+      finally {
+        org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(nc.toUri.toString.startsWith("file:"))
+    val write = plans.toArray.map(_.toString).filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(write.length == 1, plans)
+    assert(write.head.contains("BatchScan netcdf-classic"), write.head)
+    assert(!write.head.contains("LocalTableScan") && !write.head.contains("ExistingRDD"), write.head)
+    val grid = spark.read.parquet(staged)
+    assert(grid.inputFiles.length == 2)
+    assert(grid.count() == 3 * 150 * 200)
+    assert(grid.filter($"tmmx".isNull).count() == 1)
+  }
+
+  /** A two-member cfsv2 grid, one feature, its weights and a PRMS
+    * parameter file under `dir`; the args that name them, except
+    * `--model-param-file`. */
+  private def cfsv2Inputs(dir: String): Seq[String] = {
     val t1 = Timestamp.valueOf("2021-02-01 00:00:00")
     (for { e <- 0 to 1; i <- 0 to 1 } yield
       (t1, e, 0, i, 40.0, -100.0 + i, 285.0 + e, 275.0 + e, 1.0, 0.008))
@@ -976,10 +1057,13 @@ class JobsSpec extends SparkSpec {
       "nhru_v1_1,i,j,wght\n1,0,0,1.0\n")
     Files.writeString(java.nio.file.Paths.get(dir, "params"),
       "hru_elev\nx\nnhru\n1\n2\n150.0\n####\n")
+    Seq("--grid-path", s"$dir/grid", "--target-file", s"$dir/feats",
+      "--weights-file", s"$dir/w.csv", "--fid", "nhru_v1_1")
+  }
 
-    val a = Jobs.parseArgs(Seq(
-      "--grid-path", s"$dir/grid", "--target-file", s"$dir/feats",
-      "--weights-file", s"$dir/w.csv", "--fid", "nhru_v1_1",
+  test("cfsv2-etl method 2: ens-partitioned ensemble output") {
+    val dir = Staging.scratchDir("graft-job2").toString
+    val a = Jobs.parseArgs(cfsv2Inputs(dir) ++ Seq(
       "--model-param-file", s"$dir/params",
       "--method", "2", "--output-path", s"$dir/out"))
     val path = Jobs.runCfsv2(spark, a)
@@ -989,6 +1073,16 @@ class JobsSpec extends SparkSpec {
     assert(out.columns.contains("humidity"))
     // partitionBy("ens") produced the ensemble directory layout (K4)
     assert(new java.io.File(path).listFiles().exists(_.getName.startsWith("ens=")))
+  }
+
+  test("cfsv2-etl reads a file: URI --model-param-file") {
+    val dir = Staging.scratchDir("graft-job-param-uri")
+    val params = dir.resolve("params").toUri.toString
+    assert(params.startsWith("file:"))
+    val path = Jobs.runCfsv2(spark, Jobs.parseArgs(cfsv2Inputs(dir.toString) ++ Seq(
+      "--model-param-file", params, "--output-path", s"$dir/out")))
+    val out = spark.read.parquet(path)
+    assert(out.count() == 1 && out.filter($"humidity".isNotNull).count() == 1)
   }
 
   test("gridmet-etl and cfsv2-etl release what they cached, and only that") {

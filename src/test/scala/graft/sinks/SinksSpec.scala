@@ -11,6 +11,7 @@ import graft.sources.Staging
 class SinksSpec extends SparkSpec {
   import spark.implicits._
   import NetcdfClassic._
+  import NetcdfWholeFile._
 
   private def contractDf = {
     def t(d: String) = Timestamp.valueOf(s"$d 00:00:00")
@@ -32,7 +33,7 @@ class SinksSpec extends SparkSpec {
     val path = Staging.scratchDir("graft-nc")
       .resolve("1980-01-01_filled_converted.nc").toString
     Sinks.writeNetcdf(contractDf, featuresDf, path, start = "1980-01-01")
-    val nc = NetcdfClassic.read(path)
+    val nc = NetcdfWholeFile.read(path)
 
     // dims exactly (time, nhru) — gm_header.md:8-10
     assert(nc.dims.map(d => (d.name, d.length)) == Seq(("time", 3L), ("nhru", 2L)))
@@ -94,8 +95,8 @@ class SinksSpec extends SparkSpec {
         Var("v", Seq(0), Seq(Att("scale", AttDoubles(Seq(1.0, 2.0)))),
           DoubleData(Array(1.0, Double.NaN, 3.0))),
         Var("k", Seq(0), Nil, LongData(Array(Long.MinValue, 0L, Long.MaxValue)))))
-    NetcdfClassic.write(path, nc)
-    val back = NetcdfClassic.read(path)
+    NetcdfWholeFile.write(path, nc)
+    val back = NetcdfWholeFile.read(path)
     assert(back.dims == nc.dims)
     assert(back.gatts == nc.gatts)
     assert(back.vars.map(_.name) == Seq("v", "k"))
@@ -106,11 +107,11 @@ class SinksSpec extends SparkSpec {
     assert(back.vars.head.atts == nc.vars.head.atts)
   }
 
-  test("netcdfSeries re-ingests the sink's file back to the contract table") {
+  test("format(netcdf-classic) re-ingests the sink's file back to the contract table") {
     val path = Staging.scratchDir("graft-nc")
       .resolve("reingest.nc").toString
     Sinks.writeNetcdf(contractDf, featuresDf, path, start = "1980-01-01")
-    val back = graft.sources.Sources.netcdfSeries(spark, path)
+    val back = spark.read.format("netcdf-classic").load(path)
     assert(back.columns.toSeq == Seq("nhru", "time", "tmax", "tmin", "prcp",
       "rhmax", "rhmin", "ws", "humidity"))
     // value-identical to the original series, including the null cell
@@ -192,7 +193,7 @@ class SinksSpec extends SparkSpec {
     val path = Staging.scratchDir("graft-nc")
       .resolve(Sinks.outputName("2021-01-01", filled = false) + ".nc").toString
     Sinks.writeNetcdf(out, features, path, start = "2021-01-01")
-    val nc = NetcdfClassic.read(path)
+    val nc = NetcdfWholeFile.read(path)
     assert(nc.dims.map(_.name) == Seq("time", "nhru"))
     val tmax = nc.vars.find(_.name == "tmax").get.data.asInstanceOf[DoubleData].v
     assert(math.abs(tmax(0) - (285.5 - 273.15)) < 1e-9)

@@ -39,7 +39,7 @@ class TokenSinkSpec extends SparkSpec {
     for (bpt <- Seq(2, 4)) {
       val dir = Staging.scratchDir(s"graft-tok-rt$bpt").toString
       TokenSink.writePackedTokens(chunks, dir, bytesPerToken = bpt)
-      val back = TokenSink.readPackedTokens(spark, dir)
+      val back = spark.read.format("gtok").load(dir)
         .as[(Int, Long, Seq[Int])].collect().sortBy(r => (r._1, r._2))
       assert(back.toSeq === Seq(
         (0, 0L, Seq(1, 2, 3)), (0, 1L, Seq(65535, 0)),
@@ -110,7 +110,7 @@ class TokenSinkSpec extends SparkSpec {
       .agg(flatten(collect_list(col("token_ids"))).as("token_ids"))
     val dir = Staging.scratchDir("graft-tok-e2e").toString
     TokenSink.writePackedTokens(grouped, dir)
-    val back = TokenSink.readPackedTokens(spark, dir)
+    val back = spark.read.format("gtok").load(dir)
     assert(back.count() === 2L)
     assert(back.selectExpr("sum(size(token_ids))").as[Long].head() === 6L)
   }
@@ -120,7 +120,7 @@ class TokenSinkSpec extends SparkSpec {
     val dir = Staging.scratchDir("graft-gtok-dsv2").toString
     TokenSink.writePackedTokens(chunks, dir, bytesPerToken = 2)
     val back = spark.read.format("gtok").load(dir)
-    // identical contents to the audit reader
+    // the written contents
     assert(back.as[(Int, Long, Seq[Int])].collect().sortBy(r => (r._1, r._2)).toSeq
       === Seq((0, 0L, Seq(1, 2, 3)), (0, 1L, Seq(65535, 0)),
         (1, 0L, Seq(7)), (1, 2L, Seq(8, 9, 10, 11))))
@@ -163,7 +163,7 @@ class TokenSinkSpec extends SparkSpec {
         org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1)))
         .toIntArray().toSeq).toMap
     val total = expected.values.map(_.size).sum
-    val back = TokenSink.readPackedTokens(spark, out)
+    val back = spark.read.format("gtok").load(out)
     assert(back.selectExpr("sum(size(token_ids))").as[Long].head() === total.toLong)
     // every packed id is a real vocab id (uint16, within vocab size)
     val vocabSize = graft.functions.Bpe
