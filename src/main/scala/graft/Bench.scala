@@ -45,6 +45,8 @@ object Bench {
     val trials = Sessions.envInt("SPARK_GRAFT_BENCH_TRIALS", 3).max(1)
     val loadGate = Sessions.envDouble("SPARK_GRAFT_BENCH_LOAD_GATE", 2.5)
     val loadWaitSec = Sessions.envInt("SPARK_GRAFT_BENCH_LOAD_WAIT_SEC", 120)
+    // optional focused run for profiling: comma-separated query names
+    val only = Sessions.envNames("SPARK_GRAFT_BENCH_ONLY", SparkEntry.queries.keys)
     val spark = Sessions.querySuite(cpus, "WARN")
     // Warm the JVM before timing: codegen compiler, parquet footers,
     // shuffle machinery. JIT warmup is not query cost — the oracle
@@ -65,9 +67,6 @@ object Bench {
     }
     val contaminated = load0.head > loadGate
 
-    // optional focused run for profiling: comma-separated query names
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // Trials are interleaved whole-suite passes (pass 1 = all queries,

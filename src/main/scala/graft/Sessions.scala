@@ -109,6 +109,21 @@ object Sessions {
   def envInt(name: String, default: Int, env: Map[String, String] = sys.env): Int =
     envNumber(name, default, env, "an integer")(_.toIntOption)
 
+  /** A comma-separated name list in env setting `name`; None when it is
+    * unset. Every name must be one of `known`: a list that names an
+    * unknown entry, or none at all, fails at startup naming the
+    * variable and the unknown entries, instead of running fewer. */
+  def envNames(name: String, known: Iterable[String],
+      env: Map[String, String] = sys.env): Option[Set[String]] =
+    env.get(name).map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = (names -- known).toSeq.sorted
+      if (names.isEmpty || unknown.nonEmpty) throw new IllegalArgumentException(
+        if (names.isEmpty) s"$name='$v' names no entry"
+        else s"$name names unknown entries: ${unknown.mkString(", ")}")
+      names
+    }
+
   def envDouble(name: String, default: Double,
       env: Map[String, String] = sys.env): Double =
     envNumber(name, default, env, "a number")(_.toDoubleOption)

@@ -44,9 +44,9 @@ import graft.tools.StressMetrics
   *  - sessionize: 20M events / 100k users through the per-user window.
   *  - proximity_join: 200k markers × 20M events, ±1 s radius, binned.
   *  - hll_events: 1e8 rows into per-day HLL + exact-count aggregates.
-  *  - sessionize_stateful_stream / proximity_join_stream: 5M events as
-  *    20 time-ordered source files through flatMapGroupsWithState and
-  *    the stream-stream interval join respectively — real multi-
+  *  - sessionize_eventtime_stream / proximity_join_stream: 5M events
+  *    as 20 time-ordered source files through flatMapGroupsWithState
+  *    and the stream-stream interval join respectively — real multi-
   *    micro-batch runs whose state crosses batch boundaries.
   */
 object Stress {
@@ -252,8 +252,8 @@ object Stress {
   }
 
   /** Stage `n` generated events as time-ordered source files for the
-    * streaming scenarios (shared by sessionize_stateful_stream and
-    * proximity_join_stream so their source shapes cannot drift):
+    * streaming scenarios (shared by every `*_stream` row that reads
+    * events, so their source shapes cannot drift):
     * 20 equal-width time slices at full scale, one file each, staged
     * as a drop-box — FileStreamSource orders by modification time, so
     * arrival order = event-time order and watermark progress is
@@ -609,52 +609,20 @@ object Stress {
           mk(nm, 7), mk(nd, 23).select((col("fid") + lit(nm)).as("fid"),
             col("lat"), col("lon")), cellSize = 2.0)), nm + nd)
       }),
-      Scenario("sessionize_stateful_stream", sp => {
-        // The flatMapGroupsWithState engine under a REAL bounded
-        // stream: 5M events / 100k users arrive as time-ordered source
-        // files, several files per micro-batch, so the per-user
-        // open-session state crosses micro-batch boundaries through
-        // the state store. Staging happens here in build (untimed; the
+      Scenario("sessionize_eventtime_stream", sp => {
+        // The flatMapGroupsWithState engine (the q114 operator:
+        // EventTimeTimeout + gap-merge late-data handling) under a REAL
+        // bounded stream: 5M events / 100k users arrive as time-ordered
+        // source files, several files per micro-batch, so the per-user
+        // open-session state crosses micro-batch boundaries through the
+        // state store. Staging happens here in build (untimed; the
         // listener resets after build) — the timed action runs the
         // AvailableNow query to completion through the noop sink.
         // This measures SCALE.md's streaming claim: state is O(users),
         // not O(events), and throughput is state-store-bound, not
-        // scan-bound.
-        val n = s(5000000)
-        val (dir, ckpt, files) = stageTimeSlicedEvents(sp, n)
-        val schema = sp.read.parquet(dir).schema
-        val src = graft.functions.EventTime.normalize(
-            sp.readStream.schema(schema)
-              .option("maxFilesPerTrigger", math.max(1, files / 5).toString)
-              .parquet(dir), "ts")
-          .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-          .as[graft.streaming.EventPipeline.Ev](
-            org.apache.spark.sql.Encoders.product[graft.streaming.EventPipeline.Ev])
-        val writer = graft.streaming.EventPipeline
-          .sessionizeStateful(src, gapMinutes = 30)
-          .writeStream
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .format("noop")
-        // drainAndStop, not awaitTermination: ProcessingTimeTimeout
-        // state keeps shouldRunAnotherBatch true, so an AvailableNow
-        // query with pending session timeouts never self-terminates
-        // (see sessionizeStream scaladoc)
-        (() => withStatePartitions(sp) { val q = writer.start()
-          require(graft.streaming.EventPipeline.drainAndStop(q, 600000L),
-            "stream did not drain") }, n)
-      }, streaming = true),
-      Scenario("sessionize_eventtime_stream", sp => {
-        // the q114 operator (EventTimeTimeout + gap-merge late-data
-        // handling) at sessionize_stateful_stream's 5M-event shape
-        // (round-12 verdict ask #4b): same O(users) open-session state
-        // crossing micro-batch boundaries, but closure is
-        // WATERMARK-driven — deterministic emissions and native
-        // AvailableNow self-termination (shouldRunAnotherBatch follows
-        // watermark advance; no drain helper), which is exactly the
-        // deployment difference this row measures against its
-        // processing-time sibling above.
+        // scan-bound. Closure is WATERMARK-driven, so the bounded run
+        // stops by itself (shouldRunAnotherBatch follows watermark
+        // advance).
         val n = s(5000000)
         val (dir, ckpt, files) = stageTimeSlicedEvents(sp, n)
         val writer = graft.streaming.EventPipeline
@@ -703,7 +671,7 @@ object Stress {
         // watermark-evict) — this measures that churn, the honest cost
         // of stream-stream joins, plus the ~50k-error × ±1s pair
         // output. Termination is native AvailableNow (watermark-only
-        // state; no ProcessingTimeTimeout, so no drain helper needed).
+        // state).
         val n = s(5000000)
         val (dir, ckpt, files) = stageTimeSlicedEvents(sp, n)
         val writer = graft.streaming.EventPipeline.proximityJoinStream(
@@ -1428,8 +1396,8 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val scale = Sessions.envDouble("SPARK_GRAFT_STRESS_SCALE", 1.0)
     val cpus = Sessions.cores(32)
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Sessions.envNames("SPARK_GRAFT_STRESS_ONLY",
+      scenarios(scale).map(_.name))
     // Shuffle partitioning at stress scale follows the sizing rule the
     // 100 TB notes prescribe (SCALE.md): pick partition counts so
     // per-partition aggregate state fits task memory — 4× the core

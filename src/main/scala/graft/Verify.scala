@@ -5,12 +5,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Sessions.querySuite(Sessions.cores(4), "WARN")
-    new java.io.File(outDir).mkdirs()
     // optional focused dump for iteration (tools/check.py takes the
     // same comma-separated list as its third argument)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Sessions.envNames("SPARK_GRAFT_VERIFY_ONLY", SparkEntry.queries.keys)
+    val spark = Sessions.querySuite(Sessions.cores(4), "WARN")
+    new java.io.File(outDir).mkdirs()
     // Declared-query completeness: a query that THROWS must still leave
     // a per-query trace, or it silently vanishes from the correctness
     // report (round 8: 3 analysis-time failures made "99 rows" read as

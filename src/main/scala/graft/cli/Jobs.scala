@@ -440,11 +440,8 @@ object Jobs {
   }
 
   /** Read a UTF-8 text artifact [[writeText]] wrote. */
-  private def readText(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
+  private def readText(spark: SparkSession, path: String): String =
+    new String(Sources.readFile(path, spark.sparkContext.hadoopConfiguration), "UTF-8")
 
   /** TOKENIZER-TRAINING job — learns `--n-merges` BPE merges from the
     * corpus ([[graft.operators.BpeTrain.trainMerges]], q130) and writes

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -11,6 +10,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.sources.Sources
 
 /** Byte-pair-encoding tokenizer over the public GPT-2 artifact format
   * (`vocab.json` token→id + `merges.txt` one ranked "a b" pair per
@@ -116,15 +116,17 @@ object Bpe {
     * (flat {"token": id, …}) + `merges.txt` (one "a b" per line, rank
     * = line order; a leading `#version` header line is skipped, the
     * huggingface flavor). `<unk>`'s id (0 if absent) is the
-    * out-of-vocab fallback. */
+    * out-of-vocab fallback. Both files open through their path's
+    * Hadoop FileSystem (a local path, a `file:` URI or a cluster
+    * path). */
   def load(vocabPath: String, mergesPath: String): BpeModel = {
     val vocab = new java.util.HashMap[String, Integer]()
-    parseFlatJson(new String(
-      Files.readAllBytes(Paths.get(vocabPath)), StandardCharsets.UTF_8))
+    parseVocab(vocabPath)
       .foreach { case (k, v) => vocab.put(k, Integer.valueOf(v)) }
     val ranks = new java.util.HashMap[String, Integer]()
     var rank = 0
-    Files.readAllLines(Paths.get(mergesPath)).forEach { line =>
+    new String(Sources.readFile(mergesPath), StandardCharsets.UTF_8)
+        .lines().forEach { line =>
       val t = line.trim
       if (t.nonEmpty && !t.startsWith("#")) {
         ranks.put(t, Integer.valueOf(rank)); rank += 1
@@ -173,8 +175,7 @@ object Bpe {
 
   /** The vocab.json pairs in file order (oracle-construction helper). */
   def parseVocab(path: String): Seq[(String, Int)] =
-    parseFlatJson(new String(
-      Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8))
+    parseFlatJson(new String(Sources.readFile(path), StandardCharsets.UTF_8))
 
   /** `bpe_tokenize(text)` → array<int> of the text's BPE token ids. */
   def bpe_tokenize(text: Column, model: BpeModel): Column =

@@ -177,12 +177,6 @@ object Multimodal {
     }
   }
 
-  /** Column-level metadata decode (no UDF — pure projections over the
-    * binary payload; stays inside whole-stage codegen). */
-  def decodeMeta(bytes: Column): Column = struct(
-    length(bytes).as("byte_len"),
-    portable_hash(bytes).as("checksum"))
-
   /** Signature width of [[perceptualHash]]: 60 bits — not the
     * classic 64 — so the packed value stays strictly positive in any
     * engine with signed-64 integers (2^63 overflows DuckDB's BIGINT

@@ -223,9 +223,7 @@ object NetcdfClassic {
     * a `file:` URI or a cluster path), with the active session's Hadoop
     * configuration when there is one. */
   def readHeader(path: String): Header = {
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration).getOrElse(new Configuration())
-    val in = open(path, conf)
+    val in = open(path, graft.sources.Sources.hadoopConf)
     try readHeader(in) finally in.close()
   }
 

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -30,6 +29,8 @@ import org.apache.spark.sql.types._
 object Shapefile {
 
   /** Read `path` (.shp) + sibling .dbf into (attrs..., geometry WKB).
+    * All three files open through the path's Hadoop FileSystem, so
+    * `path` may be a local path, a `file:` URI or a cluster path.
     *
     * CRS CONTRACT: output coordinates are geographic lon/lat matching
     * the grid. The reference reprojects features to the grid CRS
@@ -45,13 +46,14 @@ object Shapefile {
     * back to the documented fixture contract (coordinates assumed
     * grid lon/lat). */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val transform = crsInverse(path)
-    val geoms = parseShp(Files.readAllBytes(Paths.get(path)), transform)
-    val dbfPath = Paths.get(path.replaceAll("(?i)\\.shp$", ".dbf"))
-    val (fields, records) =
-      if (Files.exists(dbfPath)) parseDbf(Files.readAllBytes(dbfPath))
-      else (Seq(StructField("fid", LongType)),
-        geoms.indices.map(i => Seq[Any]((i + 1).toLong)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    def sibling(ext: String) =
+      Sources.fileBytes(path.replaceAll("(?i)\\.shp$", ext), conf)
+    val transform = crsInverse(path, sibling(".prj"))
+    val geoms = parseShp(Sources.readFile(path, conf), transform)
+    val (fields, records) = sibling(".dbf").map(parseDbf).getOrElse(
+      (Seq(StructField("fid", LongType)),
+        geoms.indices.map(i => Seq[Any]((i + 1).toLong))))
     require(records.length == geoms.length,
       s"shapefile mismatch: ${geoms.length} shapes vs ${records.length} dbf records")
     val schema = StructType(fields :+ StructField("geometry", BinaryType))
@@ -70,33 +72,29 @@ object Shapefile {
     * Datum shifts stay out of scope in BOTH directions — sub-degree
     * datum differences are the reference's tolerance too (it feeds
     * any geographic CRS straight to the same bbox math). */
-  private def crsInverse(
-      path: String): Option[(Double, Double) => (Double, Double)] = {
-    val prj = Paths.get(path.replaceAll("(?i)\\.shp$", ".prj"))
-    if (!Files.exists(prj)) None
-    else {
-      // UTF-8, not US-ASCII: Windows GIS tools commonly write the .prj
-      // with a UTF-8 BOM, which ASCII decoding mangles into replacement
-      // chars that takeWhile would keep and misclassify. Decode UTF-8
-      // and drop anything before the first WKT keyword letter.
-      val wkt = new String(Files.readAllBytes(prj), "UTF-8")
-        .dropWhile(c => !c.isLetter).trim
-      val kind = wkt.takeWhile(c => c.isLetter || c == '_').toUpperCase
-      kind match {
-        case "GEOGCS" | "GEOGCRS" | "GEODCRS" => None // geographic lon/lat
-        case "PROJCS" | "PROJCRS" =>
-          try Some(CrsTransform.fromProjcsWkt(wkt).inverse)
-          catch { case e: IllegalArgumentException =>
-            throw new IllegalArgumentException(
-              s"shapefile $path declares a PROJECTED CRS its reader " +
-                s"cannot invert (${wkt.take(60)}...): ${e.getMessage} — " +
-                "reproject upstream (e.g. ogr2ogr -t_srs) before ingestion")
-          }
-        case other => throw new IllegalArgumentException(
-          s"shapefile $path has an unrecognized .prj CRS kind '$other' " +
-            s"(${wkt.take(60)}...): expected a geographic CRS " +
-            "(GEOGCS/GEOGCRS) matching the grid, or a supported PROJCS")
-      }
+  private def crsInverse(path: String, prj: Option[Array[Byte]])
+      : Option[(Double, Double) => (Double, Double)] = prj.flatMap { bytes =>
+    // UTF-8, not US-ASCII: Windows GIS tools commonly write the .prj
+    // with a UTF-8 BOM, which ASCII decoding mangles into replacement
+    // chars that takeWhile would keep and misclassify. Decode UTF-8
+    // and drop anything before the first WKT keyword letter.
+    val wkt = new String(bytes, "UTF-8")
+      .dropWhile(c => !c.isLetter).trim
+    val kind = wkt.takeWhile(c => c.isLetter || c == '_').toUpperCase
+    kind match {
+      case "GEOGCS" | "GEOGCRS" | "GEODCRS" => None // geographic lon/lat
+      case "PROJCS" | "PROJCRS" =>
+        try Some(CrsTransform.fromProjcsWkt(wkt).inverse)
+        catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(
+            s"shapefile $path declares a PROJECTED CRS its reader " +
+              s"cannot invert (${wkt.take(60)}...): ${e.getMessage} — " +
+              "reproject upstream (e.g. ogr2ogr -t_srs) before ingestion")
+        }
+      case other => throw new IllegalArgumentException(
+        s"shapefile $path has an unrecognized .prj CRS kind '$other' " +
+          s"(${wkt.take(60)}...): expected a geographic CRS " +
+          "(GEOGCS/GEOGCRS) matching the grid, or a supported PROJCS")
     }
   }
 

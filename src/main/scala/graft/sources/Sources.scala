@@ -32,6 +32,33 @@ object Sources {
       col("wght").cast(DoubleType).as("wght"))
   }
 
+  /** The Hadoop configuration of the active (else the default) session,
+    * or a fresh one outside Spark. */
+  def hadoopConf: org.apache.hadoop.conf.Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
+  /** The bytes of the driver-side file at `path` (a local path, a
+    * `file:` URI or a cluster path), read through its path's Hadoop
+    * FileSystem; None when there is no file there. */
+  def fileBytes(path: String,
+      conf: org.apache.hadoop.conf.Configuration = hadoopConf): Option[Array[Byte]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(in.readAllBytes()) finally in.close()
+    }
+  }
+
+  /** [[fileBytes]] of a file that must exist. */
+  def readFile(path: String,
+      conf: org.apache.hadoop.conf.Configuration = hadoopConf): Array[Byte] =
+    fileBytes(path, conf).getOrElse(
+      throw new java.io.FileNotFoundException(s"$path: no such file"))
+
   /** The column names of a headed, comma-separated CSV file (of the
     * first data file, for a directory or glob), read on the driver: the
     * header is one line, and letting Spark infer it runs a job and
@@ -78,10 +105,8 @@ object Sources {
     * reference's positional ordering. The file opens through its path's
     * Hadoop FileSystem (a local path, a `file:` URI or a cluster path). */
   def prmsElevations(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
+    val lines = new String(readFile(path, spark.sparkContext.hadoopConfiguration),
+      "UTF-8").linesIterator.toVector
     val start = lines.indexWhere(_.trim == "hru_elev")
     require(start >= 0, s"no hru_elev section in $path")
     val body = lines.drop(start + 1 + 4) // marker + 4 header lines

@@ -255,20 +255,6 @@ object EventPipeline extends Serializable {
       .trigger(Trigger.AvailableNow())
   }
 
-  /** Batch-equivalent of [[clickViewJoinStream]] (the oracle form). */
-  def clickViewJoinBatch(events0: DataFrame, beforeMinutes: Int = 30): DataFrame = {
-    val events = graft.functions.EventTime.normalize(events0, "ts")
-    events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"), col("ts").as("click_ts"))
-      .join(events.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"), col("ts").as("view_ts")),
-        "user_id")
-      .filter(col("view_ts") <= col("click_ts") &&
-        col("view_ts") >= col("click_ts") - expr(s"INTERVAL $beforeMinutes MINUTES"))
-      .select(col("user_id"), col("click_id"), col("click_ts"),
-        col("view_id"), col("view_ts"))
-  }
-
   /** STREAMING unkeyed proximity join — the Structured-Streaming form
     * of [[graft.operators.RangeJoin.proximityJoin]] (the q47 shape):
     * every event of `leftType` pairs with every event at most
@@ -323,17 +309,6 @@ object EventPipeline extends Serializable {
       .trigger(Trigger.AvailableNow())
   }
 
-  /** Batch reference for [[proximityJoinStream]] (spec parity): the
-    * RangeJoin operator over the same leg split, aligned columns. */
-  def proximityBatchReference(
-      events: DataFrame, leftType: String, radiusUs: Long): DataFrame =
-    graft.operators.RangeJoin.proximityJoin(
-        events.filter(col("event_type") === leftType)
-          .select(col("event_id").as("l_id"), col("ts").as("l_ts")),
-        events.select(col("event_id").as("r_id"), col("ts").as("r_ts"),
-          col("value").as("r_value")),
-        "l_ts", "r_ts", radiusUs, rightPrefix = "")
-
   /** Exact microseconds of a Timestamp. `getTime` alone is MILLISECOND
     * precision — sorting or differencing on it silently collapses
     * sub-millisecond event order (the events table carries
@@ -368,8 +343,8 @@ object EventPipeline extends Serializable {
     * timestamp. Identical tie semantics to the batch operator: rights
     * sort before lefts at equal ts, greatest right id wins a right-ts
     * tie. Within-batch order is enforced by sorting; cross-batch order
-    * is the source's responsibility (same contract as
-    * [[sessionizeStateful]]). */
+    * is the source's responsibility (file streams deliver in file
+    * order). */
   def asofStateful(events: Dataset[Tagged]): Dataset[AsofOut] = {
     implicit val oe = Encoders.product[AsofOut]
     implicit val se = Encoders.product[LastRight]
@@ -417,20 +392,6 @@ object EventPipeline extends Serializable {
       .trigger(Trigger.AvailableNow())
   }
 
-  /** Batch reference for [[asofStream]] (spec parity): the AsofJoin
-    * operator over the same click/view split, aligned to [[AsofOut]]'s
-    * column set. */
-  def asofBatchReference(events0: DataFrame): DataFrame = {
-    val events = graft.functions.EventTime.normalize(events0, "ts")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id").as("r_event_id"),
-        col("ts").as("r_ts"), col("value").as("r_value"))
-    graft.operators.AsofJoin.asofBackward(clicks, views, Seq("user_id"),
-      "ts", "r_ts", tieBreak = "r_event_id", rightPrefix = "")
-  }
-
   /** Input/accumulator/output rows for the stateful streaming form. */
   final case class Ev(user_id: Long, ts: java.sql.Timestamp, event_id: Long, value: Double)
   final case class SessState(
@@ -457,159 +418,24 @@ object EventPipeline extends Serializable {
       .longValueExact()
 
   /** Streaming sessionization with CUSTOM STATE — the
-    * `flatMapGroupsWithState` form of [[sessionize]]: per-user state
-    * holds the open session; a processing-time timeout flushes sessions
-    * whose gap has passed. Produces identical sessions to the batch form
-    * when each user's events arrive in order (the memory-sink test feeds
-    * one sorted batch).
+    * `flatMapGroupsWithState` form of [[sessionize]], with the same
+    * session content and numbering. State size is O(users), not
+    * O(events): the aggregate (start, count, sum) is folded
+    * incrementally, which is what lets this run indefinitely on an
+    * unbounded stream where the batch window-sort cannot. Sessions
+    * close on EVENT time, never on a wall clock:
     *
-    * State size is O(users), not O(events) — the aggregate (start, count,
-    * sum) is folded incrementally, which is what lets this run
-    * indefinitely on an unbounded stream where the batch window-sort
-    * cannot. */
-  def sessionizeStateful(
-      events: Dataset[Ev], gapMinutes: Int): Dataset[Session] = {
-    val gapUs = gapMinutes.toLong * 60L * 1000000L
-    implicit val se = Encoders.product[Session]
-    implicit val ste = Encoders.product[SessState]
-    def emit(userId: Long, s: SessState): Session = emitSession(userId, s)
-    def micros(v: Double): Long = valueMicros(v)
-    events
-      .groupByKey(_.user_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout())(
-        (userId: Long, it: Iterator[Ev], state: GroupState[SessState]) => {
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(emit(userId, _))
-            state.remove()
-            out.iterator
-          } else {
-            // fold this batch's events into the single open session;
-            // sort within the batch (cross-batch order is the source's
-            // responsibility — file streams deliver in file order)
-            // full-µs key: getTime is ms-precision and would both
-            // misorder sub-ms events and misjudge exact-gap boundaries
-            val sorted = it.toVector.sortBy(e => (tsMicros(e.ts), e.event_id))
-            var open = state.getOption
-            val closed = Vector.newBuilder[SessState]
-            sorted.foreach { e =>
-              val us = tsMicros(e.ts)
-              open match {
-                case Some(cur) if us - cur.lastUs <= gapUs =>
-                  open = Some(cur.copy(lastUs = us, n = cur.n + 1,
-                    sumMicros = cur.sumMicros + micros(e.value)))
-                case Some(cur) =>
-                  closed += cur
-                  open = Some(SessState(cur.sessId + 1, us, us, 1, micros(e.value)))
-                case None =>
-                  open = Some(SessState(1, us, us, 1, micros(e.value)))
-              }
-            }
-            open.foreach(state.update)
-            state.setTimeoutDuration(s"$gapMinutes minutes")
-            closed.result().iterator.map(emit(userId, _))
-          }
-        })
-  }
-
-  /** [[sessionizeStateful]] over a bounded parquet stream (AvailableNow).
-    * Emits CLOSED sessions (append mode); sessions still open when the
-    * bounded stream ends stay in state — on an unbounded stream the
-    * processing-time timeout flushes them after the gap elapses.
-    *
-    * Termination caveat: with ProcessingTimeTimeout state pending,
-    * `FlatMapGroupsWithStateExec.shouldRunAnotherBatch` is always true,
-    * so even under Trigger.AvailableNow the query keeps running empty
-    * timeout-check batches after the source drains and NEVER
-    * self-terminates — and because every trigger still constructs a
-    * batch, `processAllAvailable()` never sees its no-new-data signal
-    * and hangs too. Drive bounded runs with [[drainAndStop]]. */
-  /** Run a bounded stateful stream to exhaustion and stop it. A
-    * ProcessingTimeTimeout query ([[sessionizeStream]]) never
-    * self-terminates and never signals `processAllAvailable` (see the
-    * scaladoc there), so "done" must be read from progress telemetry.
-    *
-    * "Drained" means the SOURCE is exhausted, not merely "some batch
-    * had zero input". The round-10 test (`recentProgress.exists` of
-    * any `batchId > 0` zero-input entry) was racy: after a checkpoint
-    * restart, the WAL-replayed batch can itself be a zero-input
-    * timeout batch with `batchId > 0` — observed BEFORE the restarted
-    * query has even listed the directory for the new files — so
-    * `stop()` could interrupt the following data batch's sink write
-    * mid-commit (the 315/316 flake). Comparing `endOffset` to
-    * `latestOffset` doesn't work either: the v1 FileStreamSource
-    * reports `latestOffset = null` in every progress entry (verified
-    * empirically — the field is only populated for DSv2 sources).
-    *
-    * The sound signal is TWO zero-input progress entries with
-    * increasing batchIds. The replayed batch re-executes offsets
-    * planned pre-crash without listing the source, but at most ONE
-    * batch replays, and every batch with a higher id is freshly
-    * planned — its trigger re-listed the directory and found nothing
-    * new, and batches are sequential, so every data batch before it
-    * has committed. A data batch between the two observations resets
-    * the count, so the pair can never straddle undelivered input.
-    *
-    * Returns true only if the stream drained inside `timeoutMs`,
-    * observed BEFORE stopping: either the two-empty-batch condition
-    * held, or the query self-terminated cleanly (an AvailableNow query
-    * with no pending timeout state stops itself exactly when the
-    * source is exhausted). Liveness must be read before `q.stop()` —
-    * stop blocks until termination, so `!q.isActive` afterwards is a
-    * tautology, not evidence. A query that died on an exception
-    * surfaces it here rather than reading as drained. */
-  def drainAndStop(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      timeoutMs: Long = 120000L): Boolean = {
-    val t0 = System.currentTimeMillis()
-    var drained = false
-    var selfFinished = false
-    var firstEmptyBatch = -1L
-    while (!drained && !selfFinished &&
-        System.currentTimeMillis() - t0 < timeoutMs) {
-      val p = q.lastProgress
-      if (p != null) {
-        if (p.numInputRows == 0) {
-          if (firstEmptyBatch < 0) firstEmptyBatch = p.batchId
-          else if (p.batchId > firstEmptyBatch) drained = true
-        } else firstEmptyBatch = -1L // data batch: restart the pair
-      }
-      selfFinished = !q.isActive
-      if (!drained && !selfFinished) Thread.sleep(50)
-    }
-    q.exception.foreach(e => throw e)
-    // stop between batches, inside the same timeout: stopping a no-data
-    // batch mid-way interrupts its state-store commit, which logs
-    // CANNOT_WRITE_STATE_STORE errors. The gap between batches is the
-    // source's polling delay (~10 ms), so a 1 ms poll catches it
-    // without taking a core from the batch it waits on.
-    while (q.isActive && q.status.isTriggerActive &&
-        System.currentTimeMillis() - t0 < timeoutMs) Thread.sleep(1)
-    q.stop()
-    drained || selfFinished
-  }
-
-  /** EVENT-TIME-timeout sessionization — the deterministic form of
-    * [[sessionizeStateful]] (round-11 verdict ask #2): sessions close
-    * when the WATERMARK passes last-event + gap, not when a
-    * wall clock does. Identical session content/numbering; what
-    * changes is the CLOSE signal:
-    *
-    *  - a later same-user event beyond the gap still closes the
-    *    previous session immediately (the gap split — deterministic in
-    *    both variants);
+    *  - a later same-user event beyond the gap closes the previous
+    *    session immediately (the gap split);
     *  - a session with NO successor closes via
     *    `GroupStateTimeout.EventTimeTimeout` when the watermark
     *    (ms-floored global event-time max − delay) passes
     *    `floor(last_us/1000) + gap` — a pure function of the DATA, so
     *    bounded runs emit a deterministic, oracle-checkable session
-    *    set (q114) and self-terminate under Trigger.AvailableNow with
-    *    no [[drainAndStop]] helper: `shouldRunAnotherBatch` is true
-    *    only while the watermark advances, unlike the processing-time
-    *    variant's always-true. Keep [[sessionizeStateful]] for
-    *    wall-clock use cases (close idle sessions even when the event
-    *    stream stalls — an event-time watermark cannot advance without
-    *    new events).
+    *    set (q114) and self-terminate under Trigger.AvailableNow:
+    *    `shouldRunAnotherBatch` is true only while the watermark
+    *    advances. The price: a session of a stalled stream stays open
+    *    until new events move the watermark.
     *
     * State: one [[SessState]] per user, O(users). After a timeout
     * emission the state is kept as a TOMBSTONE (`n = 0`, no timeout
@@ -728,10 +554,10 @@ object EventPipeline extends Serializable {
 
   /** [[sessionizeStatefulEventTime]] over a bounded parquet stream:
     * watermark on `ts` (the delay that defines the close boundary),
-    * Append output, AvailableNow — and unlike [[sessionizeStream]] the
-    * bounded run SELF-TERMINATES (plain `awaitTermination`, no drain
-    * helper), because the only pending-timeout condition is watermark
-    * advancement, which stops when the source drains. */
+    * Append output, AvailableNow. The bounded run SELF-TERMINATES
+    * (plain `awaitTermination`), because the only pending-timeout
+    * condition is watermark advancement, which stops when the source
+    * drains. */
   def sessionizeEventTimeStream(
       spark: SparkSession, sourceDir: String,
       gapMinutes: Int, delay: String = "1 hour",
@@ -742,18 +568,6 @@ object EventPipeline extends Serializable {
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[Ev]
     sessionizeStatefulEventTime(events, gapMinutes)
-      .writeStream.outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-  }
-
-  def sessionizeStream(
-      spark: SparkSession, sourceDir: String,
-      gapMinutes: Int): DataStreamWriter[Session] = {
-    implicit val ee = Encoders.product[Ev]
-    val events = streamSource(spark, sourceDir, "ts")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      .as[Ev]
-    sessionizeStateful(events, gapMinutes)
       .writeStream.outputMode(OutputMode.Append())
       .trigger(Trigger.AvailableNow())
   }

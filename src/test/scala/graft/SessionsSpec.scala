@@ -57,6 +57,27 @@ class SessionsSpec extends AnyFunSuite {
       Map("SPARK_GRAFT_STRESS_SCALE" -> "0.25")) == 0.25)
   }
 
+  test("env reader: a name list with an unknown or no entry fails, naming it") {
+    val known = Seq("q01_a", "q02_b", "q03_c")
+    val v = "SPARK_GRAFT_VERIFY_ONLY"
+    assert(Sessions.envNames(v, known, Map.empty).isEmpty)
+    assert(Sessions.envNames(v, known, Map(v -> " q02_b, q01_a ,")) ==
+      Some(Set("q01_a", "q02_b")))
+    val e = intercept[IllegalArgumentException](
+      Sessions.envNames(v, known, Map(v -> "q01_a,q9_gone,q8_gone")))
+    assert(e.getMessage.contains(v) && e.getMessage.contains("q8_gone, q9_gone"))
+    assert(!e.getMessage.contains("q01_a"))
+    val none = intercept[IllegalArgumentException](
+      Sessions.envNames(v, known, Map(v -> " , ")))
+    assert(none.getMessage.contains(v))
+    // the stress runner's real scenario list: a retired row name fails
+    val stress = Stress.scenarios(0.0005).map(_.name)
+    assert(intercept[IllegalArgumentException](Sessions.envNames(
+      "SPARK_GRAFT_STRESS_ONLY", stress, Map("SPARK_GRAFT_STRESS_ONLY" ->
+        "sessionize_eventtime_stream,sessionize_stateful_stream")))
+      .getMessage.contains("sessionize_stateful_stream"))
+  }
+
   test("env reader: 0 cores is rejected") {
     val e = intercept[IllegalArgumentException](
       Sessions.cores(4, Map("SPARK_GRAFT_CPUS" -> "0")))

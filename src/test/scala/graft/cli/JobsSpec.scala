@@ -97,8 +97,11 @@ class JobsSpec extends SparkSpec {
     assert(attrs.contains("CF-1.8") && attrs.contains("degree_Celsius"))
   }
 
-  test("gridmet-etl job: .shp target suffix-dispatches through the shapefile reader") {
-    val dir = Staging.scratchDir("graft-job-shp").toString
+  /** A gridMET run whose `--target-file` is a `.shp` (with its `.dbf`
+    * and a geographic `.prj`), given as a plain path or a `file:` URI;
+    * returns the contract output. */
+  private def gridmetShp(dirName: String, uri: Boolean) = {
+    val dir = Staging.scratchDir(dirName).toString
     val t1 = Timestamp.valueOf("2021-01-01 00:00:00")
     (for { i <- 0 to 1; j <- 0 to 1 } yield
       (t1, j, i, 40.0 + j, -100.0 + i, 285.0 + i, 275.0 + i, 1.0, 80.0, 40.0, 3.0))
@@ -109,17 +112,30 @@ class JobsSpec extends SparkSpec {
     val shpPath = graft.sources.ShpTestData.write(dir, "feats", Seq(
       1L -> Seq(Seq((-100.0, 40.0), (-100.0, 41.0), (-99.0, 41.0),
         (-99.0, 40.0), (-100.0, 40.0)))))
+    Files.writeString(java.nio.file.Paths.get(dir, "feats.prj"),
+      """GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137,298.257223563]]]""")
     Files.writeString(java.nio.file.Paths.get(dir, "w.csv"),
       "nhru_v1_1,i,j,wght\n1,0,0,0.5\n1,1,0,0.5\n")
+    val target =
+      if (uri) java.nio.file.Paths.get(shpPath).toUri.toString else shpPath
     val a = Jobs.parseArgs(Seq(
       "--start-date", "2021-01-01", "--end-date", "2021-01-01",
-      "--grid-path", s"$dir/grid", "--target-file", shpPath,
+      "--grid-path", s"$dir/grid", "--target-file", target,
       "--weights-file", s"$dir/w.csv", "--fid", "nhru_v1_1",
       "--output-path", s"$dir/out"))
-    val path = Jobs.runGridmet(spark, a)
-    val out = spark.read.parquet(path)
+    spark.read.parquet(Jobs.runGridmet(spark, a))
+  }
+
+  test("gridmet-etl job: .shp target suffix-dispatches through the shapefile reader") {
+    val out = gridmetShp("graft-job-shp", uri = false)
     assert(out.columns.toSet ==
       Set("nhru", "time", "tmax", "tmin", "prcp", "rhmax", "rhmin", "ws", "humidity"))
+    assert(approx(out.select("tmax").as[Double].head(), 285.5 - 273.15))
+  }
+
+  test("gridmet-etl reads a file: URI .shp --target-file") {
+    val out = gridmetShp("graft-job-shp-uri", uri = true)
+    assert(out.select("nhru").as[Long].collect().toSeq == Seq(1L))
     assert(approx(out.select("tmax").as[Double].head(), 285.5 - 273.15))
   }
 
@@ -686,6 +702,31 @@ class JobsSpec extends SparkSpec {
     val entries = graft.functions.Bpe.parseVocab(s"$dir/model/vocab.json")
     assert(entries.map(_._1).distinct.length === entries.length)
     assert(entries.map(_._2).sorted === entries.indices.toList)
+  }
+
+  test("pack-tokens reads file: URI --bpe-vocab/--bpe-merges") {
+    val dir = Staging.scratchDir("graft-bpe-uri")
+    val docs = Seq((1L, "low lower newest widest"), (2L, "newest low"))
+      .toDF("doc_id", "text")
+    docs.write.parquet(s"$dir/docs")
+    def uri(name: String) = {
+      Files.copy(java.nio.file.Paths.get("data", name), dir.resolve(name))
+      dir.resolve(name).toUri.toString
+    }
+    val (vocab, merges) = (uri("bpe_vocab.json"), uri("bpe_merges.txt"))
+    assert(vocab.startsWith("file:") && merges.startsWith("file:"))
+    val out = Jobs.runPackTokens(spark, Jobs.parseArgs(Seq(
+      "--input-path", s"$dir/docs", "--output-path", s"$dir/shards",
+      "--context-len", "4", "--n-shards", "2",
+      "--bpe-vocab", vocab, "--bpe-merges", merges)))
+    // the shards carry exactly the ids of the model loaded from plain
+    // paths
+    val model = graft.functions.Bpe.load("data/bpe_vocab.json", "data/bpe_merges.txt")
+    def ids(df: org.apache.spark.sql.DataFrame) = df.as[Seq[Int]].collect().toSeq.flatten.sorted
+    assert(ids(gtok(out).select("token_ids")) ==
+      ids(docs.select(graft.functions.Bpe.bpe_tokenize(col("text"), model))))
+    assert(graft.functions.Bpe.parseVocab(vocab) ==
+      graft.functions.Bpe.parseVocab("data/bpe_vocab.json"))
   }
 
   test("curate job: html extraction -> canonical-URL dedup -> gopher gate") {

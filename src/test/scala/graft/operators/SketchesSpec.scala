@@ -115,7 +115,7 @@ class SketchesSpec extends SparkSpec {
       .writeStream.outputMode("complete")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .format("memory").queryName("cms_stream").start()
-    q.awaitTermination(60000); q.stop()
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate"); q.stop()
     val streamed = rows(spark.table("cms_stream"))
     val batch = rows(Sketches.cmsSketch(
       spark.read.parquet(dir), col("key"), depth = 4, width = 8))

@@ -24,8 +24,10 @@ import graft.sources.Staging
   *   - TIMESTAMP(MICROS, isAdjustedToUTC=true)  → TimestampType,
   *
   * — and pins that sessionize / proximity join / event deltas /
-  * tumbling counts (the q24/q47/q70/q23 shapes) and the stateful
-  * streaming sessionizer produce IDENTICAL results on each. */
+  * tumbling counts (the q24/q47/q70/q23 shapes) produce IDENTICAL
+  * results on each, and that the streaming proximity join and the
+  * stateful streaming sessionizer match their batch forms on an NTZ
+  * source. */
 class EventEncodingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -161,30 +163,31 @@ class EventEncodingSpec extends SparkSpec {
     val q = EventPipeline.proximityJoinStream(spark, dir, "error", radius)
       .option("checkpointLocation", checkpoint)
       .format("memory").queryName("prox_stream").start()
-    q.awaitTermination(60000); q.stop()
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate"); q.stop()
     def canon(df: DataFrame) = rows(df.select(
       col("l_id"), unix_micros(col("l_ts")),
       col("r_id"), unix_micros(col("r_ts")), col("r_value")))
     val streamed = canon(spark.table("prox_stream"))
-    val batch = canon(EventPipeline.proximityBatchReference(
+    val batch = canon(StreamReferences.proximityJoin(
       spark.read.parquet(dir), "error", radius))
     assert(streamed == batch)
     assert(streamed.exists(r => r(0) != r(2))) // at least one non-self pair
   }
 
-  test("stateful streaming sessionization runs on an NTZ-encoded source (batch parity)") {
+  test("event-time sessionization runs on an NTZ source (batch parity)") {
     val checkpoint = Staging.scratchDir("ev_enc_ckpt").toString
-    val q = EventPipeline.sessionizeStream(spark, dirs("ntz"), gapMinutes = 30)
+    val q = EventPipeline.sessionizeEventTimeStream(spark, dirs("ntz"),
+        gapMinutes = 30, delay = "1 hour")
       .option("checkpointLocation", checkpoint)
       .format("memory").queryName("enc_ntz_sessions").start()
-    // AvailableNow terminates on its own; processAllAvailable would
-    // park forever on the already-terminated query
-    q.awaitTermination(60000); q.stop()
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
+    q.stop()
     val streamed = rows(spark.table("enc_ntz_sessions")
       .select(col("user_id"), col("sess_id"),
         unix_micros(col("session_start")), col("n_events"), col("sum_value")))
-    // append mode emits CLOSED sessions only; batch closed = all but the
-    // last session of each user
+    // append mode emits CLOSED sessions only. The final watermark
+    // (max ts − 1 h) passes no user's last session end, so batch closed
+    // = all but the last session of each user
     val batchAll = EventPipeline.sessionize(read("ntz"), gapMinutes = 30)
     val lastPerUser = Window.partitionBy(col("user_id"))
     val batchClosed = rows(batchAll

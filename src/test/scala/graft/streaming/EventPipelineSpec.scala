@@ -37,35 +37,6 @@ class EventPipelineSpec extends SparkSpec {
     assert(n == 1)
   }
 
-  test("stateful streaming sessionization (flatMapGroupsWithState) == batch closed sessions") {
-    // sentinel far-future events force every real session closed before
-    // the bounded stream ends (append mode emits closed sessions only)
-    val ev = Seq(
-      (1L, ts("2021-01-01 10:00:00"), 1L, 1.5),
-      (1L, ts("2021-01-01 10:10:00"), 2L, 2.25),
-      (1L, ts("2021-01-01 11:00:00"), 3L, 4.0),
-      (2L, ts("2021-01-01 10:05:00"), 4L, 8.0),
-      (1L, ts("2031-01-01 00:00:00"), 98L, 0.0),  // sentinels
-      (2L, ts("2031-01-01 00:00:00"), 99L, 0.0)
-    ).toDF("user_id", "ts", "event_id", "value")
-    val dir = Staging.scratchDir("graft-sess").toString
-    ev.write.mode("overwrite").parquet(dir)
-
-    val q = EventPipeline.sessionizeStream(spark, dir, gapMinutes = 30)
-      .format("memory").queryName("sess_test").start()
-    // drainAndStop, NOT awaitTermination/processAllAvailable:
-    // ProcessingTimeTimeout state keeps shouldRunAnotherBatch true, so
-    // an AvailableNow query never self-terminates and never raises the
-    // no-new-data signal processAllAvailable waits on
-    assert(EventPipeline.drainAndStop(q))
-
-    val streamed = rows(spark.table("sess_test"))
-    val batch = rows(EventPipeline.sessionize(spark.read.parquet(dir), gapMinutes = 30)
-      .filter($"session_start" < ts("2030-01-01 00:00:00"))) // drop sentinel sessions
-    assert(streamed == batch)
-    assert(streamed.size == 3)
-  }
-
   test("streaming session_window == batch form; exact-gap boundary MERGES") {
     val ev = Seq(
       (1L, ts("2021-01-01 10:00:00"), 1L, 1.0),
@@ -79,7 +50,7 @@ class EventPipelineSpec extends SparkSpec {
 
     val q = EventPipeline.sessionWindowsStream(spark, dir, gapMinutes = 30)
       .format("memory").queryName("sw_test").start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
     q.stop()
 
     val streamed = rows(spark.table("sw_test"))
@@ -104,7 +75,7 @@ class EventPipelineSpec extends SparkSpec {
 
     val q = EventPipeline.tumblingCountsStream(spark, dir)
       .format("memory").queryName("tumbling_test").start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
     q.stop()
 
     val streamed = rows(spark.table("tumbling_test"))
@@ -128,11 +99,11 @@ class EventPipelineSpec extends SparkSpec {
 
     val q = EventPipeline.clickViewJoinStream(spark, dir, beforeMinutes = 30)
       .format("memory").queryName("ssj_test").start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
     q.stop()
 
     val streamed = rows(spark.table("ssj_test"))
-    val batch = rows(EventPipeline.clickViewJoinBatch(
+    val batch = rows(StreamReferences.clickViewJoin(
       spark.read.parquet(dir), beforeMinutes = 30))
     assert(streamed == batch)
     assert(streamed.map(r => (r(1), r(3))) === Set((11L, 10L), (22L, 21L)))
@@ -151,11 +122,11 @@ class EventPipelineSpec extends SparkSpec {
 
     val q = EventPipeline.asofStream(spark, dir)
       .format("memory").queryName("asof_test").start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
     q.stop()
 
     val streamed = rows(spark.table("asof_test"))
-    val batch = EventPipeline.asofBatchReference(spark.read.parquet(dir))
+    val batch = StreamReferences.asof(spark.read.parquet(dir))
     assert(streamed == rows(batch))
     val m = spark.table("asof_test").collect()
       .map(r => r.getLong(1) -> Option(r.get(4)).map(_.asInstanceOf[Long])).toMap
@@ -176,77 +147,40 @@ class EventPipelineSpec extends SparkSpec {
     ev.write.mode("overwrite").parquet(dir)
     val q = EventPipeline.asofStream(spark, dir)
       .format("memory").queryName("asof_subms").start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
     q.stop()
     val streamed = spark.table("asof_subms")
     assert(rows(streamed) ==
-      rows(EventPipeline.asofBatchReference(spark.read.parquet(dir))))
+      rows(StreamReferences.asof(spark.read.parquet(dir))))
     val m = streamed.collect()
       .map(r => r.getLong(1) -> Option(r.get(4)).map(_.asInstanceOf[Long])).toMap
     assert(m(11L).isEmpty)
     assert(m(12L).contains(10L))
   }
 
-  test("stateful sessionization judges gaps at microsecond precision") {
+  test("event-time sessionization judges gaps at microsecond precision") {
     // gap exceeds 30 min by 500µs — ms truncation would see exactly
     // 30 min (<= gap merges) and wrongly keep one session
     val ev = Seq(
       (1L, ts("2021-01-01 10:00:00.000000"), 1L, 1.0),
       (1L, ts("2021-01-01 10:30:00.000500"), 2L, 2.0),
-      (1L, ts("2021-01-01 12:00:00.000000"), 3L, 4.0) // flushes session 2
+      (1L, ts("2021-01-01 12:00:00.000000"), 3L, 4.0) // splits off session 2
     ).toDF("user_id", "ts", "event_id", "value")
     val dir = Staging.scratchDir("graft-sess-subms").toString
     ev.write.mode("overwrite").parquet(dir)
-    val q = EventPipeline.sessionizeStream(spark, dir, gapMinutes = 30)
+    val q = EventPipeline.sessionizeEventTimeStream(spark, dir,
+        gapMinutes = 30, delay = "1 hour")
       .format("memory").queryName("sess_subms").start()
-    assert(EventPipeline.drainAndStop(q))
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
+    q.stop()
     // closed sessions: event 1 alone (split by the 500µs-over gap),
-    // then event 2 (closed by event 3)
+    // then event 2 (split by event 3); session 3 ends at 12:30, past
+    // the final watermark (11:00), so it stays open
     val closed = spark.table("sess_subms").orderBy("sess_id")
       .select($"sess_id", $"n_events").as[(Long, Long)].collect().toSeq
     assert(closed == Seq((1L, 1L), (2L, 1L)))
     // and the batch form agrees on the split
     assert(EventPipeline.sessionize(spark.read.parquet(dir), 30).count() == 3)
-  }
-
-  test("checkpoint/restart recovers flatMapGroupsWithState session state") {
-    val src = Staging.scratchDir("graft-restart-src").toString
-    val ckpt = Staging.scratchDir("graft-restart-ckpt").toString
-    // RUN 1: two events of an OPEN session — append mode emits nothing,
-    // the open session lives only in the state store checkpoint
-    Seq((1L, ts("2021-01-01 10:00:00"), 1L, 1.0),
-        (1L, ts("2021-01-01 10:10:00"), 2L, 2.0))
-      .toDF("user_id", "ts", "event_id", "value")
-      .write.mode("append").parquet(src)
-    val outDir = Staging.scratchDir("graft-restart-out").toString
-    val sessSchema = org.apache.spark.sql.Encoders
-      .product[EventPipeline.Session].schema
-    def readOut() = spark.read.schema(sessSchema).parquet(outDir)
-    val q1 = EventPipeline.sessionizeStream(spark, src, gapMinutes = 30)
-      .option("checkpointLocation", ckpt).option("path", outDir)
-      .format("parquet").start()
-    assert(EventPipeline.drainAndStop(q1))
-    assert(readOut().isEmpty)
-    // RUN 2 (new query instance, same checkpoint — the file sink DOES
-    // support checkpoint recovery): one continuing event + a far-future
-    // sentinel that closes the session
-    Seq((1L, ts("2021-01-01 10:20:00"), 3L, 4.0),
-        (1L, ts("2031-01-01 00:00:00"), 99L, 0.0))
-      .toDF("user_id", "ts", "event_id", "value")
-      .write.mode("append").parquet(src)
-    val q2 = EventPipeline.sessionizeStream(spark, src, gapMinutes = 30)
-      .option("checkpointLocation", ckpt).option("path", outDir)
-      .format("parquet").start()
-    assert(EventPipeline.drainAndStop(q2))
-    val out = readOut().collect()
-    // the emitted session SPANS BOTH RUNS (3 events from 10:00) — only
-    // possible if run 2 recovered run 1's open-session state from the
-    // checkpoint; a state loss would emit a 2-event session at 10:20
-    assert(out.length === 1)
-    val s = out.head
-    assert(s.getAs[Timestamp]("session_start") === ts("2021-01-01 10:00:00"))
-    assert(s.getAs[Long]("n_events") === 3L)
-    assert(s.getAs[Double]("sum_value") === 7.0)
   }
 
   test("streaming doc dedup keeps one row per distinct text") {
@@ -259,7 +193,7 @@ class EventPipelineSpec extends SparkSpec {
 
     val q = EventPipeline.dedupDocStream(spark, dir)
       .format("memory").queryName("dedup_test").start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
     q.stop()
 
     val kept = spark.table("dedup_test")
@@ -284,7 +218,7 @@ class EventPipelineSpec extends SparkSpec {
     val q = EventPipeline.dedupDocStream(spark, s"$base/src",
         maxFilesPerTrigger = Some(1))
       .format("memory").queryName("dedup_xbatch").start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate")
     q.stop()
 
     // the duplicate really did arrive in a LATER batch than its
@@ -320,7 +254,7 @@ class EventPipelineSpec extends SparkSpec {
     val q = EventPipeline.admitStream(spark,
         s"$base/src", s"$base/stream-state", s"$base/out")
       .option("checkpointLocation", s"$base/ckpt").start()
-    q.awaitTermination(60000); q.stop()
+    assert(q.awaitTermination(60000), "bounded run did not self-terminate"); q.stop()
     val streamIds = spark.read.parquet(s"$base/out")
       .select("doc_id").as[Long].collect().sorted
     assert(streamIds.toSeq === batchIds.toSeq)
@@ -344,7 +278,7 @@ class EventPipelineSpec extends SparkSpec {
       val q = EventPipeline.proximityJoinStream(spark, s"$base/src", "error", radius)
         .option("checkpointLocation", s"$base/ckpt").option("path", s"$base/out")
         .format("parquet").start()
-      q.awaitTermination(60000); q.stop()
+      assert(q.awaitTermination(60000), "bounded run did not self-terminate"); q.stop()
     }
     def pairs() = spark.read.schema(
         org.apache.spark.sql.types.StructType.fromDDL(outSchema))
@@ -374,7 +308,7 @@ class EventPipelineSpec extends SparkSpec {
     assert(pairs() == Seq((1L, 1L), (1L, 2L), (1L, 3L)))
     // ... while the batch reference over the union DOES contain them:
     // the divergence is real and bounded to past-watermark arrivals
-    val batch = EventPipeline.proximityBatchReference(
+    val batch = StreamReferences.proximityJoin(
         spark.read.parquet(s"$base/src"), "error", radius)
       .select($"l_id", $"r_id").as[(Long, Long)].collect().toSeq.sorted
     assert(batch == Seq((1L, 1L), (1L, 2L), (1L, 3L), (4L, 4L), (4L, 5L)))
@@ -388,7 +322,7 @@ class EventPipelineSpec extends SparkSpec {
       val q = EventPipeline.admitStream(spark,
           s"$base/src", s"$base/state", s"$base/out")
         .option("checkpointLocation", s"$base/ckpt").start()
-      q.awaitTermination(60000); q.stop()
+      assert(q.awaitTermination(60000), "bounded run did not self-terminate"); q.stop()
     }
     run()
     assert(spark.read.parquet(s"$base/out").count() === 2L)

@@ -36,8 +36,7 @@ class EventTimeSessionSpec extends SparkSpec {
     val q = EventPipeline.sessionizeEventTimeStream(spark, src,
         gapMinutes = 30, delay = "1 hour", maxFilesPerTrigger = maxFiles)
       .format("memory").queryName(name).start()
-    // the event-time variant SELF-TERMINATES on a bounded stream —
-    // plain awaitTermination, no drainAndStop
+    // the event-time sessionizer SELF-TERMINATES on a bounded stream
     assert(q.awaitTermination(120000), "bounded run did not self-terminate")
     q.stop()
   }

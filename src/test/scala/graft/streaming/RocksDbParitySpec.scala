@@ -25,30 +25,6 @@ class RocksDbParitySpec extends SparkSpec {
     }
   }
 
-  test("flatMapGroupsWithState sessionization on RocksDB == batch closed sessions") {
-    val ev = Seq(
-      (1L, ts("2021-01-01 10:00:00"), 1L, 1.5),
-      (1L, ts("2021-01-01 10:10:00"), 2L, 2.25),
-      (1L, ts("2021-01-01 11:00:00"), 3L, 4.0),
-      (2L, ts("2021-01-01 10:05:00"), 4L, 8.0),
-      (1L, ts("2031-01-01 00:00:00"), 98L, 0.0), // sentinels close real sessions
-      (2L, ts("2031-01-01 00:00:00"), 99L, 0.0)
-    ).toDF("user_id", "ts", "event_id", "value")
-    val dir = Staging.scratchDir("graft-rocks-sess").toString
-    ev.write.mode("overwrite").parquet(dir)
-    withRocksDb {
-      val q = EventPipeline.sessionizeStream(spark, dir, gapMinutes = 30)
-        .format("memory").queryName("rocks_sess").start()
-      assert(EventPipeline.drainAndStop(q))
-    }
-    val streamed = rows(spark.table("rocks_sess"))
-    val batch = rows(EventPipeline.sessionize(spark.read.parquet(dir), 30)
-      .filter($"session_start" < ts("2030-01-01 00:00:00")))
-    assert(streamed == batch)
-    assert(streamed.size == 3)
-    spark.catalog.dropTempView("rocks_sess")
-  }
-
   test("EVENT-TIME-timeout sessionization on RocksDB == default provider") {
     // the q114 parity shape: a gap-split session, a watermark-timed-out
     // session, and two held ones — identical emitted set on both
